@@ -584,22 +584,27 @@ def simhash_signatures(df: DataFrame, id_col: str = "doc_id",
     shuffle. Map-side partial aggregation collapses each doc to a single
     row of `bits` longs before the exchange, so the shuffle moves ~1 row
     per doc regardless of corpus token count."""
+    # internal column names share a prefix id_col does not start with,
+    # so none of them can collide with (and shadow) the id column
+    pre = "__sh_"
+    while id_col.startswith(pre):
+        pre += "_"
     hashed = df.select(
         F.col(id_col),
-        F.explode(F.array_distinct(F.split(normalized(text_col), " "))).alias("tok"),
-    ).select(F.col(id_col), md5h32(F.col("tok")).alias("h"))
+        F.explode(F.array_distinct(F.split(normalized(text_col), " "))).alias(f"{pre}tok"),
+    ).select(F.col(id_col), md5h32(F.col(f"{pre}tok")).alias(f"{pre}h"))
     # The bits x (shift/and/mul/sub/sum/alias) Column-op construction
     # cost ~1 s of driver py4j round-trips PER CALL (measured r17 —
     # pure query-build overhead, ~200 JVM calls); each aggregate and
     # the bit-recombine are now single F.expr strings with identical
     # expression semantics, built in `bits`+1 JVM calls total.
     sums = hashed.groupBy(id_col).agg(*[
-        F.expr(f"sum((shiftright(h, {i}) & 1) * 2 - 1) AS s{i}")
+        F.expr(f"sum((shiftright(`{pre}h`, {i}) & 1) * 2 - 1) AS `{pre}s{i}`")
         for i in range(bits)
     ])
     simhash = F.expr(
         "CAST(" + " + ".join(
-            f"(CASE WHEN s{i} > 0 THEN CAST({1 << i} AS BIGINT) "
+            f"(CASE WHEN `{pre}s{i}` > 0 THEN CAST({1 << i} AS BIGINT) "
             f"ELSE CAST(0 AS BIGINT) END)"
             for i in range(bits)) + " AS BIGINT)")
     return sums.select(F.col(id_col), simhash.alias("simhash"))

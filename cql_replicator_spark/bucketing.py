@@ -121,10 +121,6 @@ def write_bucketed_table(
     writer.saveAsTable(name)
 
 
-def read_bucketed_table(spark: SparkSession, name: str) -> DataFrame:
-    return spark.table(name)
-
-
 def assert_no_exchange(df: DataFrame) -> None:
     """Raise if the physical plan contains a shuffle — the bucketed-join
     contract check (used by tests and available for pipeline

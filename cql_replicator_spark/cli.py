@@ -43,7 +43,8 @@ def _load_mapping(args):
 def _pipeline(spark, args):
     from .ledger import Ledger
     from .runner import CdcPipeline, StatsStore
-    from .sinks.parquet_sink import bulk_replicate_to_parquet
+    from .sinks.parquet_sink import (
+        BROADCAST_MAX_KEYS, hydrate_changes, write_tile_batches)
     from .snapshot import SnapshotStore
     from .transform import build_source_pipeline
 
@@ -60,23 +61,28 @@ def _pipeline(spark, args):
         ts = F.col(args.ts_col).cast("long") if args.ts_col else F.lit(0).cast("long")
         return df.select(*pk_cols, ts.alias("ts"))
 
-    def sink(changes, tile, batch_id):
+    def sink(changes, batches):
         if not args.target:
             return
-        # snapshot id from the replication plan: unique per rotation, so
-        # back-to-back cycles never overwrite each other's delta (a
-        # second-resolution timestamp would collide under --cooldown 0)
-        batch = f"snap-{batch_id:08d}"
-        for op, pks in (("insert", changes.inserts), ("update", changes.updates)):
-            if pks.limit(1).count():
-                bulk_replicate_to_parquet(
-                    source(), pks, pk_cols, args.target, KEYSPACE, table,
-                    tile, op, batch)
-        deletes = changes.deletes.select(*pk_cols)
-        if deletes.limit(1).count():
-            out = os.path.join(args.target, KEYSPACE, table, str(tile),
-                               "delete", batch)
-            deletes.write.mode("overwrite").parquet(out)
+        # one source scan per cycle: inserts and updates hydrate
+        # together, the broadcast keys carrying tile and op; the batch
+        # id is the tile's curr snapshot id, unique per rotation, so
+        # back-to-back cycles never overwrite each other's delta; the
+        # runner's counts size the hydration join and the writes
+        counts = changes.counts or {}
+        n_upserts = sum(n.get("insert", 0) + n.get("update", 0)
+                        for n in counts.values())
+        upserts = (changes.inserts.withColumn("op", F.lit("insert"))
+                   .unionByName(changes.updates.withColumn("op", F.lit("update"))))
+        hydrated = hydrate_changes(
+            source(), upserts, pk_cols, carry=("tile", "op"),
+            broadcast_pks=n_upserts <= BROADCAST_MAX_KEYS)
+        write_tile_batches(hydrated, args.target, KEYSPACE, table, batches,
+                           unique_by=pk_cols, counts=counts)
+        deletes = changes.deletes.select(
+            "tile", F.lit("delete").alias("op"), *pk_cols)
+        write_tile_batches(deletes, args.target, KEYSPACE, table, batches,
+                           counts=counts)
 
     return CdcPipeline(
         spark=spark, keyspace=KEYSPACE, table=table, pk_cols=pk_cols,

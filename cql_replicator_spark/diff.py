@@ -37,6 +37,9 @@ class ChangeSet:
     inserts: DataFrame
     deletes: DataFrame
     updates: DataFrame
+    # rows per tile and op, {tile: {op: n}}, when the producer has
+    # already counted them (the runner has); sinks size writes by it
+    counts: dict[int, dict[str, int]] | None = None
 
     def tagged_union(self, op_col: str = "op") -> DataFrame:
         """All changes as one DataFrame with an op column (insert/delete/update)."""
@@ -112,13 +115,16 @@ def compute_changes_envelope(
     )
 
 
-def changeset_from_tagged(tagged: DataFrame, op_col: str = "op") -> ChangeSet:
+def changeset_from_tagged(tagged: DataFrame, op_col: str = "op",
+                          counts: dict[int, dict[str, int]] | None = None
+                          ) -> ChangeSet:
     """Split a (persisted!) tagged diff into the three-set view. Persist
     the tagged frame first or the join re-executes per subset."""
     return ChangeSet(
         inserts=tagged.filter(F.col(op_col) == "insert").drop(op_col),
         deletes=tagged.filter(F.col(op_col) == "delete").drop(op_col),
         updates=tagged.filter(F.col(op_col) == "update").drop(op_col),
+        counts=counts,
     )
 
 

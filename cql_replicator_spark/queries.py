@@ -1940,7 +1940,7 @@ def cdc_ledger_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         store=SnapshotStore(os.path.join(root, "snaps"), "ks", "orders_cdc"),
         ledger=Ledger(os.path.join(root, "ledger.json")),
         stats=StatsStore(os.path.join(root, "stats")),
-        total_tiles=n_tiles, max_workers=2,
+        total_tiles=n_tiles,
         tile_of=lambda df: F.pmod(F.col("pk"), F.lit(n_tiles)),
     )
 

@@ -11,9 +11,13 @@ Reimplements the reference's job structure (SURVEY §3):
   * stats objects (DiscoveryStats / ReplicationStats case classes K:79-81,
     aggregation-on-write putStats K:759-785).
 
-Driver-side tile fan-out uses a thread pool (the reference uses Scala
-.par — K:2258); each tile's work is an independent Spark job, so the
-cluster pipelines them.
+Each phase of a cycle is one Spark pass over every due tile, where the
+reference runs one job per tile (Scala .par — K:2258): discovery writes
+all due tiles in one ``partitionBy("tile")`` write; replication diffs
+every delta tile in one full-outer join keyed on (tile, pk), and the
+sink runs once per cycle on a ``ChangeSet`` whose frames carry
+``tile``. The ledger still commits each tile on its own, after the
+cycle-wide work.
 
 The source is any callable returning a DataFrame with the PK columns
 (+ optional ts): a Cassandra connector reader in production, parquet
@@ -26,8 +30,8 @@ import json
 import os
 import time
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,19 +69,31 @@ class StatsStore:
     def _path(self, ks: str, tbl: str, tile: int, kind: str) -> str:
         return os.path.join(self.root, ks, tbl, f"{kind}-tile-{tile}.json")
 
-    def put(self, ks: str, tbl: str, stats: DiscoveryStats | ReplicationStats) -> None:
+    def put(self, ks: str, tbl: str, stats: DiscoveryStats | ReplicationStats,
+            snapshot_id: int | None = None) -> None:
+        """Discovery stats overwrite (a gauge); replication stats add
+        to the stored totals. ``snapshot_id`` is the curr snapshot a
+        replication put accounts for: it is recorded as
+        ``appliedSnapshotId``, and a put of the id already recorded
+        does nothing, so a replication retried after a crash between
+        this put and the ledger mark counts its tile once."""
         kind = "discovery" if isinstance(stats, DiscoveryStats) else "replication"
         path = self._path(ks, tbl, stats.tile, kind)
         os.makedirs(os.path.dirname(path), exist_ok=True)
         merged = asdict(stats)
-        if kind == "replication" and os.path.exists(path):
-            with open(path) as f:
-                prev = json.load(f)
-            # primaryKeys aggregates too — the reference's
-            # historicallyInserted accumulation (K:1560)
-            for k in ("primaryKeys", "updatedPrimaryKeys",
-                      "insertedPrimaryKeys", "deletedPrimaryKeys"):
-                merged[k] += prev.get(k, 0)
+        if kind == "replication":
+            if os.path.exists(path):
+                with open(path) as f:
+                    prev = json.load(f)
+                if snapshot_id is not None and \
+                        prev.get("appliedSnapshotId") == snapshot_id:
+                    return
+                # primaryKeys aggregates too — the reference's
+                # historicallyInserted accumulation (K:1560)
+                for k in ("primaryKeys", "updatedPrimaryKeys",
+                          "insertedPrimaryKeys", "deletedPrimaryKeys"):
+                    merged[k] += prev.get(k, 0)
+            merged["appliedSnapshotId"] = snapshot_id
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(merged, f)
@@ -125,11 +141,13 @@ class CdcPipeline:
     stats: StatsStore
     total_tiles: int = 4
     ts_col: str = "ts"
-    # (changes, tile, batch_id) — batch_id is the consumed curr snapshot id,
-    # unique per rotation, so two cycles can never collide on a sink path
-    # (a wall-clock batch id collides when cycles are < 1s apart).
-    sink: Callable[[ChangeSet, int, int], None] | None = None
-    max_workers: int = 4
+    # (changes, batches), called once per replication cycle: changes is
+    # every due tile's ChangeSet in one, each frame carrying ``tile``,
+    # with its per-(tile, op) row counts in ``changes.counts``;
+    # batches maps each due tile to its consumed curr snapshot id, unique
+    # per rotation, so two cycles never collide on a sink path (a
+    # wall-clock batch id collides when cycles are < 1s apart).
+    sink: Callable[[ChangeSet, dict[int, int]], None] | None = None
     # Discovery-scan layout: when set, the tiled projection is
     # repartitioned to this many partitions on the tile column before
     # snapshotting (the reference's repartition(defaultPartitions, group)
@@ -146,16 +164,13 @@ class CdcPipeline:
     # -- discovery ---------------------------------------------------------
     def discover(self) -> list[int]:
         """One discovery cycle; returns tiles that rotated a snapshot."""
-        # Gate FIRST (r16): when every tile still holds an unconsumed
-        # snapshot, the cycle must refuse without touching the source —
-        # the old order materialized (persisted + counted) the full
-        # tiled scan before consulting the ledger, so a fully-blocked
-        # cycle paid a complete source pass to do nothing. can_discover
-        # is a read-only ledger probe; per_tile re-checks it under the
-        # write path's race rules, so this pre-filter only skips work,
-        # never changes which tiles rotate.
-        if not any(self.ledger.can_discover(self.keyspace, self.table, t)
-                   for t in range(self.total_tiles)):
+        # Gate FIRST: a tile still holding an unconsumed snapshot is
+        # skipped (K:2263-2271), and a cycle with no due tile refuses
+        # without touching the source. can_discover is a read-only
+        # probe; record_discovery re-checks under the ledger's lock.
+        due = [t for t in range(self.total_tiles)
+               if self.ledger.can_discover(self.keyspace, self.table, t)]
+        if not due:
             return []
         src = self.pk_source()
         if self.tile_of is not None:
@@ -168,88 +183,100 @@ class CdcPipeline:
                 src, self.pk_cols, self.total_tiles,
                 repartition=self.default_partitions is not None,
                 num_partitions=self.default_partitions)
-        tiled = tiled.persist()
-        try:
-            tiled.count()  # materialize once; per-tile filters reuse the cache
-
-            def per_tile(tile: int) -> int | None:
-                if not self.ledger.can_discover(self.keyspace, self.table, tile):
-                    return None  # unconsumed snapshot -> skip (K:2263-2271)
-                part = tiled.filter(F.col("tile") == tile).drop("tile")
-                sid = self.store.write_snapshot(part, tile)
-                try:
-                    self.ledger.record_discovery(
-                        self.keyspace, self.table, tile, sid)
-                except DiscoveryRaceLost:
-                    # Lost the discovery race: a rival process rotated
-                    # this tile between our gate check and our record
-                    # (the ledger contract allows any number of
-                    # discovery processes; record_discovery re-checks
-                    # under the cross-process lock and raises the TYPED
-                    # race exception to protect the unconsumed-snapshot
-                    # invariant — any other RuntimeError is a real
-                    # failure and propagates). Our snapshot is an
-                    # unreferenced orphan until expiry — skip the tile,
-                    # don't kill the whole cycle.
-                    return None
-                # count of OUR snapshot by id — under the multi-
-                # discoverer contract [-1] could be a rival's newer
-                # one, and a rival may legally have EXPIRED our
-                # just-written snapshot already: skip the stats put
-                # rather than crash the cycle on the missing id
-                n = next((s.count for s in self.store.snapshots(tile)
-                          if s.id == sid), None)
-                if n is not None:
-                    self.stats.put(self.keyspace, self.table,
-                                   DiscoveryStats(tile, n, time.time()))
-                return tile
-
-            with ThreadPoolExecutor(max_workers=self.max_workers) as pool:
-                done = list(pool.map(per_tile, range(self.total_tiles)))
-            return [t for t in done if t is not None]
-        finally:
-            tiled.unpersist()
+        rotated = []
+        for tile, snap in self.store.write_snapshots(tiled, due).items():
+            try:
+                self.ledger.record_discovery(
+                    self.keyspace, self.table, tile, snap.id)
+            except DiscoveryRaceLost:
+                # A rival process rotated this tile between our gate
+                # check and our record (the ledger allows any number of
+                # discovery processes; record_discovery raises the TYPED
+                # race exception to protect the unconsumed-snapshot
+                # invariant — any other error is a real failure and
+                # propagates). Our snapshot is an unreferenced orphan
+                # until expiry: skip the tile, not the cycle.
+                continue
+            self.stats.put(self.keyspace, self.table,
+                           DiscoveryStats(tile, snap.count, time.time()))
+            rotated.append(tile)
+        return rotated
 
     # -- replication --------------------------------------------------------
+    def replicate(self) -> list[ReplicationStats]:
+        return self._replicate(range(self.total_tiles))
+
     def replicate_tile(self, tile: int) -> ReplicationStats | None:
-        plan = self.ledger.replication_plan(self.keyspace, self.table, tile)
-        if plan is None:
-            return None
-        curr = self.store.read_snapshot(self.spark, tile, plan["curr"])
+        out = self._replicate([tile])
+        return out[0] if out else None
+
+    def _replicate(self, tiles) -> list[ReplicationStats]:
+        """Replicate every due tile of ``tiles`` in one pass: one tagged
+        diff over the delta tiles keyed on (tile, pk), historical tiles
+        as curr-as-insert rows, one sink call; then, tile by tile,
+        stats, ledger mark and expiry."""
+        plans = {}
+        for t in tiles:
+            plan = self.ledger.replication_plan(self.keyspace, self.table, t)
+            if plan is not None:
+                plans[t] = plan
+        if not plans:
+            return []
+
+        def read(tile: int, sid: int) -> DataFrame:
+            return (self.store.read_snapshot(self.spark, tile, sid)
+                    .withColumn("tile", F.lit(tile)))
+
+        def union(frames: list[DataFrame]) -> DataFrame:
+            return reduce(lambda a, b: a.unionByName(
+                b, allowMissingColumns=True), frames)
+
+        delta = [t for t, p in plans.items() if p["mode"] == "delta"]
+        counts: dict[int, dict[str, int]] = {t: {} for t in plans}
+        parts = []
         tagged = None
         try:
-            if plan["mode"] == "historical":
-                # full load: everything in curr is an insert (K:1660-1674)
-                empty = curr.filter(F.lit(False))
-                changes = ChangeSet(inserts=curr, deletes=empty, updates=empty)
-                n_ins, n_del, n_upd = curr.count(), 0, 0
-            else:
-                prev = self.store.read_snapshot(self.spark, tile, plan["prev"])
-                # single-pass diff: one full-outer join, materialized once,
-                # then counts and the three-set sink view reuse the cache
+            if delta:
+                # single-pass diff: one full-outer join, materialized
+                # once; the counts and the sink's three-set view reuse
+                # the cache
                 tagged = compute_changes_tagged(
-                    curr, prev, self.pk_cols, self.ts_col).persist()
-                counts = {r["op"]: r["count"]
-                          for r in tagged.groupBy("op").count().collect()}
-                n_ins = counts.get("insert", 0)
-                n_del = counts.get("delete", 0)
-                n_upd = counts.get("update", 0)
-                changes = changeset_from_tagged(tagged)
+                    union([read(t, plans[t]["curr"]) for t in delta]),
+                    union([read(t, plans[t]["prev"]) for t in delta]),
+                    ["tile", *self.pk_cols], self.ts_col).persist()
+                for r in tagged.groupBy("tile", "op").count().collect():
+                    counts[r["tile"]][r["op"]] = r["count"]
+                parts.append(tagged)
+            for t, p in plans.items():
+                if p["mode"] == "historical":
+                    # full load: everything in curr is an insert
+                    # (K:1660-1674), counted by the manifest
+                    parts.append(read(t, p["curr"])
+                                 .withColumn("op", F.lit("insert")))
+                    counts[t]["insert"] = next(
+                        s.count for s in self.store.snapshots(t)
+                        if s.id == p["curr"])
             if self.sink is not None:
-                self.sink(changes, tile, plan["curr"])
+                self.sink(changeset_from_tagged(union(parts), counts=counts),
+                          {t: p["curr"] for t, p in plans.items()})
         finally:
             if tagged is not None:
                 tagged.unpersist()
-        self.ledger.mark_replication_complete(self.keyspace, self.table, tile)
-        self.store.expire_snapshots(tile, retain_last=2)  # K:1656-1657
-        st = ReplicationStats(tile, n_ins + n_del + n_upd, n_upd, n_ins, n_del, time.time())
-        self.stats.put(self.keyspace, self.table, st)
-        return st
 
-    def replicate(self) -> list[ReplicationStats]:
-        with ThreadPoolExecutor(max_workers=self.max_workers) as pool:
-            out = list(pool.map(self.replicate_tile, range(self.total_tiles)))
-        return [s for s in out if s is not None]
+        out = []
+        for t, p in plans.items():
+            n = counts[t]
+            n_ins, n_del, n_upd = (n.get("insert", 0), n.get("delete", 0),
+                                   n.get("update", 0))
+            st = ReplicationStats(t, n_ins + n_del + n_upd, n_upd, n_ins,
+                                  n_del, time.time())
+            # stats before the mark: a crash between the two re-runs the
+            # tile, and the put of the same curr id is a no-op
+            self.stats.put(self.keyspace, self.table, st, p["curr"])
+            self.ledger.mark_replication_complete(self.keyspace, self.table, t)
+            self.store.expire_snapshots(t, retain_last=2)  # K:1656-1657
+            out.append(st)
+        return out
 
     # -- loop -----------------------------------------------------------------
     def run_loop(

@@ -5,27 +5,41 @@ This is the path SURVEY §7.1 says to prefer: instead of per-row
 set back to the source DataFrame and write Parquet directly
 (bulkReplicateToParquet P:792-857):
 
-  source ⋈ broadcast(changed_pks) -> optional TTL filter ->
-  size-estimated coalesce -> parquet {root}/{ks}/{tbl}/{tile}/{op}/
+  source ⋈ broadcast(changed keys + tile, op) ->
+  parquet {root}/{ks}/{tbl}/{tile}/{op}/snap-{id}, one job per cycle
 
-Write sizing carries the reference's knobs: maxRecordsPerFile
-10,500,000 + snappy (writeWithSizeControl K:2224-2231), 32 MB target
-files via the sampled row-size model (estimateAndCoalesce P:698-732).
+Write sizing carries the reference's maxRecordsPerFile 10,500,000 +
+snappy (writeWithSizeControl K:2224-2231). The write's width comes from
+the cycle's per-(tile, op) row counts (``ROWS_PER_FILE`` rows a file,
+up to the session's shuffle parallelism), where the reference coalesces to 32 MB files by a sampled row-size
+model (estimateAndCoalesce P:698-732; ``stats.estimate_partitions_for_write``).
 
 Scale note: the changed-PK set is small relative to the table (that's
-the point of CDC), so the broadcast is the right strategy; if a delta
-ever approaches table size, drop the hint and let AQE choose.
+the point of CDC), so the broadcast is the right strategy; past
+``BROADCAST_MAX_KEYS`` changed keys (a historical load) the CLI sink
+drops the hint and lets AQE choose.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import default_write_files
+from ..staging import new_staging_dir, remove_dead_staging
+
 MAX_RECORDS_PER_FILE = 10_500_000  # K:2228
 DEFAULT_TARGET_FILE_MB = 32  # P:425-426
+# rows below which a (tile, op) batch is not split over more write
+# tasks (and files)
+ROWS_PER_FILE = 100_000
+# above this many changed keys the hydration join drops its broadcast
+# hint and lets the planner choose
+BROADCAST_MAX_KEYS = 1_000_000
 
 
 def hydrate_changes(
@@ -33,11 +47,14 @@ def hydrate_changes(
     changed_pks: DataFrame,
     pk_cols: list[str],
     broadcast_pks: bool = True,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Changed-PK set -> full source rows (P:809-816). PK columns are
     aligned by name and cast to the source's types before the join
-    (the reference casts explicitly; names are enough here)."""
-    keys = changed_pks.select(*pk_cols)
+    (the reference casts explicitly; names are enough here). ``carry``
+    names columns of ``changed_pks`` (e.g. tile, op) that ride the
+    broadcast keys onto the hydrated rows."""
+    keys = changed_pks.select(*carry, *pk_cols)
     for c in pk_cols:
         keys = keys.withColumn(c, F.col(c).cast(source.schema[c].dataType))
     if broadcast_pks:
@@ -45,53 +62,68 @@ def hydrate_changes(
     return source.join(keys, pk_cols, "inner")
 
 
-def write_with_size_control(
+def write_tile_batches(
     df: DataFrame,
-    path: str,
-    num_partitions: int | None = None,
-    max_records_per_file: int = MAX_RECORDS_PER_FILE,
-    mode: str = "overwrite",
-) -> None:
-    """Coalesce + bounded file size + snappy (K:2224-2231)."""
-    out = df.coalesce(num_partitions) if num_partitions else df
-    (out.write.mode(mode)
-        .option("maxRecordsPerFile", max_records_per_file)
-        .option("compression", "snappy")
-        .parquet(path))
-
-
-def bulk_replicate_to_parquet(
-    source: DataFrame,
-    changed_pks: DataFrame,
-    pk_cols: list[str],
     root: str,
     keyspace: str,
     table: str,
-    tile: int,
-    op: str,
-    batch_id: str,
-    avg_row_bytes: float | None = None,
-    ttl_filter: tuple[str, str, int] | None = None,
-) -> str:
-    """Full bulk path (P:792-857). Returns the output directory."""
-    from ..stats import estimate_partitions_for_write
-    from ..transform import apply_ttl_filter
-
-    hydrated = hydrate_changes(source, changed_pks, pk_cols)
-    if ttl_filter is not None:
-        col, pred, val = ttl_filter
-        hydrated = apply_ttl_filter(hydrated, col, pred, val)
-    hydrated = hydrated.dropDuplicates(pk_cols)  # P:647's dropDuplicates
-
-    n_parts = None
-    if avg_row_bytes is not None:
-        # count once, reuse for sizing; at scale the PK set count is known
-        # from discovery stats so this is metadata, not a second scan
-        n_parts = estimate_partitions_for_write(
-            avg_row_bytes, hydrated.count(), DEFAULT_TARGET_FILE_MB)
-    out_dir = os.path.join(root, keyspace, table, str(tile), op, batch_id)
-    write_with_size_control(hydrated, out_dir, num_partitions=n_parts)
-    return out_dir
+    batches: dict[int, int],
+    unique_by: list[str] | None = None,
+    counts: dict[int, dict[str, int]] | None = None,
+) -> None:
+    """Write a cycle's rows, which carry ``tile`` and ``op`` columns, in
+    ONE job at ``{root}/{ks}/{tbl}/{tile}/{op}/snap-{batches[tile]:08d}``
+    (neither column is stored). ``counts`` ({tile: {op: rows}}, as on
+    ``ChangeSet.counts``) sets the width: a (tile, op) of n rows is
+    spread by a hash of its key over ceil(n / ROWS_PER_FILE) tasks and
+    files, at most the session's shuffle parallelism, so a historical
+    load or a large delta is not written one task per (tile, op); a
+    smaller one, or any without a count, is one file.
+    ``unique_by`` keeps one row per (tile, op, *key) (P:647's
+    dropDuplicates, for hydrated rows); the clustering above satisfies
+    it, so it adds no shuffle. The files land in a staging directory
+    and are renamed into place; an existing destination is removed
+    first, so a retried cycle overwrites its batch rather than nesting
+    in it."""
+    base = os.path.join(root, keyspace, table)
+    remove_dead_staging(base)
+    stage = new_staging_dir(base)
+    key = unique_by or [c for c in df.columns if c not in ("tile", "op")]
+    salt = None
+    width = default_write_files(df)
+    for tile, ops in (counts or {}).items():
+        for op, n in ops.items():
+            k = min(-(-n // ROWS_PER_FILE), width)
+            if k > 1:
+                salt = (F.when((F.col("tile") == tile) & (F.col("op") == op),
+                               F.pmod(F.xxhash64(*key), F.lit(k)))
+                        .otherwise(F.lit(0) if salt is None else salt))
+    # no salt column at all when nothing splits: a constant one would
+    # fold into the partitioning and cost the dedup its own shuffle
+    cluster = ["tile", "op"]
+    if salt is not None:
+        df = df.withColumn("__salt", salt)
+        cluster.append("__salt")
+    out = df.repartition(*cluster)
+    if unique_by:
+        # the salt is a function of the key, so deduplicating on it too
+        # changes nothing and keeps the clustering sufficient
+        out = out.dropDuplicates([*cluster, *unique_by])
+    try:
+        (out.drop("__salt").write
+            .partitionBy("tile", "op")
+            .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
+            .option("compression", "snappy")
+            .parquet(stage))
+        for tile, batch in batches.items():
+            for op_dir in glob.glob(os.path.join(stage, f"tile={tile}", "op=*")):
+                op = os.path.basename(op_dir)[len("op="):]
+                dest = os.path.join(base, str(tile), op, f"snap-{batch:08d}")
+                shutil.rmtree(dest, ignore_errors=True)
+                os.makedirs(os.path.dirname(dest), exist_ok=True)
+                os.rename(op_dir, dest)
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
 
 
 def parquet_dir_stats(spark, path: str) -> tuple[int, int]:

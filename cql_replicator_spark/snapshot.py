@@ -9,9 +9,10 @@ K:1220-1272) and time-travels between snapshot ids (K:1340-1349), with
 The default backend implements the same contract on plain Parquet:
 each snapshot is an immutable directory
 ``{root}/{ks}/{table}/tile={n}/snap-{id:08d}/`` plus a JSON manifest per
-tile recording (id, committed_at, count). The API mirrors Iceberg's:
-write-overwrite (new snapshot), current_snapshot_id, read at snapshot
-(time travel), expire.
+tile recording (id, committed_at, count, schema). The API mirrors
+Iceberg's: write-overwrite (new snapshot, or one per tile in a single
+partitioned write), current_snapshot_id, read at snapshot (time
+travel), expire.
 
 ``SnapshotStore(..., fmt="delta")`` switches to a real
 transaction-log-backed table per tile when the ``delta-spark`` package
@@ -48,6 +49,7 @@ import time
 from dataclasses import dataclass
 
 from .session import default_write_files as _default_write_files
+from .staging import new_staging_dir, remove_dead_staging
 
 
 def _stat_json(v):
@@ -66,7 +68,9 @@ def _stat_json(v):
         return v
     return str(v)
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -130,8 +134,10 @@ class SnapshotStore:
         one another's snap-{id} directory mid-write, and the
         last-write-wins manifest swap silently drops the other's entry
         (and an expire racing a writer drops the fresh entry). Same
-        battle-tested lock as the ledger (ledger.file_mutex); holding
-        it across the Spark write is fine — contention exists only
+        battle-tested lock as the ledger (ledger.file_mutex). The
+        plain parquet path writes to a private staging dir and holds
+        it only for the commit; the other paths hold it across the
+        Spark write, which is fine — contention exists only
         when two processes rotate ONE tile simultaneously, and
         serializing them is exactly the intended outcome (the second
         one's record_discovery loses at the ledger gate and the runner
@@ -153,13 +159,10 @@ class SnapshotStore:
         narrow inputs still produce few files). The old literal default
         of 1 was an UNCONDITIONAL single-task write — the r14 action
         audit's first catch; pass 1 explicitly only for frames that are
-        small by construction. Honest bound: when the caller's frame is
-        hash-partitioned BY TILE (the runner's discovery layout), one
-        tile's rows live in one partition and its write is still one
-        task regardless of this default — that concentration is bounded
-        by TILE SIZING (the reference's parallelism unit; resize_tiles
-        is the knob), not by this coalesce, and the parallel axis is
-        across tiles.
+        small by construction.
+
+        On the parquet backend without ``stats_cols`` this is
+        ``write_snapshots`` with one tile: one parquet commit path.
 
         ``stats_cols`` (parquet backend only) turns on Iceberg-style
         file-level data skipping: rows are range-partitioned by those
@@ -170,15 +173,113 @@ class SnapshotStore:
         aggregate over the just-written files (it replaces the count
         read-back, so it costs nothing extra) and its output is one row
         per FILE, never data-sized."""
+        if self.fmt == "parquet" and not stats_cols:
+            if "tile" in df.columns:
+                raise ValueError(
+                    "write_snapshot: 'tile' is the store's partition column "
+                    "and cannot be a snapshot column")
+            return self.write_snapshots(
+                df.withColumn("tile", F.lit(tile)), [tile],
+                files_per_snapshot)[tile].id
         if files_per_snapshot is None:
             files_per_snapshot = _default_write_files(df)
         with self._tile_mutex(tile):
             return self._write_snapshot_locked(
-                df, tile, files_per_snapshot, stats_cols)
+                df, tile, files_per_snapshot, stats_cols)["id"]
+
+    def write_snapshots(self, df: DataFrame, tiles: list[int],
+                        files_per_snapshot: int | None = None
+                        ) -> dict[int, SnapshotInfo]:
+        """Commit one new snapshot for each of ``tiles`` from ``df``,
+        whose ``tile`` column names each row's tile (the column is not
+        stored; rows of other tiles are skipped). Returns
+        ``{tile: SnapshotInfo}``.
+
+        Parquet: ONE ``partitionBy("tile")`` write of every tile to a
+        private staging directory (``staging``: the next write sweeps
+        the one a killed writer left), with the per-tile row counts taken
+        from an ``Observation`` on that write — no persist, no count
+        pass, no per-tile filtered writes. Then, per tile under its
+        mutex, the commit: allocate the id, rename ``tile=N`` to
+        ``snap-{id}``, append to the manifest. A tile with no rows
+        commits an empty directory; the manifest records the schema,
+        so every read of it (empty or not) is schema-correct and skips
+        the schema-inference job. Each tile commits on its own, so a
+        crash mid-loop leaves the committed tiles intact and the rest
+        as they were. The counts are of rows streamed through the
+        write, so a corrupt or partial file surfaces at the first read
+        of the snapshot, not at rotation (the ``stats_cols`` path reads
+        its files back and keeps that check). When ``df`` is
+        hash-partitioned by tile (``default_partitions``), each tile is
+        written by one task: tile sizing, not ``files_per_snapshot``,
+        bounds that.
+
+        Delta / dlog: per-tile ``write_snapshot`` over the persisted
+        frame (those backends commit one table per tile)."""
+        tiles = sorted(set(tiles))
+        if not tiles:
+            return {}
+        if files_per_snapshot is None:
+            files_per_snapshot = _default_write_files(df)
+        due = df.filter(F.col("tile").isin(tiles))
+        if self.fmt != "parquet":
+            return self._write_each(due, tiles, files_per_snapshot)
+        schema = json.loads(due.drop("tile").schema.json())
+        table_dir = os.path.join(self.root, self.keyspace, self.table)
+        remove_dead_staging(table_dir)
+        stage = new_staging_dir(table_dir)
+        obs = Observation()
+        try:
+            (due.observe(obs, *[F.count(F.when(F.col("tile") == t, 1))
+                                .alias(f"n{t}") for t in tiles])
+             .coalesce(files_per_snapshot)
+             .write.partitionBy("tile").parquet(stage))
+            counts = obs.get
+            out = {}
+            for t in tiles:
+                with self._tile_mutex(t):
+                    entries = self._read_manifest(t)
+                    new_id = (max(e["id"] for e in entries) + 1) if entries else 1
+                    path = os.path.join(self._tile_dir(t), f"snap-{new_id:08d}")
+                    # an uncommitted dir of a crashed write may hold the id
+                    shutil.rmtree(path, ignore_errors=True)
+                    staged = os.path.join(stage, f"tile={t}")
+                    if os.path.isdir(staged):
+                        os.makedirs(self._tile_dir(t), exist_ok=True)
+                        os.rename(staged, path)
+                    else:
+                        os.makedirs(path)
+                    entry = {"id": new_id, "committed_at": time.time(),
+                             "count": int(counts[f"n{t}"]), "path": path,
+                             "schema": schema}
+                    self._write_manifest(t, entries + [entry])
+                out[t] = SnapshotInfo(new_id, entry["committed_at"],
+                                      entry["count"], path)
+            return out
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+
+    def _write_each(self, due: DataFrame, tiles: list[int],
+                    files_per_snapshot: int) -> dict[int, SnapshotInfo]:
+        due = due.persist()
+        try:
+            out = {}
+            for t in tiles:
+                part = due.filter(F.col("tile") == t).drop("tile")
+                with self._tile_mutex(t):
+                    entry = self._write_snapshot_locked(
+                        part, t, files_per_snapshot, None)
+                out[t] = SnapshotInfo(entry["id"], entry["committed_at"],
+                                      entry["count"], entry["path"])
+            return out
+        finally:
+            due.unpersist()
 
     def _write_snapshot_locked(self, df: DataFrame, tile: int,
                                files_per_snapshot: int,
-                               stats_cols: list[str] | None) -> int:
+                               stats_cols: list[str] | None) -> dict:
+        """Delta, dlog and stats_cols commits; returns the new
+        manifest entry."""
         entries = self._read_manifest(tile)
         new_id = (max(e["id"] for e in entries) + 1) if entries else 1
         if self.fmt == "delta":
@@ -212,54 +313,27 @@ class SnapshotStore:
                             "count": count, "path": path,
                             "dlog_version": int(version)})
         else:
-            from pyspark.sql import functions as F
-
             path = os.path.join(self._tile_dir(tile), f"snap-{new_id:08d}")
-            entry: dict = {"id": new_id, "committed_at": time.time(),
-                           "path": path}
-            if stats_cols:
-                out = df.repartitionByRange(files_per_snapshot, *stats_cols)
-                out.write.mode("overwrite").parquet(path)
-                back = df.sparkSession.read.parquet(path)
-                aggs = [F.count("*").alias("__n")]
-                for c in stats_cols:
-                    aggs += [F.min(c).alias(f"__lo_{c}"),
-                             F.max(c).alias(f"__hi_{c}")]
-                frows = (back.groupBy(F.input_file_name().alias("__f"))
-                         .agg(*aggs).collect())
-                entry["files"] = [
-                    {"path": r["__f"], "count": r["__n"],
-                     "min": {c: _stat_json(r[f"__lo_{c}"]) for c in stats_cols},
-                     "max": {c: _stat_json(r[f"__hi_{c}"]) for c in stats_cols}}
-                    for r in frows]
-                entry["count"] = sum(f["count"] for f in entry["files"])
-            else:
-                # the committed row count rides the WRITE job itself
-                # (r16): an Observation on the frame being written
-                # replaces the old read-back-and-count — one fewer full
-                # pass over the snapshot per rotation (plus the
-                # read-back's footer/schema job). At 100 TB the
-                # read-back was a second scan of every snapshot tile.
-                # TRADE (r16 ADVICE, documented): the Observation
-                # counts rows streamed through the write, so a
-                # post-write corruption / partial commit that the old
-                # read-back would have surfaced AT ROTATION TIME now
-                # surfaces at first consumer read. The stats_cols
-                # branch above still read-backs (it needs per-file
-                # aggregates) and therefore keeps the implicit
-                # durability check; callers that need rotation-time
-                # verification on the plain branch can run a
-                # footer-only validation over entry["files"] — the
-                # manifest records exactly what must exist.
-                from pyspark.sql import Observation
-                obs = Observation()
-                (df.observe(obs, F.count(F.lit(1)).alias("__n"))
-                 .coalesce(files_per_snapshot)
-                 .write.mode("overwrite").parquet(path))
-                entry["count"] = int(obs.get["__n"])
-            entries.append(entry)
+            out = df.repartitionByRange(files_per_snapshot, *stats_cols)
+            out.write.mode("overwrite").parquet(path)
+            back = df.sparkSession.read.parquet(path)
+            aggs = [F.count("*").alias("__n")]
+            for c in stats_cols:
+                aggs += [F.min(c).alias(f"__lo_{c}"),
+                         F.max(c).alias(f"__hi_{c}")]
+            frows = (back.groupBy(F.input_file_name().alias("__f"))
+                     .agg(*aggs).collect())
+            files = [
+                {"path": r["__f"], "count": r["__n"],
+                 "min": {c: _stat_json(r[f"__lo_{c}"]) for c in stats_cols},
+                 "max": {c: _stat_json(r[f"__hi_{c}"]) for c in stats_cols}}
+                for r in frows]
+            entries.append({"id": new_id, "committed_at": time.time(),
+                            "path": path, "files": files,
+                            "count": sum(f["count"] for f in files),
+                            "schema": json.loads(df.schema.json())})
         self._write_manifest(tile, entries)
-        return new_id
+        return entries[-1]
 
     def current_snapshot_id(self, tile: int) -> int | None:
         """Latest committed snapshot (ORDER BY committed_at DESC LIMIT 1 — K:1297)."""
@@ -280,12 +354,14 @@ class SnapshotStore:
         predicate touches file METADATA first, so a point/range lookup
         on a 100 TB tile reads O(matching files), not the snapshot).
         Without stats the same predicate still applies, just without
-        the skip."""
-        from pyspark.sql import functions as F
-
+        the skip. A parquet snapshot whose manifest records its schema
+        is read with it: no schema-inference job per read."""
         for e in self._read_manifest(tile):
             if e["id"] != snapshot_id:
                 continue
+            reader = spark.read
+            if "schema" in e:
+                reader = reader.schema(StructType.fromJson(e["schema"]))
             if self.fmt == "delta":
                 df = (spark.read.format("delta")
                       .option("versionAsOf", e["delta_version"])
@@ -310,11 +386,11 @@ class SnapshotStore:
 
                 keep = [f["path"] for f in e["files"] if _overlaps(f)]
                 if not keep:  # schema-correct empty frame, zero data read
-                    df = spark.read.parquet(e["path"]).where(F.lit(False))
+                    df = reader.parquet(e["path"]).where(F.lit(False))
                 else:
-                    df = spark.read.parquet(*keep)
+                    df = reader.parquet(*keep)
             else:
-                df = spark.read.parquet(e["path"])
+                df = reader.parquet(e["path"])
             if between:
                 for c, (lo, hi) in between.items():
                     df = df.filter(F.col(c).between(lo, hi))
@@ -372,19 +448,22 @@ class SnapshotStore:
         are candidates; the manifest itself and the Delta table dir are
         never touched. Returns the removed paths. Safe against a
         concurrent writer: the manifest is the commit point, and gc
-        runs under the same per-tile mutex as write_snapshot — a
-        writer holds the lock from its data write through its manifest
-        swap, so gc can never classify a mid-flight (uncommitted but
-        about to commit) snapshot dir as orphan; it sees the dir
-        either before the write starts or after the manifest lists
-        it."""
+        runs under the same per-tile mutex as a snapshot commit — a
+        writer creates its ``snap-*`` dir (a write into it, or the
+        rename of its staged ``tile=N`` dir) and swaps the manifest
+        under the lock, so gc can never classify a mid-flight
+        (uncommitted but about to commit) snapshot dir as orphan; it
+        sees the dir either before it exists or after the manifest
+        lists it. Staging dirs of dead writers (``staging``) go too:
+        they sit beside the tile dirs, so any tile's gc collects them."""
+        removed = remove_dead_staging(
+            os.path.join(self.root, self.keyspace, self.table))
         tdir = self._tile_dir(tile)
         if not os.path.isdir(tdir):
-            return []
+            return removed
         with self._tile_mutex(tile):
             live = {os.path.basename(e["path"])
                     for e in self._read_manifest(tile)}
-            removed = []
             for name in sorted(os.listdir(tdir)):
                 if name.startswith("snap-") and name not in live:
                     p = os.path.join(tdir, name)
@@ -425,8 +504,6 @@ def migrate_legacy_snapshots(
     re-tiling churn is emitted. Returns
     {new_tile: (tail_snapshot_id, head_snapshot_id)}.
     """
-    from pyspark.sql import functions as F
-
     from .tiling import assign_tiles
 
     present = [
@@ -443,17 +520,12 @@ def migrate_legacy_snapshots(
         for tile in present:
             df = spark.read.parquet(os.path.join(legacy_root, f"tile={tile}", phase))
             union = df if union is None else union.unionByName(df)
-        tiled = assign_tiles(union, pk_cols, num_tiles).persist()
-        try:
-            tiled.count()  # materialize once; per-tile filters reuse the cache
-            for new_tile in range(num_tiles):
-                part = tiled.filter(F.col("tile") == new_tile).drop("tile")
-                sid = store.write_snapshot(part, new_tile)
-                ledger.record_discovery(keyspace, table, new_tile, sid)
-                ledger.mark_replication_complete(keyspace, table, new_tile)
-                migrated[new_tile].append(sid)
-        finally:
-            tiled.unpersist()
+        snaps = store.write_snapshots(assign_tiles(union, pk_cols, num_tiles),
+                                      list(range(num_tiles)))
+        for new_tile, snap in snaps.items():
+            ledger.record_discovery(keyspace, table, new_tile, snap.id)
+            ledger.mark_replication_complete(keyspace, table, new_tile)
+            migrated[new_tile].append(snap.id)
     if cleanup:
         for tile in present:
             shutil.rmtree(os.path.join(legacy_root, f"tile={tile}"),

@@ -56,15 +56,6 @@ def select_replicated_columns(
     return df if all_columns else df.select(*columns)
 
 
-def add_non_pk_filter_columns(
-    df: DataFrame, pk_cols: list[str], filter_cols: list[str]
-) -> DataFrame:
-    """Project PKs + just the columns a filter needs (K:1799-1802, R:377-385).
-    Keeps the scan narrow: ReadSchema stays PKs+filter cols."""
-    keep = list(dict.fromkeys(pk_cols + filter_cols))
-    return df.select(*keep)
-
-
 def point_in_time_predicate(ts_col: str, pit: PointInTime) -> Column:
     """ts {>,<,==} pit with isNotNull guard (K:1789-1797, P:1511-1523)."""
     c = F.col(ts_col)
@@ -116,19 +107,6 @@ def udt_to_json(df: DataFrame, udt_cols: list[str]) -> DataFrame:
         out = out.withColumn(
             c, F.to_json(F.col(c), {"ignoreNullFields": "false"}))
     return out
-
-
-def greatest_writetime(cols: list[str], alias: str = "ts") -> Column:
-    """Multi-writetime change column: greatest(ts1, ts2, ...) with
-    null-excluding max semantics (buildWritetimeExpression K:381-384;
-    docs/keyspaces/README.MD:179-182). With a Cassandra source these are
-    writetime(col) projections pushed to the server; with a generic
-    source they're regular timestamp columns."""
-    if not cols:
-        return F.lit(0).alias(alias)
-    if len(cols) == 1:
-        return F.col(cols[0]).alias(alias)
-    return F.greatest(*[F.col(c) for c in cols]).alias(alias)
 
 
 def counter_hash_column(counter_cols: list[str], alias: str = "counter_hash") -> Column:

@@ -159,19 +159,3 @@ def render_cql_value(value, cql_type: str) -> str:
             for p in parts
         ) + ")"
     return f"'{escape_sql_string(str(value))}'"
-
-
-def correct_empty_bin(json_doc: dict, blob_cols: list[str]) -> dict:
-    """Empty-blob fixup: '' -> '0x' in a JSON row document (K:174-185)."""
-    out = dict(json_doc)
-    for c in blob_cols:
-        if c in out and out[c] == "":
-            out[c] = "0x"
-    return out
-
-
-def where_clause_to_key(where: str) -> str:
-    """WHERE clause -> generic 'pk1:pk2' key via the reference's regex
-    (K:308-311, D:462-467): (\\w+)=['\"]?(.*?)['\"]?( and |$)."""
-    matches = re.findall(r"(\w+)=['\"]?(.*?)['\"]?(?: and |$)", where)
-    return ":".join(v for _, v in matches)

@@ -170,6 +170,19 @@ def test_simhash_near_dups_have_small_hamming(spark, docs):
     assert dists and sum(dists) / len(dists) <= 4, f"avg hamming {dists}"
 
 
+@pytest.mark.parametrize("id_col", ["h", "s0", "tok"])
+def test_simhash_id_col_named_like_an_internal_column(spark, docs, id_col):
+    """The signature must not depend on the id column's name, even when
+    it is one the implementation once used for its own columns."""
+    sample = docs.limit(20)
+    want = {r.doc_id: r.simhash
+            for r in D.simhash_signatures(sample).collect()}
+    renamed = sample.withColumnRenamed("doc_id", id_col)
+    got = {r[id_col]: r.simhash
+           for r in D.simhash_signatures(renamed, id_col=id_col).collect()}
+    assert got == want
+
+
 def test_ivf_recall_vs_brute_force(spark, emb):
     queries = emb.filter(F.col("vec_id") < 10)
     exact = S.cosine_topk(queries, emb, k=5)

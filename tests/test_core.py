@@ -191,6 +191,45 @@ def test_snapshot_store_roundtrip(spark, tmp_path, fmt):
         {(2, 21), (3, 30)}
 
 
+@pytest.mark.parametrize("fmt", ["parquet", "dlog"])
+def test_write_snapshots_commits_each_due_tile(spark, tmp_path, fmt):
+    """write_snapshots commits one snapshot per listed tile from a frame
+    with a tile column: parquet in one partitioned write, dlog by
+    looping per-tile write_snapshot. A listed tile without rows commits
+    an empty snapshot with count 0; rows of unlisted tiles are skipped."""
+    store = SnapshotStore(str(tmp_path), "ks", "tbl", fmt=fmt)
+    df = spark.createDataFrame([(i, i * 10, i % 4) for i in range(20)],
+                               "pk int, ts long, tile int")
+    snaps = store.write_snapshots(df.filter("tile != 2"), [0, 1, 2])
+    assert sorted(snaps) == [0, 1, 2]
+    assert [snaps[t].count for t in (0, 1, 2)] == [5, 5, 0]
+    assert store.current_snapshot_id(3) is None
+    for t in (0, 1, 2):
+        back = store.read_snapshot(spark, t, snaps[t].id)
+        assert back.columns == ["pk", "ts"]
+        assert {(r.pk, r.ts) for r in back.collect()} == \
+            {(i, i * 10) for i in range(20) if i % 4 == t and t != 2}
+    again = store.write_snapshots(df, [0])
+    assert again[0].id == snaps[0].id + 1 and again[0].count == 5
+
+
+def test_parquet_snapshot_read_starts_no_job(spark, tmp_path):
+    """The manifest records each parquet snapshot's schema, so building
+    a read (time travel) runs no schema-inference job."""
+    store = SnapshotStore(str(tmp_path), "ks", "tbl")
+    sid = store.write_snapshot(
+        spark.createDataFrame([(1, 10)], "pk int, ts long"), tile=0)
+    sc = spark.sparkContext
+    sc.setJobGroup("snapshot-read", "counted")
+    try:
+        df = store.read_snapshot(spark, 0, sid)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("snapshot-read") == []
+    assert df.schema.simpleString() == "struct<pk:int,ts:bigint>"
+
+
 def test_snapshot_store_rejects_bad_format(tmp_path):
     with pytest.raises(ValueError, match="unknown snapshot format"):
         SnapshotStore(str(tmp_path), "ks", "tbl", fmt="iceberg")
@@ -1092,6 +1131,56 @@ def test_snapshot_gc_orphans(spark, tmp_path):
     assert [s.id for s in store.snapshots(0)] == [s1, s2]
     assert store.gc_orphans(0) == []          # idempotent
     assert store.gc_orphans(7) == []          # absent tile is a no-op
+
+
+def _killed_writers_staging(parent: str) -> str:
+    """A staging dir as a writer killed mid-write leaves it: made by a
+    process that exits without cleaning up."""
+    import os
+    import subprocess
+    import sys
+
+    return subprocess.run(
+        [sys.executable, "-c",
+         "import os, sys\n"
+         "from cql_replicator_spark.staging import new_staging_dir\n"
+         "d = new_staging_dir(sys.argv[1])\n"
+         "os.makedirs(os.path.join(d, 'tile=0'))\n"
+         "open(os.path.join(d, 'tile=0', 'part-0.parquet'), 'w').close()\n"
+         "print(d); os._exit(9)\n", parent],
+        capture_output=True, text=True, check=False,
+        env={**os.environ, "PYTHONPATH": os.getcwd()}).stdout.strip()
+
+
+def test_snapshot_gc_removes_dead_writers_staging(spark, tmp_path):
+    """A killed snapshot write leaves its staging dir beside the tile
+    dirs; gc_orphans and the next write remove it, while a live
+    writer's staging dir and another host's are kept."""
+    import os
+
+    from cql_replicator_spark.snapshot import SnapshotStore
+    from cql_replicator_spark.staging import new_staging_dir
+
+    store = SnapshotStore(str(tmp_path), "ks", "t")
+    table_dir = os.path.join(str(tmp_path), "ks", "t")
+    os.makedirs(table_dir)
+    dead = _killed_writers_staging(table_dir)
+    assert os.path.isdir(dead)
+    live = new_staging_dir(table_dir)
+    os.makedirs(live)
+    foreign = os.path.join(table_dir, "_staging-otherhost-1-0a1b")
+    os.makedirs(foreign)
+
+    assert store.gc_orphans(0) == [dead]
+    assert os.path.isdir(live) and os.path.isdir(foreign)
+
+    dead = _killed_writers_staging(table_dir)
+    df = spark.createDataFrame([(1, 10), (2, 20)], "pk int, ts long")
+    sid = store.write_snapshot(df, tile=0)
+    assert not os.path.exists(dead)
+    assert sorted(os.listdir(table_dir)) == sorted(
+        [os.path.basename(live), os.path.basename(foreign), "tile=0"])
+    assert store.read_snapshot(spark, 0, sid).count() == 2
 
 
 def test_scd2_history_intervals_and_null_safety(spark):

@@ -32,15 +32,39 @@ def _make_pipeline(spark, tables, tmp_path, sink=None, mod=10):
         store=SnapshotStore(str(tmp_path / "snaps"), "tpch", "orders"),
         ledger=Ledger(str(tmp_path / "ledger.json")),
         stats=StatsStore(str(tmp_path / "stats")),
-        total_tiles=4, max_workers=2,
+        total_tiles=4,
     ), state
 
 
 def test_cdc_pipeline_full_cycle(spark, tables, tmp_path):
+    from cql_replicator_spark.tiling import tile_expr
+
     captured = []
+
+    def sink(changes, batches):
+        # one call per cycle; per-tile facts come from the tile column
+        per_tile: dict[int, dict[str, int]] = {}
+        for op, frame in (("insert", changes.inserts),
+                          ("delete", changes.deletes),
+                          ("update", changes.updates)):
+            # every row sits in the tile its key hashes to
+            assert frame.filter(
+                F.col("tile") != tile_expr(frame, ["pk"], 4)).count() == 0
+            for r in frame.groupBy("tile").count().collect():
+                per_tile.setdefault(r["tile"], {})[op] = r["count"]
+        captured.append((dict(batches), per_tile))
+
+    def by_tile(stats):
+        return {s.tile: {"insert": s.insertedPrimaryKeys,
+                         "delete": s.deletedPrimaryKeys,
+                         "update": s.updatedPrimaryKeys} for s in stats}
+
+    def sunk(per_tile):
+        return {t: {op: n.get(op, 0) for op in ("insert", "delete", "update")}
+                for t, n in per_tile.items()}
+
     pipe, state = _make_pipeline(spark, tables, tmp_path)
-    pipe.sink = lambda changes, tile, batch_id: captured.append(
-        (tile, changes.inserts.count(), changes.deletes.count(), changes.updates.count()))
+    pipe.sink = sink
 
     # cycle 1: historical load
     assert sorted(pipe.discover()) == [0, 1, 2, 3]
@@ -48,6 +72,10 @@ def test_cdc_pipeline_full_cycle(spark, tables, tmp_path):
     assert len(stats1) == 4
     total_loaded = sum(s.insertedPrimaryKeys for s in stats1)
     assert total_loaded == pipe.pk_source().count()
+    assert len(captured) == 1  # sink invoked once per cycle
+    batches1, per_tile1 = captured[0]
+    assert batches1 == {t: pipe.store.current_snapshot_id(t) for t in range(4)}
+    assert sunk(per_tile1) == by_tile(stats1)
 
     # cycle 2: mutate source (mod 10 -> 7), expect delta
     state["mod"] = 7
@@ -60,7 +88,12 @@ def test_cdc_pipeline_full_cycle(spark, tables, tmp_path):
     t0 = {k for k in keys if k % 10 != 0}
     t1 = {k for k in keys if k % 7 != 0}
     assert ins == len(t1 - t0) and dels == len(t0 - t1)
-    assert len(captured) == 4  # sink invoked per tile
+    assert len(captured) == 1
+    batches2, per_tile2 = captured[0]
+    assert sorted(batches2) == [0, 1, 2, 3]  # every tile in the one call
+    assert all(batches2[t] > batches1[t] for t in range(4))
+    assert sorted(per_tile2) == [0, 1, 2, 3]
+    assert sunk(per_tile2) == by_tile(stats2)
 
     # stats aggregated on disk
     st = pipe.stats.get("tpch", "orders", 0, "replication")
@@ -123,6 +156,195 @@ def test_discovery_lost_race_skips_tile_not_cycle(spark, tables, tmp_path):
     # the lost tile replicates the RIVAL's snapshot id on the next pass
     plan = pipe.ledger.replication_plan("tpch", "orders", 1)
     assert plan == {"mode": "historical", "curr": 777}
+
+
+def _jobs_started(spark, fn) -> int:
+    """Spark jobs that fn starts: those of the job group set on this
+    thread, plus jobs without a group (started from other threads)."""
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"jobs-{uuid.uuid4().hex}"
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "counted")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    bus.waitUntilEmpty()
+    return (len(tracker.getJobIdsForGroup(group))
+            + len(set(tracker.getJobIdsForGroup(None)) - before))
+
+
+def test_cycle_jobs_do_not_grow_with_tiles(spark, tmp_path):
+    """One Spark pass per phase: a delta cycle of the CLI pipeline
+    (discovery write, diff, counts, sink) starts the same number of jobs
+    at 2 tiles as at 8, and no more than a fixed ceiling."""
+    import argparse
+
+    from cql_replicator_spark import cli
+
+    v1, v2 = str(tmp_path / "v1.parquet"), str(tmp_path / "v2.parquet")
+    base = spark.range(400).select(
+        F.col("id").alias("pk"), (F.col("id") * 10).alias("ts"),
+        F.concat(F.lit("v-"), F.col("id")).alias("payload"))
+    base.write.parquet(v1)
+    (base.filter("pk % 10 != 0")
+     .withColumn("ts", F.when(F.col("pk") % 7 == 0, F.col("ts") + 1)
+                 .otherwise(F.col("ts")))
+     .unionByName(spark.range(400, 410).select(
+         F.col("id").alias("pk"), (F.col("id") * 10).alias("ts"),
+         F.concat(F.lit("v-"), F.col("id")).alias("payload")))
+     .write.parquet(v2))
+
+    def delta_cycle_jobs(tiles: int) -> int:
+        state = tmp_path / f"state-{tiles}"
+        args = argparse.Namespace(
+            source=v1, table="t", pk="pk", ts_col="ts",
+            workdir=str(state / "work"), target=str(state / "target"),
+            tiles=tiles, mapping=None, mapping_b64=None)
+        pipe = cli._pipeline(spark, args)
+        assert sorted(pipe.discover()) == list(range(tiles))
+        pipe.replicate()
+        args.source = v2
+        n = _jobs_started(spark, lambda: (pipe.discover(), pipe.replicate()))
+        deletes = spark.read.parquet(str(state / "target" / "default" / "t"
+                                         / "*" / "delete" / "*"))
+        assert deletes.count() == 40
+        return n
+
+    at2, at8 = delta_cycle_jobs(2), delta_cycle_jobs(8)
+    assert at2 == at8, (at2, at8)
+    assert at8 <= 16, at8
+
+
+def test_discovery_commits_empty_tile(spark, tables, tmp_path):
+    """A due tile no key hashes to still rotates: a schema-correct empty
+    snapshot with count 0, replicated as zero changes."""
+    pipe, state = _make_pipeline(spark, tables, tmp_path)
+    pipe.tile_of = lambda df: F.pmod(F.col("pk"), F.lit(3))  # tile 3 empty
+    assert sorted(pipe.discover()) == [0, 1, 2, 3]
+    snap = pipe.store.snapshots(3)[-1]
+    assert snap.count == 0
+    empty = pipe.store.read_snapshot(spark, 3, snap.id)
+    full = pipe.store.read_current(spark, 0)
+    assert empty.count() == 0 and empty.schema == full.schema
+    assert pipe.stats.get("tpch", "orders", 3, "discovery")["primaryKeys"] == 0
+    stats = {s.tile: s for s in pipe.replicate()}
+    assert stats[3].primaryKeys == 0
+    assert sum(s.insertedPrimaryKeys for s in stats.values()) == \
+        pipe.pk_source().count()
+    # a delta cycle over two empty snapshots is empty too
+    state["mod"] = 7
+    assert sorted(pipe.discover()) == [0, 1, 2, 3]
+    stats = {s.tile: s for s in pipe.replicate()}
+    assert stats[3].primaryKeys == 0 and stats[0].primaryKeys > 0
+
+
+def test_replicate_mixes_historical_and_delta_tiles(spark, tables, tmp_path):
+    """One cycle where some tiles load historically and others diff: the
+    single sink call sees both, with per-tile counts matching the stats
+    and the set arithmetic of each tile."""
+    from cql_replicator_spark.tiling import tile_expr
+
+    sunk = {}
+    pipe, state = _make_pipeline(spark, tables, tmp_path)
+    pipe.sink = lambda changes, batches: sunk.update(
+        batches=batches,
+        counts={(r["tile"], r["op"]): r["count"] for r in changes
+                .tagged_union().groupBy("tile", "op").count().collect()})
+
+    assert sorted(pipe.discover()) == [0, 1, 2, 3]
+    # consume tiles 0 and 1 only; 2 and 3 keep their unconsumed snapshot
+    assert [pipe.replicate_tile(t).tile for t in (0, 1)] == [0, 1]
+    state["mod"] = 7
+    assert sorted(pipe.discover()) == [0, 1]
+    plans = {t: pipe.ledger.replication_plan("tpch", "orders", t)["mode"]
+             for t in range(4)}
+    assert plans == {0: "delta", 1: "delta", 2: "historical", 3: "historical"}
+    stats = {s.tile: s for s in pipe.replicate()}
+    assert sorted(stats) == sorted(sunk["batches"]) == [0, 1, 2, 3]
+
+    keys = tables["orders"].select(F.col("o_orderkey").alias("pk"))
+    tile_of = {r.pk: r.tile for r in keys.select(
+        "pk", tile_expr(keys, ["pk"], 4).alias("tile")).collect()}
+    t0 = {k for k in tile_of if k % 10 != 0}
+    t1 = {k for k in tile_of if k % 7 != 0}
+    for t in (0, 1):
+        want = {"insert": len({k for k in t1 - t0 if tile_of[k] == t}),
+                "delete": len({k for k in t0 - t1 if tile_of[k] == t}),
+                "update": 0}
+        got = stats[t]
+        assert (got.insertedPrimaryKeys, got.deletedPrimaryKeys,
+                got.updatedPrimaryKeys) == tuple(want.values())
+        for op, n in want.items():
+            assert sunk["counts"].get((t, op), 0) == n
+    for t in (2, 3):  # historical: the whole mod-10 snapshot as inserts
+        n = len({k for k in t0 if tile_of[k] == t})
+        assert stats[t].insertedPrimaryKeys == n == sunk["counts"][(t, "insert")]
+        assert stats[t].deletedPrimaryKeys == stats[t].updatedPrimaryKeys == 0
+
+
+@pytest.mark.parametrize("crash_in", ["ledger.mark_replication_complete",
+                                      "store.expire_snapshots"])
+def test_replication_stats_exactly_once_across_crash(spark, tables, tmp_path,
+                                                     crash_in):
+    """A crash after a tile's stats put (at the ledger mark, or at
+    expiry after the mark) followed by a re-run of replicate() counts
+    every tile's changes exactly once."""
+    pipe, state = _make_pipeline(spark, tables, tmp_path)
+    pipe.discover()
+    pipe.replicate()
+    state["mod"] = 7
+    pipe.discover()
+
+    owner_name, method = crash_in.split(".")
+    owner = getattr(pipe, owner_name)
+    real = getattr(owner, method)
+    calls = []
+
+    def crash_on_second_tile(*args, **kwargs):
+        calls.append(args)
+        if len(calls) == 2:
+            raise RuntimeError("crash after the stats put")
+        return real(*args, **kwargs)
+
+    setattr(owner, method, crash_on_second_tile)
+    try:
+        with pytest.raises(RuntimeError, match="crash after the stats put"):
+            pipe.replicate()
+    finally:
+        setattr(owner, method, real)
+    pipe.replicate()
+    assert pipe.replicate() == []
+
+    keys = {r.o_orderkey for r in tables["orders"].select("o_orderkey").collect()}
+    t0 = {k for k in keys if k % 10 != 0}
+    t1 = {k for k in keys if k % 7 != 0}
+    totals = dict.fromkeys(("primaryKeys", "insertedPrimaryKeys",
+                            "deletedPrimaryKeys", "updatedPrimaryKeys"), 0)
+    for t in range(4):
+        st = pipe.stats.get("tpch", "orders", t, "replication")
+        for k in totals:
+            totals[k] += st[k]
+    ins, dels = len(t0) + len(t1 - t0), len(t0 - t1)
+    assert totals == {"primaryKeys": ins + dels, "insertedPrimaryKeys": ins,
+                      "deletedPrimaryKeys": dels, "updatedPrimaryKeys": 0}
+
+
+def test_stats_put_ignores_a_repeated_snapshot(tmp_path):
+    from cql_replicator_spark.runner import ReplicationStats
+
+    stats = StatsStore(str(tmp_path))
+    stats.put("ks", "t", ReplicationStats(0, 3, 1, 1, 1, 0.0), 5)
+    stats.put("ks", "t", ReplicationStats(0, 3, 1, 1, 1, 0.0), 5)
+    stats.put("ks", "t", ReplicationStats(0, 2, 0, 2, 0, 0.0), 6)
+    got = stats.get("ks", "t", 0, "replication")
+    assert (got["primaryKeys"], got["insertedPrimaryKeys"],
+            got["appliedSnapshotId"]) == (5, 3, 6)
 
 
 def test_run_loop_with_stop_sentinel(spark, tables, tmp_path):
@@ -193,7 +415,7 @@ def test_counter_additive_update_e2e(spark, tmp_path):
         pk_source=lambda: src.project(state["df"]),
         store=store, ledger=ledger,
         stats=StatsStore(str(tmp_path / "stats")),
-        total_tiles=2, ts_col="counter_hash", max_workers=2)
+        total_tiles=2, ts_col="counter_hash")
 
     target: dict[int, dict[str, int]] = {}
     upd_re = re.compile(r"UPDATE ks\.cnt SET (.+) WHERE pk = (\d+)")

@@ -21,7 +21,7 @@ from cql_replicator_spark.sinks.dynamodb_sink import (
     map_cassandra_type_to_ddb, row_to_item,
 )
 from cql_replicator_spark.sinks.parquet_sink import (
-    bulk_replicate_to_parquet, hydrate_changes,
+    hydrate_changes, write_tile_batches,
 )
 
 
@@ -224,12 +224,119 @@ def test_hydrate_changes_broadcast_plan(tables, spark):
 def test_bulk_replicate_to_parquet(tables, spark, tmp_path):
     orders = tables["orders"]
     pks = orders.select("o_orderkey").filter(F.col("o_orderkey") % 9 == 0)
-    out = bulk_replicate_to_parquet(
-        orders, pks, ["o_orderkey"], str(tmp_path), "tpch", "orders",
-        tile=0, op="insert", batch_id="b1", avg_row_bytes=64.0)
-    back = spark.read.parquet(out)
+    keys = pks.select(F.lit(0).alias("tile"), F.lit("insert").alias("op"),
+                      "o_orderkey")
+    hydrated = hydrate_changes(orders, keys, ["o_orderkey"],
+                               carry=("tile", "op"))
+    write_tile_batches(hydrated, str(tmp_path), "tpch", "orders", {0: 1},
+                       unique_by=["o_orderkey"])
+    back = spark.read.parquet(
+        str(tmp_path / "tpch" / "orders" / "0" / "insert" / "snap-00000001"))
     assert back.count() == pks.count()
     assert set(back.columns) == set(orders.columns)
+
+
+def test_write_tile_batches_one_file_per_tile_op_and_retry_overwrites(
+        tables, spark, tmp_path):
+    """A cycle's hydrated rows land as one file per (tile, op) under
+    {tile}/{op}/snap-{id}, deduplicated by key; writing the same batch
+    again (a retried cycle) replaces it instead of nesting in it."""
+    import glob
+    import os
+
+    orders = tables["orders"]
+    keys = (orders.select("o_orderkey")
+            .filter(F.col("o_orderkey") % 9 == 0)
+            .withColumn("tile", (F.col("o_orderkey") % 2).cast("int"))
+            .withColumn("op", F.when(F.col("o_orderkey") % 5 == 0, "insert")
+                        .otherwise("update")))
+    hydrated = hydrate_changes(orders, keys.unionByName(keys), ["o_orderkey"],
+                               carry=("tile", "op"))
+    for _ in range(2):
+        write_tile_batches(hydrated, str(tmp_path), "tpch", "orders",
+                           {0: 7, 1: 9}, unique_by=["o_orderkey"])
+    base = tmp_path / "tpch" / "orders"
+    dirs = sorted(os.path.relpath(d, base)
+                  for d in glob.glob(str(base / "*" / "*" / "*")))
+    assert dirs == ["0/insert/snap-00000007", "0/update/snap-00000007",
+                    "1/insert/snap-00000009", "1/update/snap-00000009"]
+    for d in dirs:
+        assert len(glob.glob(str(base / d / "part-*"))) == 1
+        assert not glob.glob(str(base / d / "*" / "*"))  # nothing nested
+    back = spark.read.parquet(str(base / "*" / "*" / "*"))
+    assert back.count() == keys.count()
+    assert set(back.columns) == set(orders.columns)
+
+
+def test_write_tile_batches_splits_large_batches_by_count(
+        tables, spark, tmp_path, monkeypatch):
+    """A (tile, op) whose count exceeds ROWS_PER_FILE is written by
+    ceil(n / ROWS_PER_FILE) tasks, not one, and still keeps one row per
+    key; a (tile, op) below the target stays one file."""
+    import glob
+
+    from cql_replicator_spark.sinks import parquet_sink
+
+    saved = {k: spark.conf.get(k) for k in (
+        "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")}
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    try:
+        orders = tables["orders"]
+        keys = (orders.select("o_orderkey")
+                .withColumn("tile", (F.col("o_orderkey") % 2).cast("int"))
+                .withColumn("op", F.lit("insert")))
+        n = {r["tile"]: r["count"]
+             for r in keys.groupBy("tile").count().collect()}
+        counts = {0: {"insert": n[0]}, 1: {"insert": 10}}  # 1: below target
+        monkeypatch.setattr(parquet_sink, "ROWS_PER_FILE", -(-n[0] // 4))
+        hydrated = hydrate_changes(orders, keys.unionByName(keys),
+                                   ["o_orderkey"], carry=("tile", "op"))
+        write_tile_batches(hydrated, str(tmp_path), "tpch", "orders",
+                           {0: 1, 1: 1}, unique_by=["o_orderkey"],
+                           counts=counts)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    base = tmp_path / "tpch" / "orders"
+    assert 2 <= len(glob.glob(str(base / "0" / "insert" / "snap-*" / "part-*"))) <= 4
+    assert len(glob.glob(str(base / "1" / "insert" / "snap-*" / "part-*"))) == 1
+    back = spark.read.parquet(str(base / "*" / "insert" / "snap-00000001"))
+    assert back.count() == keys.count()
+    assert back.select("o_orderkey").distinct().count() == keys.count()
+
+
+def test_write_tile_batches_sweeps_a_killed_writers_staging(
+        tables, spark, tmp_path):
+    """A writer killed mid-write leaves its staging dir; the next write
+    to that table removes it, and keeps a live writer's."""
+    import os
+    import subprocess
+    import sys
+
+    base = tmp_path / "tpch" / "orders"
+    base.mkdir(parents=True)
+    dead = subprocess.run(
+        [sys.executable, "-c",
+         "import os, sys\n"
+         "from cql_replicator_spark.staging import new_staging_dir\n"
+         "d = new_staging_dir(sys.argv[1]); os.makedirs(d)\n"
+         "open(os.path.join(d, 'part-0.parquet'), 'w').close()\n"
+         "print(d); os._exit(9)\n", str(base)],
+        capture_output=True, text=True,
+        env={**os.environ, "PYTHONPATH": os.getcwd()}).stdout.strip()
+    assert os.path.isdir(dead)
+    from cql_replicator_spark.staging import new_staging_dir
+    live = new_staging_dir(str(base))
+    os.makedirs(live)
+
+    keys = (tables["orders"].select("o_orderkey").limit(5)
+            .select(F.lit(0).alias("tile"), F.lit("delete").alias("op"),
+                    "o_orderkey"))
+    write_tile_batches(keys, str(tmp_path), "tpch", "orders", {0: 1})
+    assert not os.path.exists(dead)
+    assert os.path.isdir(live)
+    assert sorted(os.listdir(base)) == ["0", os.path.basename(live)]
 
 
 # -- large objects + codec ----------------------------------------------------------

@@ -163,7 +163,7 @@ def test_source_feeds_cdc_pipeline(spark, tables, tmp_path):
         store=SnapshotStore(str(tmp_path / "snaps"), "ks", "orders"),
         ledger=Ledger(str(tmp_path / "ledger.json")),
         stats=StatsStore(str(tmp_path / "stats")),
-        total_tiles=2, max_workers=2)
+        total_tiles=2)
     assert sorted(pipe.discover()) == [0, 1]
     stats = pipe.replicate()
     assert sum(s.insertedPrimaryKeys for s in stats) == with_ts.count()
