@@ -23,6 +23,7 @@ import json
 import os
 import sys
 
+from pyspark import InheritableThread
 from pyspark.sql import functions as F
 
 KEYSPACE = "default"  # single-namespace offline layout
@@ -38,6 +39,14 @@ def _load_mapping(args):
     if getattr(args, "mapping_b64", None):
         return resolve_b64(args.mapping_b64)
     return JsonMapping()
+
+
+def _rows(counts, *ops):
+    """Rows of ``ops`` in a cycle's ``ChangeSet.counts``, or None when
+    the cycle was not counted."""
+    if counts is None:
+        return None
+    return sum(n.get(op, 0) for n in counts.values() for op in ops)
 
 
 def _pipeline(spark, args):
@@ -62,27 +71,48 @@ def _pipeline(spark, args):
         return df.select(*pk_cols, ts.alias("ts"))
 
     def sink(changes, batches):
+        """Write a cycle's changes from the runner's tagged diff, one
+        source scan per cycle. The delete write (keys only) runs on an
+        ``InheritableThread``, so its jobs carry the caller's job group
+        and tags, while this thread hydrates inserts and updates
+        together (the broadcast keys carry tile and op) and writes
+        them; both writes finish before the sink returns or raises. A
+        write the runner's counts give no rows is skipped. The batch id
+        is the tile's curr snapshot id, unique per rotation, so
+        back-to-back cycles never overwrite each other's delta."""
         if not args.target:
             return
-        # one source scan per cycle: inserts and updates hydrate
-        # together, the broadcast keys carrying tile and op; the batch
-        # id is the tile's curr snapshot id, unique per rotation, so
-        # back-to-back cycles never overwrite each other's delta; the
-        # runner's counts size the hydration join and the writes
-        counts = changes.counts or {}
-        n_upserts = sum(n.get("insert", 0) + n.get("update", 0)
-                        for n in counts.values())
-        upserts = (changes.inserts.withColumn("op", F.lit("insert"))
-                   .unionByName(changes.updates.withColumn("op", F.lit("update"))))
-        hydrated = hydrate_changes(
-            source(), upserts, pk_cols, carry=("tile", "op"),
-            broadcast_pks=n_upserts <= BROADCAST_MAX_KEYS)
-        write_tile_batches(hydrated, args.target, KEYSPACE, table, batches,
-                           unique_by=pk_cols, counts=counts)
-        deletes = changes.deletes.select(
-            "tile", F.lit("delete").alias("op"), *pk_cols)
-        write_tile_batches(deletes, args.target, KEYSPACE, table, batches,
-                           counts=counts)
+        counts = changes.counts
+        tagged = changes.tagged_union()
+        failed = []
+
+        def write_deletes():
+            try:
+                write_tile_batches(
+                    tagged.filter(F.col("op") == "delete")
+                    .select("tile", "op", *pk_cols),
+                    args.target, KEYSPACE, table, batches, counts=counts)
+            except BaseException as e:  # re-raised on the caller's thread
+                failed.append(e)
+
+        deleter = None
+        if _rows(counts, "delete") != 0:
+            deleter = InheritableThread(target=write_deletes, session=spark)
+            deleter.start()
+        try:
+            n_upserts = _rows(counts, "insert", "update")
+            if n_upserts != 0:
+                hydrated = hydrate_changes(
+                    source(), tagged.filter(F.col("op") != "delete"), pk_cols,
+                    carry=("tile", "op"),
+                    broadcast_pks=(n_upserts or 0) <= BROADCAST_MAX_KEYS)
+                write_tile_batches(hydrated, args.target, KEYSPACE, table,
+                                   batches, unique_by=pk_cols, counts=counts)
+        finally:
+            if deleter is not None:
+                deleter.join()
+        if failed:
+            raise failed[0]
 
     return CdcPipeline(
         spark=spark, keyspace=KEYSPACE, table=table, pk_cols=pk_cols,

@@ -34,19 +34,29 @@ from pyspark.sql import functions as F
 
 @dataclass
 class ChangeSet:
+    """A diff as three sets of changed rows, one per op. A producer that
+    holds the diff as one op-tagged frame (``changeset_from_tagged``;
+    the runner's persisted diff) keeps it in ``tagged``, and
+    ``tagged_union`` returns that frame as is, so a sink that wants all
+    ops reads the cached diff with no union or re-tagging."""
     inserts: DataFrame
     deletes: DataFrame
     updates: DataFrame
     # rows per tile and op, {tile: {op: n}}, when the producer has
     # already counted them (the runner has); sinks size writes by it
     counts: dict[int, dict[str, int]] | None = None
+    # the op-tagged frame the three sets were split from
+    tagged: DataFrame | None = None
 
-    def tagged_union(self, op_col: str = "op") -> DataFrame:
-        """All changes as one DataFrame with an op column (insert/delete/update)."""
+    def tagged_union(self) -> DataFrame:
+        """All changes as one DataFrame with an ``op`` column
+        (insert/delete/update)."""
+        if self.tagged is not None:
+            return self.tagged
         return (
-            self.inserts.withColumn(op_col, F.lit("insert"))
-            .unionByName(self.deletes.withColumn(op_col, F.lit("delete")))
-            .unionByName(self.updates.withColumn(op_col, F.lit("update")))
+            self.inserts.withColumn("op", F.lit("insert"))
+            .unionByName(self.deletes.withColumn("op", F.lit("delete")))
+            .unionByName(self.updates.withColumn("op", F.lit("update")))
         )
 
 
@@ -115,16 +125,19 @@ def compute_changes_envelope(
     )
 
 
-def changeset_from_tagged(tagged: DataFrame, op_col: str = "op",
+def changeset_from_tagged(tagged: DataFrame,
                           counts: dict[int, dict[str, int]] | None = None
                           ) -> ChangeSet:
-    """Split a (persisted!) tagged diff into the three-set view. Persist
-    the tagged frame first or the join re-executes per subset."""
+    """The three-set view of a (persisted!) diff tagged in an ``op``
+    column, which it also keeps as ``ChangeSet.tagged`` for
+    ``tagged_union``. Persist the tagged frame first or the join
+    re-executes per subset."""
     return ChangeSet(
-        inserts=tagged.filter(F.col(op_col) == "insert").drop(op_col),
-        deletes=tagged.filter(F.col(op_col) == "delete").drop(op_col),
-        updates=tagged.filter(F.col(op_col) == "update").drop(op_col),
+        inserts=tagged.filter(F.col("op") == "insert").drop("op"),
+        deletes=tagged.filter(F.col("op") == "delete").drop("op"),
+        updates=tagged.filter(F.col("op") == "update").drop("op"),
         counts=counts,
+        tagged=tagged,
     )
 
 

@@ -13,11 +13,15 @@ Reimplements the reference's job structure (SURVEY §3):
 
 Each phase of a cycle is one Spark pass over every due tile, where the
 reference runs one job per tile (Scala .par — K:2258): discovery writes
-all due tiles in one ``partitionBy("tile")`` write; replication diffs
-every delta tile in one full-outer join keyed on (tile, pk), and the
-sink runs once per cycle on a ``ChangeSet`` whose frames carry
-``tile``. The ledger still commits each tile on its own, after the
-cycle-wide work.
+all due tiles in one ``partitionBy("tile")`` write; replication reads
+the curr snapshots of every delta tile as one relation and their prev
+snapshots as another (``SnapshotStore.read_snapshots``), diffs them in
+one full-outer join keyed on (tile, pk), persists the op-tagged result
+and counts it with one ``groupBy("tile", "op")``. The sink runs once
+per cycle on a ``ChangeSet`` whose frames carry ``tile`` and whose
+``tagged_union()`` is that persisted frame itself (plus the historical
+tiles' curr relation, every row an insert). The ledger still commits
+each tile on its own, after the cycle-wide work.
 
 The source is any callable returning a DataFrame with the PK columns
 (+ optional ts): a Cassandra connector reader in production, parquet
@@ -31,7 +35,6 @@ import os
 import time
 from collections.abc import Callable
 from dataclasses import asdict, dataclass
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -212,9 +215,10 @@ class CdcPipeline:
 
     def _replicate(self, tiles) -> list[ReplicationStats]:
         """Replicate every due tile of ``tiles`` in one pass: one tagged
-        diff over the delta tiles keyed on (tile, pk), historical tiles
-        as curr-as-insert rows, one sink call; then, tile by tile,
-        stats, ledger mark and expiry."""
+        diff keyed on (tile, pk) over one curr and one prev relation
+        (``read_snapshots``), historical tiles as one curr-as-insert
+        relation, one sink call on the tagged frame; then, tile by
+        tile, stats, ledger mark and expiry."""
         plans = {}
         for t in tiles:
             plan = self.ledger.replication_plan(self.keyspace, self.table, t)
@@ -223,41 +227,36 @@ class CdcPipeline:
         if not plans:
             return []
 
-        def read(tile: int, sid: int) -> DataFrame:
-            return (self.store.read_snapshot(self.spark, tile, sid)
-                    .withColumn("tile", F.lit(tile)))
-
-        def union(frames: list[DataFrame]) -> DataFrame:
-            return reduce(lambda a, b: a.unionByName(
-                b, allowMissingColumns=True), frames)
-
-        delta = [t for t, p in plans.items() if p["mode"] == "delta"]
+        delta = {t: p for t, p in plans.items() if p["mode"] == "delta"}
+        historical = {t: p["curr"] for t, p in plans.items()
+                      if p["mode"] == "historical"}
         counts: dict[int, dict[str, int]] = {t: {} for t in plans}
-        parts = []
-        tagged = None
+        tagged = changes = None
         try:
             if delta:
                 # single-pass diff: one full-outer join, materialized
-                # once; the counts and the sink's three-set view reuse
-                # the cache
+                # once; the counts and the sink reuse the cache
                 tagged = compute_changes_tagged(
-                    union([read(t, plans[t]["curr"]) for t in delta]),
-                    union([read(t, plans[t]["prev"]) for t in delta]),
+                    self.store.read_snapshots(
+                        self.spark, {t: p["curr"] for t, p in delta.items()}),
+                    self.store.read_snapshots(
+                        self.spark, {t: p["prev"] for t, p in delta.items()}),
                     ["tile", *self.pk_cols], self.ts_col).persist()
                 for r in tagged.groupBy("tile", "op").count().collect():
                     counts[r["tile"]][r["op"]] = r["count"]
-                parts.append(tagged)
-            for t, p in plans.items():
-                if p["mode"] == "historical":
-                    # full load: everything in curr is an insert
-                    # (K:1660-1674), counted by the manifest
-                    parts.append(read(t, p["curr"])
-                                 .withColumn("op", F.lit("insert")))
+                changes = tagged
+            if historical:
+                # full load: everything in curr is an insert
+                # (K:1660-1674), counted by the manifest
+                loads = (self.store.read_snapshots(self.spark, historical)
+                         .withColumn("op", F.lit("insert")))
+                changes = loads if changes is None else changes.unionByName(
+                    loads, allowMissingColumns=True)
+                for t, sid in historical.items():
                     counts[t]["insert"] = next(
-                        s.count for s in self.store.snapshots(t)
-                        if s.id == p["curr"])
+                        s.count for s in self.store.snapshots(t) if s.id == sid)
             if self.sink is not None:
-                self.sink(changeset_from_tagged(union(parts), counts=counts),
+                self.sink(changeset_from_tagged(changes, counts=counts),
                           {t: p["curr"] for t, p in plans.items()})
         finally:
             if tagged is not None:

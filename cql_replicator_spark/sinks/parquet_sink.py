@@ -8,6 +8,12 @@ set back to the source DataFrame and write Parquet directly
   source ⋈ broadcast(changed keys + tile, op) ->
   parquet {root}/{ks}/{tbl}/{tile}/{op}/snap-{id}, one job per cycle
 
+The CLI sink (``cli._pipeline``) calls ``write_tile_batches`` twice per
+cycle, on frames filtered from the runner's tagged diff: the hydrated
+upserts, and the keys of the deletes from a second thread at the same
+time. Two concurrent calls on one table are safe: each stages in its
+own directory and renames into different ``{op}`` dirs.
+
 Write sizing carries the reference's maxRecordsPerFile 10,500,000 +
 snappy (writeWithSizeControl K:2224-2231). The write's width comes from
 the cycle's per-(tile, op) row counts (``ROWS_PER_FILE`` rows a file,

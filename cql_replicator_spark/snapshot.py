@@ -33,9 +33,23 @@ packages or session extensions, so the lakehouse semantics (immutable
 data files + atomic log commit + version reads) are exercised in every
 environment, not only where delta-spark is installed.
 
-Scale note: snapshots are written ``repartition(k, pk_cols)`` so each
-tile's snapshot has a bounded file count regardless of upstream
-parallelism, and reads of a single tile never list other tiles' files.
+Layout contract. A parquet snapshot is the directory
+``{root}/{ks}/{table}/tile={n}/snap-{id:08d}/`` holding the snapshot's
+data files and nothing else a reader lists (Spark skips ``_``/``.``
+names), and its manifest entry records the schema of those files
+without the tile. ``read_snapshots`` relies on both: it reads any set
+of snapshot dirs as one relation with ``basePath`` at the table dir,
+so Spark takes ``tile`` from the ``tile=N`` directory and the manifest
+schema (plus ``tile int``) spares it the schema-inference job. An empty
+snapshot is an empty directory, which reads as zero rows.
+
+Scale note: ``write_snapshots`` writes every due tile in one
+``coalesce(files_per_snapshot)`` + ``partitionBy("tile")`` job, so a
+tile's snapshot holds at most ``files_per_snapshot`` files (one file
+when the input is hash-partitioned by tile); reads never list another
+tile's files. A multi-tile read lists the requested dirs one by one;
+past 32 paths (``spark.sql.sources.parallelPartitionDiscovery.threshold``)
+Spark lists them in one parallel listing job instead.
 """
 
 from __future__ import annotations
@@ -47,6 +61,7 @@ import os
 import shutil
 import time
 from dataclasses import dataclass
+from functools import reduce
 
 from .session import default_write_files as _default_write_files
 from .staging import new_staging_dir, remove_dead_staging
@@ -70,7 +85,7 @@ def _stat_json(v):
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, StructType
 
 
 @dataclass
@@ -104,8 +119,11 @@ class SnapshotStore:
         self.fmt = fmt
 
     # -- layout ---------------------------------------------------------
+    def _table_dir(self) -> str:
+        return os.path.join(self.root, self.keyspace, self.table)
+
     def _tile_dir(self, tile: int) -> str:
-        return os.path.join(self.root, self.keyspace, self.table, f"tile={tile}")
+        return os.path.join(self._table_dir(), f"tile={tile}")
 
     def _manifest_path(self, tile: int) -> str:
         return os.path.join(self._tile_dir(tile), "manifest.json")
@@ -225,9 +243,8 @@ class SnapshotStore:
         if self.fmt != "parquet":
             return self._write_each(due, tiles, files_per_snapshot)
         schema = json.loads(due.drop("tile").schema.json())
-        table_dir = os.path.join(self.root, self.keyspace, self.table)
-        remove_dead_staging(table_dir)
-        stage = new_staging_dir(table_dir)
+        remove_dead_staging(self._table_dir())
+        stage = new_staging_dir(self._table_dir())
         obs = Observation()
         try:
             (due.observe(obs, *[F.count(F.when(F.col("tile") == t, 1))
@@ -343,6 +360,14 @@ class SnapshotStore:
     def snapshot_exists(self, tile: int, snapshot_id: int) -> bool:
         return any(e["id"] == snapshot_id for e in self._read_manifest(tile))
 
+    def _entry(self, tile: int, snapshot_id: int) -> dict:
+        for e in self._read_manifest(tile):
+            if e["id"] == snapshot_id:
+                return e
+        raise ValueError(
+            f"snapshot {snapshot_id} not found for {self.keyspace}.{self.table} tile {tile}"
+        )
+
     def read_snapshot(self, spark: SparkSession, tile: int, snapshot_id: int,
                       between: dict[str, tuple] | None = None) -> DataFrame:
         """Time-travel read (readIcebergAtSnapshot — K:1340-1349).
@@ -356,48 +381,74 @@ class SnapshotStore:
         Without stats the same predicate still applies, just without
         the skip. A parquet snapshot whose manifest records its schema
         is read with it: no schema-inference job per read."""
-        for e in self._read_manifest(tile):
-            if e["id"] != snapshot_id:
-                continue
-            reader = spark.read
-            if "schema" in e:
-                reader = reader.schema(StructType.fromJson(e["schema"]))
-            if self.fmt == "delta":
-                df = (spark.read.format("delta")
-                      .option("versionAsOf", e["delta_version"])
-                      .load(e["path"]))
-            elif self.fmt == "dlog":
-                from .dlog import DeltaLogTable
+        e = self._entry(tile, snapshot_id)
+        reader = spark.read
+        if "schema" in e:
+            reader = reader.schema(StructType.fromJson(e["schema"]))
+        if self.fmt == "delta":
+            df = (spark.read.format("delta")
+                  .option("versionAsOf", e["delta_version"])
+                  .load(e["path"]))
+        elif self.fmt == "dlog":
+            from .dlog import DeltaLogTable
 
-                df = DeltaLogTable(e["path"]).read(
-                    spark, version_as_of=e["dlog_version"])
-            elif between and e.get("files"):
-                def _overlaps(f: dict) -> bool:
-                    for c, (lo, hi) in between.items():
-                        fmin, fmax = f["min"].get(c), f["max"].get(c)
-                        if fmin is None or fmax is None:
-                            continue  # unknown stats never exclude a file
-                        # bounds normalized like the stored stats, so a
-                        # date/timestamp compare is string-vs-string in
-                        # the same ISO encoding
-                        if fmax < _stat_json(lo) or fmin > _stat_json(hi):
-                            return False
-                    return True
-
-                keep = [f["path"] for f in e["files"] if _overlaps(f)]
-                if not keep:  # schema-correct empty frame, zero data read
-                    df = reader.parquet(e["path"]).where(F.lit(False))
-                else:
-                    df = reader.parquet(*keep)
-            else:
-                df = reader.parquet(e["path"])
-            if between:
+            df = DeltaLogTable(e["path"]).read(
+                spark, version_as_of=e["dlog_version"])
+        elif between and e.get("files"):
+            def _overlaps(f: dict) -> bool:
                 for c, (lo, hi) in between.items():
-                    df = df.filter(F.col(c).between(lo, hi))
-            return df
-        raise ValueError(
-            f"snapshot {snapshot_id} not found for {self.keyspace}.{self.table} tile {tile}"
-        )
+                    fmin, fmax = f["min"].get(c), f["max"].get(c)
+                    if fmin is None or fmax is None:
+                        continue  # unknown stats never exclude a file
+                    # bounds normalized like the stored stats, so a
+                    # date/timestamp compare is string-vs-string in
+                    # the same ISO encoding
+                    if fmax < _stat_json(lo) or fmin > _stat_json(hi):
+                        return False
+                return True
+
+            keep = [f["path"] for f in e["files"] if _overlaps(f)]
+            if not keep:  # schema-correct empty frame, zero data read
+                df = reader.parquet(e["path"]).where(F.lit(False))
+            else:
+                df = reader.parquet(*keep)
+        else:
+            df = reader.parquet(e["path"])
+        if between:
+            for c, (lo, hi) in between.items():
+                df = df.filter(F.col(c).between(lo, hi))
+        return df
+
+    def read_snapshots(self, spark: SparkSession,
+                       snapshot_ids: dict[int, int]) -> DataFrame:
+        """Time-travel read of several tiles as ONE relation: for each
+        ``{tile: snapshot_id}``, that snapshot's rows, with an int
+        ``tile`` column after the snapshot's own columns.
+
+        Parquet: one ``spark.read`` of every requested snapshot dir with
+        ``basePath`` at the table dir, so ``tile`` comes from the
+        ``tile=N`` directory (the layout contract in the module
+        docstring), read with the manifest schema: one scan node, and no
+        job to build it below Spark's parallel-listing threshold. Empty
+        snapshots add no rows; a request of only empty snapshots is a
+        schema-correct empty frame. Snapshots whose manifests record no
+        schema, or different ones, and the delta/dlog backends (one
+        table per tile) are read per tile and unioned here."""
+        if not snapshot_ids:
+            raise ValueError("read_snapshots: no snapshots requested")
+        entries = {t: self._entry(t, sid)
+                   for t, sid in sorted(snapshot_ids.items())}
+        schemas = [e.get("schema") for e in entries.values()]
+        if self.fmt == "parquet" and schemas[0] is not None \
+                and all(sch == schemas[0] for sch in schemas):
+            schema = StructType.fromJson(schemas[0]).add("tile", IntegerType())
+            return (spark.read.schema(schema)
+                    .option("basePath", self._table_dir())
+                    .parquet(*[e["path"] for e in entries.values()]))
+        return reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            [self.read_snapshot(spark, t, sid).withColumn("tile", F.lit(t))
+             for t, sid in sorted(snapshot_ids.items())])
 
     def read_current(self, spark: SparkSession, tile: int) -> DataFrame:
         sid = self.current_snapshot_id(tile)
@@ -456,8 +507,7 @@ class SnapshotStore:
         sees the dir either before it exists or after the manifest
         lists it. Staging dirs of dead writers (``staging``) go too:
         they sit beside the tile dirs, so any tile's gc collects them."""
-        removed = remove_dead_staging(
-            os.path.join(self.root, self.keyspace, self.table))
+        removed = remove_dead_staging(self._table_dir())
         tdir = self._tile_dir(tile)
         if not os.path.isdir(tdir):
             return removed

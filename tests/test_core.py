@@ -215,19 +215,58 @@ def test_write_snapshots_commits_each_due_tile(spark, tmp_path, fmt):
 
 def test_parquet_snapshot_read_starts_no_job(spark, tmp_path):
     """The manifest records each parquet snapshot's schema, so building
-    a read (time travel) runs no schema-inference job."""
+    a read (time travel) runs no schema-inference job — of one tile, or
+    of several tiles as one relation (an empty tile among them)."""
     store = SnapshotStore(str(tmp_path), "ks", "tbl")
     sid = store.write_snapshot(
         spark.createDataFrame([(1, 10)], "pk int, ts long"), tile=0)
+    more = store.write_snapshots(
+        spark.createDataFrame([(2, 20, 1)], "pk int, ts long, tile int"),
+        [1, 2])
     sc = spark.sparkContext
     sc.setJobGroup("snapshot-read", "counted")
     try:
         df = store.read_snapshot(spark, 0, sid)
+        multi = store.read_snapshots(
+            spark, {0: sid, 1: more[1].id, 2: more[2].id})
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert sc.statusTracker().getJobIdsForGroup("snapshot-read") == []
     assert df.schema.simpleString() == "struct<pk:int,ts:bigint>"
+    assert multi.schema.simpleString() == "struct<pk:int,ts:bigint,tile:int>"
+    assert sorted(tuple(r) for r in multi.collect()) == [(1, 10, 0), (2, 20, 1)]
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "dlog"])
+def test_read_snapshots_equals_per_tile_union(spark, tmp_path, fmt):
+    """read_snapshots returns the rows of the per-tile reads, each with
+    its tile, as one relation; a requested empty snapshot adds none."""
+    store = SnapshotStore(str(tmp_path), "ks", "tbl", fmt=fmt)
+    df = spark.createDataFrame([(i, i * 10, i % 4) for i in range(20)],
+                               "pk int, ts long, tile int")
+    snaps = store.write_snapshots(df.filter("tile != 2"), [0, 1, 2, 3])
+    assert snaps[2].count == 0
+    ids = {t: snaps[t].id for t in (0, 2, 3)}
+    got = store.read_snapshots(spark, ids)
+    want = [store.read_snapshot(spark, t, sid).withColumn("tile", F.lit(t))
+            for t, sid in ids.items()]
+    assert got.schema.simpleString() == "struct<pk:int,ts:bigint,tile:int>"
+    assert sorted(tuple(r) for r in got.collect()) == sorted(
+        tuple(r) for w in want for r in w.collect())
+    assert got.count() == 10
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "dlog"])
+def test_read_snapshots_of_only_empty_snapshots(spark, tmp_path, fmt):
+    """A request where every snapshot is empty reads zero rows and keeps
+    the snapshot schema plus the tile column."""
+    store = SnapshotStore(str(tmp_path), "ks", "tbl", fmt=fmt)
+    df = spark.createDataFrame([], "pk int, ts long, tile int")
+    snaps = store.write_snapshots(df, [0, 1])
+    got = store.read_snapshots(spark, {t: s.id for t, s in snaps.items()})
+    assert got.schema.simpleString() == "struct<pk:int,ts:bigint,tile:int>"
+    assert got.count() == 0
 
 
 def test_snapshot_store_rejects_bad_format(tmp_path):

@@ -158,9 +158,9 @@ def test_discovery_lost_race_skips_tile_not_cycle(spark, tables, tmp_path):
     assert plan == {"mode": "historical", "curr": 777}
 
 
-def _jobs_started(spark, fn) -> int:
-    """Spark jobs that fn starts: those of the job group set on this
-    thread, plus jobs without a group (started from other threads)."""
+def _jobs_started(spark, fn) -> tuple[int, int]:
+    """Spark jobs that fn starts: (those of the job group set on this
+    thread, jobs without a group started meanwhile)."""
     import uuid
 
     sc = spark.sparkContext
@@ -175,18 +175,13 @@ def _jobs_started(spark, fn) -> int:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     bus.waitUntilEmpty()
-    return (len(tracker.getJobIdsForGroup(group))
-            + len(set(tracker.getJobIdsForGroup(None)) - before))
+    return (len(tracker.getJobIdsForGroup(group)),
+            len(set(tracker.getJobIdsForGroup(None)) - before))
 
 
-def test_cycle_jobs_do_not_grow_with_tiles(spark, tmp_path):
-    """One Spark pass per phase: a delta cycle of the CLI pipeline
-    (discovery write, diff, counts, sink) starts the same number of jobs
-    at 2 tiles as at 8, and no more than a fixed ceiling."""
-    import argparse
-
-    from cql_replicator_spark import cli
-
+def _cli_sources(spark, tmp_path) -> tuple[str, str]:
+    """Two versions of a 400-key source: v2 deletes pk % 10 == 0, bumps
+    ts of the other pk % 7 == 0 and inserts 400..409."""
     v1, v2 = str(tmp_path / "v1.parquet"), str(tmp_path / "v2.parquet")
     base = spark.range(400).select(
         F.col("id").alias("pk"), (F.col("id") * 10).alias("ts"),
@@ -199,26 +194,170 @@ def test_cycle_jobs_do_not_grow_with_tiles(spark, tmp_path):
          F.col("id").alias("pk"), (F.col("id") * 10).alias("ts"),
          F.concat(F.lit("v-"), F.col("id")).alias("payload")))
      .write.parquet(v2))
+    return v1, v2
+
+
+def _cli_pipeline(spark, state, source, tiles):
+    import argparse
+
+    from cql_replicator_spark import cli
+
+    args = argparse.Namespace(
+        source=source, table="t", pk="pk", ts_col="ts",
+        workdir=str(state / "work"), target=str(state / "target"),
+        tiles=tiles, mapping=None, mapping_b64=None)
+    return cli._pipeline(spark, args), args
+
+
+def _target_keys(spark, state, op) -> list[int]:
+    return sorted(r.pk for r in spark.read.parquet(
+        str(state / "target" / "default" / "t" / "*" / op / "*"))
+        .select("pk").collect())
+
+
+def test_cycle_jobs_do_not_grow_with_tiles(spark, tmp_path):
+    """One Spark pass per phase: a delta cycle of the CLI pipeline
+    (discovery write, diff, counts, sink) starts the same number of jobs
+    at 2 tiles as at 8, and no more than a fixed ceiling."""
+    v1, v2 = _cli_sources(spark, tmp_path)
 
     def delta_cycle_jobs(tiles: int) -> int:
         state = tmp_path / f"state-{tiles}"
-        args = argparse.Namespace(
-            source=v1, table="t", pk="pk", ts_col="ts",
-            workdir=str(state / "work"), target=str(state / "target"),
-            tiles=tiles, mapping=None, mapping_b64=None)
-        pipe = cli._pipeline(spark, args)
+        pipe, args = _cli_pipeline(spark, state, v1, tiles)
         assert sorted(pipe.discover()) == list(range(tiles))
         pipe.replicate()
         args.source = v2
-        n = _jobs_started(spark, lambda: (pipe.discover(), pipe.replicate()))
-        deletes = spark.read.parquet(str(state / "target" / "default" / "t"
-                                         / "*" / "delete" / "*"))
-        assert deletes.count() == 40
+        n = sum(_jobs_started(spark, lambda: (pipe.discover(),
+                                              pipe.replicate())))
+        assert len(_target_keys(spark, state, "delete")) == 40
         return n
 
     at2, at8 = delta_cycle_jobs(2), delta_cycle_jobs(8)
     assert at2 == at8, (at2, at8)
     assert at8 <= 16, at8
+
+
+def test_cli_cycle_jobs_all_carry_the_callers_group(spark, tmp_path):
+    """The CLI sink's delete write runs on its own thread; every job of a
+    delta cycle, that write's included, carries the job group of the
+    thread that runs the cycle."""
+    v1, v2 = _cli_sources(spark, tmp_path)
+    pipe, args = _cli_pipeline(spark, tmp_path / "state", v1, 4)
+    pipe.discover()
+    pipe.replicate()
+    args.source = v2
+    grouped, ungrouped = _jobs_started(
+        spark, lambda: (pipe.discover(), pipe.replicate()))
+    assert grouped > 0 and ungrouped == 0, (grouped, ungrouped)
+    assert _target_keys(spark, tmp_path / "state", "delete") == \
+        list(range(0, 400, 10))
+
+
+def test_cli_sink_delete_failure_raises_after_upserts(spark, tmp_path,
+                                                      monkeypatch):
+    """A failing delete write, which overlaps the upsert write, surfaces
+    from replicate() only once the upsert write has finished, with no
+    job left running, no tile marked and no stats put; the retried
+    cycle then lands exactly the set arithmetic."""
+    import time
+
+    from cql_replicator_spark.sinks import parquet_sink
+
+    real = parquet_sink.write_tile_batches
+    failing, events = [True], []
+
+    def write_tile_batches(df, *args, **kwargs):
+        if failing[0] and "payload" not in df.columns:  # keys only: deletes
+            events.append(("delete failed", time.monotonic()))
+            raise RuntimeError("delete write failed")
+        real(df, *args, **kwargs)
+        events.append(("written", time.monotonic()))
+
+    monkeypatch.setattr(parquet_sink, "write_tile_batches", write_tile_batches)
+    v1, v2 = _cli_sources(spark, tmp_path)
+    state = tmp_path / "state"
+    pipe, args = _cli_pipeline(spark, state, v1, 4)
+    pipe.discover()
+    pipe.replicate()  # historical: no delete write
+    args.source = v2
+    pipe.discover()
+    plans = {t: pipe.ledger.replication_plan("default", "t", t)
+             for t in range(4)}
+    stats = {t: pipe.stats.get("default", "t", t, "replication")
+             for t in range(4)}
+    events.clear()
+
+    with pytest.raises(RuntimeError, match="delete write failed"):
+        pipe.replicate()
+    raised = time.monotonic()
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getActiveJobsIds() == []
+    assert sorted(e for e, _ in events) == ["delete failed", "written"]
+    assert dict(events)["written"] <= raised
+    assert all(p["mode"] == "delta" for p in plans.values())
+    assert {t: pipe.ledger.replication_plan("default", "t", t)
+            for t in range(4)} == plans
+    assert {t: pipe.stats.get("default", "t", t, "replication")
+            for t in range(4)} == stats
+
+    failing[0] = False
+    assert len(pipe.replicate()) == 4
+    assert _target_keys(spark, state, "insert") == list(range(410))
+    assert _target_keys(spark, state, "update") == [
+        k for k in range(400) if k % 7 == 0 and k % 10 != 0]
+    assert _target_keys(spark, state, "delete") == list(range(0, 400, 10))
+
+
+def test_cli_sink_skips_writes_without_rows(spark, tmp_path, monkeypatch):
+    """The CLI sink starts no write the runner's counts give no rows: the
+    historical load writes no deletes, and a delete-only cycle neither
+    hydrates (scans the source) nor writes upserts. Without counts both
+    writes run."""
+    from cql_replicator_spark import transform
+    from cql_replicator_spark.diff import changeset_from_tagged
+    from cql_replicator_spark.sinks import parquet_sink
+
+    real_write = parquet_sink.write_tile_batches
+    real_scan = transform.build_source_pipeline
+    writes, scans = [], []
+
+    def write_tile_batches(df, *args, **kwargs):
+        writes.append("upserts" if "payload" in df.columns else "deletes")
+        real_write(df, *args, **kwargs)
+
+    def build_source_pipeline(*args, **kwargs):
+        scans.append(1)
+        return real_scan(*args, **kwargs)
+
+    monkeypatch.setattr(parquet_sink, "write_tile_batches", write_tile_batches)
+    monkeypatch.setattr(transform, "build_source_pipeline",
+                        build_source_pipeline)
+    v1 = str(tmp_path / "v1.parquet")
+    spark.range(40).select(
+        F.col("id").alias("pk"), (F.col("id") * 10).alias("ts"),
+        F.concat(F.lit("v-"), F.col("id")).alias("payload")).write.parquet(v1)
+    v2 = str(tmp_path / "v2.parquet")
+    spark.read.parquet(v1).filter("pk % 10 != 0").write.parquet(v2)
+    state = tmp_path / "state"
+    pipe, args = _cli_pipeline(spark, state, v1, 2)
+
+    pipe.discover()
+    pipe.replicate()
+    assert writes == ["upserts"]
+    args.source = v2
+    pipe.discover()
+    writes.clear()
+    scans.clear()
+    pipe.replicate()
+    assert writes == ["deletes"] and scans == []
+    assert _target_keys(spark, state, "delete") == [0, 10, 20, 30]
+
+    writes.clear()
+    tagged = spark.createDataFrame([("delete", 0, 5, 50)],
+                                   "op string, tile int, pk long, ts long")
+    pipe.sink(changeset_from_tagged(tagged), {0: 99})
+    assert sorted(writes) == ["deletes", "upserts"]
 
 
 def test_discovery_commits_empty_tile(spark, tables, tmp_path):
