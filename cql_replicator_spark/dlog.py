@@ -36,9 +36,10 @@ What is deliberately NOT implemented: automatic retry/rebase of the
 losing writer (callers re-read and re-commit, like the reference's
 per-tile single-writer loop), checkpoints (logs here are tiny; replay
 is O(versions)), deletion vectors and column mapping. A table written by this module is
-structurally a valid minimal Delta table; the SnapshotStore
-``fmt="delta"`` path still uses the real delta-spark package when it
-is importable.
+structurally a valid minimal Delta table. It is a library, not the
+snapshot store: replay is O(versions) and the log is never truncated,
+which is why SnapshotStore keeps parquet dirs plus a trimmed manifest
+(snapshot.py module docstring).
 """
 
 from __future__ import annotations

@@ -3330,21 +3330,20 @@ FROM orders WHERE o_orderkey % 5 = 0
         "log metadata; no data is rewritten between versions",
 )
 def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .snapshot import SnapshotStore
+    from .dlog import DeltaLogTable
 
     orders = _t(spark, sf_dir, "orders")["orders"]
     base = orders.select(F.col("o_orderkey").alias("pk"))
-    store = SnapshotStore(_stage_dir("snap_tt"), "ks", "orders",
-                          fmt="dlog")
-    sids = [store.write_snapshot(base, tile=0),
-            store.write_snapshot(base.filter(F.col("pk") % 3 == 0), tile=0),
-            store.write_snapshot(base.filter(F.col("pk") % 5 == 0), tile=0)]
+    table = DeltaLogTable(_stage_dir("snap_tt"))
+    versions = [table.commit_overwrite(base),
+                table.commit_overwrite(base.filter(F.col("pk") % 3 == 0)),
+                table.commit_overwrite(base.filter(F.col("pk") % 5 == 0))]
     out = None
-    for sid in sids:
-        part = (store.read_snapshot(spark, 0, sid)
+    for snap, version in enumerate(versions, start=1):
+        part = (table.read(spark, version_as_of=version)
                 .agg(F.count("*").cast("long").alias("n"),
                      F.sum("pk").cast("long").alias("sum_pk"))
-                .select(F.lit(sid).cast("int").alias("snap"), "n", "sum_pk"))
+                .select(F.lit(snap).cast("int").alias("snap"), "n", "sum_pk"))
         out = part if out is None else out.unionByName(part)
     return out
 

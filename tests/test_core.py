@@ -161,21 +161,19 @@ def test_tagged_union(spark):
 
 # -- snapshot store ---------------------------------------------------------
 
-@pytest.mark.parametrize("fmt", [
-    "parquet",
-    "dlog",
-    pytest.param("delta", marks=pytest.mark.skipif(
-        not __import__(
-            "cql_replicator_spark.snapshot", fromlist=["delta_available"]
-        ).delta_available(),
-        reason="delta-spark not installed")),
-])
-def test_snapshot_store_roundtrip(spark, tmp_path, fmt):
-    store = SnapshotStore(str(tmp_path), "ks", "tbl", fmt=fmt)
+# Every commit takes the one staged write in write_snapshots; these
+# store tests run it plain (id "parquet") and with per-file stats.
+_COMMIT_PATHS = [pytest.param(None, id="parquet"),
+                 pytest.param(["pk"], id="stats")]
+
+
+@pytest.mark.parametrize("stats_cols", _COMMIT_PATHS)
+def test_snapshot_store_roundtrip(spark, tmp_path, stats_cols):
+    store = SnapshotStore(str(tmp_path), "ks", "tbl")
     df1 = spark.createDataFrame([(1, 10), (2, 20)], "pk int, ts long")
     df2 = spark.createDataFrame([(2, 21), (3, 30)], "pk int, ts long")
-    s1 = store.write_snapshot(df1, tile=0)
-    s2 = store.write_snapshot(df2, tile=0)
+    s1 = store.write_snapshot(df1, tile=0, stats_cols=stats_cols)
+    s2 = store.write_snapshot(df2, tile=0, stats_cols=stats_cols)
     assert (s1, s2) == (1, 2)
     assert store.current_snapshot_id(0) == 2
     # time travel
@@ -191,16 +189,17 @@ def test_snapshot_store_roundtrip(spark, tmp_path, fmt):
         {(2, 21), (3, 30)}
 
 
-@pytest.mark.parametrize("fmt", ["parquet", "dlog"])
-def test_write_snapshots_commits_each_due_tile(spark, tmp_path, fmt):
+@pytest.mark.parametrize("stats_cols", _COMMIT_PATHS)
+def test_write_snapshots_commits_each_due_tile(spark, tmp_path, stats_cols):
     """write_snapshots commits one snapshot per listed tile from a frame
-    with a tile column: parquet in one partitioned write, dlog by
-    looping per-tile write_snapshot. A listed tile without rows commits
-    an empty snapshot with count 0; rows of unlisted tiles are skipped."""
-    store = SnapshotStore(str(tmp_path), "ks", "tbl", fmt=fmt)
+    with a tile column, in one partitioned write. A listed tile without
+    rows commits an empty snapshot with count 0; rows of unlisted tiles
+    are skipped."""
+    store = SnapshotStore(str(tmp_path), "ks", "tbl")
     df = spark.createDataFrame([(i, i * 10, i % 4) for i in range(20)],
                                "pk int, ts long, tile int")
-    snaps = store.write_snapshots(df.filter("tile != 2"), [0, 1, 2])
+    snaps = store.write_snapshots(df.filter("tile != 2"), [0, 1, 2],
+                                  stats_cols=stats_cols)
     assert sorted(snaps) == [0, 1, 2]
     assert [snaps[t].count for t in (0, 1, 2)] == [5, 5, 0]
     assert store.current_snapshot_id(3) is None
@@ -214,38 +213,44 @@ def test_write_snapshots_commits_each_due_tile(spark, tmp_path, fmt):
 
 
 def test_parquet_snapshot_read_starts_no_job(spark, tmp_path):
-    """The manifest records each parquet snapshot's schema, so building
-    a read (time travel) runs no schema-inference job — of one tile, or
-    of several tiles as one relation (an empty tile among them)."""
+    """The manifest records each snapshot's schema, so building a read
+    (time travel) runs no schema-inference job — of one tile, or of
+    several tiles as one relation (an empty tile and a stats_cols
+    snapshot among them)."""
     store = SnapshotStore(str(tmp_path), "ks", "tbl")
     sid = store.write_snapshot(
         spark.createDataFrame([(1, 10)], "pk int, ts long"), tile=0)
     more = store.write_snapshots(
         spark.createDataFrame([(2, 20, 1)], "pk int, ts long, tile int"),
         [1, 2])
+    stats = store.write_snapshot(
+        spark.createDataFrame([(3, 30), (4, 40)], "pk int, ts long"),
+        tile=3, files_per_snapshot=2, stats_cols=["pk"])
     sc = spark.sparkContext
     sc.setJobGroup("snapshot-read", "counted")
     try:
         df = store.read_snapshot(spark, 0, sid)
         multi = store.read_snapshots(
-            spark, {0: sid, 1: more[1].id, 2: more[2].id})
+            spark, {0: sid, 1: more[1].id, 2: more[2].id, 3: stats})
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert sc.statusTracker().getJobIdsForGroup("snapshot-read") == []
     assert df.schema.simpleString() == "struct<pk:int,ts:bigint>"
     assert multi.schema.simpleString() == "struct<pk:int,ts:bigint,tile:int>"
-    assert sorted(tuple(r) for r in multi.collect()) == [(1, 10, 0), (2, 20, 1)]
+    assert sorted(tuple(r) for r in multi.collect()) == [
+        (1, 10, 0), (2, 20, 1), (3, 30, 3), (4, 40, 3)]
 
 
-@pytest.mark.parametrize("fmt", ["parquet", "dlog"])
-def test_read_snapshots_equals_per_tile_union(spark, tmp_path, fmt):
+@pytest.mark.parametrize("stats_cols", _COMMIT_PATHS)
+def test_read_snapshots_equals_per_tile_union(spark, tmp_path, stats_cols):
     """read_snapshots returns the rows of the per-tile reads, each with
     its tile, as one relation; a requested empty snapshot adds none."""
-    store = SnapshotStore(str(tmp_path), "ks", "tbl", fmt=fmt)
+    store = SnapshotStore(str(tmp_path), "ks", "tbl")
     df = spark.createDataFrame([(i, i * 10, i % 4) for i in range(20)],
                                "pk int, ts long, tile int")
-    snaps = store.write_snapshots(df.filter("tile != 2"), [0, 1, 2, 3])
+    snaps = store.write_snapshots(df.filter("tile != 2"), [0, 1, 2, 3],
+                                  stats_cols=stats_cols)
     assert snaps[2].count == 0
     ids = {t: snaps[t].id for t in (0, 2, 3)}
     got = store.read_snapshots(spark, ids)
@@ -257,21 +262,56 @@ def test_read_snapshots_equals_per_tile_union(spark, tmp_path, fmt):
     assert got.count() == 10
 
 
-@pytest.mark.parametrize("fmt", ["parquet", "dlog"])
-def test_read_snapshots_of_only_empty_snapshots(spark, tmp_path, fmt):
+@pytest.mark.parametrize("stats_cols", _COMMIT_PATHS)
+def test_read_snapshots_of_only_empty_snapshots(spark, tmp_path, stats_cols):
     """A request where every snapshot is empty reads zero rows and keeps
     the snapshot schema plus the tile column."""
-    store = SnapshotStore(str(tmp_path), "ks", "tbl", fmt=fmt)
+    store = SnapshotStore(str(tmp_path), "ks", "tbl")
     df = spark.createDataFrame([], "pk int, ts long, tile int")
-    snaps = store.write_snapshots(df, [0, 1])
+    snaps = store.write_snapshots(df, [0, 1], stats_cols=stats_cols)
     got = store.read_snapshots(spark, {t: s.id for t, s in snaps.items()})
     assert got.schema.simpleString() == "struct<pk:int,ts:bigint,tile:int>"
     assert got.count() == 0
 
 
-def test_snapshot_store_rejects_bad_format(tmp_path):
-    with pytest.raises(ValueError, match="unknown snapshot format"):
-        SnapshotStore(str(tmp_path), "ks", "tbl", fmt="iceberg")
+def test_expire_snapshots_rejects_retain_last_below_one(spark, tmp_path):
+    """retain_last < 1 is an error that leaves the tile's snapshots as
+    they were: 0 would slice entries[-0:] (every entry) and expire
+    nothing, and a negative value would expire the oldest entries."""
+    store = SnapshotStore(str(tmp_path), "ks", "tbl")
+    df = spark.createDataFrame([(1, 10)], "pk int, ts long")
+    sids = [store.write_snapshot(df, tile=0) for _ in range(3)]
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="retain_last"):
+            store.expire_snapshots(0, retain_last=bad)
+    assert [s.id for s in store.snapshots(0)] == sids
+    assert store.expire_snapshots(0, retain_last=1) == 2
+    assert [s.id for s in store.snapshots(0)] == sids[-1:]
+
+
+def test_write_snapshots_stats_per_tile(spark, tmp_path):
+    """A multi-tile stats_cols write range-partitions every tile's rows:
+    each tile's files hold disjoint [min, max] ranges whose counts sum
+    to the tile's count, and a between= read of one tile opens fewer
+    files than the tile has."""
+    store = SnapshotStore(str(tmp_path), "ks", "tbl")
+    df = spark.range(0, 400).select(
+        F.col("id").cast("int").alias("pk"),
+        (F.col("id") % 2).cast("int").alias("tile"))
+    snaps = store.write_snapshots(df, [0, 1], files_per_snapshot=4,
+                                  stats_cols=["pk"])
+    manifests = {t: store._read_manifest(t)[-1] for t in (0, 1)}
+    for t, entry in manifests.items():
+        files = sorted(entry["files"], key=lambda f: f["min"]["pk"])
+        assert 1 < len(files) <= 4
+        assert sum(f["count"] for f in files) == snaps[t].count == 200
+        for a, b in zip(files, files[1:]):
+            assert a["max"]["pk"] < b["min"]["pk"]
+        assert all(f["min"]["pk"] % 2 == t for f in files)
+    pruned = store.read_snapshot(spark, 0, snaps[0].id,
+                                 between={"pk": (0, 20)})
+    assert sorted(r.pk for r in pruned.collect()) == list(range(0, 21, 2))
+    assert 0 < len(pruned.inputFiles()) < len(manifests[0]["files"])
 
 
 def test_snapshot_writes_race_safely_on_one_tile(spark, tmp_path):
@@ -1143,10 +1183,11 @@ def test_ivm_property_random_changes(spark, prev_rows, curr_rows):
     assert got == want
 
 
-def test_snapshot_gc_orphans(spark, tmp_path):
-    """Orphan snap-* dirs (a write that died before the manifest swap)
-    are removed; manifest-referenced snapshots and foreign files
-    survive; snapshots() tolerates stats-bearing manifest entries."""
+def test_snapshot_commit_takes_over_an_orphaned_dir(spark, tmp_path):
+    """A write that died between its rename and its manifest append
+    leaves snap-{max id + 1} on disk, listed nowhere. The next commit
+    of the tile takes that id and removes the dir first, so it reads
+    back only its own rows and the manifest lists exactly both ids."""
     import os
 
     from cql_replicator_spark.snapshot import SnapshotStore
@@ -1154,22 +1195,20 @@ def test_snapshot_gc_orphans(spark, tmp_path):
     store = SnapshotStore(str(tmp_path), "ks", "t")
     df = spark.createDataFrame([(1, 10), (2, 20)], "pk int, ts long")
     s1 = store.write_snapshot(df, tile=0, stats_cols=["pk"])
-    s2 = store.write_snapshot(df, tile=0)
 
-    tdir = os.path.join(str(tmp_path), "ks", "t", "tile=0")
-    orphan = os.path.join(tdir, "snap-00000099")
+    orphan = os.path.join(str(tmp_path), "ks", "t", "tile=0",
+                          f"snap-{s1 + 1:08d}")
     os.makedirs(orphan)
     open(os.path.join(orphan, "part-junk.parquet"), "w").write("x")
 
-    removed = store.gc_orphans(0)
-    assert removed == [orphan]
-    assert not os.path.exists(orphan)
-    # live snapshots still readable; stats entry doesn't break snapshots()
+    s2 = store.write_snapshot(
+        spark.createDataFrame([(3, 30)], "pk int, ts long"), tile=0)
+    assert s2 == s1 + 1
+    assert "part-junk.parquet" not in os.listdir(orphan)
+    assert {(r.pk, r.ts) for r in store.read_snapshot(spark, 0, s2).collect()} \
+        == {(3, 30)}
     assert store.read_snapshot(spark, 0, s1).count() == 2
-    assert store.read_snapshot(spark, 0, s2).count() == 2
     assert [s.id for s in store.snapshots(0)] == [s1, s2]
-    assert store.gc_orphans(0) == []          # idempotent
-    assert store.gc_orphans(7) == []          # absent tile is a no-op
 
 
 def _killed_writers_staging(parent: str) -> str:
@@ -1193,8 +1232,9 @@ def _killed_writers_staging(parent: str) -> str:
 
 def test_snapshot_gc_removes_dead_writers_staging(spark, tmp_path):
     """A killed snapshot write leaves its staging dir beside the tile
-    dirs; gc_orphans and the next write remove it, while a live
-    writer's staging dir and another host's are kept."""
+    dirs; the next write — with or without stats_cols, as both stage —
+    removes it, while a live writer's staging dir and another host's
+    are kept."""
     import os
 
     from cql_replicator_spark.snapshot import SnapshotStore
@@ -1203,23 +1243,20 @@ def test_snapshot_gc_removes_dead_writers_staging(spark, tmp_path):
     store = SnapshotStore(str(tmp_path), "ks", "t")
     table_dir = os.path.join(str(tmp_path), "ks", "t")
     os.makedirs(table_dir)
-    dead = _killed_writers_staging(table_dir)
-    assert os.path.isdir(dead)
     live = new_staging_dir(table_dir)
     os.makedirs(live)
     foreign = os.path.join(table_dir, "_staging-otherhost-1-0a1b")
     os.makedirs(foreign)
 
-    assert store.gc_orphans(0) == [dead]
-    assert os.path.isdir(live) and os.path.isdir(foreign)
-
-    dead = _killed_writers_staging(table_dir)
     df = spark.createDataFrame([(1, 10), (2, 20)], "pk int, ts long")
-    sid = store.write_snapshot(df, tile=0)
-    assert not os.path.exists(dead)
-    assert sorted(os.listdir(table_dir)) == sorted(
-        [os.path.basename(live), os.path.basename(foreign), "tile=0"])
-    assert store.read_snapshot(spark, 0, sid).count() == 2
+    for stats_cols in (["pk"], None):
+        dead = _killed_writers_staging(table_dir)
+        assert os.path.isdir(dead)
+        sid = store.write_snapshot(df, tile=0, stats_cols=stats_cols)
+        assert not os.path.exists(dead)
+        assert sorted(os.listdir(table_dir)) == sorted(
+            [os.path.basename(live), os.path.basename(foreign), "tile=0"])
+        assert store.read_snapshot(spark, 0, sid).count() == 2
 
 
 def test_scd2_history_intervals_and_null_safety(spark):

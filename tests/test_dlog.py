@@ -1,5 +1,5 @@
 """Delta-protocol shape and replay semantics of dlog.py — the
-pure-Python transaction log behind SnapshotStore(fmt="dlog").
+pure-Python transaction log behind the snapshot_time_travel lane.
 
 These tests pin the PUBLIC Delta log layout (versioned _delta_log JSON
 commits, protocol/metaData in version 0, add/remove reconciliation)
