@@ -175,17 +175,6 @@ def default_partitions(
     return max(default_parallelism, executor_cores * executor_instances * total_tiles)
 
 
-def default_partitions_for(spark, total_tiles: int) -> int:
-    """default_partitions from a live session's conf (missing executor
-    settings — e.g. local mode — fall back to 1 instance × defaultParallelism
-    cores, so the formula degrades to max(defPar, defPar × tiles))."""
-    sc = spark.sparkContext
-    def_par = sc.defaultParallelism
-    cores = int(sc.getConf().get("spark.executor.cores", str(def_par)))
-    instances = int(sc.getConf().get("spark.executor.instances", "1"))
-    return default_partitions(def_par, cores, instances, total_tiles)
-
-
 def calculate_workers(
     wcu_traffic: int,
     tiles: int,

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from .diff import ChangeSet, changeset_from_tagged, compute_changes_tagged
 from .ledger import DiscoveryRaceLost, Ledger
 from .snapshot import SnapshotStore
-from .tiling import assign_tiles
+from .tiling import tile_expr
 
 
 @dataclass
@@ -151,12 +151,6 @@ class CdcPipeline:
     # per rotation, so two cycles never collide on a sink path (a
     # wall-clock batch id collides when cycles are < 1s apart).
     sink: Callable[[ChangeSet, dict[int, int]], None] | None = None
-    # Discovery-scan layout: when set, the tiled projection is
-    # repartitioned to this many partitions on the tile column before
-    # snapshotting (the reference's repartition(defaultPartitions, group)
-    # K:1845-1847; compute via config.default_partitions_for). None =
-    # leave layout to AQE, which is right for local/test runs.
-    default_partitions: int | None = None
     # Tile assignment: None = production xxhash64 tiling (tiling.tile_expr,
     # K:1832-1843). A Column-returning callable overrides it with an
     # engine-portable rule (oracle-checked fixtures tile by pk % N —
@@ -176,16 +170,9 @@ class CdcPipeline:
         if not due:
             return []
         src = self.pk_source()
-        if self.tile_of is not None:
-            tiled = src.withColumn("tile", self.tile_of(src))
-            if self.default_partitions is not None:
-                tiled = tiled.repartition(self.default_partitions,
-                                          F.col("tile"))
-        else:
-            tiled = assign_tiles(
-                src, self.pk_cols, self.total_tiles,
-                repartition=self.default_partitions is not None,
-                num_partitions=self.default_partitions)
+        tiled = src.withColumn(
+            "tile", self.tile_of(src) if self.tile_of is not None
+            else tile_expr(src, self.pk_cols, self.total_tiles))
         rotated = []
         for tile, snap in self.store.write_snapshots(tiled, due).items():
             try:

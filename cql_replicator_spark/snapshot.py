@@ -189,9 +189,7 @@ class SnapshotStore:
         ``coalesce``; it defaults to the session's
         ``spark.sql.shuffle.partitions`` so the write can use the
         session's parallelism (coalesce never widens, so narrow inputs
-        still produce few files). When ``df`` is hash-partitioned by tile
-        (``default_partitions``), each tile is written by one task: tile
-        sizing, not ``files_per_snapshot``, bounds that.
+        still produce few files).
 
         ``stats_cols`` turns on Iceberg-style file-level data skipping:
         rows are range-partitioned by those columns into

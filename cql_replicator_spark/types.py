@@ -69,6 +69,8 @@ def cql_to_spark_type(cql_type: str, custom_varint_reader: bool = False) -> T.Da
 _QUOTED_ELEM_RE = re.compile(r"(.*text.*)|(.*date.*)|(.*timestamp.*)|(.*inet.*)")
 
 _TS_FRACTION_RE = re.compile(r"\.(\d{1,9})$")
+_EPOCH = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+_MILLI = dt.timedelta(milliseconds=1)
 
 
 def escape_sql_string(s: str) -> str:
@@ -82,11 +84,13 @@ def normalize_timestamp_millis(value) -> int:
     Accepts datetime, epoch millis int, or string forms
     'yyyy-MM-dd HH:mm:ss[.f{1,9}]' / ISO-8601 with 'Z' or offset.
     Sub-ms digits are truncated (padding normalization of K:1093-1101).
+    Every form floors to the millisecond, as Spark's ``unix_millis`` does,
+    so a pre-epoch instant rounds down, not toward zero.
     """
     if isinstance(value, dt.datetime):
         if value.tzinfo is None:
             value = value.replace(tzinfo=dt.timezone.utc)
-        return int(value.timestamp() * 1000)
+        return (value - _EPOCH) // _MILLI
     if isinstance(value, (int, float)):
         return int(value)
     s = str(value).strip().replace("T", " ")
@@ -106,7 +110,7 @@ def normalize_timestamp_millis(value) -> int:
         frac_ms = int(digits[:3].ljust(3, "0"))  # pad '.5' -> 500 ms, truncate ns
         s = s[: fm.start()]
     base = dt.datetime.strptime(s, "%Y-%m-%d %H:%M:%S").replace(tzinfo=tz)
-    return int(base.timestamp() * 1000) + frac_ms
+    return (base - _EPOCH) // _MILLI + frac_ms
 
 
 def bin_to_hex(b: bytes) -> str:

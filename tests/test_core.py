@@ -433,6 +433,32 @@ def test_effective_pk():
     assert cfg.effective_pk(["key", "col0"], ts) == ["key_h", "col0"]
 
 
+def test_normalize_timestamp_millis_floors_like_spark(spark):
+    """K:1086-1107 row path: every form floors to the millisecond, so a
+    pre-epoch datetime agrees with its string and with Spark."""
+    import datetime as dt
+
+    from cql_replicator_spark.types import normalize_timestamp_millis as ms
+
+    assert ms(dt.datetime(1969, 12, 31, 23, 59, 59, 999500)) == -1
+    assert ms(dt.datetime(2020, 1, 1, 5, 30, 0, 250999,
+                          tzinfo=dt.timezone(dt.timedelta(hours=5, minutes=30)))) \
+        == 1577836800250
+    assert ms(1577836800123) == 1577836800123
+    strings = {
+        "1969-12-31 23:59:59.9995": -1,
+        "2020-01-01 00:00:00.5": 1577836800500,  # '.5' pads to 500 ms
+        "2020-01-01 00:00:00.123456789": 1577836800123,  # ns truncated
+        "2020-01-01T00:00:00.5Z": 1577836800500,
+        "2020-01-01 05:30:00.25+05:30": 1577836800250,
+        "1960-06-01 12:00:00.001-08:00": -302414399999,
+    }
+    assert {s: ms(s) for s in strings} == strings
+    df = spark.createDataFrame([(s,) for s in strings], "s string")
+    got = df.select("s", F.unix_millis(F.to_timestamp("s"))).collect()
+    assert dict(got) == strings
+
+
 def test_reads_per_sec_round_trip_and_option():
     from cql_replicator_spark.sources.cassandra import read_options
 

@@ -1,5 +1,6 @@
 """Documentation claims that must match the code: every test COVERAGE.md
-names in its "tested by" column exists."""
+names in its "tested by" column exists, and every tool the docs name
+exists."""
 
 import ast
 import fnmatch
@@ -47,3 +48,19 @@ def test_coverage_names_only_existing_tests():
             if not fnmatch.filter(defined, span):
                 missing.append(span)
     assert not missing, f"COVERAGE.md names tests that do not exist: {missing}"
+
+
+def test_docs_name_only_existing_tools():
+    """Every backticked ``tools/….py`` in the docs that describe the repo as
+    it is must exist (ROADMAP.md names planned tools, so it is left out)."""
+    missing = []
+    for doc in ("README.md", "COVERAGE.md",
+                os.path.join(".claude", "skills", "verify", "SKILL.md")):
+        with open(os.path.join(ROOT, doc)) as f:
+            # fenced blocks and inline spans
+            spans = re.findall(r"```.*?```|`[^`\n]+`", f.read(), re.S)
+        missing += [(doc, path) for span in spans
+                    for path in re.findall(r"(?<![\w/.-])tools/[\w/.-]+\.py",
+                                           span)
+                    if not os.path.isfile(os.path.join(ROOT, path))]
+    assert not missing, f"docs name tools that do not exist: {missing}"

@@ -100,20 +100,6 @@ def test_cdc_pipeline_full_cycle(spark, tables, tmp_path):
     assert st is not None and st["insertedPrimaryKeys"] > 0
 
 
-def test_pipeline_with_default_partitions(spark, tables, tmp_path):
-    """defaultPartitions formula wired through discovery: the tiled scan
-    repartitions on the tile column (K:1845-1847) and the cycle still
-    replicates exactly."""
-    from cql_replicator_spark.config import default_partitions_for
-
-    pipe, _ = _make_pipeline(spark, tables, tmp_path)
-    pipe.default_partitions = default_partitions_for(spark, pipe.total_tiles)
-    assert pipe.default_partitions >= pipe.total_tiles
-    assert sorted(pipe.discover()) == [0, 1, 2, 3]
-    stats = pipe.replicate()
-    assert sum(s.insertedPrimaryKeys for s in stats) == pipe.pk_source().count()
-
-
 def test_discovery_skips_unconsumed_tiles(spark, tables, tmp_path):
     pipe, _ = _make_pipeline(spark, tables, tmp_path)
     assert len(pipe.discover()) == 4

@@ -2,12 +2,16 @@
 """Per-lane profiling: split build (driver-side plan construction) from
 execution (count action), and count the Spark jobs each lane launches.
 
-Usage: python3 tools/profile_lanes.py <lane> [<lane> ...] [--passes N]
+Usage, from the root of the tree to profile:
+    python3 tools/profile_lanes.py <lane> [<lane> ...] [--passes N]
 
-Prints one JSON line per lane:
-  {"lane": ..., "build_s": ..., "exec_s": ..., "jobs": N, "passes": k}
-build_s / exec_s are best-of-N; jobs is from the last pass (job-count
-is deterministic per lane).
+The lanes are imported from the current directory's package, not from
+this script's checkout, so one copy of the script profiles any tree
+(tools/ab.py runs it in two). Prints one JSON line per lane:
+  {"lane": ..., "build_s": ..., "exec_s": ..., "jobs": N, "rows": N,
+   "passes": k}
+build_s / exec_s are best-of-N; jobs and rows (the count() result) are
+from the last pass (both are deterministic per lane).
 """
 
 from __future__ import annotations
@@ -16,10 +20,6 @@ import json
 import os
 import sys
 import time
-from pathlib import Path
-
-ROOT = Path(__file__).resolve().parent.parent
-sys.path.insert(0, str(ROOT))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -32,6 +32,11 @@ def main() -> None:
         passes = int(args[i + 1])
         del args[i:i + 2]
     names = args
+    if not os.path.isfile(os.path.join(os.getcwd(), "cql_replicator_spark",
+                                       "queries.py")):
+        sys.exit("no cql_replicator_spark package in the current directory; "
+                 "run from the root of a checkout")
+    sys.path.insert(0, os.getcwd())
 
     from cql_replicator_spark.queries import REGISTRY, queries
     from cql_replicator_spark.session import get_spark
@@ -43,7 +48,6 @@ def main() -> None:
             "SPARK_GRAFT_CPUS", "32"),
     })
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
 
     # warm-up (mirrors bench.py)
     from pyspark.sql import functions as F
@@ -55,13 +59,13 @@ def main() -> None:
 
     for name in names:
         best_build = best_exec = float("inf")
-        jobs = 0
+        jobs = rows = 0
         for _ in range(passes):
             ids0 = set(sc.statusTracker().getJobIdsForGroup() or [])
             t0 = time.perf_counter()
             df = REGISTRY[name].build(spark, SF_DIR)
             t1 = time.perf_counter()
-            df.count()
+            rows = df.count()
             t2 = time.perf_counter()
             ids1 = set(sc.statusTracker().getJobIdsForGroup() or [])
             jobs = len(ids1 - ids0)
@@ -72,6 +76,7 @@ def main() -> None:
             "build_s": round(best_build, 3),
             "exec_s": round(best_exec, 3),
             "jobs": jobs,
+            "rows": rows,
             "passes": passes,
         }), flush=True)
     spark.stop()
