@@ -37,7 +37,11 @@ discovery/replication processes, ONE replication consumer per tile
 (the reference's per-tile single-consumer loop, K:1584-1676). Ledger
 rows number tiles×2 (≤2048 by the reference's guardrails) so reloading
 the whole file per operation is trivially cheap; swap the backend for
-a DynamoDB or JDBC table in production without touching callers.
+a DynamoDB or JDBC table in production without touching callers. The
+file is rewritten whole at every mutation, so the two mutations take a
+batch of tiles (``record_discoveries``, ``mark_replications_complete``):
+the runner commits each phase for every due tile in one flush, and the
+per-tile methods are those batches of one.
 
 Consume-effect contract (the journal-before-mark residual, pinned):
 a consumer's external effect (the data write — replication_plan ->
@@ -238,34 +242,49 @@ class Ledger:
         return self._can_discover_from(self._rows, ks, tbl, tile)
 
     def record_discovery(self, ks: str, tbl: str, tile: int, snapshot_id: int) -> None:
-        """Rotate curr->prev (preserving load_status) and write new curr.
+        """``record_discoveries`` for one tile; raises ``DiscoveryRaceLost``
+        where the batch would return the tile as lost."""
+        if self.record_discoveries(ks, tbl, {tile: snapshot_id}):
+            raise DiscoveryRaceLost(
+                f"tile {tile}: unconsumed snapshot present; discovery must not rotate"
+            )
 
-        updateLedger semantics (K:1391-1417). Raises if the gate of
-        can_discover() is violated — callers must check first, the
-        raise protects the invariant under races.
+    def record_discoveries(self, ks: str, tbl: str,
+                           snapshot_ids: dict[int, int]) -> set[int]:
+        """For each ``{tile: snapshot_id}``, rotate curr->prev (preserving
+        load_status) and write the new curr, all in one flush.
+
+        updateLedger semantics (K:1391-1417). Each tile passes the gate
+        of can_discover() again under the lock; a tile that fails it (a
+        rival discoverer rotated it since the caller's check) is left
+        as it is and returned, and the rest are recorded.
         """
         with self._lock, self._file_lock():
             # re-read under the exclusive lock: the gate must see other
             # PROCESSES' state (a replicator's load_status, another
             # discoverer's rotation), not this object's stale snapshot
             self._reload()
-            if not self._can_discover_loaded(ks, tbl, tile):
-                raise DiscoveryRaceLost(
-                    f"tile {tile}: unconsumed snapshot present; discovery must not rotate"
-                )
-            curr = self._get_loaded(ks, tbl, tile, "curr")
-            if curr is not None and curr.offload_status == SUCCESS:
-                prev = LedgerRow(**{**asdict(curr), "ver": "prev"})
-                self._rows[(ks, tbl, tile, "prev")] = asdict(prev)
+            lost = {t for t in snapshot_ids
+                    if not self._can_discover_loaded(ks, tbl, t)}
             now = time.time()
-            self._rows[(ks, tbl, tile, "curr")] = asdict(
-                LedgerRow(
-                    ks=ks, tbl=tbl, tile=tile, ver="curr",
-                    offload_status=SUCCESS, dt_offload=now,
-                    location=str(snapshot_id), load_status=EMPTY, dt_load=0.0,
+            for tile, snapshot_id in snapshot_ids.items():
+                if tile in lost:
+                    continue
+                curr = self._get_loaded(ks, tbl, tile, "curr")
+                if curr is not None and curr.offload_status == SUCCESS:
+                    prev = LedgerRow(**{**asdict(curr), "ver": "prev"})
+                    self._rows[(ks, tbl, tile, "prev")] = asdict(prev)
+                self._rows[(ks, tbl, tile, "curr")] = asdict(
+                    LedgerRow(
+                        ks=ks, tbl=tbl, tile=tile, ver="curr",
+                        offload_status=SUCCESS, dt_offload=now,
+                        location=str(snapshot_id), load_status=EMPTY,
+                        dt_load=0.0,
+                    )
                 )
-            )
-            self._flush()
+            if len(lost) < len(snapshot_ids):
+                self._flush()
+            return lost
 
     # -- replication side --------------------------------------------------
     def replication_plan(self, ks: str, tbl: str, tile: int) -> dict | None:
@@ -285,15 +304,27 @@ class Ledger:
         return {"mode": "delta", "curr": int(curr.location), "prev": int(prev.location)}
 
     def mark_replication_complete(self, ks: str, tbl: str, tile: int) -> None:
-        """markReplicationComplete (K:1464-1476)."""
+        """``mark_replications_complete`` for one tile."""
+        self.mark_replications_complete(ks, tbl, [tile])
+
+    def mark_replications_complete(self, ks: str, tbl: str,
+                                   tiles: list[int]) -> None:
+        """markReplicationComplete (K:1464-1476) for every tile of
+        ``tiles``, in one flush. Every tile must have a curr row; if one
+        has none, nothing is marked."""
         with self._lock, self._file_lock():
             self._reload()  # merge other processes' rows, not clobber them
-            key = (ks, tbl, tile, "curr")
-            if key not in self._rows:
-                raise RuntimeError(f"tile {tile}: no curr ledger row to complete")
-            self._rows[key]["load_status"] = SUCCESS
-            self._rows[key]["dt_load"] = time.time()
-            self._flush()
+            keys = [(ks, tbl, t, "curr") for t in tiles]
+            for key in keys:
+                if key not in self._rows:
+                    raise RuntimeError(
+                        f"tile {key[2]}: no curr ledger row to complete")
+            now = time.time()
+            for key in keys:
+                self._rows[key]["load_status"] = SUCCESS
+                self._rows[key]["dt_load"] = now
+            if keys:
+                self._flush()
 
     def rows(self) -> list[LedgerRow]:
         # local snapshot, never self._rows: see _reload()

@@ -161,33 +161,6 @@ def _shared_capped_lsh(spark: SparkSession, sf_dir: str,
     return _memo_get_or_put(key, build)
 
 
-def _shared_shingles(spark: SparkSession, sf_dir: str,
-                     n: int = 3) -> DataFrame:
-    """Session-shared PERSISTED shingle frame over the near-dup
-    fixture, memoized like _shared_capped_lsh (same locked FIFO, same
-    ownership). Kept separate from the signature/pair memo because
-    the gram stream is corpus-sized — and NOT wired into any
-    registered lane: the estimator-accuracy probe (three shingle
-    consumers, no exchange reuse possible) measured warm-EQUAL with
-    it (bench_ab_accshingles.json: 0.959/0.997 over 6/10 interleaved
-    passes — persist traffic offsets the saved scans). Retained for
-    the A/B tool and for callers whose storage tier makes the trade
-    differently."""
-    import os as _os
-
-    from pyspark import StorageLevel
-
-    key = (spark.sparkContext.applicationId, _os.path.realpath(sf_dir),
-           "shingles", n)
-
-    def build():
-        sh = D.shingles(_near_fixture(spark, sf_dir), n=n) \
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        return (sh,)
-
-    return _memo_get_or_put(key, build)[0]
-
-
 # -- text analysis -----------------------------------------------------------
 
 _STOP_EN = ", ".join(f"'{w}'" for w in TX.LANG_STOPWORDS["en"])

@@ -20,8 +20,10 @@ one full-outer join keyed on (tile, pk), persists the op-tagged result
 and counts it with one ``groupBy("tile", "op")``. The sink runs once
 per cycle on a ``ChangeSet`` whose frames carry ``tile`` and whose
 ``tagged_union()`` is that persisted frame itself (plus the historical
-tiles' curr relation, every row an insert). The ledger still commits
-each tile on its own, after the cycle-wide work.
+tiles' curr relation, every row an insert). The state files commit
+once per phase too: one ledger record for every rotated tile, one
+snapshot manifest write per snapshot write and per expiry, and one
+ledger mark for every replicated tile.
 
 The source is any callable returning a DataFrame with the PK columns
 (+ optional ts): a Cassandra connector reader in production, parquet
@@ -40,7 +42,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .diff import ChangeSet, changeset_from_tagged, compute_changes_tagged
-from .ledger import DiscoveryRaceLost, Ledger
+from .ledger import Ledger
 from .snapshot import SnapshotStore
 from .tiling import tile_expr
 
@@ -164,7 +166,7 @@ class CdcPipeline:
         # Gate FIRST: a tile still holding an unconsumed snapshot is
         # skipped (K:2263-2271), and a cycle with no due tile refuses
         # without touching the source. can_discover is a read-only
-        # probe; record_discovery re-checks under the ledger's lock.
+        # probe; record_discoveries re-checks under the ledger's lock.
         due = [t for t in range(self.total_tiles)
                if self.ledger.can_discover(self.keyspace, self.table, t)]
         if not due:
@@ -173,23 +175,17 @@ class CdcPipeline:
         tiled = src.withColumn(
             "tile", self.tile_of(src) if self.tile_of is not None
             else tile_expr(src, self.pk_cols, self.total_tiles))
-        rotated = []
-        for tile, snap in self.store.write_snapshots(tiled, due).items():
-            try:
-                self.ledger.record_discovery(
-                    self.keyspace, self.table, tile, snap.id)
-            except DiscoveryRaceLost:
-                # A rival process rotated this tile between our gate
-                # check and our record (the ledger allows any number of
-                # discovery processes; record_discovery raises the TYPED
-                # race exception to protect the unconsumed-snapshot
-                # invariant — any other error is a real failure and
-                # propagates). Our snapshot is an unreferenced orphan
-                # until expiry: skip the tile, not the cycle.
-                continue
+        snaps = self.store.write_snapshots(tiled, due)
+        # A tile comes back lost when a rival process rotated it between
+        # our gate check and our record (the ledger allows any number of
+        # discovery processes). Our snapshot of it is an unreferenced
+        # orphan until expiry: skip the tile, not the cycle.
+        lost = self.ledger.record_discoveries(
+            self.keyspace, self.table, {t: s.id for t, s in snaps.items()})
+        rotated = [t for t in snaps if t not in lost]
+        for t in rotated:
             self.stats.put(self.keyspace, self.table,
-                           DiscoveryStats(tile, snap.count, time.time()))
-            rotated.append(tile)
+                           DiscoveryStats(t, snaps[t].count, time.time()))
         return rotated
 
     # -- replication --------------------------------------------------------
@@ -204,8 +200,8 @@ class CdcPipeline:
         """Replicate every due tile of ``tiles`` in one pass: one tagged
         diff keyed on (tile, pk) over one curr and one prev relation
         (``read_snapshots``), historical tiles as one curr-as-insert
-        relation, one sink call on the tagged frame; then, tile by
-        tile, stats, ledger mark and expiry."""
+        relation, one sink call on the tagged frame; then every tile's
+        stats, one ledger mark and one expiry for all of them."""
         plans = {}
         for t in tiles:
             plan = self.ledger.replication_plan(self.keyspace, self.table, t)
@@ -256,12 +252,13 @@ class CdcPipeline:
                                    n.get("update", 0))
             st = ReplicationStats(t, n_ins + n_del + n_upd, n_upd, n_ins,
                                   n_del, time.time())
-            # stats before the mark: a crash between the two re-runs the
-            # tile, and the put of the same curr id is a no-op
             self.stats.put(self.keyspace, self.table, st, p["curr"])
-            self.ledger.mark_replication_complete(self.keyspace, self.table, t)
-            self.store.expire_snapshots(t, retain_last=2)  # K:1656-1657
             out.append(st)
+        # stats before the mark: a crash between the two re-runs the
+        # tiles, and a put of the same curr id is a no-op
+        self.ledger.mark_replications_complete(self.keyspace, self.table,
+                                               list(plans))
+        self.store.expire_snapshots(list(plans), retain_last=2)  # K:1656-1657
         return out
 
     # -- loop -----------------------------------------------------------------

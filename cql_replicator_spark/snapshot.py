@@ -8,12 +8,15 @@ K:1220-1272) and time-travels between snapshot ids (K:1340-1349), with
 
 This store keeps the same shape on plain Parquet, and it is the one
 snapshot format: each snapshot is an immutable directory
-``{root}/{ks}/{table}/tile={n}/snap-{id:08d}/``, and a JSON manifest
-per tile lists the live snapshots (id, committed_at, count, schema and,
-for ``stats_cols`` writes, per-file count/min/max) — the role Iceberg's
-metadata plays. The API mirrors Iceberg's: write-overwrite (one new
-snapshot per tile, any number of tiles in one partitioned write),
-current_snapshot_id, read at snapshot (time travel), expire.
+``{root}/{ks}/{table}/tile={n}/snap-{id:08d}/``, and one JSON manifest
+per table, ``{root}/{ks}/{table}/manifest.json``, lists each tile's live
+snapshots (id, committed_at, count, schema and, for ``stats_cols``
+writes, per-file count/min/max) — the role Iceberg's metadata plays.
+Per-tile ``tile={n}/manifest.json`` files of older builds are not read.
+The API mirrors Iceberg's: write-overwrite (one new snapshot per tile,
+any number of tiles in one partitioned write), current_snapshot_id,
+read at snapshot (time travel), expire (any number of tiles in one
+manifest rewrite).
 
 Why the store is not the in-repo Delta log (dlog.py). A dlog table
 replays its whole log on every commit, read and vacuum, and nothing
@@ -38,11 +41,13 @@ snapshot is an empty directory, which reads as zero rows.
 
 Crash safety. Every commit stages its files in a private directory
 (``staging``; each write sweeps the ones killed writers left) and then,
-per tile under one cross-process mutex, renames them to
-``snap-{id}`` and appends to the manifest. So the only dir a crash can
-orphan is ``snap-{max id + 1}`` (renamed, not yet listed), and the
-next commit of that tile takes that id and removes the dir first: the
-store heals itself, with no separate orphan sweep.
+under one cross-process mutex per table, renames each tile's files to
+``snap-{id}`` and writes the manifest once for every tile. So the only
+dir a crash can orphan in a tile is ``snap-{max id + 1}`` (renamed, not
+yet listed), and the next commit of that tile takes that id and removes
+the dir first: each tile heals itself, with no separate orphan sweep.
+Expiry takes the same mutex and rewrites the manifest once for all the
+tiles it trims.
 
 Scale note: ``write_snapshots`` writes every due tile in one
 ``coalesce(files_per_snapshot)`` (``repartitionByRange`` with
@@ -62,6 +67,7 @@ import json
 import os
 import shutil
 import time
+from collections.abc import Iterable
 from dataclasses import dataclass
 from functools import reduce
 
@@ -111,26 +117,31 @@ class SnapshotStore:
     def _tile_dir(self, tile: int) -> str:
         return os.path.join(self._table_dir(), f"tile={tile}")
 
-    def _manifest_path(self, tile: int) -> str:
-        return os.path.join(self._tile_dir(tile), "manifest.json")
+    def _manifest_path(self) -> str:
+        return os.path.join(self._table_dir(), "manifest.json")
+
+    def _load_manifest(self) -> dict[str, list[dict]]:
+        """The table manifest: each tile's entry list, keyed by the tile
+        as a string (JSON object keys are strings)."""
+        try:
+            with open(self._manifest_path()) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return {}
 
     def _read_manifest(self, tile: int) -> list[dict]:
-        p = self._manifest_path(tile)
-        if not os.path.exists(p):
-            return []
-        with open(p) as f:
-            return json.load(f)
+        return self._load_manifest().get(str(tile), [])
 
-    def _write_manifest(self, tile: int, entries: list[dict]) -> None:
-        p = self._manifest_path(tile)
+    def _write_manifest(self, manifest: dict[str, list[dict]]) -> None:
+        p = self._manifest_path()
         os.makedirs(os.path.dirname(p), exist_ok=True)
         tmp = f"{p}.{os.getpid()}.tmp"
         with open(tmp, "w") as f:
-            json.dump(entries, f, indent=1)
+            json.dump(manifest, f, indent=1)
         os.replace(tmp, p)  # atomic commit, like Iceberg's metadata swap
 
-    def _tile_mutex(self, tile: int):
-        """Cross-process mutex serializing this tile's manifest
+    def _table_mutex(self):
+        """Cross-process mutex serializing the manifest's
         read-modify-write sections (the commit in write_snapshots, and
         expire_snapshots). Without it two racing discoverers — legal
         under the ledger's any-number-of-discovery-processes contract —
@@ -139,10 +150,10 @@ class SnapshotStore:
         manifest swap silently drops the other's entry (and an expire
         racing a writer drops the fresh entry). Same battle-tested lock
         as the ledger (ledger.file_mutex). Writers stage their files
-        outside it and hold it only for the rename and manifest swap."""
+        outside it and hold it only for the renames and manifest swap."""
         from .ledger import file_mutex
 
-        return file_mutex(self._manifest_path(tile) + ".lock")
+        return file_mutex(self._manifest_path() + ".lock")
 
     # -- API ------------------------------------------------------------
     def write_snapshot(self, df: DataFrame, tile: int,
@@ -174,13 +185,14 @@ class SnapshotStore:
         staging directory (``staging``: the next write sweeps the one a
         killed writer left), with the per-tile row counts taken from an
         ``Observation`` on that write — no persist, no count pass, no
-        per-tile filtered writes. Then, per tile under its mutex, the
-        commit: allocate the id, rename ``tile=N`` to ``snap-{id}``,
-        append to the manifest. A tile with no rows commits an empty
-        directory; the manifest records the schema, so every read of it
-        (empty or not) is schema-correct and skips the schema-inference
-        job. Each tile commits on its own, so a crash mid-loop leaves
-        the committed tiles intact and the rest as they were. The counts
+        per-tile filtered writes. Then, under the table mutex, the
+        commit: per tile, allocate the id and rename ``tile=N`` to
+        ``snap-{id}``; then one manifest write lists every tile's new
+        snapshot. A tile with no rows commits an empty directory; the
+        manifest records the schema, so every read of it (empty or not)
+        is schema-correct and skips the schema-inference job. A crash
+        before the manifest write commits none of the tiles, and each
+        renamed dir is taken over by its tile's next commit. The counts
         are of rows streamed through the write, so a corrupt or partial
         file surfaces at the first read of the snapshot, not at
         rotation.
@@ -219,9 +231,10 @@ class SnapshotStore:
                                              stats_cols)
                      if stats_cols else {})
             out = {}
-            for t in tiles:
-                with self._tile_mutex(t):
-                    entries = self._read_manifest(t)
+            with self._table_mutex():
+                manifest = self._load_manifest()
+                for t in tiles:
+                    entries = manifest.get(str(t), [])
                     new_id = (max(e["id"] for e in entries) + 1) if entries else 1
                     path = os.path.join(self._tile_dir(t), f"snap-{new_id:08d}")
                     # an uncommitted dir of a crashed write may hold the id
@@ -237,9 +250,10 @@ class SnapshotStore:
                              "schema": schema}
                     if stats_cols:
                         entry["files"] = files.get(t, [])
-                    self._write_manifest(t, entries + [entry])
-                out[t] = SnapshotInfo(new_id, entry["committed_at"],
-                                      entry["count"], path)
+                    manifest[str(t)] = entries + [entry]
+                    out[t] = SnapshotInfo(new_id, entry["committed_at"],
+                                          entry["count"], path)
+                self._write_manifest(manifest)
             return out
         finally:
             shutil.rmtree(stage, ignore_errors=True)
@@ -274,8 +288,11 @@ class SnapshotStore:
     def snapshot_exists(self, tile: int, snapshot_id: int) -> bool:
         return any(e["id"] == snapshot_id for e in self._read_manifest(tile))
 
-    def _entry(self, tile: int, snapshot_id: int) -> dict:
-        for e in self._read_manifest(tile):
+    def _entry(self, tile: int, snapshot_id: int,
+               manifest: dict[str, list[dict]] | None = None) -> dict:
+        if manifest is None:
+            manifest = self._load_manifest()
+        for e in manifest.get(str(tile), []):
             if e["id"] == snapshot_id:
                 return e
         raise ValueError(
@@ -341,7 +358,8 @@ class SnapshotStore:
         schema, or different ones, are read per tile and unioned here."""
         if not snapshot_ids:
             raise ValueError("read_snapshots: no snapshots requested")
-        entries = {t: self._entry(t, sid)
+        manifest = self._load_manifest()
+        entries = {t: self._entry(t, sid, manifest)
                    for t, sid in sorted(snapshot_ids.items())}
         schemas = [e.get("schema") for e in entries.values()]
         if schemas[0] is not None and all(sch == schemas[0] for sch in schemas):
@@ -360,22 +378,30 @@ class SnapshotStore:
             raise ValueError(f"no snapshots for tile {tile}")
         return self.read_snapshot(spark, tile, sid)
 
-    def expire_snapshots(self, tile: int, retain_last: int = 2) -> int:
+    def expire_snapshots(self, tiles: int | Iterable[int],
+                         retain_last: int = 2) -> int:
         """Drop all but the newest ``retain_last`` (at least 1)
-        snapshots (K:1278-1289): their dirs go, then their manifest
-        entries. Returns #expired."""
+        snapshots of each of ``tiles`` (one tile or several; K:1278-1289):
+        their dirs go, then their manifest entries, in one manifest
+        rewrite. Returns #expired."""
         if retain_last < 1:
             raise ValueError(
                 f"expire_snapshots: retain_last must be >= 1, got {retain_last}")
-        with self._tile_mutex(tile):
-            entries = self._read_manifest(tile)
-            expired = entries[:-retain_last]
-            if not expired:
-                return 0
-            for e in expired:
-                shutil.rmtree(e["path"], ignore_errors=True)
-            self._write_manifest(tile, entries[-retain_last:])
-            return len(expired)
+        tiles = [tiles] if isinstance(tiles, int) else list(tiles)
+        expired = 0
+        with self._table_mutex():
+            manifest = self._load_manifest()
+            for t in tiles:
+                entries = manifest.get(str(t), [])
+                if len(entries) <= retain_last:
+                    continue
+                for e in entries[:-retain_last]:
+                    shutil.rmtree(e["path"], ignore_errors=True)
+                expired += len(entries) - retain_last
+                manifest[str(t)] = entries[-retain_last:]
+            if expired:
+                self._write_manifest(manifest)
+        return expired
 
     def snapshots(self, tile: int) -> list[SnapshotInfo]:
         return [SnapshotInfo(

@@ -49,21 +49,16 @@ def assign_tiles(
     pk_cols: list[str],
     num_tiles: int = DEFAULT_TILES,
     tile_col: str = "tile",
-    repartition: bool = False,
-    num_partitions: int | None = None,
 ) -> DataFrame:
-    """Add a tile column; optionally hash-repartition by it.
+    """Add a tile column.
 
     The reference repartitions immediately after assignment
-    (K:1845-1847). We leave that opt-in: when the next op is a per-tile
-    write, `.repartition(n, tile)` co-locates a tile's rows; when the
-    next op is a groupBy/join on other keys, the extra shuffle is waste
-    and AQE handles layout.
+    (K:1845-1847). We do that only in ``resize_tiles``: when the next op
+    is a per-tile write, ``.repartition(n, tile)`` co-locates a tile's
+    rows; when the next op is a groupBy/join on other keys, the extra
+    shuffle is waste and AQE handles layout.
     """
-    out = df.withColumn(tile_col, tile_expr(df, pk_cols, num_tiles))
-    if repartition:
-        out = out.repartition(num_partitions or num_tiles, F.col(tile_col))
-    return out
+    return df.withColumn(tile_col, tile_expr(df, pk_cols, num_tiles))
 
 
 def tile_histogram(df: DataFrame, pk_cols: list[str], num_tiles: int) -> DataFrame:
@@ -95,8 +90,8 @@ def resize_tiles(
     for s in snapshots[1:]:
         unioned = unioned.unionByName(s)
     distinct = unioned.dropDuplicates(pk_cols).drop(tile_col)
-    return assign_tiles(distinct, pk_cols, new_num_tiles, tile_col=tile_col,
-                        repartition=True, num_partitions=new_num_tiles)
+    return (assign_tiles(distinct, pk_cols, new_num_tiles, tile_col=tile_col)
+            .repartition(new_num_tiles, F.col(tile_col)))
 
 
 def zvalue_2d(x: str | Column, y: str | Column, bits: int = 10) -> Column:

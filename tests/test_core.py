@@ -363,6 +363,59 @@ def test_snapshot_writes_race_safely_on_one_tile(spark, tmp_path):
         store.read_snapshot(spark, 0, e.id).count()  # all readable
 
 
+def test_multi_tile_snapshot_writes_race_safely(spark, tmp_path):
+    """Writers that each commit several tiles, overlapping on some, and
+    multi-tile expiries race on one table manifest: every tile ends up
+    with unique sequential ids, no committed entry is lost, and each
+    retained snapshot reads back the rows of the writer that made it.
+    A slow manifest read widens each read-modify-write window, so only
+    the table mutex keeps them apart."""
+    import sys
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    store = SnapshotStore(str(tmp_path), "ks", "race")
+    load = store._load_manifest
+
+    def slow_load():
+        manifest = load()
+        time.sleep(0.3)
+        return manifest
+
+    store._load_manifest = slow_load
+    plans = {i: [i % 3, (i + 1) % 3] for i in range(6)}
+
+    def write(i):
+        df = spark.createDataFrame(
+            [(i * 100 + j, i, t) for t in plans[i] for j in range(2)],
+            "pk int, ts long, tile int")
+        return i, store.write_snapshots(df, plans[i])
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as ex:
+            futs = [ex.submit(write, i) for i in range(6)] + [
+                ex.submit(store.expire_snapshots, [0, 1, 2], 3)
+                for _ in range(2)]
+            done = [f.result(timeout=300) for f in futs]
+    finally:
+        sys.setswitchinterval(old)
+        store._load_manifest = load
+    written = dict(done[:6])
+    for t in range(3):
+        ids = sorted(snaps[t].id for i, snaps in written.items()
+                     if t in plans[i])
+        assert ids == list(range(1, 5)), (t, ids)
+        live = [s.id for s in store.snapshots(t)]
+        assert live == ids[-len(live):] and len(live) >= 3, (t, live)
+        for i, snaps in written.items():
+            if t in plans[i] and snaps[t].id in live:
+                got = {r.pk for r in
+                       store.read_snapshot(spark, t, snaps[t].id).collect()}
+                assert got == {i * 100, i * 100 + 1}, (t, i)
+
+
 # -- ledger ------------------------------------------------------------------
 
 def test_ledger_state_machine(tmp_path):
@@ -396,6 +449,66 @@ def test_ledger_persistence(tmp_path):
     led.record_discovery("ks", "t", 3, snapshot_id=7)
     led2 = Ledger(p)
     assert led2.get("ks", "t", 3, "curr").location == "7"
+
+
+def _count_replaces_of(monkeypatch, path: str) -> list[str]:
+    import os
+
+    real = os.replace
+    seen = []
+
+    def replace(src, dst, *args, **kwargs):
+        if os.fspath(dst) == path:
+            seen.append(path)
+        return real(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "replace", replace)
+    return seen
+
+
+def test_record_discoveries_returns_lost_tiles_records_the_rest(
+        tmp_path, monkeypatch):
+    """A rival ledger on the same file rotated tile 1 after our gate
+    check: the batched record returns exactly tile 1, rotates tiles 0
+    and 2 in one file replace, and leaves the rival's curr row as it
+    was."""
+    p = str(tmp_path / "ledger.json")
+    led, rival = Ledger(p), Ledger(p)
+    assert led.record_discoveries("ks", "t", {0: 1, 1: 1, 2: 1}) == set()
+    led.mark_replications_complete("ks", "t", [0, 1, 2])
+    rival.record_discovery("ks", "t", 1, snapshot_id=777)
+    rivals = led.get("ks", "t", 1, "curr")
+
+    replaces = _count_replaces_of(monkeypatch, p)
+    assert led.record_discoveries("ks", "t", {0: 2, 1: 2, 2: 2}) == {1}
+    assert len(replaces) == 1
+    assert led.get("ks", "t", 1, "curr") == rivals
+    assert rivals.location == "777" and rivals.load_status == ""
+    for t in (0, 2):
+        assert led.replication_plan("ks", "t", t) == {
+            "mode": "delta", "curr": 2, "prev": 1}
+
+
+def test_mark_replications_complete_marks_all_or_none(tmp_path, monkeypatch):
+    """A batch naming a tile without a curr row raises and marks none of
+    the batch's tiles; a full batch marks every tile in one replace."""
+    p = str(tmp_path / "ledger.json")
+    led = Ledger(p)
+    led.record_discoveries("ks", "t", {0: 1, 1: 1})
+    with open(p) as f:
+        before = f.read()
+    replaces = _count_replaces_of(monkeypatch, p)
+    with pytest.raises(RuntimeError, match="tile 99: no curr ledger row"):
+        led.mark_replications_complete("ks", "t", [0, 1, 99])
+    with open(p) as f:
+        assert f.read() == before
+    assert replaces == []
+    for t in (0, 1):
+        assert led.replication_plan("ks", "t", t) == {
+            "mode": "historical", "curr": 1}
+    led.mark_replications_complete("ks", "t", [0, 1])
+    assert len(replaces) == 1
+    assert [led.replication_plan("ks", "t", t) for t in (0, 1)] == [None, None]
 
 
 # -- config -------------------------------------------------------------------
@@ -1237,6 +1350,57 @@ def test_snapshot_commit_takes_over_an_orphaned_dir(spark, tmp_path):
     assert [s.id for s in store.snapshots(0)] == [s1, s2]
 
 
+def test_multi_tile_snapshot_commit_takes_over_orphaned_dirs(
+        spark, tmp_path, monkeypatch):
+    """A multi-tile write that fails at its one manifest replace leaves
+    the manifest as it was and a renamed snap-{max id + 1} in every
+    tile. The next write of those tiles takes each orphan over and
+    reads back only its own rows."""
+    import os
+
+    from cql_replicator_spark.snapshot import SnapshotStore
+
+    store = SnapshotStore(str(tmp_path), "ks", "t")
+    tiles = [0, 1, 2]
+
+    def frame(ts):
+        return spark.createDataFrame([(i, ts, i % 3) for i in range(9)],
+                                     "pk int, ts long, tile int")
+
+    first = store.write_snapshots(frame(10), tiles)
+    manifest = os.path.join(str(tmp_path), "ks", "t", "manifest.json")
+    with open(manifest) as f:
+        before = f.read()
+
+    real = os.replace
+
+    def failing_replace(src, dst, *args, **kwargs):
+        if os.path.basename(dst) == "manifest.json":
+            raise OSError("manifest replace failed")
+        return real(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "replace", failing_replace)
+    with pytest.raises(OSError, match="manifest replace failed"):
+        store.write_snapshots(frame(20), tiles)
+    monkeypatch.setattr(os, "replace", real)
+    with open(manifest) as f:
+        assert f.read() == before
+    for t in tiles:
+        orphan = os.path.join(str(tmp_path), "ks", "t", f"tile={t}",
+                              f"snap-{first[t].id + 1:08d}")
+        assert os.listdir(orphan), orphan
+        assert [s.id for s in store.snapshots(t)] == [first[t].id]
+
+    again = store.write_snapshots(frame(30), tiles)
+    for t in tiles:
+        assert again[t].id == first[t].id + 1
+        assert {(r.pk, r.ts) for r in
+                store.read_snapshot(spark, t, again[t].id).collect()} == \
+            {(i, 30) for i in range(9) if i % 3 == t}
+        assert [s.id for s in store.snapshots(t)] == [first[t].id,
+                                                      again[t].id]
+
+
 def _killed_writers_staging(parent: str) -> str:
     """A staging dir as a writer killed mid-write leaves it: made by a
     process that exits without cleaning up."""
@@ -1258,9 +1422,9 @@ def _killed_writers_staging(parent: str) -> str:
 
 def test_snapshot_gc_removes_dead_writers_staging(spark, tmp_path):
     """A killed snapshot write leaves its staging dir beside the tile
-    dirs; the next write — with or without stats_cols, as both stage —
-    removes it, while a live writer's staging dir and another host's
-    are kept."""
+    dirs and the table manifest; the next write — with or without
+    stats_cols, as both stage — removes it, while a live writer's
+    staging dir and another host's are kept."""
     import os
 
     from cql_replicator_spark.snapshot import SnapshotStore
@@ -1281,7 +1445,8 @@ def test_snapshot_gc_removes_dead_writers_staging(spark, tmp_path):
         sid = store.write_snapshot(df, tile=0, stats_cols=stats_cols)
         assert not os.path.exists(dead)
         assert sorted(os.listdir(table_dir)) == sorted(
-            [os.path.basename(live), os.path.basename(foreign), "tile=0"])
+            [os.path.basename(live), os.path.basename(foreign), "tile=0",
+             "manifest.json", "manifest.json.lock"])
         assert store.read_snapshot(spark, 0, sid).count() == 2
 
 

@@ -223,6 +223,46 @@ def test_cycle_jobs_do_not_grow_with_tiles(spark, tmp_path):
     assert at8 <= 16, at8
 
 
+def test_cycle_state_commits_do_not_grow_with_tiles(spark, tmp_path,
+                                                    monkeypatch):
+    """One state commit per phase: a steady delta cycle of the CLI
+    pipeline (each tile past its first delta, so expiry trims) replaces
+    the ledger twice (record, mark) and the snapshot manifest twice
+    (write, expiry) at 2 tiles as at 8. The stats still replace one
+    discovery and one replication file per tile."""
+    v1, v2 = _cli_sources(spark, tmp_path)
+    real_replace = os.replace
+    replaced: dict[str, int] = {}
+
+    def counting_replace(src, dst, *args, **kwargs):
+        if os.path.exists(dst):
+            name = os.path.basename(dst)
+            replaced[name] = replaced.get(name, 0) + 1
+        return real_replace(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "replace", counting_replace)
+
+    def delta_cycle_replaces(tiles: int) -> dict[str, int]:
+        pipe, args = _cli_pipeline(spark, tmp_path / f"state-{tiles}", v1,
+                                   tiles)
+        for source in (v1, v2):
+            args.source = source
+            assert sorted(pipe.discover()) == list(range(tiles))
+            pipe.replicate()
+        args.source = v1
+        replaced.clear()
+        assert sorted(pipe.discover()) == list(range(tiles))
+        assert len(pipe.replicate()) == tiles
+        stats = sum(n for name, n in replaced.items() if "-tile-" in name)
+        return {"ledger": replaced.get("ledger.json", 0),
+                "manifest": replaced.get("manifest.json", 0),
+                "stats": stats}
+
+    for tiles in (2, 8):
+        assert delta_cycle_replaces(tiles) == {
+            "ledger": 2, "manifest": 2, "stats": 2 * tiles}, tiles
+
+
 def test_cli_cycle_jobs_all_carry_the_callers_group(spark, tmp_path):
     """The CLI sink's delete write runs on its own thread; every job of a
     delta cycle, that write's included, carries the job group of the
@@ -413,13 +453,15 @@ def test_replicate_mixes_historical_and_delta_tiles(spark, tables, tmp_path):
         assert stats[t].deletedPrimaryKeys == stats[t].updatedPrimaryKeys == 0
 
 
-@pytest.mark.parametrize("crash_in", ["ledger.mark_replication_complete",
-                                      "store.expire_snapshots"])
+@pytest.mark.parametrize("crash_in, nth", [
+    pytest.param("ledger.mark_replications_complete", 1, id="ledger.mark"),
+    pytest.param("store.expire_snapshots", 1, id="store.expire_snapshots"),
+    pytest.param("stats.put", 3, id="stats.put")])
 def test_replication_stats_exactly_once_across_crash(spark, tables, tmp_path,
-                                                     crash_in):
-    """A crash after a tile's stats put (at the ledger mark, or at
-    expiry after the mark) followed by a re-run of replicate() counts
-    every tile's changes exactly once."""
+                                                     crash_in, nth):
+    """A crash after some or all of the tiles' stats puts (at the third
+    put, at the ledger mark, or at expiry after the mark) followed by a
+    re-run of replicate() counts every tile's changes exactly once."""
     pipe, state = _make_pipeline(spark, tables, tmp_path)
     pipe.discover()
     pipe.replicate()
@@ -431,13 +473,13 @@ def test_replication_stats_exactly_once_across_crash(spark, tables, tmp_path,
     real = getattr(owner, method)
     calls = []
 
-    def crash_on_second_tile(*args, **kwargs):
+    def crash_on_nth_call(*args, **kwargs):
         calls.append(args)
-        if len(calls) == 2:
+        if len(calls) == nth:
             raise RuntimeError("crash after the stats put")
         return real(*args, **kwargs)
 
-    setattr(owner, method, crash_on_second_tile)
+    setattr(owner, method, crash_on_nth_call)
     try:
         with pytest.raises(RuntimeError, match="crash after the stats put"):
             pipe.replicate()
