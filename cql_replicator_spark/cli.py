@@ -162,40 +162,46 @@ def cmd_replicate(args) -> int:
 def cmd_stats(args) -> int:
     """Discovered-vs-replicated totals (`--cmd stats` C:1811-1846).
 
-    Tiles are enumerated from the stats directory itself (a tile that
-    never rotated simply has no files and contributes zero — it must not
-    truncate the scan of later tiles). ``discovered`` is the latest
-    discovery gauge summed over tiles (current source key count);
-    ``replicated`` the cumulative inserted+updated+deleted counter. The
+    Tables and tiles are enumerated from the snapshot manifests and the
+    stats directory themselves (a tile that never rotated has no
+    manifest entry and no stats file and contributes zero — it must not
+    truncate the scan of later tiles). ``discovered`` is the discovery
+    gauge, each tile's newest snapshot count, summed over tiles
+    (current source key count); ``replicated`` the cumulative
+    inserted+updated+deleted counter. The
     in-sync check compares like with like: current source keys vs net
     rows landed in the target (cumulative inserted - deleted; updates
     don't change row count)."""
     import re
 
     from .runner import StatsStore
-    store = StatsStore(os.path.join(args.workdir, "stats"))
+    from .snapshot import SnapshotStore
+
+    stats_root = os.path.join(args.workdir, "stats")
+    snaps_root = os.path.join(args.workdir, "snapshots")
+    store = StatsStore(stats_root)
+    tables = set()
+    for root in (stats_root, snaps_root):
+        if os.path.isdir(os.path.join(root, KEYSPACE)):
+            tables.update(os.listdir(os.path.join(root, KEYSPACE)))
     out = []
-    root = os.path.join(args.workdir, "stats", KEYSPACE)
-    if os.path.isdir(root):
-        for table in sorted(os.listdir(root)):
-            tiles = sorted({
-                int(m.group(1))
-                for f in os.listdir(os.path.join(root, table))
-                if (m := re.match(r"(?:discovery|replication)-tile-(\d+)\.json$", f))
-            })
-            discovered = replicated = net_replicated = 0
-            for tile in tiles:
-                d = store.get(KEYSPACE, table, tile, "discovery") or {}
-                r = store.get(KEYSPACE, table, tile, "replication") or {}
-                discovered += d.get("primaryKeys", 0)
-                ins = r.get("insertedPrimaryKeys", 0)
-                upd = r.get("updatedPrimaryKeys", 0)
-                dels = r.get("deletedPrimaryKeys", 0)
-                replicated += ins + upd + dels
-                net_replicated += ins - dels
-            out.append({"table": table, "discovered": discovered,
-                        "replicated": replicated,
-                        "in_sync": discovered == net_replicated})
+    for table in sorted(tables):
+        live = SnapshotStore(snaps_root, KEYSPACE, table).all_snapshots()
+        discovered = sum(snaps[-1].count for snaps in live.values())
+        stats_dir = os.path.join(stats_root, KEYSPACE, table)
+        replicated = net_replicated = 0
+        for f in (os.listdir(stats_dir) if os.path.isdir(stats_dir) else ()):
+            if not (m := re.match(r"replication-tile-(\d+)\.json$", f)):
+                continue
+            r = store.get(KEYSPACE, table, int(m.group(1)))
+            ins = r.get("insertedPrimaryKeys", 0)
+            upd = r.get("updatedPrimaryKeys", 0)
+            dels = r.get("deletedPrimaryKeys", 0)
+            replicated += ins + upd + dels
+            net_replicated += ins - dels
+        out.append({"table": table, "discovered": discovered,
+                    "replicated": replicated,
+                    "in_sync": discovered == net_replicated})
     print(json.dumps(out))
     return 0
 

@@ -163,7 +163,8 @@ def replicate_counter_tile(
     """One tile's counter replication cycle, ledger-gated like
     CdcPipeline.replicate_tile: historical load emits full-value
     updates for every key; a delta cycle emits increments/deletes
-    between the two snapshot generations."""
+    between the two snapshot generations. The tile's consumed snapshots
+    expire at its next discovery commit (``CdcPipeline.discover``)."""
     plan = ledger.replication_plan(keyspace, table, tile)
     if plan is None:
         return None
@@ -181,7 +182,6 @@ def replicate_counter_tile(
     finally:
         deltas.unpersist()
     ledger.mark_replication_complete(keyspace, table, tile)
-    store.expire_snapshots(tile, retain_last=2)
     return {"tile": tile,
             "inserts": counts.get("insert", 0),
             "updates": counts.get("update", 0),

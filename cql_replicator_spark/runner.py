@@ -5,11 +5,13 @@ Reimplements the reference's job structure (SURVEY §3):
     -> tile assignment -> per-tile snapshot write gated by the ledger.
   * dataReplicationProcess (K:1564-1681): per-tile three-way dispatch
     (nothing / historical / delta), change-set computation, hydration,
-    sink write, completion mark, snapshot expiry.
+    sink write, completion mark.
   * poll loop with stop sentinel + cooldown (K:2338-2379, stop object
     K:654-670) — the reference's "streaming" is this micro-batch loop.
-  * stats objects (DiscoveryStats / ReplicationStats case classes K:79-81,
-    aggregation-on-write putStats K:759-785).
+  * stats objects (the ReplicationStats case class K:79-81,
+    aggregation-on-write putStats K:759-785). The reference's
+    DiscoveryStats gauge is the snapshot's manifest entry: its ``count``
+    is the tile's key count at discovery, written in the same commit.
 
 Each phase of a cycle is one Spark pass over every due tile, where the
 reference runs one job per tile (Scala .par — K:2258): discovery writes
@@ -21,9 +23,13 @@ and counts it with one ``groupBy("tile", "op")``. The sink runs once
 per cycle on a ``ChangeSet`` whose frames carry ``tile`` and whose
 ``tagged_union()`` is that persisted frame itself (plus the historical
 tiles' curr relation, every row an insert). The state files commit
-once per phase too: one ledger record for every rotated tile, one
-snapshot manifest write per snapshot write and per expiry, and one
-ledger mark for every replicated tile.
+once per phase too. Discovery makes one snapshot manifest write, which
+also expires every tile's snapshots older than its consumed curr (the
+ledger's bound, ``write_snapshots(keep_from=...)``; the reference
+expires by count after each replication, K:1656-1657), and one ledger
+record for every rotated tile. Replication puts one stats file per
+tile, then makes one ledger mark for every replicated tile. A delta
+cycle of N tiles thus replaces 3 + N state files.
 
 The source is any callable returning a DataFrame with the PK columns
 (+ optional ts): a Cassandra connector reader in production, parquet
@@ -42,16 +48,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .diff import ChangeSet, changeset_from_tagged, compute_changes_tagged
-from .ledger import Ledger
+from .ledger import SUCCESS, Ledger
 from .snapshot import SnapshotStore
 from .tiling import tile_expr
-
-
-@dataclass
-class DiscoveryStats:
-    tile: int
-    primaryKeys: int
-    updatedTimestamp: float
 
 
 @dataclass
@@ -65,47 +64,44 @@ class ReplicationStats:
 
 
 class StatsStore:
-    """JSON stats objects with read-add-write aggregation (putStats
-    K:759-785). One file per (tile, kind)."""
+    """JSON replication stats objects with read-add-write aggregation
+    (putStats K:759-785). One file per tile."""
 
     def __init__(self, root: str):
         self.root = root
 
-    def _path(self, ks: str, tbl: str, tile: int, kind: str) -> str:
-        return os.path.join(self.root, ks, tbl, f"{kind}-tile-{tile}.json")
+    def _path(self, ks: str, tbl: str, tile: int) -> str:
+        return os.path.join(self.root, ks, tbl, f"replication-tile-{tile}.json")
 
-    def put(self, ks: str, tbl: str, stats: DiscoveryStats | ReplicationStats,
+    def put(self, ks: str, tbl: str, stats: ReplicationStats,
             snapshot_id: int | None = None) -> None:
-        """Discovery stats overwrite (a gauge); replication stats add
-        to the stored totals. ``snapshot_id`` is the curr snapshot a
-        replication put accounts for: it is recorded as
+        """Add ``stats`` to the tile's stored totals. ``snapshot_id`` is
+        the curr snapshot the put accounts for: it is recorded as
         ``appliedSnapshotId``, and a put of the id already recorded
         does nothing, so a replication retried after a crash between
         this put and the ledger mark counts its tile once."""
-        kind = "discovery" if isinstance(stats, DiscoveryStats) else "replication"
-        path = self._path(ks, tbl, stats.tile, kind)
+        path = self._path(ks, tbl, stats.tile)
         os.makedirs(os.path.dirname(path), exist_ok=True)
         merged = asdict(stats)
-        if kind == "replication":
-            if os.path.exists(path):
-                with open(path) as f:
-                    prev = json.load(f)
-                if snapshot_id is not None and \
-                        prev.get("appliedSnapshotId") == snapshot_id:
-                    return
-                # primaryKeys aggregates too — the reference's
-                # historicallyInserted accumulation (K:1560)
-                for k in ("primaryKeys", "updatedPrimaryKeys",
-                          "insertedPrimaryKeys", "deletedPrimaryKeys"):
-                    merged[k] += prev.get(k, 0)
-            merged["appliedSnapshotId"] = snapshot_id
+        if os.path.exists(path):
+            with open(path) as f:
+                prev = json.load(f)
+            if snapshot_id is not None and \
+                    prev.get("appliedSnapshotId") == snapshot_id:
+                return
+            # primaryKeys aggregates too — the reference's
+            # historicallyInserted accumulation (K:1560)
+            for k in ("primaryKeys", "updatedPrimaryKeys",
+                      "insertedPrimaryKeys", "deletedPrimaryKeys"):
+                merged[k] += prev.get(k, 0)
+        merged["appliedSnapshotId"] = snapshot_id
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(merged, f)
         os.replace(tmp, path)
 
-    def get(self, ks: str, tbl: str, tile: int, kind: str) -> dict | None:
-        path = self._path(ks, tbl, tile, kind)
+    def get(self, ks: str, tbl: str, tile: int) -> dict | None:
+        path = self._path(ks, tbl, tile)
         if not os.path.exists(path):
             return None
         with open(path) as f:
@@ -162,7 +158,10 @@ class CdcPipeline:
 
     # -- discovery ---------------------------------------------------------
     def discover(self) -> list[int]:
-        """One discovery cycle; returns tiles that rotated a snapshot."""
+        """One discovery cycle; returns tiles that rotated a snapshot.
+        Each due tile's new manifest entry is its discovery gauge
+        (``count``), and the same manifest write expires the tile's
+        snapshots older than its consumed curr."""
         # Gate FIRST: a tile still holding an unconsumed snapshot is
         # skipped (K:2263-2271), and a cycle with no due tile refuses
         # without touching the source. can_discover is a read-only
@@ -171,22 +170,28 @@ class CdcPipeline:
                if self.ledger.can_discover(self.keyspace, self.table, t)]
         if not due:
             return []
+        # A consumed curr is the oldest snapshot any later plan can read
+        # (it becomes the prev of the next rotation, whoever makes it),
+        # so the commit may drop everything before it. A tile whose curr
+        # is not consumed (a rival rotated it since the gate) drops
+        # nothing.
+        consumed = {r.tile: int(r.location) for r in self.ledger.rows()
+                    if (r.ks, r.tbl, r.ver, r.load_status)
+                    == (self.keyspace, self.table, "curr", SUCCESS)
+                    and r.tile in due}
         src = self.pk_source()
         tiled = src.withColumn(
             "tile", self.tile_of(src) if self.tile_of is not None
             else tile_expr(src, self.pk_cols, self.total_tiles))
-        snaps = self.store.write_snapshots(tiled, due)
+        snaps = self.store.write_snapshots(tiled, due, keep_from=consumed)
         # A tile comes back lost when a rival process rotated it between
         # our gate check and our record (the ledger allows any number of
         # discovery processes). Our snapshot of it is an unreferenced
-        # orphan until expiry: skip the tile, not the cycle.
+        # orphan until a later commit's bound passes it: skip the tile,
+        # not the cycle.
         lost = self.ledger.record_discoveries(
             self.keyspace, self.table, {t: s.id for t, s in snaps.items()})
-        rotated = [t for t in snaps if t not in lost]
-        for t in rotated:
-            self.stats.put(self.keyspace, self.table,
-                           DiscoveryStats(t, snaps[t].count, time.time()))
-        return rotated
+        return [t for t in snaps if t not in lost]
 
     # -- replication --------------------------------------------------------
     def replicate(self) -> list[ReplicationStats]:
@@ -201,7 +206,8 @@ class CdcPipeline:
         diff keyed on (tile, pk) over one curr and one prev relation
         (``read_snapshots``), historical tiles as one curr-as-insert
         relation, one sink call on the tagged frame; then every tile's
-        stats, one ledger mark and one expiry for all of them."""
+        stats and one ledger mark for all of them. Expiry waits for the
+        tiles' next discovery commit."""
         plans = {}
         for t in tiles:
             plan = self.ledger.replication_plan(self.keyspace, self.table, t)
@@ -235,9 +241,10 @@ class CdcPipeline:
                          .withColumn("op", F.lit("insert")))
                 changes = loads if changes is None else changes.unionByName(
                     loads, allowMissingColumns=True)
+                live = self.store.all_snapshots()
                 for t, sid in historical.items():
                     counts[t]["insert"] = next(
-                        s.count for s in self.store.snapshots(t) if s.id == sid)
+                        s.count for s in live[t] if s.id == sid)
             if self.sink is not None:
                 self.sink(changeset_from_tagged(changes, counts=counts),
                           {t: p["curr"] for t, p in plans.items()})
@@ -258,7 +265,6 @@ class CdcPipeline:
         # tiles, and a put of the same curr id is a no-op
         self.ledger.mark_replications_complete(self.keyspace, self.table,
                                                list(plans))
-        self.store.expire_snapshots(list(plans), retain_last=2)  # K:1656-1657
         return out
 
     # -- loop -----------------------------------------------------------------

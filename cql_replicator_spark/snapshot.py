@@ -10,29 +10,35 @@ This store keeps the same shape on plain Parquet, and it is the one
 snapshot format: each snapshot is an immutable directory
 ``{root}/{ks}/{table}/tile={n}/snap-{id:08d}/``, and one JSON manifest
 per table, ``{root}/{ks}/{table}/manifest.json``, lists each tile's live
-snapshots (id, committed_at, count, schema and, for ``stats_cols``
-writes, per-file count/min/max) — the role Iceberg's metadata plays.
-Per-tile ``tile={n}/manifest.json`` files of older builds are not read.
-The API mirrors Iceberg's: write-overwrite (one new snapshot per tile,
-any number of tiles in one partitioned write), current_snapshot_id,
-read at snapshot (time travel), expire (any number of tiles in one
-manifest rewrite).
+snapshots (id, committed_at, count, the dir relative to the table dir,
+a schema id and, for ``stats_cols`` writes, per-file count/min/max) —
+the role Iceberg's metadata plays. Each distinct schema is stored once,
+in the manifest's ``schemas`` map, so the file grows with the live
+snapshots, not with their schemas. A snapshot's ``count`` is the
+discovery gauge: the number of keys the tile held when it was taken.
+Manifests of older builds (per-tile ``tile={n}/manifest.json`` files,
+or a table manifest with a schema and an absolute path in each entry)
+are not read. The API mirrors Iceberg's: write-overwrite (one new
+snapshot per tile, any number of tiles in one partitioned write, with
+the expiry of each tile's snapshots before a given id in the same
+manifest write), current_snapshot_id, read at snapshot (time travel),
+expire by count (any number of tiles in one manifest rewrite).
 
 Why the store is not the in-repo Delta log (dlog.py). A dlog table
 replays its whole log on every commit, read and vacuum, and nothing
 truncates the log: one replay took 0.2 ms at 10 versions, 17.3 ms at
 1,000 and 37.8 ms at 2,000 (4 vCPU AMD EPYC). A tile replays at least
 four times per cycle, and a 2 s loop reaches 2,000 versions in about 67
-minutes. The manifest is trimmed to ``retain_last`` entries at every
-expiry, so its cost stays flat. Plugged in as the CLI's store, dlog ran
-the ``delta_low_churn`` benchmark (seed 1001, same host) at 20.6 keys/s
-and 2.92 s per cycle, against 28.1 keys/s and 2.32 s for this store.
+minutes. The manifest is trimmed at every discovery commit, so its cost
+stays flat. Plugged in as the CLI's store, dlog ran the
+``delta_low_churn`` benchmark (seed 1001, same host) at 20.6 keys/s and
+2.92 s per cycle, against 28.1 keys/s and 2.32 s for this store.
 dlog.py stays as a library (the ``snapshot_time_travel`` lane).
 
 Layout contract. A snapshot is the directory
 ``{root}/{ks}/{table}/tile={n}/snap-{id:08d}/`` holding the snapshot's
 data files and nothing else a reader lists (Spark skips ``_``/``.``
-names), and its manifest entry records the schema of those files
+names), and its manifest entry names the schema of those files
 without the tile. ``read_snapshots`` relies on both: it reads any set
 of snapshot dirs as one relation with ``basePath`` at the table dir,
 so Spark takes ``tile`` from the ``tile=N`` directory and the manifest
@@ -46,8 +52,12 @@ under one cross-process mutex per table, renames each tile's files to
 dir a crash can orphan in a tile is ``snap-{max id + 1}`` (renamed, not
 yet listed), and the next commit of that tile takes that id and removes
 the dir first: each tile heals itself, with no separate orphan sweep.
-Expiry takes the same mutex and rewrites the manifest once for all the
-tiles it trims.
+Expiry, inside a commit (``keep_from``) or alone (``expire_snapshots``),
+runs under the same mutex: it removes the expired dirs, then writes the
+manifest once for every tile. A crash between the two leaves listed
+entries whose dirs are gone; a commit's expiry only removes snapshots
+older than one the ledger marked consumed, which no replication plan
+reads again.
 
 Scale note: ``write_snapshots`` writes every due tile in one
 ``coalesce(files_per_snapshot)`` (``repartitionByRange`` with
@@ -120,19 +130,27 @@ class SnapshotStore:
     def _manifest_path(self) -> str:
         return os.path.join(self._table_dir(), "manifest.json")
 
-    def _load_manifest(self) -> dict[str, list[dict]]:
-        """The table manifest: each tile's entry list, keyed by the tile
-        as a string (JSON object keys are strings)."""
+    def _load_manifest(self) -> dict:
+        """The table manifest, ``{"schemas": {schema_id: schema},
+        "tiles": {tile: [entry, ...]}}`` with each tile's entries oldest
+        first (JSON object keys are strings)."""
         try:
             with open(self._manifest_path()) as f:
-                return json.load(f)
+                manifest = json.load(f)
         except FileNotFoundError:
-            return {}
+            manifest = {}
+        return {"schemas": manifest.get("schemas", {}),
+                "tiles": manifest.get("tiles", {})}
 
     def _read_manifest(self, tile: int) -> list[dict]:
-        return self._load_manifest().get(str(tile), [])
+        return self._load_manifest()["tiles"].get(str(tile), [])
 
-    def _write_manifest(self, manifest: dict[str, list[dict]]) -> None:
+    def _write_manifest(self, manifest: dict) -> None:
+        # a schema goes with the last entry that names it
+        used = {str(e["schema_id"])
+                for entries in manifest["tiles"].values() for e in entries}
+        manifest["schemas"] = {k: v for k, v in manifest["schemas"].items()
+                               if k in used}
         p = self._manifest_path()
         os.makedirs(os.path.dirname(p), exist_ok=True)
         tmp = f"{p}.{os.getpid()}.tmp"
@@ -140,12 +158,34 @@ class SnapshotStore:
             json.dump(manifest, f, indent=1)
         os.replace(tmp, p)  # atomic commit, like Iceberg's metadata swap
 
+    @staticmethod
+    def _schema_id(manifest: dict, schema: dict) -> int:
+        """The id of ``schema`` in the manifest's schema map, added to
+        the map if it is new there."""
+        for k, v in manifest["schemas"].items():
+            if v == schema:
+                return int(k)
+        new_id = max(map(int, manifest["schemas"]), default=0) + 1
+        manifest["schemas"][str(new_id)] = schema
+        return new_id
+
+    def _abs_path(self, entry: dict) -> str:
+        return os.path.join(self._table_dir(), entry["path"])
+
+    def _expire_oldest(self, entries: list[dict], n: int) -> list[dict]:
+        """Remove the dirs of the oldest ``n`` of one tile's ``entries``
+        and return the entries left, for the caller's manifest write."""
+        for e in entries[:n]:
+            shutil.rmtree(self._abs_path(e), ignore_errors=True)
+        return entries[n:]
+
     def _table_mutex(self):
         """Cross-process mutex serializing the manifest's
-        read-modify-write sections (the commit in write_snapshots, and
-        expire_snapshots). Without it two racing discoverers — legal
-        under the ledger's any-number-of-discovery-processes contract —
-        read the same manifest, pick the SAME next snapshot id, rename
+        read-modify-write sections (the commit in write_snapshots, with
+        its expiry, and expire_snapshots). Without it two racing
+        discoverers — legal under the ledger's
+        any-number-of-discovery-processes contract — read the same
+        manifest, pick the SAME next snapshot id, rename
         onto one another's snap-{id} directory, and the last-write-wins
         manifest swap silently drops the other's entry (and an expire
         racing a writer drops the fresh entry). Same battle-tested lock
@@ -174,7 +214,8 @@ class SnapshotStore:
 
     def write_snapshots(self, df: DataFrame, tiles: list[int],
                         files_per_snapshot: int | None = None,
-                        stats_cols: list[str] | None = None
+                        stats_cols: list[str] | None = None,
+                        keep_from: dict[int, int] | None = None
                         ) -> dict[int, SnapshotInfo]:
         """Commit one new snapshot for each of ``tiles`` from ``df``,
         whose ``tile`` column names each row's tile (the column is not
@@ -196,6 +237,14 @@ class SnapshotStore:
         are of rows streamed through the write, so a corrupt or partial
         file surfaces at the first read of the snapshot, not at
         rotation.
+
+        ``keep_from={tile: snapshot_id}`` expires, in the same commit,
+        every snapshot of that tile older than ``snapshot_id``: their
+        dirs go before the one manifest write, their entries in it. The
+        runner passes each tile's consumed curr snapshot (the ledger's
+        bound: no replication plan reads an older one), so a cycle's
+        expiry costs no manifest write of its own, and a snapshot that
+        lost a discovery race is collected with the rest.
 
         ``files_per_snapshot`` bounds each tile's file count by a
         ``coalesce``; it defaults to the session's
@@ -230,13 +279,20 @@ class SnapshotStore:
             files = (self._staged_file_stats(df.sparkSession, stage, schema,
                                              stats_cols)
                      if stats_cols else {})
+            keep_from = keep_from or {}
             out = {}
             with self._table_mutex():
                 manifest = self._load_manifest()
+                schema_id = self._schema_id(manifest, schema)
                 for t in tiles:
-                    entries = manifest.get(str(t), [])
+                    entries = manifest["tiles"].get(str(t), [])
                     new_id = (max(e["id"] for e in entries) + 1) if entries else 1
-                    path = os.path.join(self._tile_dir(t), f"snap-{new_id:08d}")
+                    entry = {"id": new_id, "committed_at": time.time(),
+                             "count": int(counts[f"n{t}"]),
+                             "path": os.path.join(f"tile={t}",
+                                                  f"snap-{new_id:08d}"),
+                             "schema_id": schema_id}
+                    path = self._abs_path(entry)
                     # an uncommitted dir of a crashed write may hold the id
                     shutil.rmtree(path, ignore_errors=True)
                     staged = os.path.join(stage, f"tile={t}")
@@ -245,12 +301,12 @@ class SnapshotStore:
                         os.rename(staged, path)
                     else:
                         os.makedirs(path)
-                    entry = {"id": new_id, "committed_at": time.time(),
-                             "count": int(counts[f"n{t}"]), "path": path,
-                             "schema": schema}
                     if stats_cols:
                         entry["files"] = files.get(t, [])
-                    manifest[str(t)] = entries + [entry]
+                    if t in keep_from:
+                        entries = self._expire_oldest(entries, sum(
+                            e["id"] < keep_from[t] for e in entries))
+                    manifest["tiles"][str(t)] = entries + [entry]
                     out[t] = SnapshotInfo(new_id, entry["committed_at"],
                                           entry["count"], path)
                 self._write_manifest(manifest)
@@ -288,11 +344,8 @@ class SnapshotStore:
     def snapshot_exists(self, tile: int, snapshot_id: int) -> bool:
         return any(e["id"] == snapshot_id for e in self._read_manifest(tile))
 
-    def _entry(self, tile: int, snapshot_id: int,
-               manifest: dict[str, list[dict]] | None = None) -> dict:
-        if manifest is None:
-            manifest = self._load_manifest()
-        for e in manifest.get(str(tile), []):
+    def _entry(self, tile: int, snapshot_id: int, manifest: dict) -> dict:
+        for e in manifest["tiles"].get(str(tile), []):
             if e["id"] == snapshot_id:
                 return e
         raise ValueError(
@@ -310,12 +363,13 @@ class SnapshotStore:
         predicate touches file METADATA first, so a point/range lookup
         on a 100 TB tile reads O(matching files), not the snapshot).
         Without stats the same predicate still applies, just without
-        the skip. A snapshot whose manifest records its schema is read
-        with it: no schema-inference job per read."""
-        e = self._entry(tile, snapshot_id)
-        reader = spark.read
-        if "schema" in e:
-            reader = reader.schema(StructType.fromJson(e["schema"]))
+        the skip. The snapshot is read with the schema its manifest
+        entry names: no schema-inference job per read."""
+        manifest = self._load_manifest()
+        e = self._entry(tile, snapshot_id, manifest)
+        path = self._abs_path(e)
+        reader = spark.read.schema(StructType.fromJson(
+            manifest["schemas"][str(e["schema_id"])]))
         if between and e.get("files"):
             def _overlaps(f: dict) -> bool:
                 for c, (lo, hi) in between.items():
@@ -329,14 +383,14 @@ class SnapshotStore:
                         return False
                 return True
 
-            keep = [os.path.join(e["path"], f["name"])
+            keep = [os.path.join(path, f["name"])
                     for f in e["files"] if _overlaps(f)]
             if not keep:  # schema-correct empty frame, zero data read
-                df = reader.parquet(e["path"]).where(F.lit(False))
+                df = reader.parquet(path).where(F.lit(False))
             else:
                 df = reader.parquet(*keep)
         else:
-            df = reader.parquet(e["path"])
+            df = reader.parquet(path)
         if between:
             for c, (lo, hi) in between.items():
                 df = df.filter(F.col(c).between(lo, hi))
@@ -354,19 +408,21 @@ class SnapshotStore:
         docstring), read with the manifest schema: one scan node, and no
         job to build it below Spark's parallel-listing threshold. Empty
         snapshots add no rows; a request of only empty snapshots is a
-        schema-correct empty frame. Snapshots whose manifests record no
-        schema, or different ones, are read per tile and unioned here."""
+        schema-correct empty frame. Snapshots of different schemas are
+        read per tile and unioned here."""
         if not snapshot_ids:
             raise ValueError("read_snapshots: no snapshots requested")
         manifest = self._load_manifest()
         entries = {t: self._entry(t, sid, manifest)
                    for t, sid in sorted(snapshot_ids.items())}
-        schemas = [e.get("schema") for e in entries.values()]
-        if schemas[0] is not None and all(sch == schemas[0] for sch in schemas):
-            schema = StructType.fromJson(schemas[0]).add("tile", IntegerType())
+        schema_ids = {e["schema_id"] for e in entries.values()}
+        if len(schema_ids) == 1:
+            schema = StructType.fromJson(
+                manifest["schemas"][str(schema_ids.pop())]
+            ).add("tile", IntegerType())
             return (spark.read.schema(schema)
                     .option("basePath", self._table_dir())
-                    .parquet(*[e["path"] for e in entries.values()]))
+                    .parquet(*[self._abs_path(e) for e in entries.values()]))
         return reduce(
             lambda a, b: a.unionByName(b, allowMissingColumns=True),
             [self.read_snapshot(spark, t, sid).withColumn("tile", F.lit(t))
@@ -383,7 +439,10 @@ class SnapshotStore:
         """Drop all but the newest ``retain_last`` (at least 1)
         snapshots of each of ``tiles`` (one tile or several; K:1278-1289):
         their dirs go, then their manifest entries, in one manifest
-        rewrite. Returns #expired."""
+        rewrite. Returns #expired. The runner does not call this: its
+        discovery commit expires by the ledger's bound (``keep_from``),
+        which a count cannot express — a count keeps snapshots that lost
+        a discovery race and drops the consumed one they follow."""
         if retain_last < 1:
             raise ValueError(
                 f"expire_snapshots: retain_last must be >= 1, got {retain_last}")
@@ -392,22 +451,27 @@ class SnapshotStore:
         with self._table_mutex():
             manifest = self._load_manifest()
             for t in tiles:
-                entries = manifest.get(str(t), [])
-                if len(entries) <= retain_last:
-                    continue
-                for e in entries[:-retain_last]:
-                    shutil.rmtree(e["path"], ignore_errors=True)
-                expired += len(entries) - retain_last
-                manifest[str(t)] = entries[-retain_last:]
+                entries = manifest["tiles"].get(str(t), [])
+                n = len(entries) - retain_last
+                if n > 0:
+                    manifest["tiles"][str(t)] = self._expire_oldest(entries, n)
+                    expired += n
             if expired:
                 self._write_manifest(manifest)
         return expired
 
+    def all_snapshots(self) -> dict[int, list[SnapshotInfo]]:
+        """Every tile's live snapshots, oldest first, from one manifest
+        read."""
+        return {int(t): [SnapshotInfo(id=e["id"],
+                                      committed_at=e["committed_at"],
+                                      count=e["count"],
+                                      path=self._abs_path(e))
+                         for e in entries]
+                for t, entries in self._load_manifest()["tiles"].items()}
+
     def snapshots(self, tile: int) -> list[SnapshotInfo]:
-        return [SnapshotInfo(
-            id=e["id"], committed_at=e["committed_at"],
-            count=e["count"], path=e["path"],
-        ) for e in self._read_manifest(tile)]
+        return self.all_snapshots().get(tile, [])
 
 
 def migrate_legacy_snapshots(
@@ -435,12 +499,15 @@ def migrate_legacy_snapshots(
     RE-TILES: union every legacy tile's tail set, assign tiles with this
     engine's tile_expr, and write each new tile's snapshot from that
     (then the same for head). Both generations go through the ledger's
-    normal discovery/consume rotation, so the resumed pipeline's next
-    discovery diffs against head with a stable tiling — the
-    already-replicated head/tail delta is NOT replayed and no
-    re-tiling churn is emitted. Returns
+    normal discovery/consume rotation, one ``record_discoveries`` and one
+    ``mark_replications_complete`` for every tile of a generation (a
+    tile that comes back lost raises ``DiscoveryRaceLost``), so the
+    resumed pipeline's next discovery diffs against head with a stable
+    tiling — the already-replicated head/tail delta is NOT replayed and
+    no re-tiling churn is emitted. Returns
     {new_tile: (tail_snapshot_id, head_snapshot_id)}.
     """
+    from .ledger import DiscoveryRaceLost
     from .tiling import assign_tiles
 
     present = [
@@ -459,9 +526,14 @@ def migrate_legacy_snapshots(
             union = df if union is None else union.unionByName(df)
         snaps = store.write_snapshots(assign_tiles(union, pk_cols, num_tiles),
                                       list(range(num_tiles)))
+        lost = ledger.record_discoveries(
+            keyspace, table, {t: s.id for t, s in snaps.items()})
+        if lost:
+            raise DiscoveryRaceLost(
+                f"tiles {sorted(lost)}: unconsumed snapshot present; "
+                "migration must not rotate")
+        ledger.mark_replications_complete(keyspace, table, list(snaps))
         for new_tile, snap in snaps.items():
-            ledger.record_discovery(keyspace, table, new_tile, snap.id)
-            ledger.mark_replication_complete(keyspace, table, new_tile)
             migrated[new_tile].append(snap.id)
     if cleanup:
         for tile in present:

@@ -55,24 +55,32 @@ def test_cli_full_cycle_and_stats(spark, tmp_path, capsys):
     assert report["status"] == "SUCCEEDED"
 
 
-def test_cli_stats_skips_tile_gaps_and_nets_deletes(tmp_path, capsys):
-    """A tile that never rotated has no stats files — later tiles must
-    still be counted; in_sync compares the discovery gauge against NET
+def test_cli_stats_skips_tile_gaps_and_nets_deletes(spark, tmp_path, capsys):
+    """A tile that never rotated has no manifest entry and no stats
+    file — later tiles must still be counted; ``discovered`` is each
+    tile's newest snapshot count, and in_sync compares it against NET
     replicated rows (inserted - deleted), not the cumulative counter."""
     import time as _t
 
-    from cql_replicator_spark.runner import (
-        DiscoveryStats, ReplicationStats, StatsStore,
-    )
+    from pyspark.sql import functions as F
+
+    from cql_replicator_spark.runner import ReplicationStats, StatsStore
+    from cql_replicator_spark.snapshot import SnapshotStore
 
     work = str(tmp_path / "work")
+    snaps = SnapshotStore(os.path.join(work, "snapshots"), "default", "t")
+    keys = spark.range(140).select(F.col("id").alias("pk"))
+    # tile 0 never rotated (no entry); tile 1 rotated twice (100 keys,
+    # then 90), tile 2 once (40 keys)
+    snaps.write_snapshots(keys.filter("pk < 100").withColumn("tile", F.lit(1)),
+                          [1])
+    snaps.write_snapshots(
+        keys.withColumn("tile", F.when(F.col("pk") < 90, 1)
+                        .when(F.col("pk") >= 100, 2)), [1, 2])
     store = StatsStore(os.path.join(work, "stats"))
     now = _t.time()
-    # tile 0 never rotated (no files); tiles 1-2 did
-    store.put("default", "t", DiscoveryStats(1, 90, now))
     store.put("default", "t", ReplicationStats(1, 100, 0, 100, 0, now))
     store.put("default", "t", ReplicationStats(1, 10, 0, 0, 10, now))  # 10 deletes
-    store.put("default", "t", DiscoveryStats(2, 40, now))
     store.put("default", "t", ReplicationStats(2, 40, 0, 40, 0, now))
     code, out = _run(capsys, ["stats", "--workdir", work, "--tiles", "4"])
     assert code == 0

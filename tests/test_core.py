@@ -274,6 +274,44 @@ def test_read_snapshots_of_only_empty_snapshots(spark, tmp_path, stats_cols):
     assert got.count() == 0
 
 
+def test_manifest_stores_each_schema_once(spark, tmp_path):
+    """The table manifest keeps each distinct schema once, in its
+    ``schemas`` map, and each entry's dir relative to the table dir: at
+    64 tiles with 2 entries each it holds one schema and no absolute
+    path. A snapshot of another schema adds one map entry and reads
+    beside the others through the per-tile union; its schema leaves the
+    map with the last entry that names it."""
+    import json
+    import os
+
+    store = SnapshotStore(str(tmp_path), "ks", "tbl")
+    df = spark.range(256).select(
+        F.col("id").alias("pk"), (F.col("id") * 10).alias("ts"),
+        (F.col("id") % 64).cast("int").alias("tile"))
+    store.write_snapshots(df, list(range(64)))
+    second = store.write_snapshots(df, list(range(64)))
+    with open(os.path.join(str(tmp_path), "ks", "tbl", "manifest.json")) as f:
+        manifest = json.load(f)
+    assert list(manifest["schemas"].values()) == [
+        json.loads(df.drop("tile").schema.json())]
+    entries = [e for es in manifest["tiles"].values() for e in es]
+    assert len(manifest["tiles"]) == 64 and len(entries) == 128
+    assert not any(os.path.isabs(e["path"]) for e in entries)
+    assert all(s.path == os.path.join(str(tmp_path), "ks", "tbl", "tile=5",
+                                      f"snap-{s.id:08d}")
+               for s in store.snapshots(5))
+
+    other = store.write_snapshot(
+        spark.createDataFrame([(7, "x")], "pk long, note string"), tile=64)
+    assert len(store._load_manifest()["schemas"]) == 2
+    mixed = store.read_snapshots(spark, {0: second[0].id, 64: other})
+    assert sorted((r.tile, r.pk, r.ts, r.note) for r in mixed.collect()) == [
+        (0, k, 10 * k, None) for k in (0, 64, 128, 192)] + [(64, 7, None, "x")]
+    store.write_snapshot(df.filter("tile = 0").drop("tile"), tile=64)
+    assert store.expire_snapshots(64, retain_last=1) == 1
+    assert len(store._load_manifest()["schemas"]) == 1
+
+
 def test_expire_snapshots_rejects_retain_last_below_one(spark, tmp_path):
     """retain_last < 1 is an error that leaves the tile's snapshots as
     they were: 0 would slice entries[-0:] (every entry) and expire

@@ -96,7 +96,7 @@ def test_cdc_pipeline_full_cycle(spark, tables, tmp_path):
     assert sunk(per_tile2) == by_tile(stats2)
 
     # stats aggregated on disk
-    st = pipe.stats.get("tpch", "orders", 0, "replication")
+    st = pipe.stats.get("tpch", "orders", 0)
     assert st is not None and st["insertedPrimaryKeys"] > 0
 
 
@@ -142,6 +142,45 @@ def test_discovery_lost_race_skips_tile_not_cycle(spark, tables, tmp_path):
     # the lost tile replicates the RIVAL's snapshot id on the next pass
     plan = pipe.ledger.replication_plan("tpch", "orders", 1)
     assert plan == {"mode": "historical", "curr": 777}
+
+
+def test_lost_race_orphans_never_expire_the_consumed_snapshot(
+        spark, tables, tmp_path):
+    """Two snapshots that lost a discovery race (committed after the
+    tile's rotation, never recorded in the ledger) sit after the curr
+    the next replication consumes. Expiry keeps every snapshot from a
+    consumed curr on, so the next cycles still find their prev, land
+    the set arithmetic, and collect the orphans. Expiry by count (the
+    newest 2 after the mark) removed the consumed curr here, and every
+    later replicate() raised 'snapshot 2 not found'."""
+    pipe, state = _make_pipeline(spark, tables, tmp_path)
+    keys = {r.o_orderkey for r in tables["orders"].select("o_orderkey").collect()}
+
+    def check(stats, old_mod, new_mod):
+        old = {k for k in keys if k % old_mod != 0}
+        new = {k for k in keys if k % new_mod != 0}
+        assert sorted(s.tile for s in stats) == [0, 1, 2, 3]
+        assert (sum(s.insertedPrimaryKeys for s in stats),
+                sum(s.deletedPrimaryKeys for s in stats),
+                sum(s.updatedPrimaryKeys for s in stats)) == \
+            (len(new - old), len(old - new), 0)
+
+    assert sorted(pipe.discover()) == [0, 1, 2, 3]
+    pipe.replicate()
+    state["mod"] = 7
+    assert sorted(pipe.discover()) == [0, 1, 2, 3]
+    rival = pipe.pk_source().withColumn("tile", F.lit(0))
+    for _ in range(2):
+        pipe.store.write_snapshots(rival, [0])
+    live = pipe.store.snapshots(0)
+    assert [s.id for s in live] == [1, 2, 3, 4]
+    check(pipe.replicate(), 10, 7)  # consumes snapshot 2
+    for old_mod, new_mod in ((7, 3), (3, 11)):
+        state["mod"] = new_mod
+        assert sorted(pipe.discover()) == [0, 1, 2, 3]
+        check(pipe.replicate(), old_mod, new_mod)
+    assert [s.id for s in pipe.store.snapshots(0)] == [5, 6]
+    assert not any(os.path.exists(s.path) for s in live)
 
 
 def _jobs_started(spark, fn) -> tuple[int, int]:
@@ -227,9 +266,10 @@ def test_cycle_state_commits_do_not_grow_with_tiles(spark, tmp_path,
                                                     monkeypatch):
     """One state commit per phase: a steady delta cycle of the CLI
     pipeline (each tile past its first delta, so expiry trims) replaces
-    the ledger twice (record, mark) and the snapshot manifest twice
-    (write, expiry) at 2 tiles as at 8. The stats still replace one
-    discovery and one replication file per tile."""
+    the ledger twice (record, mark) and the snapshot manifest once (the
+    discovery commit, which also expires) at 2 tiles as at 8. The stats
+    replace one replication file per tile; the discovery gauge is the
+    manifest entry."""
     v1, v2 = _cli_sources(spark, tmp_path)
     real_replace = os.replace
     replaced: dict[str, int] = {}
@@ -260,7 +300,7 @@ def test_cycle_state_commits_do_not_grow_with_tiles(spark, tmp_path,
 
     for tiles in (2, 8):
         assert delta_cycle_replaces(tiles) == {
-            "ledger": 2, "manifest": 2, "stats": 2 * tiles}, tiles
+            "ledger": 2, "manifest": 1, "stats": tiles}, tiles
 
 
 def test_cli_cycle_jobs_all_carry_the_callers_group(spark, tmp_path):
@@ -309,7 +349,7 @@ def test_cli_sink_delete_failure_raises_after_upserts(spark, tmp_path,
     pipe.discover()
     plans = {t: pipe.ledger.replication_plan("default", "t", t)
              for t in range(4)}
-    stats = {t: pipe.stats.get("default", "t", t, "replication")
+    stats = {t: pipe.stats.get("default", "t", t)
              for t in range(4)}
     events.clear()
 
@@ -324,7 +364,7 @@ def test_cli_sink_delete_failure_raises_after_upserts(spark, tmp_path,
     assert all(p["mode"] == "delta" for p in plans.values())
     assert {t: pipe.ledger.replication_plan("default", "t", t)
             for t in range(4)} == plans
-    assert {t: pipe.stats.get("default", "t", t, "replication")
+    assert {t: pipe.stats.get("default", "t", t)
             for t in range(4)} == stats
 
     failing[0] = False
@@ -397,7 +437,6 @@ def test_discovery_commits_empty_tile(spark, tables, tmp_path):
     empty = pipe.store.read_snapshot(spark, 3, snap.id)
     full = pipe.store.read_current(spark, 0)
     assert empty.count() == 0 and empty.schema == full.schema
-    assert pipe.stats.get("tpch", "orders", 3, "discovery")["primaryKeys"] == 0
     stats = {s.tile: s for s in pipe.replicate()}
     assert stats[3].primaryKeys == 0
     assert sum(s.insertedPrimaryKeys for s in stats.values()) == \
@@ -453,15 +492,18 @@ def test_replicate_mixes_historical_and_delta_tiles(spark, tables, tmp_path):
         assert stats[t].deletedPrimaryKeys == stats[t].updatedPrimaryKeys == 0
 
 
-@pytest.mark.parametrize("crash_in, nth", [
-    pytest.param("ledger.mark_replications_complete", 1, id="ledger.mark"),
-    pytest.param("store.expire_snapshots", 1, id="store.expire_snapshots"),
-    pytest.param("stats.put", 3, id="stats.put")])
+@pytest.mark.parametrize("crash_in, nth, after", [
+    pytest.param("ledger.mark_replications_complete", 1, False,
+                 id="ledger.mark"),
+    pytest.param("ledger.mark_replications_complete", 1, True,
+                 id="ledger.mark.after"),
+    pytest.param("stats.put", 3, False, id="stats.put")])
 def test_replication_stats_exactly_once_across_crash(spark, tables, tmp_path,
-                                                     crash_in, nth):
+                                                     crash_in, nth, after):
     """A crash after some or all of the tiles' stats puts (at the third
-    put, at the ledger mark, or at expiry after the mark) followed by a
-    re-run of replicate() counts every tile's changes exactly once."""
+    put, at the ledger mark, or right after the mark returns) followed
+    by a re-run of replicate() counts every tile's changes exactly
+    once."""
     pipe, state = _make_pipeline(spark, tables, tmp_path)
     pipe.discover()
     pipe.replicate()
@@ -475,9 +517,11 @@ def test_replication_stats_exactly_once_across_crash(spark, tables, tmp_path,
 
     def crash_on_nth_call(*args, **kwargs):
         calls.append(args)
-        if len(calls) == nth:
-            raise RuntimeError("crash after the stats put")
-        return real(*args, **kwargs)
+        if len(calls) != nth:
+            return real(*args, **kwargs)
+        if after:
+            real(*args, **kwargs)
+        raise RuntimeError("crash after the stats put")
 
     setattr(owner, method, crash_on_nth_call)
     try:
@@ -494,7 +538,7 @@ def test_replication_stats_exactly_once_across_crash(spark, tables, tmp_path,
     totals = dict.fromkeys(("primaryKeys", "insertedPrimaryKeys",
                             "deletedPrimaryKeys", "updatedPrimaryKeys"), 0)
     for t in range(4):
-        st = pipe.stats.get("tpch", "orders", t, "replication")
+        st = pipe.stats.get("tpch", "orders", t)
         for k in totals:
             totals[k] += st[k]
     ins, dels = len(t0) + len(t1 - t0), len(t0 - t1)
@@ -509,7 +553,7 @@ def test_stats_put_ignores_a_repeated_snapshot(tmp_path):
     stats.put("ks", "t", ReplicationStats(0, 3, 1, 1, 1, 0.0), 5)
     stats.put("ks", "t", ReplicationStats(0, 3, 1, 1, 1, 0.0), 5)
     stats.put("ks", "t", ReplicationStats(0, 2, 0, 2, 0, 0.0), 6)
-    got = stats.get("ks", "t", 0, "replication")
+    got = stats.get("ks", "t", 0)
     assert (got["primaryKeys"], got["insertedPrimaryKeys"],
             got["appliedSnapshotId"]) == (5, 3, 6)
 

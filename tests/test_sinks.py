@@ -944,7 +944,7 @@ def test_incremental_flush_over_multi_stage_write(spark, tmp_path):
     finally:
         final = flusher.stop()
     assert final == 100
-    st = store.get("ks", "t", 0, "replication")
+    st = store.get("ks", "t", 0)
     assert st["insertedPrimaryKeys"] == 100   # aggregated deltas == exact total
     assert st["primaryKeys"] == 100
 
