@@ -3097,18 +3097,13 @@ def synthesize_png_pixel_table(documents: DataFrame) -> DataFrame:
             .mapInPandas(run, schema=JPEG_SCHEMA))
 
 
-def synthesize_mjpeg_avi_table(documents: DataFrame) -> DataFrame:
-    """Decodable MJPEG AVIs from the documents table: doc_id%4+1
+def _mjpeg_synth_batches(
+        batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Decodable MJPEG AVIs from batches of doc_id: doc_id%4+1
     solid-grey baseline JPEG frames (grey_i = (doc_id + 31*i) % 256)
     in a RIFF/AVI container at 10 fps. Every frame is DC-only, so the
     per-frame decoded sum has the closed form grey_i * w * h for the
     frame-sampling oracle."""
-    return _spread_small_scan(documents).select("doc_id").mapInPandas(
-        _mjpeg_synth_batches, schema=JPEG_SCHEMA)
-
-
-def _mjpeg_synth_batches(
-        batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         ids = pdf["doc_id"].tolist()
         media = []
@@ -4799,8 +4794,8 @@ def flac_sample_stats_fused(documents: DataFrame) -> DataFrame:
 
 def mjpeg_frame_stats_fused(documents: DataFrame,
                             every_ms: int = 1000) -> DataFrame:
-    """synthesize_mjpeg_avi_table → video_frame_stats in ONE
-    mapInPandas (default sampler/decoder, like the lane)."""
+    """Synthesized MJPEG AVIs (_mjpeg_synth_batches) → video_frame_stats
+    in ONE mapInPandas (default sampler/decoder, like the lane)."""
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         return _frame_stats_batches(
             _mjpeg_synth_batches(batches),

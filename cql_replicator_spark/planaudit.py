@@ -20,7 +20,7 @@ jobs with NO SQL execution, invisible to the status-store capture. A
 caller that funneled a change-set through coalesce(1) before a sink
 write would serialize the entire write through one task with no gate
 seeing it — exactly the shape found hiding in r13 (staging writes) and
-r14 (snapshot/dlog writes). ``guard_sink_input`` closes that last
+r14 (snapshot writes). ``guard_sink_input`` closes that last
 layer: every RDD-action sink statically audits its input frame's plan
 with the same three detectors at call time and fails loud.
 

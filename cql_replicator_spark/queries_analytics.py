@@ -3293,27 +3293,27 @@ UNION ALL
 SELECT 3, CAST(count(*) AS BIGINT), CAST(sum(o_orderkey) AS BIGINT)
 FROM orders WHERE o_orderkey % 5 = 0
 """,
-    doc="Lakehouse time travel through the pure-Python Delta-protocol "
-        "log (dlog.py; reference behavior K:1340-1349 "
-        "readIcebergAtSnapshot): three overwrite commits build three "
-        "versions of a tile table, then versionAsOf log replay reads "
-        "EACH historical version back — the summary per version must "
-        "equal the oracle recomputing each source predicate directly. "
-        "Version reads are immutable-file parquet scans selected by "
-        "log metadata; no data is rewritten between versions",
+    doc="Lakehouse time travel through the snapshot store (reference "
+        "behavior K:1340-1349 readIcebergAtSnapshot): three overwrite "
+        "commits of one tile make three snapshot ids, then "
+        "read_snapshot reads EACH historical id back — the summary per "
+        "snapshot must equal the oracle recomputing each source "
+        "predicate directly. A read is a scan of the immutable "
+        "snapshot dir the manifest names, with the manifest schema; no "
+        "data is rewritten between snapshots",
 )
 def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dlog import DeltaLogTable
+    from .snapshot import SnapshotStore
 
     orders = _t(spark, sf_dir, "orders")["orders"]
     base = orders.select(F.col("o_orderkey").alias("pk"))
-    table = DeltaLogTable(_stage_dir("snap_tt"))
-    versions = [table.commit_overwrite(base),
-                table.commit_overwrite(base.filter(F.col("pk") % 3 == 0)),
-                table.commit_overwrite(base.filter(F.col("pk") % 5 == 0))]
+    store = SnapshotStore(_stage_dir("snap_tt"), "ks", "orders")
+    sids = [store.write_snapshot(base, 0),
+            store.write_snapshot(base.filter(F.col("pk") % 3 == 0), 0),
+            store.write_snapshot(base.filter(F.col("pk") % 5 == 0), 0)]
     out = None
-    for snap, version in enumerate(versions, start=1):
-        part = (table.read(spark, version_as_of=version)
+    for snap, sid in enumerate(sids, start=1):
+        part = (store.read_snapshot(spark, 0, sid)
                 .agg(F.count("*").cast("long").alias("n"),
                      F.sum("pk").cast("long").alias("sum_pk"))
                 .select(F.lit(snap).cast("int").alias("snap"), "n", "sum_pk"))

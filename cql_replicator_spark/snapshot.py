@@ -11,29 +11,20 @@ snapshot format: each snapshot is an immutable directory
 ``{root}/{ks}/{table}/tile={n}/snap-{id:08d}/``, and one JSON manifest
 per table, ``{root}/{ks}/{table}/manifest.json``, lists each tile's live
 snapshots (id, committed_at, count, the dir relative to the table dir,
-a schema id and, for ``stats_cols`` writes, per-file count/min/max) —
-the role Iceberg's metadata plays. Each distinct schema is stored once,
-in the manifest's ``schemas`` map, so the file grows with the live
-snapshots, not with their schemas. A snapshot's ``count`` is the
-discovery gauge: the number of keys the tile held when it was taken.
-Manifests of older builds (per-tile ``tile={n}/manifest.json`` files,
-or a table manifest with a schema and an absolute path in each entry)
-are not read. The API mirrors Iceberg's: write-overwrite (one new
-snapshot per tile, any number of tiles in one partitioned write, with
-the expiry of each tile's snapshots before a given id in the same
-manifest write), current_snapshot_id, read at snapshot (time travel),
-expire by count (any number of tiles in one manifest rewrite).
-
-Why the store is not the in-repo Delta log (dlog.py). A dlog table
-replays its whole log on every commit, read and vacuum, and nothing
-truncates the log: one replay took 0.2 ms at 10 versions, 17.3 ms at
-1,000 and 37.8 ms at 2,000 (4 vCPU AMD EPYC). A tile replays at least
-four times per cycle, and a 2 s loop reaches 2,000 versions in about 67
-minutes. The manifest is trimmed at every discovery commit, so its cost
-stays flat. Plugged in as the CLI's store, dlog ran the
-``delta_low_churn`` benchmark (seed 1001, same host) at 20.6 keys/s and
-2.92 s per cycle, against 28.1 keys/s and 2.32 s for this store.
-dlog.py stays as a library (the ``snapshot_time_travel`` lane).
+a schema id and a ``files`` list: each data file's name and byte size,
+plus count/min/max for ``stats_cols`` writes) — the role Iceberg's
+metadata plays. Each distinct schema is stored once, in the manifest's
+``schemas`` map, so the file grows with the live snapshots, not with
+their schemas. A snapshot's ``count`` is the discovery gauge: the
+number of keys the tile held when it was taken. Manifests of older
+builds (per-tile ``tile={n}/manifest.json`` files, a table manifest
+with a schema and an absolute path in each entry, or entries without a
+``files`` list) are not read. The API mirrors Iceberg's:
+write-overwrite (one new snapshot per tile, any number of tiles in one
+partitioned write, with the expiry of each tile's snapshots before a
+given id in the same manifest write), current_snapshot_id, read at
+snapshot (time travel), expire by count (any number of tiles in one
+manifest rewrite).
 
 Layout contract. A snapshot is the directory
 ``{root}/{ks}/{table}/tile={n}/snap-{id:08d}/`` holding the snapshot's
@@ -44,6 +35,13 @@ of snapshot dirs as one relation with ``basePath`` at the table dir,
 so Spark takes ``tile`` from the ``tile=N`` directory and the manifest
 schema (plus ``tile int``) spares it the schema-inference job. An empty
 snapshot is an empty directory, which reads as zero rows.
+
+Torn files. Spark reads a zero-length parquet file as zero rows, and a
+zero-length file is what an unsynced write can leave after a power loss.
+Read silently, the lost keys would reach the sink as deletes. So every
+read first checks, by ``os.stat``, that each file the entry lists is on
+disk at the size its commit recorded, and raises ``TornSnapshotError``
+if one is not.
 
 Crash safety. Every commit stages its files in a private directory
 (``staging``; each write sweeps the ones killed writers left) and then,
@@ -104,6 +102,11 @@ def _stat_json(v):
     if v is None or isinstance(v, (str, int, float, bool)):
         return v
     return str(v)
+
+
+class TornSnapshotError(RuntimeError):
+    """A snapshot's data file is missing or not the size its commit
+    recorded."""
 
 
 @dataclass
@@ -252,13 +255,18 @@ class SnapshotStore:
         session's parallelism (coalesce never widens, so narrow inputs
         still produce few files).
 
+        Each entry's ``files`` lists the tile's data files with their
+        byte sizes, taken by ``os.stat`` of the staged dir before the
+        rename (no Spark job); every read checks them.
+
         ``stats_cols`` turns on Iceberg-style file-level data skipping:
         rows are range-partitioned by those columns into
         ``files_per_snapshot`` partitions, so each tile's files hold
         disjoint ranges, and per-file min/max/count — read back from the
         staged files in one aggregate whose output is one row per FILE —
-        go into the manifest, letting ``read_snapshot(between=...)``
-        open only the files whose range intersects the predicate."""
+        go into the same ``files`` records, letting
+        ``read_snapshot(between=...)`` open only the files whose range
+        intersects the predicate."""
         tiles = sorted(set(tiles))
         if not tiles:
             return {}
@@ -276,9 +284,12 @@ class SnapshotStore:
                                    .alias(f"n{t}") for t in tiles])
              .write.partitionBy("tile").parquet(stage))
             counts = obs.get
-            files = (self._staged_file_stats(df.sparkSession, stage, schema,
+            stats = (self._staged_file_stats(df.sparkSession, stage, schema,
                                              stats_cols)
                      if stats_cols else {})
+            files = {t: self._staged_files(os.path.join(stage, f"tile={t}"),
+                                           stats.get(t, []))
+                     for t in tiles}
             keep_from = keep_from or {}
             out = {}
             with self._table_mutex():
@@ -291,7 +302,7 @@ class SnapshotStore:
                              "count": int(counts[f"n{t}"]),
                              "path": os.path.join(f"tile={t}",
                                                   f"snap-{new_id:08d}"),
-                             "schema_id": schema_id}
+                             "schema_id": schema_id, "files": files[t]}
                     path = self._abs_path(entry)
                     # an uncommitted dir of a crashed write may hold the id
                     shutil.rmtree(path, ignore_errors=True)
@@ -301,8 +312,6 @@ class SnapshotStore:
                         os.rename(staged, path)
                     else:
                         os.makedirs(path)
-                    if stats_cols:
-                        entry["files"] = files.get(t, [])
                     if t in keep_from:
                         entries = self._expire_oldest(entries, sum(
                             e["id"] < keep_from[t] for e in entries))
@@ -336,6 +345,19 @@ class SnapshotStore:
                  "max": {c: _stat_json(r[f"__hi_{c}"]) for c in stats_cols}})
         return files
 
+    @staticmethod
+    def _staged_files(staged: str, stats: list[dict]) -> list[dict]:
+        """The data files of one staged tile dir as ``[{"name", "size"}]``,
+        each with its ``stats`` record (``_staged_file_stats``) merged in;
+        no files when the write staged no rows for the tile."""
+        if not os.path.isdir(staged):
+            return []
+        by_name = {f["name"]: f for f in stats}
+        return [{"name": n, "size": os.stat(os.path.join(staged, n)).st_size,
+                 **by_name.get(n, {})}
+                for n in sorted(os.listdir(staged))
+                if not n.startswith(("_", "."))]
+
     def current_snapshot_id(self, tile: int) -> int | None:
         """Latest committed snapshot (ORDER BY committed_at DESC LIMIT 1 — K:1297)."""
         entries = self._read_manifest(tile)
@@ -345,12 +367,31 @@ class SnapshotStore:
         return any(e["id"] == snapshot_id for e in self._read_manifest(tile))
 
     def _entry(self, tile: int, snapshot_id: int, manifest: dict) -> dict:
+        """The tile's manifest entry for ``snapshot_id``, once each file
+        it lists is on disk at its committed size."""
         for e in manifest["tiles"].get(str(tile), []):
             if e["id"] == snapshot_id:
+                self._check_files(tile, e)
                 return e
         raise ValueError(
             f"snapshot {snapshot_id} not found for {self.keyspace}.{self.table} tile {tile}"
         )
+
+    def _check_files(self, tile: int, entry: dict) -> None:
+        """Raise ``TornSnapshotError`` if a file the entry lists is
+        missing or not the size its commit recorded."""
+        for f in entry["files"]:
+            path = os.path.join(self._abs_path(entry), f["name"])
+            try:
+                size = os.stat(path).st_size
+            except FileNotFoundError:
+                size = None
+            if size != f["size"]:
+                found = "missing" if size is None else f"{size} bytes"
+                raise TornSnapshotError(
+                    f"{self.keyspace}.{self.table} tile {tile} snapshot "
+                    f"{entry['id']}: file {path} is {found}, committed "
+                    f"{f['size']} bytes")
 
     def read_snapshot(self, spark: SparkSession, tile: int, snapshot_id: int,
                       between: dict[str, tuple] | None = None) -> DataFrame:
@@ -370,7 +411,7 @@ class SnapshotStore:
         path = self._abs_path(e)
         reader = spark.read.schema(StructType.fromJson(
             manifest["schemas"][str(e["schema_id"])]))
-        if between and e.get("files"):
+        if between and any("min" in f for f in e["files"]):
             def _overlaps(f: dict) -> bool:
                 for c, (lo, hi) in between.items():
                     fmin, fmax = f["min"].get(c), f["max"].get(c)

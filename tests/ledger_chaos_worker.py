@@ -7,9 +7,6 @@ lands between (not just after) the steps: lock O_EXCL create -> reload
 consumption is journaled to an append-only fsync'd events file BEFORE
 mark_replication_complete, so the parent can detect double-consumes
 that the ledger's exactly-once gate should have prevented.
-
-This is the ledger-side companion of tests/dlog_torn_worker.py — same
-pattern, different state machine.
 """
 
 import argparse

@@ -274,6 +274,43 @@ def test_read_snapshots_of_only_empty_snapshots(spark, tmp_path, stats_cols):
     assert got.count() == 0
 
 
+@pytest.mark.parametrize("read", ["read_snapshot", "read_snapshots"])
+@pytest.mark.parametrize("damage", ["zero-length", "half-length", "deleted"])
+def test_torn_snapshot_file_raises_at_read(spark, tmp_path, damage, read):
+    """A data file of a committed snapshot that is cut short or gone
+    fails the read with an error naming the table, tile, snapshot id and
+    file. Spark alone skips a zero-length or deleted file, so the read
+    would return fewer keys without an error, and the loop would send
+    the lost keys to the sink as deletes. Other tiles still read."""
+    import os
+
+    from cql_replicator_spark.snapshot import TornSnapshotError
+
+    store = SnapshotStore(str(tmp_path), "ks", "tbl")
+    df = spark.range(1000).select(F.col("id").alias("pk"),
+                                  (F.col("id") % 4).cast("int").alias("tile"))
+    snaps = store.write_snapshots(df, [0, 1, 2, 3])
+    snap_dir = snaps[0].path
+    name = sorted(n for n in os.listdir(snap_dir)
+                  if not n.startswith(("_", ".")))[0]
+    victim = os.path.join(snap_dir, name)
+    if damage == "deleted":
+        os.remove(victim)
+    else:
+        size = os.path.getsize(victim)
+        os.truncate(victim, 0 if damage == "zero-length" else size // 2)
+
+    with pytest.raises(TornSnapshotError,
+                       match=rf"ks\.tbl tile 0 snapshot {snaps[0].id}: "
+                             rf"file .*{name}"):
+        if read == "read_snapshot":
+            store.read_snapshot(spark, 0, snaps[0].id).count()
+        else:
+            store.read_snapshots(
+                spark, {t: s.id for t, s in snaps.items()}).count()
+    assert store.read_snapshot(spark, 1, snaps[1].id).count() == 250
+
+
 def test_manifest_stores_each_schema_once(spark, tmp_path):
     """The table manifest keeps each distinct schema once, in its
     ``schemas`` map, and each entry's dir relative to the table dir: at

@@ -154,8 +154,7 @@ def test_fallback_lock_stale_break_single_winner(tmp_path, monkeypatch):
 
 
 def test_sigkill_chaos_ledger_invariants_hold(tmp_path):
-    """Randomized kill-at-a-random-moment chaos, the ledger-side
-    companion of the dlog suite (test_dlog.py): a discover->consume->
+    """Randomized kill-at-a-random-moment chaos: a discover->consume->
     mark worker whose lock/flush OS steps are time-stretched is
     SIGKILLed at a uniform random delay, 20 times, on the fallback
     (non-flock) lock path — the one that leaves a lock file behind on

@@ -1132,7 +1132,7 @@ def test_opensearch_doc_id_is_injective():
 # foreachPartition sinks run as RDD jobs with NO SQL execution, so the
 # PLANS.md action audit (tools/explain_audit.py) is blind to a frame
 # funneled to one partition before a sink write — exactly the shape the
-# r13 (staging writes) and r14 (snapshot/dlog writes) audits found one
+# r13 (staging writes) and r14 (snapshot writes) audits found one
 # layer below the gates' sight line. guard_sink_input closes the layer:
 # every RDD-action sink statically audits its input frame's plan.
 
