@@ -17,9 +17,10 @@ K:932-934 reads the hydrated row's absolute value; we keep its
 statement shape but fix the arithmetic, which is the point of keeping
 both generations of values in the snapshot store.)
 
-Scale: counter_deltas is the same single full-outer join as the core
-diff (one shuffle per side on the PK); statement emission is
-foreachPartition + FlushingBatch like every row-path sink.
+Scale: counter_deltas projects the full-outer PK join it shares with
+the core diff (``diff._tag_changes``: one shuffle per side on the PK);
+statement emission is foreachPartition + FlushingBatch like every
+row-path sink.
 """
 
 from __future__ import annotations
@@ -30,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import WriteConfig
+from .diff import _tag_changes
 from .planaudit import guard_sink_input
 from .sinks.batching import FlushingBatch
 from .sinks.cql_sink import counter_update_statement, delete_statement
@@ -46,8 +48,8 @@ def counter_deltas(
     Output: (op, pk..., {c}_delta per counter). insert -> full current
     value; update -> curr - prev (any counter differing, null-safe);
     delete -> nulls (the row is removed, not decremented). Unchanged
-    keys are filtered out. One full-outer join, same topology as
-    compute_changes_tagged.
+    keys are filtered out. The join and the change rule are
+    ``diff._tag_changes``'s.
 
     Null counters coalesce to 0 on the arithmetic side: a null counter
     in Cassandra means "never incremented" (reads as 0), so an insert
@@ -57,23 +59,6 @@ def counter_deltas(
     ``SET c = c + None``."""
     if not counter_cols:
         raise ValueError("counter_deltas: counter_cols must be non-empty")
-    c = curr.select(
-        *pk_cols,
-        *[F.col(x).alias(f"__c_{x}") for x in counter_cols],
-        F.lit(True).alias("__in_c"))
-    p = prev.select(
-        *pk_cols,
-        *[F.col(x).alias(f"__p_{x}") for x in counter_cols],
-        F.lit(True).alias("__in_p"))
-    j = c.join(p, pk_cols, "full_outer")
-    changed = None
-    for x in counter_cols:
-        ne = ~F.col(f"__c_{x}").eqNullSafe(F.col(f"__p_{x}"))
-        changed = ne if changed is None else (changed | ne)
-    op = (F.when(F.col("__in_p").isNull(), "insert")
-          .when(F.col("__in_c").isNull(), "delete")
-          .when(changed, "update"))
-    tagged = j.withColumn("op", op).filter(F.col("op").isNotNull())
     deltas = [
         (F.when(F.col("op") == "insert",
                 F.coalesce(F.col(f"__c_{x}"), F.lit(0)))
@@ -83,7 +68,8 @@ def counter_deltas(
          ).alias(f"{x}_delta")
         for x in counter_cols
     ]
-    return tagged.select("op", *pk_cols, *deltas)
+    return _tag_changes(curr, prev, pk_cols, counter_cols).select(
+        "op", *pk_cols, *deltas)
 
 
 def counter_statement(

@@ -14,19 +14,24 @@ must still count as a change when the other side is non-null. We use
 ``~eqNullSafe`` which is the same three-valued-logic-safe comparison.
 
 When the table has no writetime column the reference sets ts=lit(0)
-(K:1810-1813) so updates are structurally empty — pass has_ts=False for
-the same behavior without the fake column comparison.
+(K:1810-1813) so updates are structurally empty — pass
+``compute_changes(..., has_ts=False)`` for the same behavior without
+the fake column comparison.
 
-Scale note: all three outputs are plain equi-joins on the PK columns, so
-Catalyst plans them as shuffle-hash/sort-merge joins sharing one
-exchange per side when executed together; at 100 TB per-tile snapshots
-this is the one unavoidable shuffle, and tiling keeps each join to 1/N
-of the key space.
+Scale note: ``_tag_changes`` is the one full-outer PK join that the
+tagged diff, the CDC envelope, counter increments (counters.py) and
+IVM deltas (ivm.py) share, so each scans a snapshot once and shuffles
+it once; at 100 TB per-tile snapshots this is the one unavoidable
+shuffle, and tiling keeps each join to 1/N of the key space.
+``compute_changes`` keeps the reference's three-join form as the
+reference the tests compare against.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
+from operator import or_
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -60,39 +65,55 @@ class ChangeSet:
         )
 
 
+def _tag_changes(
+    curr: DataFrame,
+    prev: DataFrame,
+    pk_cols: list[str],
+    cols: list[str],
+) -> DataFrame:
+    """The change-set kernel every diff in the package projects: ONE
+    full-outer join on ``pk_cols`` and one null-safe change rule.
+
+    Each side keeps its PK, each of ``cols`` as ``__c_{x}`` (curr) or
+    ``__p_{x}`` (prev), and a side marker ``__in_c`` / ``__in_p``
+    (true when the key is on that side, null when not). ``op`` is
+    insert when the key is not in prev, delete when it is not in curr,
+    and update when any of ``cols`` differs by ``~eqNullSafe`` — the
+    reference's rule (K:1369-1381): a null on one side against a value
+    on the other is a change. Unchanged keys are dropped; with
+    ``cols=[]`` only inserts and deletes come out."""
+    c = curr.select(*pk_cols, *[F.col(x).alias(f"__c_{x}") for x in cols],
+                    F.lit(True).alias("__in_c"))
+    p = prev.select(*pk_cols, *[F.col(x).alias(f"__p_{x}") for x in cols],
+                    F.lit(True).alias("__in_p"))
+    op = (F.when(F.col("__in_p").isNull(), "insert")
+          .when(F.col("__in_c").isNull(), "delete"))
+    if cols:
+        op = op.when(reduce(or_, [
+            ~F.col(f"__c_{x}").eqNullSafe(F.col(f"__p_{x}")) for x in cols
+        ]), "update")
+    return (c.join(p, pk_cols, "full_outer")
+            .withColumn("op", op).filter(F.col("op").isNotNull()))
+
+
 def compute_changes_tagged(
     curr: DataFrame,
     prev: DataFrame,
     pk_cols: list[str],
     ts_col: str = "ts",
-    has_ts: bool = True,
-    op_col: str = "op",
 ) -> DataFrame:
-    """Single-pass diff: ONE full-outer join producing op-tagged rows.
+    """Single-pass diff: ``(op, pk..., ts)`` rows from one full-outer
+    join (``_tag_changes``).
 
     Semantically identical to compute_changes().tagged_union() but scans
     each snapshot once instead of three times — at 100 TB the anti-join
     formulation's 6 scans and 3 shuffles collapse to 2 scans and 1
-    shuffle per side. Unchanged rows (matched, ts equal) are filtered
-    out; deletes carry prev's ts, inserts/updates carry curr's.
+    shuffle per side. Deletes carry prev's ts, inserts/updates curr's.
     """
-    c_cols = [*pk_cols] + ([F.col(ts_col).alias("__curr_ts")] if has_ts else [])
-    p_cols = [*pk_cols] + ([F.col(ts_col).alias("__prev_ts")] if has_ts else [])
-    c = curr.select(*c_cols, F.lit(True).alias("__in_curr"))
-    p = prev.select(*p_cols, F.lit(True).alias("__in_prev"))
-    j = c.join(p, pk_cols, "full_outer")
-    op = F.when(F.col("__in_prev").isNull(), "insert").when(
-        F.col("__in_curr").isNull(), "delete")
-    if has_ts:
-        # same null-safe update rule as compute_changes (K:1369-1381)
-        op = op.when(~F.col("__curr_ts").eqNullSafe(F.col("__prev_ts")), "update")
-    tagged = j.withColumn(op_col, op).filter(F.col(op_col).isNotNull())
-    out_cols = [op_col, *pk_cols]
-    if has_ts:
-        ts_out = F.when(F.col(op_col) == "delete", F.col("__prev_ts")).otherwise(
-            F.col("__curr_ts")).alias(ts_col)
-        out_cols.append(ts_out)
-    return tagged.select(*out_cols)
+    ts = (F.when(F.col("op") == "delete", F.col(f"__p_{ts_col}"))
+          .otherwise(F.col(f"__c_{ts_col}")).alias(ts_col))
+    return _tag_changes(curr, prev, pk_cols, [ts_col]).select(
+        "op", *pk_cols, ts)
 
 
 def compute_changes_envelope(
@@ -100,29 +121,17 @@ def compute_changes_envelope(
     prev: DataFrame,
     pk_cols: list[str],
     ts_col: str = "ts",
-    op_col: str = "op",
 ) -> DataFrame:
     """CDC-feed envelope: op plus BEFORE and AFTER images of the change
     column — the Debezium/Delta-CDF shape downstream consumers need to
     apply, invert, or audit changes (inserts have a null before-image,
-    deletes a null after-image, updates both). Same single full-outer
-    join and null-safe update rule as compute_changes_tagged; the extra
-    columns are free since the join already sees both sides."""
-    c = curr.select(*pk_cols, F.col(ts_col).alias("__ca"),
-                    F.lit(True).alias("__in_c"))
-    p = prev.select(*pk_cols, F.col(ts_col).alias("__pb"),
-                    F.lit(True).alias("__in_p"))
-    j = c.join(p, pk_cols, "full_outer")
-    op = (F.when(F.col("__in_p").isNull(), "insert")
-          .when(F.col("__in_c").isNull(), "delete")
-          .when(~F.col("__ca").eqNullSafe(F.col("__pb")), "update"))
-    return (
-        j.withColumn(op_col, op)
-        .filter(F.col(op_col).isNotNull())
-        .select(op_col, *pk_cols,
-                F.col("__pb").alias(f"{ts_col}_before"),
-                F.col("__ca").alias(f"{ts_col}_after"))
-    )
+    deletes a null after-image, updates both). The join and update rule
+    are ``_tag_changes``'s; the images are free since the join already
+    sees both sides."""
+    return _tag_changes(curr, prev, pk_cols, [ts_col]).select(
+        "op", *pk_cols,
+        F.col(f"__p_{ts_col}").alias(f"{ts_col}_before"),
+        F.col(f"__c_{ts_col}").alias(f"{ts_col}_after"))
 
 
 def changeset_from_tagged(tagged: DataFrame,

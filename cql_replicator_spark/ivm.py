@@ -14,10 +14,10 @@ counter (``nn``/``d_nn``) is what makes the refresh SQL-exact for
 NULL values: sum over a group with zero non-null values reads NULL,
 exactly as a recompute would.
 
-Shape at scale: ``change_deltas`` is the SAME single full-outer join
-the tagged diff already does (diff.compute_changes_tagged) — one
-shuffle per snapshot side, unchanged keys dropped before any
-aggregation — and its output is bounded by the change count, then
+Shape at scale: ``change_deltas`` projects the full-outer PK join it
+shares with the tagged diff (``diff._tag_changes``) — one shuffle per
+snapshot side, unchanged keys dropped before any aggregation — and
+its output is bounded by the change count, then
 collapses to one row per TOUCHED group. ``refresh_aggregate`` joins
 |groups| state rows with |touched groups| delta rows; AQE broadcasts
 the delta side whenever the cycle was small. Nothing in the refresh
@@ -28,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .diff import _tag_changes
 
 
 def change_deltas(
@@ -44,27 +46,19 @@ def change_deltas(
     ``-old`` to the old group and ``+new`` to the new one — exactly
     what a recompute would observe. Inserts contribute ``(+v, +1)``,
     deletes ``(-v, -1)``, in-group updates ``(new-old, 0)``."""
-    c = curr.select(
-        *pk_cols,
-        *[F.col(g).alias(f"__cg_{g}") for g in group_cols],
-        F.col(val_col).alias("__cv"), F.lit(True).alias("__in_c"))
-    p = prev.select(
-        *pk_cols,
-        *[F.col(g).alias(f"__pg_{g}") for g in group_cols],
-        F.col(val_col).alias("__pv"), F.lit(True).alias("__in_p"))
-    j = c.join(p, pk_cols, "full_outer")
-    unchanged = (F.col("__in_c").isNotNull() & F.col("__in_p").isNotNull()
-                 & F.col("__cv").eqNullSafe(F.col("__pv")))
-    for g in group_cols:
-        unchanged = unchanged & F.col(f"__cg_{g}").eqNullSafe(F.col(f"__pg_{g}"))
-    ch = j.filter(~unchanged)
-
-    pos = ch.filter(F.col("__in_c").isNotNull()).select(
-        *[F.col(f"__cg_{g}").alias(g) for g in group_cols],
-        F.col("__cv").alias("__v"), F.lit(1).alias("__w"))
-    neg = ch.filter(F.col("__in_p").isNotNull()).select(
-        *[F.col(f"__pg_{g}").alias(g) for g in group_cols],
-        F.col("__pv").alias("__v"), F.lit(-1).alias("__w"))
+    # dict.fromkeys: a val_col that is also a group col is one image
+    ch = _tag_changes(curr, prev, pk_cols,
+                      list(dict.fromkeys([*group_cols, val_col])))
+    # +new from every key in curr, -old from every key in prev. Filter on
+    # the side markers, not on op: Catalyst reads a marker's IS NOT NULL
+    # as "that side is present" and plans each branch as a one-sided
+    # outer join (broadcast when small); an op string compare keeps both
+    # branches full-outer sort-merge joins.
+    pos, neg = (
+        ch.filter(F.col(f"__in_{s}").isNotNull()).select(
+            *[F.col(f"__{s}_{g}").alias(g) for g in group_cols],
+            F.col(f"__{s}_{val_col}").alias("__v"), F.lit(w).alias("__w"))
+        for s, w in (("c", 1), ("p", -1)))
     return _signed_deltas(pos.unionByName(neg), group_cols)
 
 
@@ -92,7 +86,6 @@ def deltas_from_envelope(
     group_cols: list[str],
     before_col: str,
     after_col: str,
-    op_col: str = "op",
     before_group_cols: list[str] | None = None,
 ) -> DataFrame:
     """Per-group ``(d_sum, d_count)`` from a CDC envelope stream
@@ -116,9 +109,9 @@ def deltas_from_envelope(
         raise ValueError(
             f"before_group_cols must match group_cols positionally "
             f"({len(bg)} vs {len(group_cols)})")
-    pos = env.filter(F.col(op_col) != "delete").select(
+    pos = env.filter(F.col("op") != "delete").select(
         *group_cols, F.col(after_col).alias("__v"), F.lit(1).alias("__w"))
-    neg = env.filter(F.col(op_col) != "insert").select(
+    neg = env.filter(F.col("op") != "insert").select(
         *[F.col(b).alias(g) for b, g in zip(bg, group_cols)],
         F.col(before_col).alias("__v"), F.lit(-1).alias("__w"))
     return _signed_deltas(pos.unionByName(neg), group_cols)

@@ -170,8 +170,6 @@ class Ledger:
     def __init__(self, path: str):
         self.path = path
         self._lock = threading.Lock()
-        self._rows: dict[tuple, dict] = {}
-        self._reload()
 
     def _read_rows(self) -> dict[tuple, dict]:
         """One complete on-disk snapshot — the file is only ever
@@ -187,29 +185,16 @@ class Ledger:
             pass
         return rows
 
-    def _reload(self) -> None:
-        """Refresh the SHARED in-memory rows from disk. Call ONLY while
-        holding self._lock: reader methods must use _read_rows() on a
-        local snapshot instead. An unlocked reader that reassigns
-        self._rows while a locked writer sits between its mutation and
-        its _flush() swaps in the pre-mutation disk state, and the
-        flush then serializes THAT — silently dropping the write. The
-        cdc_ledger_cycle stress caught exactly this: a tile's
-        replication mark vanished whenever another tile's thread ran
-        replication_plan()'s reload inside the mark's critical section
-        (threaded tile fan-out, the reference's normal topology)."""
-        self._rows = self._read_rows()
-
     @contextlib.contextmanager
     def _file_lock(self):
         with file_mutex(self.path + ".lock"):
             yield
 
-    def _flush(self) -> None:
+    def _flush(self, rows: dict[tuple, dict]) -> None:
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
         tmp = self.path + f".{os.getpid()}.tmp"
         with open(tmp, "w") as f:
-            json.dump(list(self._rows.values()), f, indent=1)
+            json.dump(list(rows.values()), f, indent=1)
         os.replace(tmp, self.path)
 
     @staticmethod
@@ -219,12 +204,7 @@ class Ledger:
         return LedgerRow(**r) if r else None
 
     def get(self, ks: str, tbl: str, tile: int, ver: str) -> LedgerRow | None:
-        # local snapshot, never self._rows: see _reload()
         return self._get_from(self._read_rows(), ks, tbl, tile, ver)
-
-    def _get_loaded(self, ks: str, tbl: str, tile: int,
-                    ver: str) -> LedgerRow | None:
-        return self._get_from(self._rows, ks, tbl, tile, ver)
 
     # -- discovery side ---------------------------------------------------
     def can_discover(self, ks: str, tbl: str, tile: int) -> bool:
@@ -237,9 +217,6 @@ class Ledger:
         if curr is None or curr.offload_status != SUCCESS:
             return True
         return curr.load_status == SUCCESS
-
-    def _can_discover_loaded(self, ks: str, tbl: str, tile: int) -> bool:
-        return self._can_discover_from(self._rows, ks, tbl, tile)
 
     def record_discovery(self, ks: str, tbl: str, tile: int, snapshot_id: int) -> None:
         """``record_discoveries`` for one tile; raises ``DiscoveryRaceLost``
@@ -260,21 +237,21 @@ class Ledger:
         as it is and returned, and the rest are recorded.
         """
         with self._lock, self._file_lock():
-            # re-read under the exclusive lock: the gate must see other
+            # read under the exclusive lock: the gate must see other
             # PROCESSES' state (a replicator's load_status, another
-            # discoverer's rotation), not this object's stale snapshot
-            self._reload()
+            # discoverer's rotation), and the flush must carry it
+            rows = self._read_rows()
             lost = {t for t in snapshot_ids
-                    if not self._can_discover_loaded(ks, tbl, t)}
+                    if not self._can_discover_from(rows, ks, tbl, t)}
             now = time.time()
             for tile, snapshot_id in snapshot_ids.items():
                 if tile in lost:
                     continue
-                curr = self._get_loaded(ks, tbl, tile, "curr")
+                curr = self._get_from(rows, ks, tbl, tile, "curr")
                 if curr is not None and curr.offload_status == SUCCESS:
                     prev = LedgerRow(**{**asdict(curr), "ver": "prev"})
-                    self._rows[(ks, tbl, tile, "prev")] = asdict(prev)
-                self._rows[(ks, tbl, tile, "curr")] = asdict(
+                    rows[(ks, tbl, tile, "prev")] = asdict(prev)
+                rows[(ks, tbl, tile, "curr")] = asdict(
                     LedgerRow(
                         ks=ks, tbl=tbl, tile=tile, ver="curr",
                         offload_status=SUCCESS, dt_offload=now,
@@ -283,7 +260,7 @@ class Ledger:
                     )
                 )
             if len(lost) < len(snapshot_ids):
-                self._flush()
+                self._flush(rows)
             return lost
 
     # -- replication side --------------------------------------------------
@@ -294,7 +271,7 @@ class Ledger:
         or {"mode": "delta", "curr": id, "prev": id} — the three-way
         dispatch of dataReplicationProcess (K:1564-1681).
         """
-        rows = self._read_rows()  # local snapshot, never self._rows
+        rows = self._read_rows()
         curr = self._get_from(rows, ks, tbl, tile, "curr")
         if curr is None or curr.offload_status != SUCCESS or curr.load_status == SUCCESS:
             return None
@@ -313,19 +290,18 @@ class Ledger:
         ``tiles``, in one flush. Every tile must have a curr row; if one
         has none, nothing is marked."""
         with self._lock, self._file_lock():
-            self._reload()  # merge other processes' rows, not clobber them
+            rows = self._read_rows()  # merge other processes' rows
             keys = [(ks, tbl, t, "curr") for t in tiles]
             for key in keys:
-                if key not in self._rows:
+                if key not in rows:
                     raise RuntimeError(
                         f"tile {key[2]}: no curr ledger row to complete")
             now = time.time()
             for key in keys:
-                self._rows[key]["load_status"] = SUCCESS
-                self._rows[key]["dt_load"] = now
+                rows[key]["load_status"] = SUCCESS
+                rows[key]["dt_load"] = now
             if keys:
-                self._flush()
+                self._flush(rows)
 
     def rows(self) -> list[LedgerRow]:
-        # local snapshot, never self._rows: see _reload()
         return [LedgerRow(**r) for r in self._read_rows().values()]

@@ -827,25 +827,59 @@ from hypothesis import strategies as st
     prev_keys=st.sets(st.integers(0, 120), max_size=60),
     curr_keys=st.sets(st.integers(0, 120), max_size=60),
     changed=st.sets(st.integers(0, 120), max_size=30),
+    null_prev=st.sets(st.integers(0, 120), max_size=20),
+    null_curr=st.sets(st.integers(0, 120), max_size=20),
 )
-def test_diff_property_random_mutations(spark, prev_keys, curr_keys, changed):
-    """SURVEY §5 property test: for ANY pair of key sets and any changed
-    subset, the snapshot diff equals the set-arithmetic ground truth."""
-    from cql_replicator_spark.diff import compute_changes_tagged
+def test_diff_property_random_mutations(spark, prev_keys, curr_keys, changed,
+                                        null_prev, null_curr):
+    """SURVEY §5 property test: for ANY pair of key sets, any changed
+    subset and null ts on either side, the single-join diff equals the
+    set-arithmetic ground truth and the three-join reference
+    (compute_changes), and the envelope and counter increments tag the
+    same keys with the same ops."""
+    from cql_replicator_spark.counters import counter_deltas
+    from cql_replicator_spark.diff import (
+        compute_changes_envelope, compute_changes_tagged,
+    )
 
+    prev_ts = {k: None if k in null_prev else 100 for k in prev_keys}
+    curr_ts = {k: None if k in null_curr else 101 if k in changed else 100
+               for k in curr_keys}
     prev = spark.createDataFrame(
-        [(k, 100) for k in prev_keys] or [(None, None)], "pk INT, ts INT"
+        list(prev_ts.items()) or [(None, None)], "pk INT, ts INT"
     ).filter("pk IS NOT NULL")
     curr = spark.createDataFrame(
-        [(k, 101 if k in changed else 100) for k in curr_keys] or [(None, None)],
-        "pk INT, ts INT").filter("pk IS NOT NULL")
+        list(curr_ts.items()) or [(None, None)], "pk INT, ts INT"
+    ).filter("pk IS NOT NULL")
 
-    got = {(r.op, r.pk) for r in
-           compute_changes_tagged(curr, prev, ["pk"]).collect()}
-    want = ({("insert", k) for k in curr_keys - prev_keys}
-            | {("delete", k) for k in prev_keys - curr_keys}
-            | {("update", k) for k in (curr_keys & prev_keys) & changed})
-    assert got == want
+    # the four diffs as one union so an example costs one Spark job
+    null_ts = F.lit(None).cast("int").alias("ts")
+    diffs = {
+        "tagged": compute_changes_tagged(curr, prev, ["pk"]),
+        "reference": compute_changes(curr, prev, ["pk"]).tagged_union(),
+        "envelope": compute_changes_envelope(curr, prev, ["pk"]).select(
+            "op", "pk", null_ts),
+        "counter": counter_deltas(curr, prev, ["pk"], ["ts"]).select(
+            "op", "pk", null_ts),
+    }
+    got = {name: set() for name in diffs}
+    union = None
+    for name, df in diffs.items():
+        df = df.select(F.lit(name).alias("diff"), "op", "pk", "ts")
+        union = df if union is None else union.unionByName(df)
+    for r in union.collect():
+        got[r.diff].add((r.op, r.pk, r.ts))
+
+    # null-safe: None vs a value is a change, None vs None is not
+    want = ({("insert", k, curr_ts[k]) for k in curr_keys - prev_keys}
+            | {("delete", k, prev_ts[k]) for k in prev_keys - curr_keys}
+            | {("update", k, curr_ts[k]) for k in curr_keys & prev_keys
+               if curr_ts[k] != prev_ts[k]})
+    assert got["tagged"] == want
+    assert got["reference"] == want
+    ops = {(op, pk, None) for op, pk, _ in want}
+    assert got["envelope"] == ops
+    assert got["counter"] == ops
 
 
 # -- temporal ------------------------------------------------------------------

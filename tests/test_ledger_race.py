@@ -283,31 +283,12 @@ def test_sigkill_chaos_ledger_invariants_hold(tmp_path):
     assert outcomes["killed_midway"] >= 1, outcomes
 
 
-def test_reader_methods_never_reassign_shared_rows(tmp_path):
-    """The r10 lost-mark race, pinned mechanically: unlocked reader
-    methods (get / can_discover / replication_plan / rows) must read a
-    LOCAL disk snapshot, never reassign self._rows — a reader reload
-    landing between a locked writer's mutation and its _flush() swaps
-    in the pre-mutation state and the flush serializes that, silently
-    dropping the write (a replication mark vanished under the
-    cdc_ledger_cycle thread fan-out)."""
-    led = Ledger(str(tmp_path / "ledger.json"))
-    led.record_discovery("ks", "tb", 0, snapshot_id=1)
-    shared = led._rows
-    led.get("ks", "tb", 0, "curr")
-    led.can_discover("ks", "tb", 0)
-    led.replication_plan("ks", "tb", 0)
-    led.rows()
-    assert led._rows is shared, \
-        "a reader method reassigned the shared row dict"
-
-
 def test_threaded_marks_survive_concurrent_plan_reads(tmp_path):
-    """Thread-fan-out version of the same race: writer threads mark
+    """The lost-mark race under thread fan-out: writer threads mark
     tiles complete while reader threads hammer replication_plan and
     can_discover on OTHER tiles. Every mark must survive to the file —
-    before the local-snapshot fix this dropped marks within a few
-    iterations under load."""
+    when readers refreshed a row dict the writers shared, this dropped
+    marks within a few iterations under load."""
     import threading
 
     for trial in range(30):
