@@ -67,13 +67,6 @@ def exact_dedup_groups(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Keep one row per distinct content (the min-id keeper)."""
-    keep = exact_dedup_groups(df, id_col, text_col).select(
-        F.col("keeper_id").alias(id_col))
-    return df.join(keep, id_col, "left_semi")
-
-
 # -- shingling ----------------------------------------------------------------
 
 def gram_array(n: int) -> Column:

@@ -3904,49 +3904,6 @@ def parse_ima_adpcm_samples(data: bytes) -> dict | None:
             "sum_sq": sum_sq, "peak": peak}
 
 
-def encode_ima_adpcm_wav_stereo(left: list[int], right: list[int],
-                                sample_rate: int = 8000,
-                                block_samples: int = 505) -> bytes:
-    """Stereo IMA ADPCM WAV writer, registered multichannel layout:
-    per block, one 4-byte state header per channel then the coded
-    nibbles interleaved in 4-byte groups (8 samples left, 8 samples
-    right, ...). block_samples counts per-channel samples including
-    the header sample; the coded count (block_samples - 1) must be a
-    multiple of 8 so groups tile exactly, and the channels must be
-    equal length in whole blocks."""
-    import struct
-
-    if (block_samples - 1) % 8:
-        raise ValueError("block_samples - 1 must be a multiple of 8")
-    if len(left) != len(right) or len(left) % block_samples:
-        raise ValueError("channels must be equal whole-block lengths")
-    idx = [0, 0]
-    body = bytearray()
-    for off in range(0, len(left), block_samples):
-        chans = (left[off:off + block_samples],
-                 right[off:off + block_samples])
-        groups: list[list[int]] = [[], []]
-        for c, chunk in enumerate(chans):
-            pred = max(-32768, min(32767, int(chunk[0])))
-            body += struct.pack("<hBB", pred, idx[c], 0)
-            for sample in chunk[1:]:
-                n, pred, idx[c] = _ima_encode_sample(
-                    int(sample), pred, idx[c])
-                groups[c].append(n)
-        for g in range(0, block_samples - 1, 8):
-            for c in range(2):
-                eight = groups[c][g:g + 8]
-                for a, b in zip(eight[0::2], eight[1::2]):
-                    body += bytes([(b << 4) | a])
-    block_align = 8 + (block_samples - 1)
-    byte_rate = sample_rate * block_align // block_samples
-    return (b"RIFF" + struct.pack("<I", 40 + len(body)) + b"WAVE"
-            + b"fmt \x14\x00\x00\x00"
-            + struct.pack("<HHIIHHHH", 0x11, 2, sample_rate, byte_rate,
-                          block_align, 4, 2, block_samples)
-            + b"data" + struct.pack("<I", len(body)) + bytes(body))
-
-
 # -- FLAC (lossless compressed audio) ------------------------------------------
 #
 # The format large speech corpora actually ship (LibriSpeech & co), and

@@ -120,13 +120,3 @@ def write_bucketed_table(
         shutil.rmtree(target)
     writer.saveAsTable(name)
 
-
-def assert_no_exchange(df: DataFrame) -> None:
-    """Raise if the physical plan contains a shuffle — the bucketed-join
-    contract check (used by tests and available for pipeline
-    assertions)."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    if "Exchange" in plan:
-        raise AssertionError(
-            "plan contains an Exchange; bucketed co-location was not used:\n"
-            + plan)

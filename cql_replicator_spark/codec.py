@@ -52,7 +52,7 @@ def compress(data: bytes, codec: str | None = None, tag: bool = True) -> bytes:
 
 
 # Declared-length ceiling for decompress: column payloads are bounded
-# well below this (the large-object offload path diverts big blobs), so
+# well below this (the reference offloads big blobs to an object store), so
 # anything larger is a corrupt or forged prefix. Without the cap, a
 # 4-byte prefix is attacker-controlled up to 4 GiB and BOTH codec paths
 # allocate it before any validation — the decompression-bomb class the

@@ -10,6 +10,9 @@ PrimaryKeyReconciliation R:127-279, which is the strictest of the four:
     silently clobbered)
   * effective primary key = declared PK with transformed columns
     renamed to their alias (R:265-277)
+  * every key must name a field this engine reads: an unknown key at
+    any level is an error naming its dotted path (``replication.x``),
+    never a silently ignored setting
 
 The config drives DataFrame pipeline construction; there is no other
 "query language" in the reference.
@@ -20,7 +23,7 @@ from __future__ import annotations
 import base64
 import json
 import math
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 
 # Rule whitelist (R:51-74). The reference's DataFrame-side dispatcher
 # uses Spark builtins; we standardize on them too ('murmur' = Spark
@@ -48,31 +51,11 @@ class Transformation:
 class Replication:
     allColumns: bool = True
     columns: list[str] = field(default_factory=list)
-    useCustomSerializer: bool = False
     useMaterializedView: str | None = None
     pointInTime: PointInTime = field(default_factory=PointInTime)
     filterExpression: str | None = None  # arbitrary Spark-SQL expr (K:1849-1853)
     writetimeColumns: list[str] = field(default_factory=list)  # -> greatest(writetime(..)) K:381-384
-    ttlColumn: str | None = None
     transformations: list[Transformation] = field(default_factory=list)
-
-
-@dataclass
-class Compression:
-    enabled: bool = False
-    compressNonPrimaryColumns: list[str] = field(default_factory=list)
-    compressAllNonPrimaryColumns: bool = False
-    targetNameColumn: str = "compressedPayload"
-
-
-@dataclass
-class LargeObjects:
-    enabled: bool = False
-    column: str | None = None
-    bucket: str | None = None
-    prefix: str = "largeobjects"
-    enableRefByTimeUUID: bool = False  # else key=<pk1:pk2..>/payload path (K:682-725)
-    compressionEnabled: bool = False
 
 
 @dataclass
@@ -91,7 +74,8 @@ class ReadConfig:
 
 @dataclass
 class WriteConfig:
-    # Batched-write limits (K:74, D:84)
+    # Batched-write limits of the row-path sinks (K:74, D:84). Not a
+    # JSON_MAPPING key: the CLI's bulk parquet target batches by file.
     maxStatementsPerBatch: int = 29
     maxBatchBytes: int = 1024 * 1024
     maxRetries: int = 64
@@ -103,10 +87,7 @@ class WriteConfig:
 @dataclass
 class JsonMapping:
     replication: Replication = field(default_factory=Replication)
-    compression: Compression = field(default_factory=Compression)
-    largeObjects: LargeObjects = field(default_factory=LargeObjects)
     read: ReadConfig = field(default_factory=ReadConfig)
-    write: WriteConfig = field(default_factory=WriteConfig)
     udtConversion: bool = False
 
 
@@ -114,11 +95,41 @@ class ConfigError(ValueError):
     pass
 
 
+def _known_keys(raw, cls, path: str) -> dict:
+    """``raw`` once it is an object whose every key names a field of
+    ``cls``; otherwise a ``ConfigError`` naming the dotted path, so a
+    misspelled or unsupported key fails loudly instead of reading as
+    its default."""
+    if not isinstance(raw, dict):
+        raise ConfigError(f"{path or 'JSON_MAPPING'}: expected an object, "
+                          f"got {type(raw).__name__}")
+    names = {f.name for f in fields(cls)}
+    for key in raw:
+        if key not in names:
+            raise ConfigError(f"unknown config key {path + '.' if path else ''}"
+                              f"{key}; {cls.__name__} takes {sorted(names)}")
+    return raw
+
+
+def _build(cls, raw, path: str):
+    """``cls(**raw)`` with its keys checked by ``_known_keys``; a missing
+    required field is a ``ConfigError`` too."""
+    try:
+        return cls(**_known_keys(raw, cls, path))
+    except TypeError as exc:
+        raise ConfigError(f"{path}: {exc}") from None
+
+
 def resolve(raw: dict) -> JsonMapping:
-    """Parse + validate a JSON_MAPPING dict (resolver semantics R:127-279)."""
-    rep_raw = dict(raw.get("replication", {}))
-    pit = PointInTime(**rep_raw.pop("pointInTime", {}))
-    transforms = [Transformation(**t) for t in rep_raw.pop("transformations", [])]
+    """Parse + validate a JSON_MAPPING dict (resolver semantics R:127-279).
+    Every level takes only its dataclass's fields."""
+    raw = _known_keys(raw, JsonMapping, "")
+    rep_raw = dict(_known_keys(raw.get("replication", {}), Replication,
+                               "replication"))
+    pit = _build(PointInTime, rep_raw.pop("pointInTime", {}),
+                 "replication.pointInTime")
+    transforms = [_build(Transformation, t, f"replication.transformations.{i}")
+                  for i, t in enumerate(rep_raw.pop("transformations", []))]
 
     seen_targets: set[str] = set()
     for t in transforms:
@@ -141,10 +152,7 @@ def resolve(raw: dict) -> JsonMapping:
 
     return JsonMapping(
         replication=rep,
-        compression=Compression(**raw.get("compression", {})),
-        largeObjects=LargeObjects(**raw.get("largeObjects", {})),
-        read=ReadConfig(**raw.get("read", {})),
-        write=WriteConfig(**raw.get("write", {})),
+        read=_build(ReadConfig, raw.get("read", {}), "read"),
         udtConversion=raw.get("udtConversion", False),
     )
 
@@ -161,19 +169,6 @@ def effective_pk(pk_cols: list[str], transforms: list[Transformation]) -> list[s
 
 
 # -- sizing calculus ----------------------------------------------------
-
-def default_partitions(
-    default_parallelism: int,
-    executor_cores: int,
-    executor_instances: int,
-    total_tiles: int,
-) -> int:
-    """The reference's defaultPartitions formula (K:562-565):
-    max(spark.default.parallelism, cores × instances × totalTiles) —
-    enough partitions that every core has work on every tile without
-    dropping below the cluster's configured parallelism."""
-    return max(default_parallelism, executor_cores * executor_instances * total_tiles)
-
 
 def calculate_workers(
     wcu_traffic: int,

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .config import WriteConfig
@@ -131,44 +131,3 @@ def write_counter_deltas(
     guard_sink_input(deltas, "write_counter_deltas")
     deltas.foreachPartition(process_partition)
 
-
-def replicate_counter_tile(
-    spark: SparkSession,
-    store,
-    ledger,
-    keyspace: str,
-    table: str,
-    tile: int,
-    pk_cols: list[str],
-    pk_types: dict[str, str],
-    counter_cols: list[str],
-    target: str,
-    executor_factory: Callable[[], Callable[[list[str]], None]],
-    write_cfg: WriteConfig | None = None,
-) -> dict | None:
-    """One tile's counter replication cycle, ledger-gated like
-    CdcPipeline.replicate_tile: historical load emits full-value
-    updates for every key; a delta cycle emits increments/deletes
-    between the two snapshot generations. The tile's consumed snapshots
-    expire at its next discovery commit (``CdcPipeline.discover``)."""
-    plan = ledger.replication_plan(keyspace, table, tile)
-    if plan is None:
-        return None
-    curr = store.read_snapshot(spark, tile, plan["curr"])
-    if plan["mode"] == "historical":
-        prev = curr.filter(F.lit(False))
-    else:
-        prev = store.read_snapshot(spark, tile, plan["prev"])
-    deltas = counter_deltas(curr, prev, pk_cols, counter_cols).persist()
-    try:
-        counts = {r["op"]: r["count"]
-                  for r in deltas.groupBy("op").count().collect()}
-        write_counter_deltas(deltas, target, pk_cols, pk_types,
-                             counter_cols, executor_factory, write_cfg)
-    finally:
-        deltas.unpersist()
-    ledger.mark_replication_complete(keyspace, table, tile)
-    return {"tile": tile,
-            "inserts": counts.get("insert", 0),
-            "updates": counts.get("update", 0),
-            "deletes": counts.get("delete", 0)}

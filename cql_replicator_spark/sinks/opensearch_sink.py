@@ -33,8 +33,8 @@ ID_SEPARATOR = ":"
 def doc_id(row: dict, pk_cols: list[str]) -> str:
     """Composite document _id from the primary-key columns.
 
-    Parts are percent-encoded (same deliberate deviation as the
-    tiling/large-object/DynamoDB key fixes): a raw join collides
+    Parts are percent-encoded (a deliberate deviation from the
+    reference): a raw join collides
     distinct key tuples — ('a:b','c') and ('a','b:c') share one _id,
     so the second index overwrites the first document and a delete for
     either kills both. Plain ids stay byte-identical to the reference
@@ -48,10 +48,7 @@ def doc_id(row: dict, pk_cols: list[str]) -> str:
     documents written under the old ids. Fine for a pre-release
     framework; an upgraded deployment must reindex (full re-replication
     of affected tables) or run a one-off migration that re-keys
-    documents whose _id decodes differently under percent-encoding.
-    The same note applies to the DynamoDB composite key and the
-    large-object offload key, which switched schemes in the same
-    round."""
+    documents whose _id decodes differently under percent-encoding."""
     from urllib.parse import quote
 
     return ID_SEPARATOR.join(quote(str(row[c]), safe="") for c in pk_cols)
@@ -72,8 +69,8 @@ class OpenSearchBulkWriter:
 
     ``transport`` is `(ndjson_payload: str) -> dict` returning the
     parsed _bulk response; items the service flags as errored are
-    retried as a sub-batch, mirroring the DynamoDB unprocessed-item
-    loop (D:424-441).
+    retried as a sub-batch, mirroring the reference's DynamoDB
+    unprocessed-item loop (D:424-441).
     """
 
     def __init__(self, transport: Callable[[str], dict], index: str,

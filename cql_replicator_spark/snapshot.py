@@ -363,9 +363,6 @@ class SnapshotStore:
         entries = self._read_manifest(tile)
         return entries[-1]["id"] if entries else None
 
-    def snapshot_exists(self, tile: int, snapshot_id: int) -> bool:
-        return any(e["id"] == snapshot_id for e in self._read_manifest(tile))
-
     def _entry(self, tile: int, snapshot_id: int, manifest: dict) -> dict:
         """The tile's manifest entry for ``snapshot_id``, once each file
         it lists is on disk at its committed size."""
@@ -469,12 +466,6 @@ class SnapshotStore:
             [self.read_snapshot(spark, t, sid).withColumn("tile", F.lit(t))
              for t, sid in sorted(snapshot_ids.items())])
 
-    def read_current(self, spark: SparkSession, tile: int) -> DataFrame:
-        sid = self.current_snapshot_id(tile)
-        if sid is None:
-            raise ValueError(f"no snapshots for tile {tile}")
-        return self.read_snapshot(spark, tile, sid)
-
     def expire_snapshots(self, tiles: int | Iterable[int],
                          retain_last: int = 2) -> int:
         """Drop all but the newest ``retain_last`` (at least 1)
@@ -514,70 +505,3 @@ class SnapshotStore:
     def snapshots(self, tile: int) -> list[SnapshotInfo]:
         return self.all_snapshots().get(tile, [])
 
-
-def migrate_legacy_snapshots(
-    spark: SparkSession,
-    store: SnapshotStore,
-    ledger,
-    keyspace: str,
-    table: str,
-    legacy_root: str,
-    tiles: list[int],
-    pk_cols: list[str],
-    total_tiles: int | None = None,
-    cleanup: bool = True,
-) -> dict[int, tuple[int, int]]:
-    """Migrate legacy per-tile head/tail parquet dirs into the snapshot
-    store + ledger (the K:1481-1560 parquet->Iceberg migration).
-
-    Legacy layout: ``{legacy_root}/tile={n}/tail`` (older key set) and
-    ``.../head`` (newer). The legacy tiles were assigned by the
-    *reference's* tile hash (abs(xxhash64(concat))%N), which this engine
-    deliberately does not reproduce (tiling.py uses native multi-arg
-    xxhash64). Importing each legacy tile verbatim would therefore make
-    the first post-migration discovery re-tile ~(1-1/N) of all keys,
-    emitting a spurious delete+insert per moved key — so migration
-    RE-TILES: union every legacy tile's tail set, assign tiles with this
-    engine's tile_expr, and write each new tile's snapshot from that
-    (then the same for head). Both generations go through the ledger's
-    normal discovery/consume rotation, one ``record_discoveries`` and one
-    ``mark_replications_complete`` for every tile of a generation (a
-    tile that comes back lost raises ``DiscoveryRaceLost``), so the
-    resumed pipeline's next discovery diffs against head with a stable
-    tiling — the already-replicated head/tail delta is NOT replayed and
-    no re-tiling churn is emitted. Returns
-    {new_tile: (tail_snapshot_id, head_snapshot_id)}.
-    """
-    from .ledger import DiscoveryRaceLost
-    from .tiling import assign_tiles
-
-    present = [
-        t for t in tiles
-        if os.path.isdir(os.path.join(legacy_root, f"tile={t}", "head"))
-        and os.path.isdir(os.path.join(legacy_root, f"tile={t}", "tail"))
-    ]
-    if not present:
-        return {}
-    num_tiles = total_tiles or len(tiles)
-    migrated: dict[int, list[int]] = {t: [] for t in range(num_tiles)}
-    for phase in ("tail", "head"):
-        union = None
-        for tile in present:
-            df = spark.read.parquet(os.path.join(legacy_root, f"tile={tile}", phase))
-            union = df if union is None else union.unionByName(df)
-        snaps = store.write_snapshots(assign_tiles(union, pk_cols, num_tiles),
-                                      list(range(num_tiles)))
-        lost = ledger.record_discoveries(
-            keyspace, table, {t: s.id for t, s in snaps.items()})
-        if lost:
-            raise DiscoveryRaceLost(
-                f"tiles {sorted(lost)}: unconsumed snapshot present; "
-                "migration must not rotate")
-        ledger.mark_replications_complete(keyspace, table, list(snaps))
-        for new_tile, snap in snaps.items():
-            migrated[new_tile].append(snap.id)
-    if cleanup:
-        for tile in present:
-            shutil.rmtree(os.path.join(legacy_root, f"tile={tile}"),
-                          ignore_errors=True)
-    return {t: (ids[0], ids[1]) for t, ids in migrated.items()}

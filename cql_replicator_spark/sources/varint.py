@@ -12,44 +12,18 @@ K:1110-1120 == ``types.render_cql_value``).
 
 Spark-first translation: no RDD needed — the engine consumes any
 DataFrame, so the adapter contract is just "varint columns arrive as
-strings". This module provides the two halves that ARE engine work:
-the schema builder the reader would use, and the overflow-safe frame
-shaping (string column + DECIMAL(38,0) ``try_cast`` companion that
-nulls exactly where the non-custom path would have lost data). All
+strings" (the reader's schema, K:1896-1933, is the source connector's).
+This module provides the half that IS engine work: the overflow-safe
+frame shaping (string column + DECIMAL(38,0) ``try_cast`` companion
+that nulls exactly where the non-custom path would have lost data). All
 column expressions — tiling, diffing, rendering — work on the string
 form, so >38-digit keys replicate losslessly.
 """
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from ..types import cql_to_spark_type
-
-_WRITETIME_RE = re.compile(r"writetime\(([^)]+)\)\s+as\s+(.+)")
-
-
-def varint_read_schema(
-    filter_columns: list[str],
-    column_meta: dict[str, str],
-) -> T.StructType:
-    """The custom reader's Spark schema (K:1896-1933): varint -> STRING,
-    ``writetime(c) as alias`` -> LONG under the alias, everything else
-    through the overflow-safe type map."""
-    fields = []
-    for col in filter_columns:
-        m = _WRITETIME_RE.match(col)
-        if m:
-            fields.append(T.StructField(m.group(2).strip(), T.LongType(), True))
-            continue
-        cql_t = column_meta.get(col, "text")
-        fields.append(T.StructField(
-            col, cql_to_spark_type(cql_t, custom_varint_reader=True), True))
-    return T.StructType(fields)
 
 
 def overflow_safe_varints(df: DataFrame, varint_cols: list[str]) -> DataFrame:

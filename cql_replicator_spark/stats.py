@@ -1,74 +1,20 @@
-"""Sampler column statistics + row-size model.
+"""Row-size model.
 
-Reimplements the reference's sizing sampler (SURVEY §2.5):
-  * getColumnStats (CQLReplicator.scala K:1719-1748): per column,
-    type-dispatched min/avg/max — numeric/bool over the value,
-    string/binary over length(col), timestamp -> constant 8,
-    date -> constant 4; all in ONE wide aggregate row.
+Reimplements the reference's sizing arithmetic (SURVEY §2.5):
   * addTotalColumns (K:1684-1717): row_{min,avg,max}_total = sum of the
-    per-column stats, null-coalesced to 0.
-  * sampler scan shape limit(100000).sample(0.2) (K:1750-1751).
-
-One pass, one aggregate — Catalyst fuses all the min/avg/max into a
-single partial+final HashAggregate, so this costs one scan regardless
-of column count.
+    per-column min/avg/max stats, null-coalesced to 0. The per-column
+    stats row (getColumnStats K:1719-1748) is the ``column_stats_orders``
+    lane's shape; ``row_size_totals`` builds one and totals it here.
+  * estimateAndCoalesce (P:698-732): a partition count from the average
+    row size and the row count.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-SAMPLE_LIMIT = 100_000
-SAMPLE_FRACTION = 0.2
-
-_NUMERIC = (
-    T.IntegerType, T.LongType, T.ShortType, T.ByteType,
-    T.FloatType, T.DoubleType, T.DecimalType,
-)
-
-
-def _stat_cols(field: T.StructField) -> list[Column]:
-    c, name = F.col(field.name), field.name
-    dt = field.dataType
-    if isinstance(dt, _NUMERIC):
-        base = c.cast("double")
-    elif isinstance(dt, T.BooleanType):
-        base = c.cast("int").cast("double")
-    elif isinstance(dt, (T.StringType, T.BinaryType)):
-        base = F.length(c).cast("double")
-    elif isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        # fixed 8-byte wire size (K:1740)
-        return [F.lit(8.0).alias(f"{name}_{s}") for s in ("min", "avg", "max")]
-    elif isinstance(dt, T.DateType):
-        # fixed 4-byte wire size (K:1742)
-        return [F.lit(4.0).alias(f"{name}_{s}") for s in ("min", "avg", "max")]
-    else:
-        base = F.length(c.cast("string")).cast("double")
-    return [
-        F.min(base).alias(f"{name}_min"),
-        F.avg(base).alias(f"{name}_avg"),
-        F.max(base).alias(f"{name}_max"),
-    ]
-
-
-def column_stats(
-    df: DataFrame,
-    sample: bool = False,
-    limit: int = SAMPLE_LIMIT,
-    fraction: float = SAMPLE_FRACTION,
-    seed: int = 42,
-) -> DataFrame:
-    """One wide row of per-column min/avg/max (K:1719-1748)."""
-    if sample:
-        df = df.limit(limit).sample(fraction, seed=seed)
-    exprs: list[Column] = []
-    for f in df.schema.fields:
-        exprs.extend(_stat_cols(f))
-    return df.agg(*exprs)
 
 
 def add_total_columns(stats: DataFrame) -> DataFrame:

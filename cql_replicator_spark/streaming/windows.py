@@ -20,32 +20,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def windowed_event_counts(
-    events: DataFrame,
-    window_duration: str = "1 day",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    watermark: str | None = "1 hour",
-) -> DataFrame:
-    """Tumbling-window count+sum per key. Works on both a streaming and
-    a batch DataFrame; the watermark is applied only when streaming
-    (bounds state: late rows beyond it are dropped, enabling append
-    output and state eviction at scale)."""
-    # watermarks require TIMESTAMP (not NTZ); session tz is pinned UTC so
-    # the cast is deterministic
-    df = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    if watermark and df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
-    return (
-        df.groupBy(F.window(F.col(ts_col), window_duration).alias("w"), F.col(key_col))
-        .agg(F.count("*").alias("n_events"),
-             # try_cast: one poison value must NULL out, not kill the
-             # stream (the r9 ANSI discipline)
-             F.sum(F.col("value").try_cast("decimal(18,4)")).cast("double").alias("total_value"))
-        .select(F.col("w.start").alias("wstart"), key_col, "n_events", "total_value")
-    )
-
-
 def stream_events_from_dir(
     spark: SparkSession,
     path: str,

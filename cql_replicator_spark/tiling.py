@@ -236,25 +236,6 @@ def xxhash64_long_ref(value: int, seed: int = 42) -> int:
     return u - (1 << 64) if u >= (1 << 63) else u
 
 
-def xxhash64_cols_ref(values: list, seed: int = 42) -> int:
-    """Spark's MULTI-ARG ``F.xxhash64(c1, c2, ...)`` — the composite-PK
-    tiling path of ``tile_expr`` — independently: each argument's hash
-    seeds the next (ints as 8 LE bytes, strings/bytes as their UTF-8/
-    raw bytes), final result reinterpreted signed (test oracle,
-    engine-verified in tests/test_core.py)."""
-    M = (1 << 64) - 1
-    h = seed
-    for v in values:
-        if isinstance(v, int):
-            data = (v & M).to_bytes(8, "little")
-        elif isinstance(v, str):
-            data = v.encode("utf-8")
-        else:
-            data = bytes(v)
-        h = xxh64_ref(data, h)
-    return h - (1 << 64) if h >= (1 << 63) else h
-
-
 def hilbert_xy2d_ref(x: int, y: int, bits: int = 8) -> int:
     """Pure-Python reference of the same xy2d descent (test oracle)."""
     n = 1 << int(bits)

@@ -1,16 +1,14 @@
-"""Type system — the CQL<->Spark<->literal dispatch tables.
+"""Type system — the value -> CQL literal dispatch tables.
 
-Three mapping surfaces the reference implements that any rebuild must
-reproduce (SURVEY §1.3):
+Two of the mapping surfaces the reference implements (SURVEY §1.3; the
+third, CQL -> Spark SQL type, K:1225-1241, is the source connector's
+job, since this engine takes DataFrames with their own schema):
 
-1. CQL -> Spark SQL type (cassandraTypeToSparkSql — CQLReplicator.scala
-   K:1225-1241, identical P:867-883, D:1145-1161), plus the
-   varint-overflow-safe variant (K:1909-1930).
-2. Python/Row value -> CQL literal text (rowToStatement K:1076-1150):
+1. Python/Row value -> CQL literal text (rowToStatement K:1076-1150):
    quoting, escaping, timestamp normalization, blob hex, collections.
-3. Null/empty fixups: empty blob "" -> "0x" (correctEmptyBin K:174-185).
+2. Null/empty fixups: empty blob "" -> "0x" (correctEmptyBin K:174-185).
 
-All pure functions; table-driven tests in tests/test_types.py.
+All pure functions.
 """
 
 from __future__ import annotations
@@ -19,51 +17,8 @@ import datetime as dt
 import re
 from decimal import Decimal
 
-from pyspark.sql import types as T
 
-# -- 1. CQL -> Spark SQL ------------------------------------------------
-
-_CQL_TO_SPARK: dict[str, T.DataType] = {
-    "text": T.StringType(),
-    "varchar": T.StringType(),
-    "ascii": T.StringType(),
-    "inet": T.StringType(),
-    "uuid": T.StringType(),
-    "timeuuid": T.StringType(),
-    "int": T.IntegerType(),
-    "varint": T.IntegerType(),  # default path; see overflow-safe variant
-    "bigint": T.LongType(),
-    "counter": T.LongType(),
-    "float": T.FloatType(),
-    "double": T.DoubleType(),
-    "boolean": T.BooleanType(),
-    "timestamp": T.TimestampType(),
-    "date": T.DateType(),
-    "decimal": T.DecimalType(38, 19),
-    "smallint": T.ShortType(),
-    "tinyint": T.ByteType(),
-    "time": T.LongType(),
-    "blob": T.BinaryType(),
-}
-
-
-def cql_to_spark_type(cql_type: str, custom_varint_reader: bool = False) -> T.DataType:
-    """K:1225-1241; default STRING for unknown types.
-
-    custom_varint_reader=True gives the overflow-safe dispatch of the
-    RDD varint path (K:1909-1930): varint -> STRING (values >38 digits
-    would null out as decimal), decimal -> DECIMAL(38,0).
-    """
-    t = cql_type.strip().lower()
-    if custom_varint_reader:
-        if t == "varint":
-            return T.StringType()
-        if t == "decimal":
-            return T.DecimalType(38, 0)
-    return _CQL_TO_SPARK.get(t, T.StringType())
-
-
-# -- 2. value -> CQL literal --------------------------------------------
+# -- value -> CQL literal -----------------------------------------------
 
 # Element types whose list elements are single-quoted (regex at K:503).
 _QUOTED_ELEM_RE = re.compile(r"(.*text.*)|(.*date.*)|(.*timestamp.*)|(.*inet.*)")

@@ -21,10 +21,12 @@ def emb(tables):
 
 def test_exact_dedup_keeps_one_per_content(spark, docs):
     doubled = docs.unionByName(docs.select((F.col("doc_id") + 10_000).alias("doc_id"), "text"))
-    kept = D.exact_dedup(doubled)
-    assert kept.count() == docs.count()
+    groups = D.exact_dedup_groups(doubled).collect()
+    # one group (one keeper) per distinct content, each holding both copies
+    assert len(groups) == docs.count()
+    assert {g.n_docs for g in groups} == {2}
     # keeper is the min id -> all original ids survive
-    assert kept.filter(F.col("doc_id") >= 10_000).count() == 0
+    assert all(g.keeper_id < 10_000 for g in groups)
 
 
 def test_ngram_jaccard_finds_planted_near_dups(spark, docs):
@@ -1728,6 +1730,49 @@ def test_media_parsers_are_total_on_arbitrary_bytes():
     fuzz()
 
 
+def _encode_ima_adpcm_wav_stereo(left: list[int], right: list[int],
+                                 sample_rate: int = 8000,
+                                 block_samples: int = 505) -> bytes:
+    """Stereo IMA ADPCM WAV writer, registered multichannel layout:
+    per block, one 4-byte state header per channel then the coded
+    nibbles interleaved in 4-byte groups (8 samples left, 8 samples
+    right, ...). block_samples counts per-channel samples including
+    the header sample; the coded count (block_samples - 1) must be a
+    multiple of 8 so groups tile exactly, and the channels must be
+    equal length in whole blocks."""
+    import struct
+
+    if (block_samples - 1) % 8:
+        raise ValueError("block_samples - 1 must be a multiple of 8")
+    if len(left) != len(right) or len(left) % block_samples:
+        raise ValueError("channels must be equal whole-block lengths")
+    idx = [0, 0]
+    body = bytearray()
+    for off in range(0, len(left), block_samples):
+        chans = (left[off:off + block_samples],
+                 right[off:off + block_samples])
+        groups: list[list[int]] = [[], []]
+        for c, chunk in enumerate(chans):
+            pred = max(-32768, min(32767, int(chunk[0])))
+            body += struct.pack("<hBB", pred, idx[c], 0)
+            for sample in chunk[1:]:
+                n, pred, idx[c] = MM._ima_encode_sample(
+                    int(sample), pred, idx[c])
+                groups[c].append(n)
+        for g in range(0, block_samples - 1, 8):
+            for c in range(2):
+                eight = groups[c][g:g + 8]
+                for a, b in zip(eight[0::2], eight[1::2]):
+                    body += bytes([(b << 4) | a])
+    block_align = 8 + (block_samples - 1)
+    byte_rate = sample_rate * block_align // block_samples
+    return (b"RIFF" + struct.pack("<I", 40 + len(body)) + b"WAVE"
+            + b"fmt \x14\x00\x00\x00"
+            + struct.pack("<HHIIHHHH", 0x11, 2, sample_rate, byte_rate,
+                          block_align, 4, 2, block_samples)
+            + b"data" + struct.pack("<I", len(body)) + bytes(body))
+
+
 def test_ima_adpcm_stereo():
     """Stereo IMA ADPCM: one 4-byte state header per channel, coded
     nibbles interleaved in 4-byte groups. The per-channel state
@@ -1739,7 +1784,7 @@ def test_ima_adpcm_stereo():
     left = [((i * 37) % 4000) - 2000 for i in range(2 * bs)]
     right = [((i * 53) % 3000) - 1500 for i in range(2 * bs)]
     st = MM.parse_ima_adpcm_samples(
-        MM.encode_ima_adpcm_wav_stereo(left, right, block_samples=bs))
+        _encode_ima_adpcm_wav_stereo(left, right, block_samples=bs))
     mL = MM.parse_ima_adpcm_samples(
         MM.encode_ima_adpcm_wav(left, block_samples=bs))
     mR = MM.parse_ima_adpcm_samples(
@@ -1750,7 +1795,7 @@ def test_ima_adpcm_stereo():
     assert st["peak"] == max(mL["peak"], mR["peak"])
 
     # byte layout: channel headers live at offsets 0 and 4 of the block
-    wav = MM.encode_ima_adpcm_wav_stereo(left, right, block_samples=bs)
+    wav = _encode_ima_adpcm_wav_stereo(left, right, block_samples=bs)
     data_off = wav.index(b"data") + 8
     import struct
     assert struct.unpack_from("<h", wav, data_off)[0] == left[0]

@@ -32,6 +32,24 @@ def test_tile_distribution_roughly_uniform(tables):
         assert abs(c - total / 4) < total * 0.2  # xxhash64 should spread well
 
 
+def _xxhash64_cols_ref(values: list, seed: int = 42) -> int:
+    """Spark's MULTI-ARG ``F.xxhash64(c1, c2, ...)`` — the composite-PK
+    tiling path of ``tile_expr`` — independently: each argument's hash
+    seeds the next (ints as 8 LE bytes, strings/bytes as their UTF-8/
+    raw bytes), final result reinterpreted signed."""
+    M = (1 << 64) - 1
+    h = seed
+    for v in values:
+        if isinstance(v, int):
+            data = (v & M).to_bytes(8, "little")
+        elif isinstance(v, str):
+            data = v.encode("utf-8")
+        else:
+            data = bytes(v)
+        h = tiling.xxh64_ref(data, h)
+    return h - (1 << 64) if h >= (1 << 63) else h
+
+
 def test_xxh64_reference_matches_spec_vectors_and_engine(spark):
     """The pinned hash literals in the tile_histogram_xxhash64 oracle
     rest on tiling.xxh64_ref being real XXH64, not an engine snapshot:
@@ -80,7 +98,7 @@ def test_xxh64_reference_matches_spec_vectors_and_engine(spark):
             for v in combo]).alias(f"m{i}")
         for i, combo in enumerate(combos)]).collect()[0])
     for i, combo in enumerate(combos):
-        assert got_m[i] == tiling.xxhash64_cols_ref(combo), combo
+        assert got_m[i] == _xxhash64_cols_ref(combo), combo
     # and tile_expr end-to-end on a composite key equals the reference
     rows = [(1, "a"), (2, "b"), (7, "(x,y)")]
     df = spark.createDataFrame(rows, "k long, s string")
@@ -88,7 +106,7 @@ def test_xxh64_reference_matches_spec_vectors_and_engine(spark):
         "k", "s", tiling.tile_expr(df, ["k", "s"], 8).alias("tile"))
         .collect()}
     for k, s in rows:
-        assert got_t[(k, s)] == tiling.xxhash64_cols_ref([k, s]) % 8
+        assert got_t[(k, s)] == _xxhash64_cols_ref([k, s]) % 8
 
     # (3) the registered oracle now IMPLEMENTS XXH64 in DuckDB SQL
     # (r16: _xxh64_tile_oracle, HUGEINT mod-2^64 pipeline) — execute it
@@ -181,12 +199,11 @@ def test_snapshot_store_roundtrip(spark, tmp_path, stats_cols):
     assert {(r.pk, r.ts) for r in back.collect()} == {(1, 10), (2, 20)}
     # expire keeps newest 1
     assert store.expire_snapshots(0, retain_last=1) == 1
-    assert not store.snapshot_exists(0, s1)
-    assert store.snapshot_exists(0, s2)
+    assert [s.id for s in store.snapshots(0)] == [s2]
     with pytest.raises(ValueError):
         store.read_snapshot(spark, 0, s1)
-    assert {(r.pk, r.ts) for r in store.read_current(spark, 0).collect()} == \
-        {(2, 21), (3, 30)}
+    current = store.read_snapshot(spark, 0, store.current_snapshot_id(0))
+    assert {(r.pk, r.ts) for r in current.collect()} == {(2, 21), (3, 30)}
 
 
 @pytest.mark.parametrize("stats_cols", _COMMIT_PATHS)
@@ -597,10 +614,9 @@ def test_config_resolve_valid():
                 {"column": "col7", "rule": "sha256", "alias": "col7_h", "keepSource": True}
             ],
         },
-        "compression": {"enabled": True, "compressNonPrimaryColumns": ["payload"]},
     })
     assert m.replication.columns == ["key", "col0"]
-    assert m.write.maxStatementsPerBatch == 29  # reference default K:74
+    assert cfg.WriteConfig().maxStatementsPerBatch == 29  # reference default K:74
 
 
 @pytest.mark.parametrize("bad", [
@@ -610,10 +626,27 @@ def test_config_resolve_valid():
         {"column": "a", "rule": "md5", "alias": "x"},
         {"column": "b", "rule": "md5", "alias": "x"}]}},
     {"replication": {"allColumns": False, "columns": []}},
+    # every level takes only the keys the engine reads; an unknown one
+    # fails with its dotted path instead of reading as the default
+    {"replicaton": {"allColumns": False}},
+    {"compression": {"enabled": True}},
+    {"largeObjects": {"enabled": True, "column": "payload"}},
+    {"write": {"maxStatementsPerBatch": 10}},
+    {"replication": {"ttlColumn": "ttl"}},
+    {"replication": {"pointInTime": {"x": 1}}},
+    {"replication": {"transformations": [
+        {"column": "c", "rule": "md5", "salt": "s"}]}},
+    {"replication": {"transformations": [{"column": "c"}]}},
+    {"read": {"splitSizeMB": 128}},
 ])
 def test_config_resolve_invalid(bad):
-    with pytest.raises(cfg.ConfigError):
+    with pytest.raises(cfg.ConfigError) as err:
         cfg.resolve(bad)
+    msg = str(err.value)
+    if msg.startswith("unknown config key "):
+        node = bad  # the dotted path names where the key sits in ``bad``
+        for part in msg.split()[3].rstrip(";").split("."):
+            node = node[int(part)] if isinstance(node, list) else node[part]
 
 
 def test_effective_pk():
@@ -656,12 +689,6 @@ def test_reads_per_sec_round_trip_and_option():
     assert opts["spark.cassandra.input.readsPerSec"] == "500"
     # unthrottled by default: the knob is absent, not "0"
     assert "spark.cassandra.input.readsPerSec" not in read_options(cfg.ReadConfig())
-
-
-def test_default_partitions_formula():
-    # K:562-565: max(defaultParallelism, cores * instances * tiles)
-    assert cfg.default_partitions(200, 4, 10, 8) == 320
-    assert cfg.default_partitions(500, 4, 10, 8) == 500
 
 
 def test_calculate_workers_matches_reference_arithmetic():
@@ -731,71 +758,32 @@ def test_udt_to_json(spark):
 # -- stats ---------------------------------------------------------------------
 
 def test_column_stats_and_totals(tables):
+    # the per-column stats row of getColumnStats (K:1719-1748), type-
+    # dispatched: a number by value, a string by length, a timestamp
+    # at its fixed 8-byte wire size
     orders = tables["orders"]
-    st = stats.add_total_columns(stats.column_stats(orders))
+    by_value = F.col("o_orderkey").cast("double")
+    by_length = F.length("o_orderstatus").cast("double")
+    st = stats.add_total_columns(orders.agg(
+        *[agg(base).alias(f"{name}_{s}")
+          for name, base in (("o_orderkey", by_value),
+                             ("o_orderstatus", by_length))
+          for s, agg in (("min", F.min), ("avg", F.avg), ("max", F.max))],
+        *[F.lit(8.0).alias(f"o_orderdate_{s}") for s in ("min", "avg", "max")]))
     row = st.collect()[0]
     assert row["o_orderkey_min"] >= 0.0 and row["o_orderkey_max"] > 0.0
     assert row["o_orderdate_min"] == 8.0  # timestamp fixed size
     assert row["row_avg_total"] > 0
     # string column measured by length
     assert row["o_orderstatus_max"] >= 1.0
+    for s in ("min", "avg", "max"):
+        assert row[f"row_{s}_total"] == pytest.approx(sum(
+            row[f"{c}_{s}"] for c in ("o_orderkey", "o_orderstatus", "o_orderdate")))
 
 
 def test_estimate_partitions():
     assert stats.estimate_partitions_for_write(100.0, 0) == 1
     assert stats.estimate_partitions_for_write(1024.0, 1024 * 1024, target_mb=32) == 32
-
-
-def test_legacy_snapshot_migration(spark, tmp_path):
-    """head/tail parquet dirs migrate into store+ledger RE-TILED under this
-    engine's tile hash; pipeline resumes with a delta against head, never
-    re-replicating the legacy delta and never emitting re-tiling churn."""
-    from pyspark.sql import functions as F
-
-    from cql_replicator_spark.diff import compute_changes
-    from cql_replicator_spark.ledger import Ledger
-    from cql_replicator_spark.snapshot import SnapshotStore, migrate_legacy_snapshots
-    from cql_replicator_spark.tiling import assign_tiles
-
-    tail = spark.createDataFrame([(i, 100) for i in range(50)], ["pk", "ts"])
-    head = spark.createDataFrame(
-        [(i, 100 if i % 5 else 101) for i in range(10, 60)], ["pk", "ts"])
-    legacy = tmp_path / "legacy"
-    # legacy tiling came from the REFERENCE's hash: simulate with a
-    # different assignment (mod) so migrated keys must move tiles
-    for t in (0, 1):
-        tail.filter(F.col("pk") % 2 == t).coalesce(1).write.parquet(
-            str(legacy / f"tile={t}" / "tail"))
-        head.filter(F.col("pk") % 2 == t).coalesce(1).write.parquet(
-            str(legacy / f"tile={t}" / "head"))
-
-    store = SnapshotStore(str(tmp_path / "snaps"), "ks", "t")
-    ledger = Ledger(str(tmp_path / "ledger.json"))
-    out = migrate_legacy_snapshots(
-        spark, store, ledger, "ks", "t", str(legacy), tiles=[0, 1],
-        pk_cols=["pk"])
-
-    assert out == {0: (1, 2), 1: (1, 2)}
-    assert not (legacy / "tile=0").exists() and not (legacy / "tile=1").exists()
-    for t in (0, 1):
-        # head is current and already consumed -> nothing to replicate now
-        assert ledger.replication_plan("ks", "t", t) is None
-    assert (store.read_current(spark, 0).count()
-            + store.read_current(spark, 1).count()) == head.count()
-
-    # the fix's invariant: a post-migration discovery of the SAME source
-    # must produce an EMPTY delta on every tile (no re-tiling churn)
-    retiled = assign_tiles(head, ["pk"], 2)
-    for t in (0, 1):
-        part = retiled.filter(F.col("tile") == t).drop("tile")
-        sid = store.write_snapshot(part, t)
-        ledger.record_discovery("ks", "t", t, sid)
-        plan = ledger.replication_plan("ks", "t", t)
-        assert plan == {"mode": "delta", "curr": sid, "prev": 2}
-        cs = compute_changes(store.read_snapshot(spark, t, sid),
-                             store.read_snapshot(spark, t, 2), ["pk"])
-        assert cs.inserts.count() == 0 and cs.deletes.count() == 0
-        assert cs.updates.count() == 0
 
 
 def test_salted_join_equals_plain_join(spark):
@@ -1006,9 +994,14 @@ def test_bucketed_join_has_no_exchange(spark, tables, tmp_path):
     SortMergeJoin with NO Exchange (and, with sortBy, no per-side Sort
     of the streamed keys) — the pay-the-shuffle-once contract. Results
     must equal the plain join."""
-    from cql_replicator_spark.bucketing import (
-        assert_no_exchange, write_bucketed_table,
-    )
+    from cql_replicator_spark.bucketing import write_bucketed_table
+
+    def assert_no_exchange(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        if "Exchange" in plan:
+            raise AssertionError(
+                "plan contains an Exchange; bucketed co-location was "
+                "not used:\n" + plan)
 
     orders = tables["orders"].select("o_orderkey", "o_totalprice")
     li = tables["lineitem"].select("l_orderkey", "l_quantity")

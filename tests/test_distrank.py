@@ -221,6 +221,27 @@ def test_detector_flags_partitionless_window(spark):
     assert len(flagged) == 1 and "row_number" in flagged[0]
 
 
+def test_explain_audit_normalizes_per_run_tokens():
+    """Two regenerations of one tree differ only in expression ids,
+    plan ids and pid-suffixed table names; each becomes one placeholder,
+    so PLANS.md rewrites byte for byte, while the plan's own names and
+    numbers (operator ids, partition counts) stay as they are."""
+    mod = _load_explain_audit()
+    run1 = ("+- BroadcastHashJoin [o_orderkey#15295L], [l_orderkey#88L], "
+            "Inner, BuildRight, false, plan_id=9557")
+    run2 = ("+- BroadcastHashJoin [o_orderkey#7L], [l_orderkey#123456L], "
+            "Inner, BuildRight, false, plan_id=24346")
+    assert mod.normalize_line(run1) == mod.normalize_line(run2) == (
+        "+- BroadcastHashJoin [o_orderkey#NL], [l_orderkey#NL], "
+        "Inner, BuildRight, false, plan_id=N")
+    assert mod.normalize_line("Scan spark_catalog.default.sg_bkt_orders_p2052") \
+        == mod.normalize_line("Scan spark_catalog.default.sg_bkt_orders_p30423") \
+        == "Scan spark_catalog.default.sg_bkt_orders_pN"
+    for stable in ("(12) Exchange [codegen id : 3] hashpartitioning(status_p, 8)",
+                   "PushedFilters: [IsNotNull(p_brand), EqualTo(p_brand,Brand#23)]"):
+        assert mod.normalize_line(stable) == stable
+
+
 def _formatted(df):
     emode = df.sparkSession._jvm.org.apache.spark.sql.execution \
         .ExplainMode.fromString("formatted")

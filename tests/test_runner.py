@@ -13,9 +13,8 @@ from cql_replicator_spark.reconcile import (
 )
 from cql_replicator_spark.runner import CdcPipeline, StatsStore, StopSentinel
 from cql_replicator_spark.snapshot import SnapshotStore
-from cql_replicator_spark.streaming.microbatch import state_at, time_slices
 from cql_replicator_spark.streaming.windows import (
-    run_stream_to_memory, stream_events_from_dir, windowed_event_counts,
+    run_stream_to_memory, stream_events_from_dir,
 )
 
 
@@ -435,7 +434,7 @@ def test_discovery_commits_empty_tile(spark, tables, tmp_path):
     snap = pipe.store.snapshots(3)[-1]
     assert snap.count == 0
     empty = pipe.store.read_snapshot(spark, 3, snap.id)
-    full = pipe.store.read_current(spark, 0)
+    full = pipe.store.read_snapshot(spark, 0, pipe.store.current_snapshot_id(0))
     assert empty.count() == 0 and empty.schema == full.schema
     stats = {s.tile: s for s in pipe.replicate()}
     assert stats[3].primaryKeys == 0
@@ -601,7 +600,7 @@ def test_counter_additive_update_e2e(spark, tmp_path):
     import re
 
     from cql_replicator_spark.config import JsonMapping
-    from cql_replicator_spark.counters import replicate_counter_tile
+    from cql_replicator_spark.counters import counter_deltas, write_counter_deltas
     from cql_replicator_spark.ledger import Ledger
     from cql_replicator_spark.runner import CdcPipeline, StatsStore
     from cql_replicator_spark.snapshot import SnapshotStore
@@ -643,10 +642,24 @@ def test_counter_additive_update_e2e(spark, tmp_path):
                     "\n".join(statements) + "\n")
             return execute
 
+        def replicate(tile):
+            # historical load: every key an insert of its full value;
+            # delta: increments and deletes between the two generations
+            plan = ledger.replication_plan("ks", "cnt", tile)
+            curr = store.read_snapshot(spark, tile, plan["curr"])
+            prev = (curr.filter(F.lit(False)) if plan["mode"] == "historical"
+                    else store.read_snapshot(spark, tile, plan["prev"]))
+            deltas = counter_deltas(curr, prev, ["pk"], ["hits", "clicks"])
+            counts = {r["op"]: r["count"]
+                      for r in deltas.groupBy("op").count().collect()}
+            write_counter_deltas(deltas, "ks.cnt", ["pk"], {"pk": "bigint"},
+                                 ["hits", "clicks"], executor_factory)
+            ledger.mark_replication_complete("ks", "cnt", tile)
+            return {op + "s": counts.get(op, 0)
+                    for op in ("insert", "update", "delete")}
+
         assert sorted(pipe.discover()) == [0, 1]
-        stats = [replicate_counter_tile(
-            spark, store, ledger, "ks", "cnt", t, ["pk"], {"pk": "bigint"},
-            ["hits", "clicks"], "ks.cnt", executor_factory) for t in (0, 1)]
+        stats = [replicate(t) for t in (0, 1)]
         # apply this cycle's statements to the fake target
         for p in sorted(stmts_dir.glob("*.log")):
             for stmt in p.read_text().splitlines():
@@ -837,6 +850,20 @@ def test_stage_microbatches_derived_sizing(spark, tmp_path):
 
 
 def test_windowed_counts_batch_equals_streaming(spark, tables, tmp_path):
+    def windowed_event_counts(events):
+        """Tumbling 1-day count+sum per event_type; the watermark is
+        applied only when streaming (it bounds state)."""
+        df = events.withColumn("ts", F.col("ts").cast("timestamp"))
+        if df.isStreaming:
+            df = df.withWatermark("ts", "1 hour")
+        return (
+            df.groupBy(F.window("ts", "1 day").alias("w"), "event_type")
+            .agg(F.count("*").alias("n_events"),
+                 F.sum(F.col("value").try_cast("decimal(18,4)"))
+                 .cast("double").alias("total_value"))
+            .select(F.col("w.start").alias("wstart"), "event_type",
+                    "n_events", "total_value"))
+
     events = tables["events"]
     batch = windowed_event_counts(events).orderBy("wstart", "event_type")
     batch_rows = [(r.wstart, r.event_type, r.n_events, r.total_value)
@@ -899,28 +926,6 @@ def test_interval_join_stream_equals_batch_across_batches(spark, tmp_path):
     streamed = {(r.l_event_id, r.r_event_id)
                 for r in spark.table("conv_pairs").collect()}
     assert streamed == batch
-
-
-def test_microbatch_cdc_over_event_slices(spark, tables, tmp_path):
-    """Replay event-time slices through the CDC pipeline: row counts per
-    state must be non-decreasing inserts, ledger must rotate cleanly."""
-    events = tables["events"]
-    cuts = time_slices(events, 3)
-    states = [state_at(events, c) for c in cuts]
-    # each state is a valid snapshot input: keys unique
-    for st in states:
-        assert st.groupBy("user_id", "event_type").count().filter("count > 1").count() == 0
-
-    from cql_replicator_spark.diff import compute_changes
-    cs = compute_changes(states[1], states[0], ["user_id", "event_type"])
-    assert cs.deletes.count() == 0          # append-only source: no deletes
-    assert cs.inserts.count() >= 0
-    n_updates = cs.updates.count()
-    # updates = keys whose latest-event ts moved between slices
-    a = {(r.user_id, r.event_type): r.ts for r in states[0].collect()}
-    b = {(r.user_id, r.event_type): r.ts for r in states[1].collect()}
-    expected_updates = sum(1 for k in a if k in b and a[k] != b[k])
-    assert n_updates == expected_updates
 
 
 def test_session_func_late_event_never_shrinks_session():

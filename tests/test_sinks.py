@@ -1,5 +1,5 @@
-"""Sink layer: batching/retry/DLQ, CQL statements, DynamoDB mapping,
-parquet bulk path, large objects, codec."""
+"""Sink layer: batching/retry/DLQ, CQL statements, parquet bulk path,
+codec."""
 
 import json
 import os
@@ -8,18 +8,14 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from cql_replicator_spark import codec, largeobject
-from cql_replicator_spark.config import LargeObjects, Transformation, WriteConfig
+from cql_replicator_spark import codec
+from cql_replicator_spark.config import Transformation, WriteConfig
 from cql_replicator_spark.sinks.batching import FlushingBatch
 from cql_replicator_spark.sinks.cql_sink import (
     CqlWriterConfig, counter_update_statement, delete_statement,
     insert_json_statement, salted_shuffle, write_inserts,
 )
 from cql_replicator_spark.sinks.dlq import DeadLetterQueue
-from cql_replicator_spark.sinks.dynamodb_sink import (
-    DynamoBatchWriter, composite_key, create_attribute_value,
-    map_cassandra_type_to_ddb, row_to_item,
-)
 from cql_replicator_spark.sinks.parquet_sink import (
     hydrate_changes, write_tile_batches,
 )
@@ -165,51 +161,6 @@ def test_salted_shuffle_preserves_rows(spark):
     assert out.count() == 100 and set(out.columns) == {"id", "k"}
 
 
-# -- DynamoDB -----------------------------------------------------------------
-
-def test_ddb_type_buckets():
-    assert map_cassandra_type_to_ddb("bigint") == "numeric"
-    assert map_cassandra_type_to_ddb("text") == "string"
-    assert map_cassandra_type_to_ddb("blob") == "binary"
-    assert map_cassandra_type_to_ddb("list<int>") == "arrayofnumerical"
-    assert map_cassandra_type_to_ddb("list<text>") == "arrayofstrings"
-    assert map_cassandra_type_to_ddb("map<text,int>") == "map"
-
-
-def test_ddb_attribute_values():
-    assert create_attribute_value(5, "int") == {"N": "5"}
-    assert create_attribute_value("x", "text") == {"S": "x"}
-    assert create_attribute_value(True, "boolean") == {"BOOL": True}
-    assert create_attribute_value(None, "int") == {"NULL": True}
-    assert create_attribute_value([1, 2], "list<int>") == {"NS": ["1", "2"]}
-    assert create_attribute_value({"a": 1}, "map<text,int>") == {"M": {"a": {"N": "1"}}}
-    assert composite_key(["a", 1]) == "a:1"
-
-
-def test_ddb_batch_writer_with_unprocessed_retry():
-    class FakeClient:
-        def __init__(self):
-            self.calls = 0
-            self.written = []
-
-        def batch_write_item(self, RequestItems):
-            self.calls += 1
-            items = RequestItems["tbl"]
-            if self.calls == 1:  # first call leaves 2 unprocessed
-                self.written += items[:-2]
-                return {"UnprocessedItems": {"tbl": items[-2:]}}
-            self.written += items
-            return {"UnprocessedItems": {}}
-
-    client = FakeClient()
-    w = DynamoBatchWriter(client, "tbl", WriteConfig(maxStatementsPerBatch=24, backoffMS=0))
-    for i in range(10):
-        w.put(row_to_item({"pk": i, "v": f"x{i}"}, {"pk": "int", "v": "text"}))
-    w.close()
-    assert len(client.written) == 10
-    assert client.calls >= 2
-
-
 # -- parquet bulk path ------------------------------------------------------------
 
 def test_hydrate_changes_broadcast_plan(tables, spark):
@@ -339,7 +290,7 @@ def test_write_tile_batches_sweeps_a_killed_writers_staging(
     assert sorted(os.listdir(base)) == ["0", os.path.basename(live)]
 
 
-# -- large objects + codec ----------------------------------------------------------
+# -- codec ------------------------------------------------------------------------
 
 def test_codec_roundtrip():
     data = b"payload " * 1000
@@ -422,66 +373,6 @@ def test_lz4_wire_format_against_package():
     wire = codec.compress(_LZ4_DATA, codec="lz4", tag=False)
     assert int.from_bytes(wire[:4], "little") == len(_LZ4_DATA)
     assert _lz4_block_decompress_ref(wire[4:]) == _LZ4_DATA
-
-
-def test_large_object_offload_restore_delete(tmp_path):
-    store = largeobject.local_dir_store(str(tmp_path))
-    cfg = LargeObjects(enabled=True, column="payload", compressionEnabled=True)
-    row = {"key": "k1", "col0": "c1", "payload": b"X" * 5000}
-    off = largeobject.offload_column(row, "payload", cfg, store, ["k1", "c1"])
-    assert off["payload"].startswith("largeobjects/key=k1:c1")
-    restored = largeobject.restore_column(off, "payload", cfg, store)
-    assert restored["payload"] == b"X" * 5000
-    largeobject.delete_offloaded(off, "payload", store)
-    with pytest.raises(FileNotFoundError):
-        store.get(off["payload"])
-
-
-def test_large_object_put_is_atomic_on_crash(tmp_path, monkeypatch):
-    """A writer crashing mid-put must never leave a torn object:
-    get() on the key must raise (absent), not silently return a
-    truncated blob an xref already references — the S3 production
-    store's all-or-nothing PUT semantics, reproduced via tmp+rename."""
-    import builtins
-
-    store = largeobject.local_dir_store(str(tmp_path))
-    store.put("pre/existing", b"OLD" * 100)
-
-    real_open = builtins.open
-
-    class _DiesMidWrite:
-        def __init__(self, f):
-            self.f = f
-
-        def write(self, data):
-            self.f.write(data[: len(data) // 2])
-            self.f.flush()
-            raise OSError("simulated crash mid-write")
-
-        def __enter__(self):
-            return self
-
-        def __exit__(self, *exc):
-            self.f.close()
-
-    def crashing_open(path, mode="r", *a, **kw):
-        f = real_open(path, mode, *a, **kw)
-        if str(path).endswith(".tmp") and "wb" in mode:
-            return _DiesMidWrite(f)
-        return f
-
-    monkeypatch.setattr(builtins, "open", crashing_open)
-    with pytest.raises(OSError):
-        store.put("obj/new", b"NEW" * 1000)
-    with pytest.raises(OSError):
-        store.put("pre/existing", b"NEW" * 1000)
-    monkeypatch.setattr(builtins, "open", real_open)
-
-    # the new key is absent (never a torn half-file)...
-    with pytest.raises(FileNotFoundError):
-        store.get("obj/new")
-    # ...and an overwrite crash leaves the OLD object fully intact
-    assert store.get("pre/existing") == b"OLD" * 100
 
 
 # -- opensearch -------------------------------------------------------------
@@ -1042,79 +933,6 @@ def test_stats_flusher_failed_write_is_retried_not_lost():
     assert written == [(10, 10)]
     counter["v"] = 17
     assert f.flush() == 7 and written[-1] == (7, 17)
-
-
-def test_offload_key_is_injective_and_path_safe(tmp_path):
-    """The keyed layout must map distinct pk tuples to distinct object
-    keys — the reference's raw ':'.join makes ("a:b","c") and
-    ("a","b:c") collide, so the second offload silently overwrites the
-    first row's payload — and a pk containing '/' or '..' must not
-    escape a filesystem-backed store's root."""
-    from cql_replicator_spark import largeobject
-    from cql_replicator_spark.config import LargeObjects
-
-    cfg = LargeObjects(prefix="lo", enableRefByTimeUUID=False)
-    assert largeobject.offload_key(cfg, ["a:b", "c"]) != \
-        largeobject.offload_key(cfg, ["a", "b:c"])
-    assert largeobject.offload_key(cfg, ["a/b"]) != \
-        largeobject.offload_key(cfg, ["a", "b"])
-    # plain keys keep the readable reference shape
-    assert largeobject.offload_key(cfg, ["k1", "c1"]) == "lo/key=k1:c1/payload"
-
-    # end-to-end: two colliding-under-raw-join rows keep distinct
-    # payloads, and a traversal-shaped pk stays inside the store root
-    root = tmp_path / "store"
-    root.mkdir()
-    store = largeobject.local_dir_store(str(root))
-    r1 = largeobject.offload_column(
-        {"payload": b"FIRST"}, "payload", cfg, store, ["a:b", "c"])
-    r2 = largeobject.offload_column(
-        {"payload": b"SECOND"}, "payload", cfg, store, ["a", "b:c"])
-    assert largeobject.restore_column(
-        dict(r1), "payload", cfg, store)["payload"] == b"FIRST"
-    assert largeobject.restore_column(
-        dict(r2), "payload", cfg, store)["payload"] == b"SECOND"
-    largeobject.offload_column(
-        {"payload": b"X"}, "payload", cfg, store, ["../../escape"])
-    outside = tmp_path / "escape"
-    assert not outside.exists(), "pk value path-traversed the store root"
-    assert all(str(p).startswith(str(root))
-               for p in root.rglob("*")), "object written outside root"
-
-
-def test_composite_key_is_injective():
-    """Distinct key tuples must map to distinct DynamoDB keys — the raw
-    separator join collides ('a:b','c') with ('a','b:c'), silently
-    overwriting one row with the other. Plain keys keep the reference
-    layout byte-identical."""
-    assert composite_key(["a:b", "c"]) != composite_key(["a", "b:c"])
-    assert composite_key(["a", 1]) == "a:1"  # reference shape preserved
-
-
-def test_ddb_unprocessed_retry_backs_off():
-    """UnprocessedItems means the table is throttled; the retry loop
-    must back off between resends (doubling from 50ms) instead of
-    burning all 8 attempts in a tight millisecond loop, and must not
-    sleep after the final attempt."""
-    sleeps = []
-    calls = {"n": 0}
-
-    class Throttled:
-        def batch_write_item(self, RequestItems):
-            calls["n"] += 1
-            items = RequestItems["tbl"]
-            return {"UnprocessedItems": {"tbl": items}}  # never drains
-
-    w = DynamoBatchWriter(Throttled(), "tbl",
-                          WriteConfig(maxRetries=1, backoffMS=0),
-                          on_dead_letter=lambda item, e: None,
-                          sleep=sleeps.append)
-    w.put({"pk": {"S": "x"}})
-    w.close()  # batch path + per-item fallback, both exhaust retries
-    assert calls["n"] == 16  # 8 attempts x (batch + single-item)
-    assert len(sleeps) == 14  # 7 per exhausted loop — none after last
-    assert sleeps[:3] == [0.05, 0.1, 0.2]  # doubling
-    assert max(sleeps) <= 6.4
 
 
 def test_opensearch_doc_id_is_injective():

@@ -117,20 +117,6 @@ def test_project_filter_expression_over_extra_cols(spark, tables):
     assert out.count() == tables["orders"].filter("o_orderstatus = 'F'").count()
 
 
-def test_varint_read_schema_maps_types():
-    from pyspark.sql import types as T
-
-    from cql_replicator_spark.sources.varint import varint_read_schema
-
-    schema = varint_read_schema(
-        ["k", "big", "writetime(v) as ts", "price"],
-        {"k": "int", "big": "varint", "price": "decimal"})
-    assert schema["k"].dataType == T.IntegerType()
-    assert schema["big"].dataType == T.StringType()       # overflow-safe
-    assert schema["ts"].dataType == T.LongType()          # aliased writetime
-    assert schema["price"].dataType == T.DecimalType(38, 0)
-
-
 def test_overflow_safe_varints_rescues_wide_values(spark):
     from cql_replicator_spark.sources.varint import overflow_safe_varints
 

@@ -47,6 +47,27 @@ KEEP = re.compile(
     r"|Scan parquet|^\s*\(\d+\) |Exchange|SortMergeJoin|ShuffledHashJoin"
     r"|HashAggregate|WindowExec|\bWindow\b|Generate|MapInPandas")
 
+# Tokens that change from run to run of one tree: expression ids
+# (``nation_rev#15295``), plan ids (``plan_id=9557``) and the pid suffix
+# of tables a lane names per process (``sg_bkt_orders_p2052``). Each is
+# written as a fixed placeholder, so regenerating PLANS.md from an
+# unchanged tree rewrites it byte for byte and a diff shows plan changes.
+_RUN_TOKENS = ((re.compile(r"#\d+"), "#N"),
+               (re.compile(r"\bplan_id=\d+"), "plan_id=N"),
+               (re.compile(r"_p\d+\b"), "_pN"))
+
+
+def normalize_line(line: str) -> str:
+    """One PLANS.md line with its per-run tokens replaced (_RUN_TOKENS).
+    A PushedFilters line is kept as it is: data-source filters name
+    columns without ids, so a ``#`` there is data (``Brand#23``)."""
+    if line.lstrip().startswith("PushedFilters:"):
+        return line
+    for pattern, placeholder in _RUN_TOKENS:
+        line = pattern.sub(placeholder, line)
+    return line
+
+
 # Hand-curated audit notes for plans whose cost shape is NOT visible in
 # the static skeleton (driver-side loops, cross-query shared frames).
 # Emitted verbatim under the query's section.
@@ -138,7 +159,9 @@ def main() -> None:
         except Exception as exc:  # pragma: no cover
             out += [f"## {name}", "", f"ERROR: {exc}", ""]
             continue
-        kept = [ln.rstrip()[:160] for ln in plan.splitlines() if KEEP.search(ln)]
+        # normalized before the cut, so an id's digit count cannot move it
+        kept = [normalize_line(ln.rstrip())[:160]
+                for ln in plan.splitlines() if KEEP.search(ln)]
         kept += [f"{GLOBAL_WINDOW_MARK} {args}"
                  for args in global_window_args(plan)]
         kept += [f"{SINGLE_PARTITION_MARK} {args}"
@@ -149,7 +172,7 @@ def main() -> None:
         out += [f"## {name}", ""]
         if name in NOTES:
             out += [NOTES[name], ""]
-        out += ["```", *kept, "```", ""]
+        out += ["```", *map(normalize_line, kept), "```", ""]
     Path(__file__).resolve().parent.parent.joinpath("PLANS.md").write_text(
         "\n".join(out))
     print(f"wrote PLANS.md ({len(REGISTRY)} queries)")
