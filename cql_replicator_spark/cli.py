@@ -42,10 +42,7 @@ def _load_mapping(args):
 
 
 def _rows(counts, *ops):
-    """Rows of ``ops`` in a cycle's ``ChangeSet.counts``, or None when
-    the cycle was not counted."""
-    if counts is None:
-        return None
+    """Rows of ``ops`` in a cycle's ``{tile: {op: rows}}`` counts."""
     return sum(n.get(op, 0) for n in counts.values() for op in ops)
 
 
@@ -70,7 +67,7 @@ def _pipeline(spark, args):
         ts = F.col(args.ts_col).cast("long") if args.ts_col else F.lit(0).cast("long")
         return df.select(*pk_cols, ts.alias("ts"))
 
-    def sink(changes, batches):
+    def sink(tagged, counts, batches):
         """Write a cycle's changes from the runner's tagged diff, one
         source scan per cycle. The delete write (keys only) runs on an
         ``InheritableThread``, so its jobs carry the caller's job group
@@ -82,8 +79,6 @@ def _pipeline(spark, args):
         back-to-back cycles never overwrite each other's delta."""
         if not args.target:
             return
-        counts = changes.counts
-        tagged = changes.tagged_union()
         failed = []
 
         def write_deletes():
@@ -91,23 +86,23 @@ def _pipeline(spark, args):
                 write_tile_batches(
                     tagged.filter(F.col("op") == "delete")
                     .select("tile", "op", *pk_cols),
-                    args.target, KEYSPACE, table, batches, counts=counts)
+                    args.target, KEYSPACE, table, batches, counts)
             except BaseException as e:  # re-raised on the caller's thread
                 failed.append(e)
 
         deleter = None
-        if _rows(counts, "delete") != 0:
+        if _rows(counts, "delete"):
             deleter = InheritableThread(target=write_deletes, session=spark)
             deleter.start()
         try:
             n_upserts = _rows(counts, "insert", "update")
-            if n_upserts != 0:
+            if n_upserts:
                 hydrated = hydrate_changes(
                     source(), tagged.filter(F.col("op") != "delete"), pk_cols,
                     carry=("tile", "op"),
-                    broadcast_pks=(n_upserts or 0) <= BROADCAST_MAX_KEYS)
+                    broadcast_pks=n_upserts <= BROADCAST_MAX_KEYS)
                 write_tile_batches(hydrated, args.target, KEYSPACE, table,
-                                   batches, unique_by=pk_cols, counts=counts)
+                                   batches, counts, unique_by=pk_cols)
         finally:
             if deleter is not None:
                 deleter.join()

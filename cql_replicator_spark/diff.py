@@ -13,10 +13,10 @@ comment (K:1369-1381) on why ``=!=`` is wrong — a null ts on either side
 must still count as a change when the other side is non-null. We use
 ``~eqNullSafe`` which is the same three-valued-logic-safe comparison.
 
+The change column is ``ts``, the reference's writetime alias (K:394).
 When the table has no writetime column the reference sets ts=lit(0)
-(K:1810-1813) so updates are structurally empty — pass
-``compute_changes(..., has_ts=False)`` for the same behavior without
-the fake column comparison.
+(K:1810-1813), so updates are structurally empty; the CLI's key
+projection does the same without ``--ts-col``.
 
 Scale note: ``_tag_changes`` is the one full-outer PK join that the
 tagged diff, the CDC envelope, counter increments (counters.py) and
@@ -37,27 +37,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+TS = "ts"  # the change column: the reference's writetime alias (K:394)
+
+
 @dataclass
 class ChangeSet:
-    """A diff as three sets of changed rows, one per op. A producer that
-    holds the diff as one op-tagged frame (``changeset_from_tagged``;
-    the runner's persisted diff) keeps it in ``tagged``, and
-    ``tagged_union`` returns that frame as is, so a sink that wants all
-    ops reads the cached diff with no union or re-tagging."""
+    """A diff as three sets of changed rows, one per op (the result of
+    ``compute_changes``)."""
     inserts: DataFrame
     deletes: DataFrame
     updates: DataFrame
-    # rows per tile and op, {tile: {op: n}}, when the producer has
-    # already counted them (the runner has); sinks size writes by it
-    counts: dict[int, dict[str, int]] | None = None
-    # the op-tagged frame the three sets were split from
-    tagged: DataFrame | None = None
 
     def tagged_union(self) -> DataFrame:
         """All changes as one DataFrame with an ``op`` column
         (insert/delete/update)."""
-        if self.tagged is not None:
-            return self.tagged
         return (
             self.inserts.withColumn("op", F.lit("insert"))
             .unionByName(self.deletes.withColumn("op", F.lit("delete")))
@@ -100,7 +93,7 @@ def compute_changes_tagged(
     curr: DataFrame,
     prev: DataFrame,
     pk_cols: list[str],
-    ts_col: str = "ts",
+    ts_col: str = TS,
 ) -> DataFrame:
     """Single-pass diff: ``(op, pk..., ts)`` rows from one full-outer
     join (``_tag_changes``).
@@ -120,7 +113,6 @@ def compute_changes_envelope(
     curr: DataFrame,
     prev: DataFrame,
     pk_cols: list[str],
-    ts_col: str = "ts",
 ) -> DataFrame:
     """CDC-feed envelope: op plus BEFORE and AFTER images of the change
     column — the Debezium/Delta-CDF shape downstream consumers need to
@@ -128,51 +120,27 @@ def compute_changes_envelope(
     deletes a null after-image, updates both). The join and update rule
     are ``_tag_changes``'s; the images are free since the join already
     sees both sides."""
-    return _tag_changes(curr, prev, pk_cols, [ts_col]).select(
+    return _tag_changes(curr, prev, pk_cols, [TS]).select(
         "op", *pk_cols,
-        F.col(f"__p_{ts_col}").alias(f"{ts_col}_before"),
-        F.col(f"__c_{ts_col}").alias(f"{ts_col}_after"))
-
-
-def changeset_from_tagged(tagged: DataFrame,
-                          counts: dict[int, dict[str, int]] | None = None
-                          ) -> ChangeSet:
-    """The three-set view of a (persisted!) diff tagged in an ``op``
-    column, which it also keeps as ``ChangeSet.tagged`` for
-    ``tagged_union``. Persist the tagged frame first or the join
-    re-executes per subset."""
-    return ChangeSet(
-        inserts=tagged.filter(F.col("op") == "insert").drop("op"),
-        deletes=tagged.filter(F.col("op") == "delete").drop("op"),
-        updates=tagged.filter(F.col("op") == "update").drop("op"),
-        counts=counts,
-        tagged=tagged,
-    )
+        F.col(f"__p_{TS}").alias(f"{TS}_before"),
+        F.col(f"__c_{TS}").alias(f"{TS}_after"))
 
 
 def compute_changes(
     curr: DataFrame,
     prev: DataFrame,
     pk_cols: list[str],
-    ts_col: str = "ts",
-    has_ts: bool = True,
 ) -> ChangeSet:
     """Diff two snapshots of (pk_cols..., ts)."""
     inserts = curr.join(prev, pk_cols, "left_anti")
     deletes = prev.join(curr, pk_cols, "left_anti")
-    if has_ts:
-        c = curr.alias("curr")
-        p = prev.alias("prev")
-        joined = c.join(p, pk_cols, "inner")
-        changed = ~F.col(f"curr.{ts_col}").eqNullSafe(F.col(f"prev.{ts_col}"))
-        updates = joined.filter(changed).select(
-            *pk_cols, F.col(f"curr.{ts_col}").alias(ts_col)
-        )
-    else:
-        # No writetime column -> updates undetectable (K:1810-1813).
-        updates = curr.filter(F.lit(False)).select(*pk_cols, *(
-            [F.col(ts_col)] if ts_col in curr.columns else []
-        ))
+    c = curr.alias("curr")
+    p = prev.alias("prev")
+    joined = c.join(p, pk_cols, "inner")
+    changed = ~F.col(f"curr.{TS}").eqNullSafe(F.col(f"prev.{TS}"))
+    updates = joined.filter(changed).select(
+        *pk_cols, F.col(f"curr.{TS}").alias(TS)
+    )
     return ChangeSet(inserts=inserts, deletes=deletes, updates=updates)
 
 

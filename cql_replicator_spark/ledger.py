@@ -145,6 +145,25 @@ def file_mutex(lock_path: str):
             pass
 
 
+def commit_json(path: str, obj) -> None:
+    """Publish ``obj`` as the JSON file ``path``, whole: dump it to a
+    tmp file unique to this process and thread, then ``os.replace`` it
+    over ``path``, so a reader sees the old file or the new one, never
+    a torn one. The one commit of the loop's state files (the ledger,
+    the snapshot manifest, the replication stats). If the dump or the
+    replace fails, the tmp file is removed and ``path`` is as it was."""
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    tmp = f"{path}.{os.getpid()}.{threading.get_ident()}.tmp"
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f, indent=1)
+        os.replace(tmp, path)
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+        raise
+
+
 class DiscoveryRaceLost(RuntimeError):
     """record_discovery's under-lock gate failed: a rival discoverer
     rotated the tile between the caller's can_discover() check and its
@@ -189,13 +208,6 @@ class Ledger:
     def _file_lock(self):
         with file_mutex(self.path + ".lock"):
             yield
-
-    def _flush(self, rows: dict[tuple, dict]) -> None:
-        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        tmp = self.path + f".{os.getpid()}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(list(rows.values()), f, indent=1)
-        os.replace(tmp, self.path)
 
     @staticmethod
     def _get_from(rows: dict[tuple, dict], ks: str, tbl: str, tile: int,
@@ -260,7 +272,7 @@ class Ledger:
                     )
                 )
             if len(lost) < len(snapshot_ids):
-                self._flush(rows)
+                commit_json(self.path, list(rows.values()))
             return lost
 
     # -- replication side --------------------------------------------------
@@ -301,7 +313,7 @@ class Ledger:
                 rows[key]["load_status"] = SUCCESS
                 rows[key]["dt_load"] = now
             if keys:
-                self._flush(rows)
+                commit_json(self.path, list(rows.values()))
 
     def rows(self) -> list[LedgerRow]:
         return [LedgerRow(**r) for r in self._read_rows().values()]

@@ -40,6 +40,10 @@ EXIT_SOURCE_SCHEMA_MISMATCH = 4
 EXIT_TARGET_SCHEMA_MISMATCH = 5
 EXIT_PHASE_FAILURE = 6
 
+# attempts at writing the diff snapshot until its read-back count
+# matches (write-verify-retry, R:639-739)
+DIFF_WRITE_RETRIES = 3
+
 
 class ReconcileError(Exception):
     def __init__(self, message: str, exit_code: int, phase: str):
@@ -84,7 +88,6 @@ class ReconcileJob:
         total_tiles: int = 4,
         sample_size: int = 100,
         transforms: list[Transformation] | None = None,
-        diff_write_retries: int = 3,
     ):
         if not (1 <= total_tiles <= 1024):
             raise ReconcileError(f"TOTAL_TILES {total_tiles} outside [1,1024]",
@@ -98,7 +101,6 @@ class ReconcileJob:
         self.total_tiles = total_tiles
         self.sample_size = sample_size
         self.transforms = transforms or []
-        self.diff_write_retries = diff_write_retries
 
     # -- phases ------------------------------------------------------------
     def _scan(self, df: DataFrame, which: str) -> str:
@@ -132,7 +134,7 @@ class ReconcileJob:
 
         diff_path = os.path.join(self.workdir, "diff_snapshot")
         expected = None
-        for attempt in range(self.diff_write_retries):
+        for attempt in range(DIFF_WRITE_RETRIES):
             missing.write.mode("overwrite").parquet(diff_path)
             expected = expected if expected is not None else missing.count()
             if self.spark.read.parquet(diff_path).count() == expected:

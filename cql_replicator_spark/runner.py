@@ -20,12 +20,12 @@ the curr snapshots of every delta tile as one relation and their prev
 snapshots as another (``SnapshotStore.read_snapshots``), diffs them in
 one full-outer join keyed on (tile, pk), persists the op-tagged result
 and counts it with one ``groupBy("tile", "op")``. The sink runs once
-per cycle on a ``ChangeSet`` whose frames carry ``tile`` and whose
-``tagged_union()`` is that persisted frame itself (plus the historical
-tiles' curr relation, every row an insert). The state files commit
-once per phase too. Discovery makes one snapshot manifest write, which
-also expires every tile's snapshots older than its consumed curr (the
-ledger's bound, ``write_snapshots(keep_from=...)``; the reference
+per cycle on that persisted frame itself (plus the historical tiles'
+curr relation, every row an insert) and its per-(tile, op) counts.
+The state files commit once per phase too, each by one
+``ledger.commit_json``. Discovery makes one snapshot manifest write,
+which also expires every tile's snapshots older than its consumed curr
+(the ledger's bound, ``write_snapshots(keep_from=...)``; the reference
 expires by count after each replication, K:1656-1657), and one ledger
 record for every rotated tile. Replication puts one stats file per
 tile, then makes one ledger mark for every replicated tile. A delta
@@ -47,8 +47,8 @@ from dataclasses import asdict, dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .diff import ChangeSet, changeset_from_tagged, compute_changes_tagged
-from .ledger import SUCCESS, Ledger
+from .diff import compute_changes_tagged
+from .ledger import SUCCESS, Ledger, commit_json
 from .snapshot import SnapshotStore
 from .tiling import tile_expr
 
@@ -81,7 +81,6 @@ class StatsStore:
         does nothing, so a replication retried after a crash between
         this put and the ledger mark counts its tile once."""
         path = self._path(ks, tbl, stats.tile)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
         merged = asdict(stats)
         if os.path.exists(path):
             with open(path) as f:
@@ -95,10 +94,7 @@ class StatsStore:
                       "insertedPrimaryKeys", "deletedPrimaryKeys"):
                 merged[k] += prev.get(k, 0)
         merged["appliedSnapshotId"] = snapshot_id
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(merged, f)
-        os.replace(tmp, path)
+        commit_json(path, merged)
 
     def get(self, ks: str, tbl: str, tile: int) -> dict | None:
         path = self._path(ks, tbl, tile)
@@ -142,13 +138,16 @@ class CdcPipeline:
     stats: StatsStore
     total_tiles: int = 4
     ts_col: str = "ts"
-    # (changes, batches), called once per replication cycle: changes is
-    # every due tile's ChangeSet in one, each frame carrying ``tile``,
-    # with its per-(tile, op) row counts in ``changes.counts``;
-    # batches maps each due tile to its consumed curr snapshot id, unique
-    # per rotation, so two cycles never collide on a sink path (a
-    # wall-clock batch id collides when cycles are < 1s apart).
-    sink: Callable[[ChangeSet, dict[int, int]], None] | None = None
+    # (tagged, counts, batches), called once per replication cycle:
+    # tagged is every due tile's changes as one frame with ``tile`` and
+    # ``op`` columns (the persisted diff, plus the historical tiles'
+    # curr rows as inserts); counts is its rows per tile and op,
+    # {tile: {op: n}}, for every due tile; batches maps each due tile to
+    # its consumed curr snapshot id, unique per rotation, so two cycles
+    # never collide on a sink path (a wall-clock batch id collides when
+    # cycles are < 1s apart).
+    sink: Callable[[DataFrame, dict[int, dict[str, int]], dict[int, int]],
+                   None] | None = None
     # Tile assignment: None = production xxhash64 tiling (tiling.tile_expr,
     # K:1832-1843). A Column-returning callable overrides it with an
     # engine-portable rule (oracle-checked fixtures tile by pk % N —
@@ -246,7 +245,7 @@ class CdcPipeline:
                     counts[t]["insert"] = next(
                         s.count for s in live[t] if s.id == sid)
             if self.sink is not None:
-                self.sink(changeset_from_tagged(changes, counts=counts),
+                self.sink(changes, counts,
                           {t: p["curr"] for t, p in plans.items()})
         finally:
             if tagged is not None:

@@ -59,7 +59,6 @@ class DeadLetterQueue:
         tile: int,
         op: str,
         executor: Callable[[dict], None],
-        delete_after: bool = True,
     ) -> int:
         """Replay each logged op through the executor (replayLogs K:327-354).
         The executor must be idempotent (IF NOT EXISTS / conditional put).
@@ -72,6 +71,5 @@ class DeadLetterQueue:
                     if line.strip():
                         executor(json.loads(line))
                         n += 1
-            if delete_after:
-                os.remove(path)
+            os.remove(path)
         return n

@@ -74,17 +74,17 @@ def write_tile_batches(
     keyspace: str,
     table: str,
     batches: dict[int, int],
+    counts: dict[int, dict[str, int]],
     unique_by: list[str] | None = None,
-    counts: dict[int, dict[str, int]] | None = None,
 ) -> None:
     """Write a cycle's rows, which carry ``tile`` and ``op`` columns, in
     ONE job at ``{root}/{ks}/{tbl}/{tile}/{op}/snap-{batches[tile]:08d}``
-    (neither column is stored). ``counts`` ({tile: {op: rows}}, as on
-    ``ChangeSet.counts``) sets the width: a (tile, op) of n rows is
-    spread by a hash of its key over ceil(n / ROWS_PER_FILE) tasks and
-    files, at most the session's shuffle parallelism, so a historical
-    load or a large delta is not written one task per (tile, op); a
-    smaller one, or any without a count, is one file.
+    (neither column is stored). ``counts`` ({tile: {op: rows}}, the
+    runner's count of the cycle's diff) sets the width: a (tile, op) of
+    n rows is spread by a hash of its key over ceil(n / ROWS_PER_FILE)
+    tasks and files, at most the session's shuffle parallelism, so a
+    historical load or a large delta is not written one task per
+    (tile, op); a smaller one is one file.
     ``unique_by`` keeps one row per (tile, op, *key) (P:647's
     dropDuplicates, for hydrated rows); the clustering above satisfies
     it, so it adds no shuffle. The files land in a staging directory
@@ -97,7 +97,7 @@ def write_tile_batches(
     key = unique_by or [c for c in df.columns if c not in ("tile", "op")]
     salt = None
     width = default_write_files(df)
-    for tile, ops in (counts or {}).items():
+    for tile, ops in counts.items():
         for op, n in ops.items():
             k = min(-(-n // ROWS_PER_FILE), width)
             if k > 1:

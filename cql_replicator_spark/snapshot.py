@@ -22,9 +22,8 @@ with a schema and an absolute path in each entry, or entries without a
 ``files`` list) are not read. The API mirrors Iceberg's:
 write-overwrite (one new snapshot per tile, any number of tiles in one
 partitioned write, with the expiry of each tile's snapshots before a
-given id in the same manifest write), current_snapshot_id, read at
-snapshot (time travel), expire by count (any number of tiles in one
-manifest rewrite).
+given id in the same manifest write), read at snapshot (time travel),
+expire by count (any number of tiles in one manifest rewrite).
 
 Layout contract. A snapshot is the directory
 ``{root}/{ks}/{table}/tile={n}/snap-{id:08d}/`` holding the snapshot's
@@ -83,6 +82,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructType
 
+from .ledger import commit_json, file_mutex
 from .session import default_write_files as _default_write_files
 from .staging import new_staging_dir, remove_dead_staging
 
@@ -145,21 +145,14 @@ class SnapshotStore:
         return {"schemas": manifest.get("schemas", {}),
                 "tiles": manifest.get("tiles", {})}
 
-    def _read_manifest(self, tile: int) -> list[dict]:
-        return self._load_manifest()["tiles"].get(str(tile), [])
-
     def _write_manifest(self, manifest: dict) -> None:
         # a schema goes with the last entry that names it
         used = {str(e["schema_id"])
                 for entries in manifest["tiles"].values() for e in entries}
         manifest["schemas"] = {k: v for k, v in manifest["schemas"].items()
                                if k in used}
-        p = self._manifest_path()
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = f"{p}.{os.getpid()}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, p)  # atomic commit, like Iceberg's metadata swap
+        # atomic commit, like Iceberg's metadata swap
+        commit_json(self._manifest_path(), manifest)
 
     @staticmethod
     def _schema_id(manifest: dict, schema: dict) -> int:
@@ -194,8 +187,6 @@ class SnapshotStore:
         racing a writer drops the fresh entry). Same battle-tested lock
         as the ledger (ledger.file_mutex). Writers stage their files
         outside it and hold it only for the renames and manifest swap."""
-        from .ledger import file_mutex
-
         return file_mutex(self._manifest_path() + ".lock")
 
     # -- API ------------------------------------------------------------
@@ -358,11 +349,6 @@ class SnapshotStore:
                 for n in sorted(os.listdir(staged))
                 if not n.startswith(("_", "."))]
 
-    def current_snapshot_id(self, tile: int) -> int | None:
-        """Latest committed snapshot (ORDER BY committed_at DESC LIMIT 1 — K:1297)."""
-        entries = self._read_manifest(tile)
-        return entries[-1]["id"] if entries else None
-
     def _entry(self, tile: int, snapshot_id: int, manifest: dict) -> dict:
         """The tile's manifest entry for ``snapshot_id``, once each file
         it lists is on disk at its committed size."""
@@ -501,7 +487,4 @@ class SnapshotStore:
                                       path=self._abs_path(e))
                          for e in entries]
                 for t, entries in self._load_manifest()["tiles"].items()}
-
-    def snapshots(self, tile: int) -> list[SnapshotInfo]:
-        return self.all_snapshots().get(tile, [])
 

@@ -161,9 +161,12 @@ def test_compute_changes_golden(spark):
 
 
 def test_compute_changes_no_ts(spark):
-    prev = spark.createDataFrame([(1,), (2,)], "pk int")
-    curr = spark.createDataFrame([(2,), (3,)], "pk int")
-    cs = compute_changes(curr, prev, ["pk"], has_ts=False)
+    """A table without a writetime column diffs with ts = 0 on both
+    sides (the reference's lit(0), K:1810-1813; the CLI's key projection
+    without --ts-col), so no update comes out."""
+    prev = spark.createDataFrame([(1, 0), (2, 0)], "pk int, ts long")
+    curr = spark.createDataFrame([(2, 0), (3, 0)], "pk int, ts long")
+    cs = compute_changes(curr, prev, ["pk"])
     assert {r.pk for r in cs.inserts.collect()} == {3}
     assert {r.pk for r in cs.deletes.collect()} == {1}
     assert cs.updates.count() == 0
@@ -193,16 +196,17 @@ def test_snapshot_store_roundtrip(spark, tmp_path, stats_cols):
     s1 = store.write_snapshot(df1, tile=0, stats_cols=stats_cols)
     s2 = store.write_snapshot(df2, tile=0, stats_cols=stats_cols)
     assert (s1, s2) == (1, 2)
-    assert store.current_snapshot_id(0) == 2
+    assert store.all_snapshots()[0][-1].id == 2
     # time travel
     back = store.read_snapshot(spark, 0, s1)
     assert {(r.pk, r.ts) for r in back.collect()} == {(1, 10), (2, 20)}
     # expire keeps newest 1
     assert store.expire_snapshots(0, retain_last=1) == 1
-    assert [s.id for s in store.snapshots(0)] == [s2]
+    assert [s.id for s in store.all_snapshots()[0]] == [s2]
     with pytest.raises(ValueError):
         store.read_snapshot(spark, 0, s1)
-    current = store.read_snapshot(spark, 0, store.current_snapshot_id(0))
+    current = store.read_snapshot(spark, 0,
+                                  store.all_snapshots()[0][-1].id)
     assert {(r.pk, r.ts) for r in current.collect()} == {(2, 21), (3, 30)}
 
 
@@ -219,7 +223,7 @@ def test_write_snapshots_commits_each_due_tile(spark, tmp_path, stats_cols):
                                   stats_cols=stats_cols)
     assert sorted(snaps) == [0, 1, 2]
     assert [snaps[t].count for t in (0, 1, 2)] == [5, 5, 0]
-    assert store.current_snapshot_id(3) is None
+    assert 3 not in store.all_snapshots()
     for t in (0, 1, 2):
         back = store.read_snapshot(spark, t, snaps[t].id)
         assert back.columns == ["pk", "ts"]
@@ -353,7 +357,7 @@ def test_manifest_stores_each_schema_once(spark, tmp_path):
     assert not any(os.path.isabs(e["path"]) for e in entries)
     assert all(s.path == os.path.join(str(tmp_path), "ks", "tbl", "tile=5",
                                       f"snap-{s.id:08d}")
-               for s in store.snapshots(5))
+               for s in store.all_snapshots()[5])
 
     other = store.write_snapshot(
         spark.createDataFrame([(7, "x")], "pk long, note string"), tile=64)
@@ -376,9 +380,9 @@ def test_expire_snapshots_rejects_retain_last_below_one(spark, tmp_path):
     for bad in (0, -1):
         with pytest.raises(ValueError, match="retain_last"):
             store.expire_snapshots(0, retain_last=bad)
-    assert [s.id for s in store.snapshots(0)] == sids
+    assert [s.id for s in store.all_snapshots()[0]] == sids
     assert store.expire_snapshots(0, retain_last=1) == 2
-    assert [s.id for s in store.snapshots(0)] == sids[-1:]
+    assert [s.id for s in store.all_snapshots()[0]] == sids[-1:]
 
 
 def test_write_snapshots_stats_per_tile(spark, tmp_path):
@@ -392,7 +396,8 @@ def test_write_snapshots_stats_per_tile(spark, tmp_path):
         (F.col("id") % 2).cast("int").alias("tile"))
     snaps = store.write_snapshots(df, [0, 1], files_per_snapshot=4,
                                   stats_cols=["pk"])
-    manifests = {t: store._read_manifest(t)[-1] for t in (0, 1)}
+    tiles = store._load_manifest()["tiles"]
+    manifests = {t: tiles[str(t)][-1] for t in (0, 1)}
     for t, entry in manifests.items():
         files = sorted(entry["files"], key=lambda f: f["min"]["pk"])
         assert 1 < len(files) <= 4
@@ -429,7 +434,7 @@ def test_snapshot_writes_race_safely_on_one_tile(spark, tmp_path):
     with ThreadPoolExecutor(max_workers=8) as ex:
         sids = dict(ex.map(write, range(8)))
     assert sorted(sids.values()) == list(range(1, 9)), sids
-    entries = store.snapshots(0)
+    entries = store.all_snapshots()[0]
     assert [e.id for e in entries] == list(range(1, 9))
     for i, sid in sids.items():
         got = {r.pk for r in store.read_snapshot(spark, 0, sid).collect()}
@@ -449,7 +454,7 @@ def test_snapshot_writes_race_safely_on_one_tile(spark, tmp_path):
             + [ex.submit(expire), ex.submit(expire)]
         for f in futs:
             f.result()
-    final = store.snapshots(0)
+    final = store.all_snapshots()[0]
     assert len({e.id for e in final}) == len(final)
     for e in final:
         store.read_snapshot(spark, 0, e.id).count()  # all readable
@@ -499,7 +504,7 @@ def test_multi_tile_snapshot_writes_race_safely(spark, tmp_path):
         ids = sorted(snaps[t].id for i, snaps in written.items()
                      if t in plans[i])
         assert ids == list(range(1, 5)), (t, ids)
-        live = [s.id for s in store.snapshots(t)]
+        live = [s.id for s in store.all_snapshots()[t]]
         assert live == ids[-len(live):] and len(live) >= 3, (t, live)
         for i, snaps in written.items():
             if t in plans[i] and snaps[t].id in live:
@@ -541,6 +546,57 @@ def test_ledger_persistence(tmp_path):
     led.record_discovery("ks", "t", 3, snapshot_id=7)
     led2 = Ledger(p)
     assert led2.get("ks", "t", 3, "curr").location == "7"
+
+
+def test_commit_json_failed_dump_leaves_the_file(tmp_path):
+    """A state-file commit whose dump raises (an unserialisable value)
+    leaves the previous file byte-identical, with no tmp file next to
+    it."""
+    import os
+
+    from cql_replicator_spark.ledger import commit_json
+
+    path = str(tmp_path / "state" / "ledger.json")
+    commit_json(path, [{"tile": 0, "location": "1"}])
+    with open(path, "rb") as f:
+        before = f.read()
+    with pytest.raises(TypeError):
+        commit_json(path, [{"tile": 0, "location": object()}])
+    with open(path, "rb") as f:
+        assert f.read() == before
+    assert os.listdir(tmp_path / "state") == ["ledger.json"]
+
+
+def test_commit_json_threads_each_publish_a_whole_file(tmp_path):
+    """Threads committing one path at once each stage in their own tmp
+    file: every commit succeeds, and the file is always one whole
+    commit. A tmp name shared by the threads lets one thread's replace
+    publish another's half-written dump, or find its tmp already gone."""
+    import json
+    import os
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from cql_replicator_spark.ledger import commit_json
+
+    path = str(tmp_path / "replication-tile-0.json")
+    commits = [{"writer": w, "rows": list(range(2000))} for w in range(8)]
+
+    def commit(obj):
+        for _ in range(20):
+            commit_json(path, obj)
+            with open(path) as f:
+                assert json.load(f) in commits
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as ex:
+            for fut in [ex.submit(commit, obj) for obj in commits]:
+                fut.result(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert os.listdir(tmp_path) == ["replication-tile-0.json"]
 
 
 def _count_replaces_of(monkeypatch, path: str) -> list[str]:
@@ -1292,7 +1348,7 @@ def test_snapshot_stats_pruned_read(spark, tmp_path):
         F.col("id").alias("pk"), (F.col("id") * 2).alias("ts"))
     sid = store.write_snapshot(df, tile=0, files_per_snapshot=8,
                                stats_cols=["pk"])
-    files = store._read_manifest(0)[0]["files"]
+    files = store._load_manifest()["tiles"]["0"][0]["files"]
     assert len(files) == 8
     assert sum(f["count"] for f in files) == 1000
 
@@ -1449,7 +1505,7 @@ def test_snapshot_commit_takes_over_an_orphaned_dir(spark, tmp_path):
     assert {(r.pk, r.ts) for r in store.read_snapshot(spark, 0, s2).collect()} \
         == {(3, 30)}
     assert store.read_snapshot(spark, 0, s1).count() == 2
-    assert [s.id for s in store.snapshots(0)] == [s1, s2]
+    assert [s.id for s in store.all_snapshots()[0]] == [s1, s2]
 
 
 def test_multi_tile_snapshot_commit_takes_over_orphaned_dirs(
@@ -1491,7 +1547,7 @@ def test_multi_tile_snapshot_commit_takes_over_orphaned_dirs(
         orphan = os.path.join(str(tmp_path), "ks", "t", f"tile={t}",
                               f"snap-{first[t].id + 1:08d}")
         assert os.listdir(orphan), orphan
-        assert [s.id for s in store.snapshots(t)] == [first[t].id]
+        assert [s.id for s in store.all_snapshots()[t]] == [first[t].id]
 
     again = store.write_snapshots(frame(30), tiles)
     for t in tiles:
@@ -1499,8 +1555,8 @@ def test_multi_tile_snapshot_commit_takes_over_orphaned_dirs(
         assert {(r.pk, r.ts) for r in
                 store.read_snapshot(spark, t, again[t].id).collect()} == \
             {(i, 30) for i in range(9) if i % 3 == t}
-        assert [s.id for s in store.snapshots(t)] == [first[t].id,
-                                                      again[t].id]
+        assert [s.id for s in store.all_snapshots()[t]] == [
+            first[t].id, again[t].id]
 
 
 def _killed_writers_staging(parent: str) -> str:

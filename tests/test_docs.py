@@ -122,15 +122,22 @@ def _imported_files(path: str) -> set[str]:
     return found
 
 
-def _reached_package_modules() -> set[str]:
-    todo = []
+def _entry_files() -> list[str]:
+    """The production scripts and modules of ENTRY_POINTS (test files in
+    those dirs left out)."""
+    files = []
     for entry in ENTRY_POINTS:
         path = os.path.join(ROOT, entry)
         if os.path.isdir(path):
-            todo += [os.path.join(path, f) for f in os.listdir(path)
-                     if f.endswith(".py") and not f.startswith("test_")]
+            files += [os.path.join(path, f) for f in os.listdir(path)
+                      if f.endswith(".py") and not f.startswith("test_")]
         else:
-            todo.append(path)
+            files.append(path)
+    return files
+
+
+def _reached_package_modules() -> set[str]:
+    todo = _entry_files()
     seen = set()
     while todo:
         f = todo.pop()
@@ -165,3 +172,105 @@ def test_every_package_module_has_a_production_importer():
     reached = _reached_package_modules()
     assert sorted(modules - reached - set(TEST_ONLY)) == []
     assert sorted(set(TEST_ONLY) - (modules - reached)) == []
+
+
+# -- options ------------------------------------------------------------------
+
+# the replication engine: its seams carry only what production passes
+ENGINE = ("runner", "ledger", "snapshot", "diff", "staging",
+          "sinks.parquet_sink", "sinks.dlq", "reconcile")
+# defaulted parameters no production call passes, each with its reason
+OPTION_ALLOWLIST = {
+    "snapshot.SnapshotStore.expire_snapshots.retain_last":
+        "the reference's expiry by count (K:1278-1289); the runner expires "
+        "in its discovery commit instead, so only the store's tests call "
+        "expire_snapshots",
+    "reconcile.ReconcileJob.transforms":
+        "the reference's PK transforms (R:265-277); reconcile-keys takes no "
+        "--mapping, so the CLI cannot reach them yet",
+}
+
+
+def _defaulted_params(fn: ast.FunctionDef, bound: bool):
+    """(name, position) of each parameter of ``fn`` that has a default;
+    the position counts the arguments a caller passes (``self`` is not
+    one when ``bound``) and is None for a keyword-only parameter."""
+    a = fn.args
+    pos = [p.arg for p in a.posonlyargs + a.args][1 if bound else 0:]
+    first = len(pos) - len(a.defaults)
+    yield from ((p, i) for i, p in enumerate(pos) if i >= first)
+    yield from ((k.arg, None) for k, d in zip(a.kwonlyargs, a.kw_defaults)
+                if d is not None)
+
+
+def _engine_options():
+    """(qualified name, called name, parameter, position) of each
+    defaulted parameter of a public function or method of ENGINE. A
+    class's ``__init__`` is called, and qualified, under the class
+    name."""
+    for mod in ENGINE:
+        with open(_module_file(os.path.join(ROOT, PKG), mod.split("."))) as f:
+            tree = ast.parse(f.read())
+        for node in tree.body:
+            fns = []
+            if isinstance(node, ast.FunctionDef):
+                fns.append((node.name, node.name, node, False))
+            elif isinstance(node, ast.ClassDef):
+                for m in node.body:
+                    if not isinstance(m, ast.FunctionDef):
+                        continue
+                    bound = not any(getattr(d, "id", None) == "staticmethod"
+                                    for d in m.decorator_list)
+                    if m.name == "__init__":
+                        fns.append((node.name, node.name, m, bound))
+                    else:
+                        fns.append((f"{node.name}.{m.name}", m.name, m,
+                                    bound))
+            for qual, called, fn, bound in fns:
+                if any(part.startswith("_") for part in qual.split(".")):
+                    continue
+                for param, position in _defaulted_params(fn, bound):
+                    yield f"{mod}.{qual}.{param}", called, param, position
+
+
+def _production_calls() -> dict[str, list[ast.Call]]:
+    """Every call in the production files, by the name called: the
+    ENTRY_POINTS files and the package, less its TEST_ONLY modules."""
+    files = _entry_files()
+    for d, _, names in os.walk(os.path.join(ROOT, PKG)):
+        files += [os.path.join(d, f) for f in names if f.endswith(".py")
+                  and _dotted(os.path.join(d, f)) not in TEST_ONLY]
+    calls: dict[str, list[ast.Call]] = {}
+    for path in files:
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                name = (getattr(node.func, "id", None)
+                        or getattr(node.func, "attr", None))
+                calls.setdefault(name, []).append(node)
+    return calls
+
+
+def _passes(call: ast.Call, param: str, position: int | None) -> bool:
+    """Whether ``call`` may pass ``param``: by keyword, by ``**``, or, for
+    a positional parameter, by position or ``*``."""
+    if any(k.arg in (param, None) for k in call.keywords):
+        return True
+    return position is not None and (
+        len(call.args) > position
+        or any(isinstance(a, ast.Starred) for a in call.args))
+
+
+def test_engine_options_have_a_production_caller():
+    """Each defaulted parameter of a public function or method of the
+    replication engine is passed, by keyword or by position, at some
+    production call site (the calls are matched by name); a value no
+    production caller sets is a constant, not an option. The exceptions
+    are OPTION_ALLOWLIST, and an entry that gains a production caller
+    leaves it."""
+    calls = _production_calls()
+    unpassed = sorted(
+        qual for qual, called, param, position in _engine_options()
+        if not any(_passes(c, param, position) for c in calls.get(called, ())))
+    assert unpassed == sorted(OPTION_ALLOWLIST)

@@ -40,12 +40,11 @@ def test_cdc_pipeline_full_cycle(spark, tables, tmp_path):
 
     captured = []
 
-    def sink(changes, batches):
+    def sink(tagged, counts, batches):
         # one call per cycle; per-tile facts come from the tile column
         per_tile: dict[int, dict[str, int]] = {}
-        for op, frame in (("insert", changes.inserts),
-                          ("delete", changes.deletes),
-                          ("update", changes.updates)):
+        for op in ("insert", "delete", "update"):
+            frame = tagged.filter(F.col("op") == op)
             # every row sits in the tile its key hashes to
             assert frame.filter(
                 F.col("tile") != tile_expr(frame, ["pk"], 4)).count() == 0
@@ -73,7 +72,8 @@ def test_cdc_pipeline_full_cycle(spark, tables, tmp_path):
     assert total_loaded == pipe.pk_source().count()
     assert len(captured) == 1  # sink invoked once per cycle
     batches1, per_tile1 = captured[0]
-    assert batches1 == {t: pipe.store.current_snapshot_id(t) for t in range(4)}
+    assert batches1 == {t: snaps[-1].id
+                        for t, snaps in pipe.store.all_snapshots().items()}
     assert sunk(per_tile1) == by_tile(stats1)
 
     # cycle 2: mutate source (mod 10 -> 7), expect delta
@@ -171,14 +171,14 @@ def test_lost_race_orphans_never_expire_the_consumed_snapshot(
     rival = pipe.pk_source().withColumn("tile", F.lit(0))
     for _ in range(2):
         pipe.store.write_snapshots(rival, [0])
-    live = pipe.store.snapshots(0)
+    live = pipe.store.all_snapshots()[0]
     assert [s.id for s in live] == [1, 2, 3, 4]
     check(pipe.replicate(), 10, 7)  # consumes snapshot 2
     for old_mod, new_mod in ((7, 3), (3, 11)):
         state["mod"] = new_mod
         assert sorted(pipe.discover()) == [0, 1, 2, 3]
         check(pipe.replicate(), old_mod, new_mod)
-    assert [s.id for s in pipe.store.snapshots(0)] == [5, 6]
+    assert [s.id for s in pipe.store.all_snapshots()[0]] == [5, 6]
     assert not any(os.path.exists(s.path) for s in live)
 
 
@@ -377,10 +377,8 @@ def test_cli_sink_delete_failure_raises_after_upserts(spark, tmp_path,
 def test_cli_sink_skips_writes_without_rows(spark, tmp_path, monkeypatch):
     """The CLI sink starts no write the runner's counts give no rows: the
     historical load writes no deletes, and a delete-only cycle neither
-    hydrates (scans the source) nor writes upserts. Without counts both
-    writes run."""
+    hydrates (scans the source) nor writes upserts."""
     from cql_replicator_spark import transform
-    from cql_replicator_spark.diff import changeset_from_tagged
     from cql_replicator_spark.sinks import parquet_sink
 
     real_write = parquet_sink.write_tile_batches
@@ -418,12 +416,6 @@ def test_cli_sink_skips_writes_without_rows(spark, tmp_path, monkeypatch):
     assert writes == ["deletes"] and scans == []
     assert _target_keys(spark, state, "delete") == [0, 10, 20, 30]
 
-    writes.clear()
-    tagged = spark.createDataFrame([("delete", 0, 5, 50)],
-                                   "op string, tile int, pk long, ts long")
-    pipe.sink(changeset_from_tagged(tagged), {0: 99})
-    assert sorted(writes) == ["deletes", "upserts"]
-
 
 def test_discovery_commits_empty_tile(spark, tables, tmp_path):
     """A due tile no key hashes to still rotates: a schema-correct empty
@@ -431,10 +423,11 @@ def test_discovery_commits_empty_tile(spark, tables, tmp_path):
     pipe, state = _make_pipeline(spark, tables, tmp_path)
     pipe.tile_of = lambda df: F.pmod(F.col("pk"), F.lit(3))  # tile 3 empty
     assert sorted(pipe.discover()) == [0, 1, 2, 3]
-    snap = pipe.store.snapshots(3)[-1]
+    snap = pipe.store.all_snapshots()[3][-1]
     assert snap.count == 0
     empty = pipe.store.read_snapshot(spark, 3, snap.id)
-    full = pipe.store.read_snapshot(spark, 0, pipe.store.current_snapshot_id(0))
+    full = pipe.store.read_snapshot(spark, 0,
+                                    pipe.store.all_snapshots()[0][-1].id)
     assert empty.count() == 0 and empty.schema == full.schema
     stats = {s.tile: s for s in pipe.replicate()}
     assert stats[3].primaryKeys == 0
@@ -455,10 +448,10 @@ def test_replicate_mixes_historical_and_delta_tiles(spark, tables, tmp_path):
 
     sunk = {}
     pipe, state = _make_pipeline(spark, tables, tmp_path)
-    pipe.sink = lambda changes, batches: sunk.update(
+    pipe.sink = lambda tagged, counts, batches: sunk.update(
         batches=batches,
-        counts={(r["tile"], r["op"]): r["count"] for r in changes
-                .tagged_union().groupBy("tile", "op").count().collect()})
+        counts={(r["tile"], r["op"]): r["count"] for r in
+                tagged.groupBy("tile", "op").count().collect()})
 
     assert sorted(pipe.discover()) == [0, 1, 2, 3]
     # consume tiles 0 and 1 only; 2 and 3 keep their unconsumed snapshot

@@ -179,11 +179,12 @@ def test_bulk_replicate_to_parquet(tables, spark, tmp_path):
                       "o_orderkey")
     hydrated = hydrate_changes(orders, keys, ["o_orderkey"],
                                carry=("tile", "op"))
+    n = pks.count()
     write_tile_batches(hydrated, str(tmp_path), "tpch", "orders", {0: 1},
-                       unique_by=["o_orderkey"])
+                       {0: {"insert": n}}, unique_by=["o_orderkey"])
     back = spark.read.parquet(
         str(tmp_path / "tpch" / "orders" / "0" / "insert" / "snap-00000001"))
-    assert back.count() == pks.count()
+    assert back.count() == n
     assert set(back.columns) == set(orders.columns)
 
 
@@ -203,9 +204,12 @@ def test_write_tile_batches_one_file_per_tile_op_and_retry_overwrites(
                         .otherwise("update")))
     hydrated = hydrate_changes(orders, keys.unionByName(keys), ["o_orderkey"],
                                carry=("tile", "op"))
+    counts: dict[int, dict[str, int]] = {}
+    for r in keys.groupBy("tile", "op").count().collect():
+        counts.setdefault(r["tile"], {})[r["op"]] = r["count"]
     for _ in range(2):
         write_tile_batches(hydrated, str(tmp_path), "tpch", "orders",
-                           {0: 7, 1: 9}, unique_by=["o_orderkey"])
+                           {0: 7, 1: 9}, counts, unique_by=["o_orderkey"])
     base = tmp_path / "tpch" / "orders"
     dirs = sorted(os.path.relpath(d, base)
                   for d in glob.glob(str(base / "*" / "*" / "*")))
@@ -244,8 +248,7 @@ def test_write_tile_batches_splits_large_batches_by_count(
         hydrated = hydrate_changes(orders, keys.unionByName(keys),
                                    ["o_orderkey"], carry=("tile", "op"))
         write_tile_batches(hydrated, str(tmp_path), "tpch", "orders",
-                           {0: 1, 1: 1}, unique_by=["o_orderkey"],
-                           counts=counts)
+                           {0: 1, 1: 1}, counts, unique_by=["o_orderkey"])
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
@@ -284,7 +287,8 @@ def test_write_tile_batches_sweeps_a_killed_writers_staging(
     keys = (tables["orders"].select("o_orderkey").limit(5)
             .select(F.lit(0).alias("tile"), F.lit("delete").alias("op"),
                     "o_orderkey"))
-    write_tile_batches(keys, str(tmp_path), "tpch", "orders", {0: 1})
+    write_tile_batches(keys, str(tmp_path), "tpch", "orders", {0: 1},
+                       {0: {"delete": 5}})
     assert not os.path.exists(dead)
     assert os.path.isdir(live)
     assert sorted(os.listdir(base)) == ["0", os.path.basename(live)]
