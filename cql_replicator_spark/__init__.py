@@ -1,9 +1,9 @@
 """cql_replicator_spark — a PySpark-native analytics/replication engine.
 
 A from-scratch rebuild of the *capabilities* of aws-samples/cql-replicator
-(reference at /root/reference) expressed Spark-first: snapshot-diff CDC
-(tiling -> PK snapshots -> anti-join diffs -> bulk hydration), batched
-resilient sinks with DLQ, a ledger state machine, reconciliation, plus an
+expressed Spark-first: snapshot-diff CDC (tiling -> PK snapshots ->
+anti-join diffs -> bulk hydration), a batched resilient CQL sink, a
+ledger state machine, reconciliation, plus an
 extended large-scale data-pipeline surface (dedup, similarity search,
 text analysis, multimodal plumbing).
 

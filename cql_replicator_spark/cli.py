@@ -1,11 +1,11 @@
 """Control-plane CLI — the `cqlreplicator` command surface, Spark-first.
 
 Mirrors the reference's bash orchestrator dispatch (glue/bin/cqlreplicator
-C:1431-1710: run / stats / request-stop / reconcile-keys, plus DLQ
-replay) against this engine's offline-testable wiring: a parquet source
-table replicated to a parquet target through the tiling -> snapshot ->
-ledger -> diff -> bulk-hydration pipeline. On a cluster the same
-commands run under spark-submit; only the source/sink factories change.
+C:1431-1710: run / stats / request-stop / reconcile-keys) against this
+engine's offline-testable wiring: a parquet source table replicated to
+a parquet target through the tiling -> snapshot -> ledger -> diff ->
+bulk-hydration pipeline. On a cluster the same commands run under
+spark-submit; only the source/sink factories change.
 
     python -m cql_replicator_spark.cli run --source /data/orders \\
         --pk o_orderkey --ts-col updated_at --workdir /state \\
@@ -116,7 +116,6 @@ def _pipeline(spark, args):
         ledger=Ledger(os.path.join(args.workdir, "ledger.json")),
         stats=StatsStore(os.path.join(args.workdir, "stats")),
         total_tiles=args.tiles,
-        ts_col="ts",
         sink=sink,
     )
 
@@ -253,25 +252,6 @@ def cmd_plan_capacity(args) -> int:
     return 0
 
 
-def cmd_replay_dlq(args) -> int:
-    """Replay dead-lettered ops through an idempotent executor. Offline,
-    the executor re-appends payloads to a JSON-lines file; on a cluster it
-    re-executes CQL/DynamoDB statements (K:327-354)."""
-    from .sinks.dlq import DeadLetterQueue
-    table = args.table or "default"
-    dlq = DeadLetterQueue(os.path.join(args.workdir, "dlq"), KEYSPACE, table)
-    replayed = 0
-    out_path = os.path.join(args.workdir, f"dlq-replayed-{table}.jsonl")
-    with open(out_path, "a") as sink_file:
-        def executor(payload: dict) -> None:
-            sink_file.write(json.dumps(payload) + "\n")
-        for tile in range(args.tiles):
-            for op in ("insert", "update", "delete"):
-                replayed += dlq.replay(tile, op, executor)
-    print(json.dumps({"replayed": replayed, "out": out_path}))
-    return 0
-
-
 def cmd_compact(args) -> int:
     """Bin-pack a fragmented parquet directory (the maintenance half of
     the size-controlled writer: 2-minute incremental backups accrete
@@ -387,11 +367,6 @@ def main(argv: list[str] | None = None) -> int:
     sp.add_argument("--pk", required=True)
     sp.add_argument("--sample-size", type=int, default=100)
     sp.set_defaults(fn=cmd_reconcile)
-
-    sp = sub.add_parser("replay-dlq", help="replay dead-lettered operations")
-    common(sp, source=False)
-    sp.add_argument("--table", default=None)
-    sp.set_defaults(fn=cmd_replay_dlq)
 
     sp = sub.add_parser("compact",
                         help="bin-pack a fragmented parquet dir by bytes")

@@ -8,8 +8,6 @@ PrimaryKeyReconciliation R:127-279, which is the strictest of the four:
   * duplicate transform target columns are an error
   * keepSource=true requires an alias (else the source column would be
     silently clobbered)
-  * effective primary key = declared PK with transformed columns
-    renamed to their alias (R:265-277)
   * every key must name a field this engine reads: an unknown key at
     any level is an error naming its dotted path (``replication.x``),
     never a silently ignored setting
@@ -51,30 +49,14 @@ class Transformation:
 class Replication:
     allColumns: bool = True
     columns: list[str] = field(default_factory=list)
-    useMaterializedView: str | None = None
     pointInTime: PointInTime = field(default_factory=PointInTime)
     filterExpression: str | None = None  # arbitrary Spark-SQL expr (K:1849-1853)
-    writetimeColumns: list[str] = field(default_factory=list)  # -> greatest(writetime(..)) K:381-384
     transformations: list[Transformation] = field(default_factory=list)
 
 
 @dataclass
-class ReadConfig:
-    # Source read tuning defaults (K:76-77)
-    splitSizeInMB: int = 64
-    concurrentReads: int = 32
-    fetchSizeInRows: int = 500
-    consistencyLevel: str = "LOCAL_ONE"
-    readTimeoutMS: int = 120000
-    queryRetryCount: int = 180
-    # Backpressure: connector-level read throttle
-    # (spark.cassandra.input.readsPerSec — R:501/558); None = unthrottled.
-    readsPerSec: int | None = None
-
-
-@dataclass
 class WriteConfig:
-    # Batched-write limits of the row-path sinks (K:74, D:84). Not a
+    # Batched-write limits of the ``cql`` data source (K:74). Not a
     # JSON_MAPPING key: the CLI's bulk parquet target batches by file.
     maxStatementsPerBatch: int = 29
     maxBatchBytes: int = 1024 * 1024
@@ -87,7 +69,6 @@ class WriteConfig:
 @dataclass
 class JsonMapping:
     replication: Replication = field(default_factory=Replication)
-    read: ReadConfig = field(default_factory=ReadConfig)
     udtConversion: bool = False
 
 
@@ -152,7 +133,6 @@ def resolve(raw: dict) -> JsonMapping:
 
     return JsonMapping(
         replication=rep,
-        read=_build(ReadConfig, raw.get("read", {}), "read"),
         udtConversion=raw.get("udtConversion", False),
     )
 
@@ -162,28 +142,23 @@ def resolve_b64(encoded: str) -> JsonMapping:
     return resolve(json.loads(base64.b64decode(encoded)))
 
 
-def effective_pk(pk_cols: list[str], transforms: list[Transformation]) -> list[str]:
-    """Declared PK with transformed columns renamed to their alias (R:265-277)."""
-    renames = {t.column: t.alias for t in transforms if t.alias and not t.keepSource}
-    return [renames.get(c, c) for c in pk_cols]
-
-
 # -- sizing calculus ----------------------------------------------------
 
-def calculate_workers(
-    wcu_traffic: int,
-    tiles: int,
-    rows_per_sec: int = 1000,
-) -> tuple[str, int]:
+# rows per second one tile replicates, the reference's sizing rate
+# (C:1402-1426)
+TILE_ROWS_PER_SEC = 1000
+
+
+def calculate_workers(wcu_traffic: int, tiles: int) -> tuple[str, int]:
     """Worker-sizing calculus (glue/bin/cqlreplicator C:1402-1426):
     given the target's provisioned write throughput (WCU/s) and the
     tile count, pick the worker type and count so aggregate replication
-    throughput (rows_per_sec × tiles per worker-ish unit) matches the
-    budget. Returns (worker_type, workers); a result below 2 is bumped
-    by one (the reference's exact arithmetic, quirks included)."""
+    throughput (TILE_ROWS_PER_SEC × tiles per worker-ish unit) matches
+    the budget. Returns (worker_type, workers); a result below 2 is
+    bumped by one (the reference's exact arithmetic, quirks included)."""
     if wcu_traffic <= 0:
         raise ConfigError("wcu_traffic must be positive")
-    f = rows_per_sec * tiles
+    f = TILE_ROWS_PER_SEC * tiles
     if wcu_traffic <= 10000:
         worker_type, k = "G.025X", -1
     else:

@@ -19,10 +19,10 @@ When the table has no writetime column the reference sets ts=lit(0)
 projection does the same without ``--ts-col``.
 
 Scale note: ``_tag_changes`` is the one full-outer PK join that the
-tagged diff, the CDC envelope, counter increments (counters.py) and
-IVM deltas (ivm.py) share, so each scans a snapshot once and shuffles
-it once; at 100 TB per-tile snapshots this is the one unavoidable
-shuffle, and tiling keeps each join to 1/N of the key space.
+tagged diff, the CDC envelope and IVM deltas (ivm.py) share, so each
+scans a snapshot once and shuffles it once; at 100 TB per-tile
+snapshots this is the one unavoidable shuffle, and tiling keeps each
+join to 1/N of the key space.
 ``compute_changes`` keeps the reference's three-join form as the
 reference the tests compare against.
 """
@@ -93,7 +93,6 @@ def compute_changes_tagged(
     curr: DataFrame,
     prev: DataFrame,
     pk_cols: list[str],
-    ts_col: str = TS,
 ) -> DataFrame:
     """Single-pass diff: ``(op, pk..., ts)`` rows from one full-outer
     join (``_tag_changes``).
@@ -103,9 +102,9 @@ def compute_changes_tagged(
     formulation's 6 scans and 3 shuffles collapse to 2 scans and 1
     shuffle per side. Deletes carry prev's ts, inserts/updates curr's.
     """
-    ts = (F.when(F.col("op") == "delete", F.col(f"__p_{ts_col}"))
-          .otherwise(F.col(f"__c_{ts_col}")).alias(ts_col))
-    return _tag_changes(curr, prev, pk_cols, [ts_col]).select(
+    ts = (F.when(F.col("op") == "delete", F.col(f"__p_{TS}"))
+          .otherwise(F.col(f"__c_{TS}")).alias(TS))
+    return _tag_changes(curr, prev, pk_cols, [TS]).select(
         "op", *pk_cols, ts)
 
 

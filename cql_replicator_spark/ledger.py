@@ -55,7 +55,7 @@ it can never re-run an already-marked one (replication_plan returns
 None) and never skip one (the unmarked curr stays consumable). The
 redo carries the identical (ks, tbl, tile, curr-location) key, so an
 idempotent sink keyed by it — every sink in this repo that replays
-(DLQ, parquet overwrite-by-snapshot, CQL upsert) — dedups the pair to
+(parquet overwrite-by-snapshot, CQL upsert) — dedups the pair to
 effectively-once. Pinned deterministically by
 tests/test_ledger_race.py::test_journal_before_mark_residual_bounded
 and at random kill instants by the SIGKILL chaos suite's invariant 3.

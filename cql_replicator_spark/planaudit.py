@@ -1,4 +1,4 @@
-"""Serial-funnel plan detectors + the sink-input gate.
+"""Serial-funnel plan detectors.
 
 Three detectors recognize the data-proportional single-task shapes in a
 formatted physical plan (the shapes the r12-r14 verdicts kept finding
@@ -13,24 +13,9 @@ hiding one layer below each round's gates):
 
 ``tools/explain_audit.py`` runs them over every registered lane's
 returned plan AND every SQL execution the lane triggers while building
-(PLANS.md markers, gated by tests/test_oracle.py). That audit surface
-still has one blind spot: ``df.foreachPartition`` / RDD-action sinks
-(sinks/cql_sink.py, counters.py, sinks/opensearch_sink.py) run as RDD
-jobs with NO SQL execution, invisible to the status-store capture. A
-caller that funneled a change-set through coalesce(1) before a sink
-write would serialize the entire write through one task with no gate
-seeing it — exactly the shape found hiding in r13 (staging writes) and
-r14 (snapshot writes). ``guard_sink_input`` closes that last
-layer: every RDD-action sink statically audits its input frame's plan
-with the same three detectors at call time and fails loud.
-
-Why static: an RDD job reports only partition counts, and a LEGITIMATE
-small frame may well have one partition (a single-file scan, a tiny
-LocalTableScan) — partition count alone cannot tell a small input from
-a funneled one. The static plan can: a Coalesce(1)/SinglePartition/
-global-Window NODE is single-task at ANY data volume, while a
-naturally-narrow source stays unflagged. Same reasoning as the static
-exchange detector (see single_partition_exchange_args).
+(PLANS.md markers, gated by tests/test_oracle.py). No package write
+runs as an RDD action: each one, the ``cql`` data source's included,
+is a SQL execution, so that audit sees it.
 """
 
 from __future__ import annotations
@@ -360,78 +345,3 @@ def action_marks(plans: list[str]) -> list[str]:
         for a in single_task_coalesce_args(ap):
             marks.add(f"{ACTION_PREFIX}{COALESCE_ONE_MARK} {a}")
     return sorted(_EXPR_ID.sub("#N", m) for m in marks)
-
-
-# ---------------------------------------------------------------------------
-# The RDD-action sink gate.
-# ---------------------------------------------------------------------------
-
-class SerialSinkInputError(RuntimeError):
-    """A frame fed to an RDD-action sink carries a serial-funnel plan
-    node — the entire sink write would run as one task."""
-
-
-def formatted_plan(df) -> str:
-    """Formatted explain string of a DataFrame's physical plan (static —
-    builds the plan, executes nothing)."""
-    mode = df.sparkSession._jvm.org.apache.spark.sql.execution \
-        .ExplainMode.fromString("formatted")
-    return df._jdf.queryExecution().explainString(mode)
-
-
-def serial_funnel_marks(plan: str) -> list[str]:
-    """All three detectors over one formatted plan, as marker lines."""
-    marks = [f"{GLOBAL_WINDOW_MARK} {a}" for a in global_window_args(plan)]
-    marks += [f"{SINGLE_PARTITION_MARK} {a}"
-              for a in single_partition_exchange_args(plan)]
-    marks += [f"{COALESCE_ONE_MARK} {a}"
-              for a in single_task_coalesce_args(plan)]
-    return marks
-
-
-def guard_sink_input(df, site: str,
-                     max_serial_bytes: int = 256 << 20) -> None:
-    """Fail loud when a frame about to drive an RDD-action sink
-    (``foreachPartition`` row writers) carries a serial-funnel node:
-    the sink's RDD job inherits the frame's partitioning, so a
-    coalesce(1)/repartition(1)/global-Window input serializes the
-    ENTIRE write through one task — invisible to the SQL-execution
-    audit because RDD jobs produce no SQL execution.
-
-    Static by design (see module docstring): a naturally-narrow small
-    frame (single-file scan, LocalTableScan) passes — only an explicit
-    funnel NODE is a ban, because that node is single-task at any data
-    volume. A caller that genuinely wants a serial write must
-    materialize the funnel first (write + re-read), which routes the
-    write through the SQL-execution audit where the coalesce gate can
-    see and whitelist it.
-
-    Size complement (r15 verdict): a frame that is NATURALLY planned
-    as one partition — one giant unsplittable file — carries no funnel
-    node yet still serializes the write. Small 1-partition frames are
-    legitimate, so the residual gate is estimate-based: 1 planned
-    partition AND optimizedPlan stats >= ``max_serial_bytes`` raises.
-    The default (256 MiB) is comfortably above any frame that SHOULD
-    write serially and far below a partition that would stall a sink."""
-    marks = serial_funnel_marks(formatted_plan(df))
-    if marks:
-        raise SerialSinkInputError(
-            f"{site}: sink input frame carries a serial-funnel plan node "
-            f"— the foreachPartition write would run as ONE task. "
-            f"Remove the funnel (or salt/repartition the frame); flagged: "
-            + "; ".join(m[:160] for m in marks))
-    try:
-        n_parts = df.rdd.getNumPartitions()  # plan-only, runs no job
-    except Exception:  # noqa: BLE001 - non-convertible frames stay
-        return          # funnel-gated only
-    if n_parts != 1:
-        return
-    size = int(df._jdf.queryExecution().optimizedPlan()
-               .stats().sizeInBytes())
-    if size >= max_serial_bytes:
-        raise SerialSinkInputError(
-            f"{site}: sink input frame is planned as ONE partition with "
-            f"an optimizer size estimate of {size} bytes "
-            f"(>= {max_serial_bytes}) — a naturally-narrow giant input "
-            f"(e.g. one unsplittable file) would serialize the whole "
-            f"write through one task. repartition() the frame first.")

@@ -2591,7 +2591,7 @@ ORDER BY p.cnt DESC, p.user_id LIMIT 10
     doc="Hot-key profiler: the top-10 heaviest join/shuffle keys with "
         "their row share and skew factor (count / mean-count) — the "
         "diagnostic that decides whether a key needs salting "
-        "(skew.salted_shuffle) or AQE skew-join handles it. One "
+        "(skew.salted_join) or AQE skew-join handles it. One "
         "map-side-combined groupBy, a single-row totals frame joined "
         "by broadcast cross, TakeOrdered top-k — the table never "
         "funnels through one task",

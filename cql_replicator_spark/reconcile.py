@@ -6,8 +6,8 @@ partial report and a distinct exit code (R:1031-1044, 1882-1920):
 
     source_scan -> target_scan -> diff -> report
 
-  * scans project the effective PK (post-transform, R:265-277), add the
-    tile/group column, and persist a Parquet snapshot (R:1922-1997)
+  * scans project the PK, add the tile/group column, and persist a
+    Parquet snapshot (R:1922-1997)
   * schema reconciliation: ordered (name,type) equality of the two PK
     projections, exit 4/5 on mismatch (R:281-372, R:1688-1726)
   * diff: distinct counts, anti-joins both directions, intersection,
@@ -22,15 +22,13 @@ from __future__ import annotations
 import json
 import os
 import time
-from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .config import Transformation
 from .tiling import assign_tiles
-from .transform import apply_transformations, fingerprint_schema
+from .transform import fingerprint_schema
 
 # Exit-code contract (R:1031-1044)
 EXIT_OK = 0
@@ -87,7 +85,6 @@ class ReconcileJob:
         pk_cols: list[str],
         total_tiles: int = 4,
         sample_size: int = 100,
-        transforms: list[Transformation] | None = None,
     ):
         if not (1 <= total_tiles <= 1024):
             raise ReconcileError(f"TOTAL_TILES {total_tiles} outside [1,1024]",
@@ -100,37 +97,32 @@ class ReconcileJob:
         self.pk_cols = pk_cols
         self.total_tiles = total_tiles
         self.sample_size = sample_size
-        self.transforms = transforms or []
 
     # -- phases ------------------------------------------------------------
     def _scan(self, df: DataFrame, which: str) -> str:
-        """Project effective PKs (+ transforms) + group column; persist a
-        Parquet snapshot as the inter-phase IR (R:1922-1997)."""
-        # Source rows get the PK transforms applied; the target already
-        # stores transformed keys — both sides end at the effective PK
-        # (alias-renamed) column set (R:265-277).
-        projected = apply_transformations(df, self.transforms) if which == "source" else df
-        from .config import effective_pk
-        eff = effective_pk(self.pk_cols, self.transforms)
-        missing = [c for c in eff if c not in projected.columns]
+        """Project the PKs + group column; persist a Parquet snapshot as
+        the inter-phase IR (R:1922-1997)."""
+        missing = [c for c in self.pk_cols if c not in df.columns]
         if missing:
             raise ReconcileError(
                 f"{which} missing PK columns {missing}",
                 EXIT_SOURCE_SCHEMA_MISMATCH if which == "source" else EXIT_TARGET_SCHEMA_MISMATCH,
                 f"{which}_scan")
-        out = assign_tiles(projected.select(*eff), eff, self.total_tiles, tile_col="group")
+        out = assign_tiles(df.select(*self.pk_cols), self.pk_cols,
+                           self.total_tiles, tile_col="group")
         path = os.path.join(self.workdir, f"{which}_snapshot")
         out.repartition(self.total_tiles, F.col("group")).write.mode("overwrite").parquet(path)
         return path
 
-    def _diff(self, src_path: str, trg_path: str, eff_pk: list[str]) -> dict:
+    def _diff(self, src_path: str, trg_path: str) -> dict:
         """Distinct counts + anti-joins + intersection + ordered samples,
         with write-verify-retry on the persisted diff (R:639-739)."""
-        src = self.spark.read.parquet(src_path).dropDuplicates(eff_pk)
-        trg = self.spark.read.parquet(trg_path).dropDuplicates(eff_pk)
-        missing = src.join(trg, eff_pk, "left_anti")   # source ∖ target
-        extra = trg.join(src, eff_pk, "left_anti")     # target ∖ source
-        inter = src.join(trg, eff_pk, "left_semi")
+        pk = self.pk_cols
+        src = self.spark.read.parquet(src_path).dropDuplicates(pk)
+        trg = self.spark.read.parquet(trg_path).dropDuplicates(pk)
+        missing = src.join(trg, pk, "left_anti")   # source ∖ target
+        extra = trg.join(src, pk, "left_anti")     # target ∖ source
+        inter = src.join(trg, pk, "left_semi")
 
         diff_path = os.path.join(self.workdir, "diff_snapshot")
         expected = None
@@ -142,7 +134,7 @@ class ReconcileJob:
         else:
             raise ReconcileError("diff write verification failed", EXIT_PHASE_FAILURE, "diff")
 
-        order = [F.asc_nulls_last(c) for c in eff_pk]  # deterministic samples R:684-691
+        order = [F.asc_nulls_last(c) for c in pk]  # deterministic samples R:684-691
         return {
             "source_count": src.count(),
             "target_count": trg.count(),
@@ -159,8 +151,6 @@ class ReconcileJob:
     def run(self, source: DataFrame, target: DataFrame) -> ReconcileResult:
         t0 = time.time()
         phase = "bootstrap"
-        from .config import effective_pk
-        eff = effective_pk(self.pk_cols, self.transforms)
         try:
             phase = "source_scan"
             src_path = self._scan(source, "source")
@@ -168,15 +158,15 @@ class ReconcileJob:
             trg_path = self._scan(target, "target")
 
             phase = "schema_reconciliation"
-            s_schema = self.spark.read.parquet(src_path).select(*eff).schema
-            t_schema = self.spark.read.parquet(trg_path).select(*eff).schema
+            s_schema = self.spark.read.parquet(src_path).select(*self.pk_cols).schema
+            t_schema = self.spark.read.parquet(trg_path).select(*self.pk_cols).schema
             if not schemas_match_ordered(s_schema, t_schema):
                 raise ReconcileError(
                     f"PK schema mismatch: {s_schema.simpleString()} vs {t_schema.simpleString()}",
                     EXIT_TARGET_SCHEMA_MISMATCH, phase)
 
             phase = "diff"
-            d = self._diff(src_path, trg_path, eff)
+            d = self._diff(src_path, trg_path)
 
             phase = "report"
             result = ReconcileResult(

@@ -32,8 +32,8 @@ tile, then makes one ledger mark for every replicated tile. A delta
 cycle of N tiles thus replaces 3 + N state files.
 
 The source is any callable returning a DataFrame with the PK columns
-(+ optional ts): a Cassandra connector reader in production, parquet
-fixtures in tests — the engine core is source-agnostic (SURVEY §7.1).
+and the change column ``ts`` (``diff.TS``): the CLI reads parquet, and
+the engine core is source-agnostic (SURVEY §7.1).
 """
 
 from __future__ import annotations
@@ -137,7 +137,6 @@ class CdcPipeline:
     ledger: Ledger
     stats: StatsStore
     total_tiles: int = 4
-    ts_col: str = "ts"
     # (tagged, counts, batches), called once per replication cycle:
     # tagged is every due tile's changes as one frame with ``tile`` and
     # ``op`` columns (the persisted diff, plus the historical tiles'
@@ -229,7 +228,7 @@ class CdcPipeline:
                         self.spark, {t: p["curr"] for t, p in delta.items()}),
                     self.store.read_snapshots(
                         self.spark, {t: p["prev"] for t, p in delta.items()}),
-                    ["tile", *self.pk_cols], self.ts_col).persist()
+                    ["tile", *self.pk_cols]).persist()
                 for r in tagged.groupBy("tile", "op").count().collect():
                     counts[r["tile"]][r["op"]] = r["count"]
                 changes = tagged

@@ -1,28 +1,28 @@
-"""Resilient batched writer — the write-side core of every sink.
+"""Resilient batched writer — the write side of the ``cql`` data source
+(sinks/datasource.py).
 
-Reimplements the reference's FlushingSet (CQLReplicator.scala K:210-304
-for Keyspaces, D:355-458 for DynamoDB):
+Reimplements the reference's FlushingSet (CQLReplicator.scala K:210-304):
 
   * batches bounded by BOTH statement count and byte size
-    (<=29 statements / 1 MB per UNLOGGED BATCH — K:74, K:249-259;
-    <=24 per DynamoDB BatchWriteItem — D:84)
-  * exponential-backoff retry (64 attempts, 25 ms * 1.1^n for K;
-    doubling capped at 64 s for D — K:213-225, D:424-441)
-  * on a batch's final failure: fall back to per-item execution, and
-    items that still fail go to the dead-letter queue (K:283-299)
-  * write counters surfaced for stats (accumulator-equivalent)
+    (<=29 statements / 1 MB per UNLOGGED BATCH — K:74, K:249-259)
+  * exponential-backoff retry (64 attempts, 25 ms * 1.1^n — K:213-225)
+  * on a batch's final failure: fall back to per-item execution; the
+    first item that still fails on its own raises (the reference sends
+    it to a dead-letter queue, K:283-299), so the write task fails and
+    Spark retries it
+  * write counters surfaced for the task's commit message
 
 The executor is injected — a callable taking a list of items that may
-raise. Production executors wrap a CQL session / boto3 client created
-per partition; tests inject fakes. This runs inside foreachPartition
-on executors: everything here must be picklable and process-local.
+raise. A production executor wraps a CQL session created per write
+task; tests inject fakes. This runs inside Spark write tasks on
+executors: everything here must be picklable and process-local.
 """
 
 from __future__ import annotations
 
 import time
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from ..config import WriteConfig
 
@@ -40,13 +40,11 @@ class FlushingBatch:
         self,
         executor: Callable[[list], None],
         config: WriteConfig | None = None,
-        on_dead_letter: Callable[[object, Exception], None] | None = None,
         item_size: Callable[[object], int] = lambda it: len(str(it)),
         sleep: Callable[[float], None] = time.sleep,
     ):
         self.executor = executor
         self.cfg = config or WriteConfig()
-        self.on_dead_letter = on_dead_letter
         self.item_size = item_size
         self.sleep = sleep
         self.stats = BatchStats()
@@ -71,17 +69,14 @@ class FlushingBatch:
             self._execute_with_retry(batch)
             self.stats.items_ok += len(batch)
         except Exception:
-            # final batch failure -> per-item fallback + DLQ (K:283-299)
+            # final batch failure -> per-item fallback (K:283-299)
             for item in batch:
                 try:
                     self._execute_with_retry([item])
                     self.stats.items_ok += 1
-                except Exception as e:
+                except Exception:
                     self.stats.items_failed += 1
-                    if self.on_dead_letter is not None:
-                        self.on_dead_letter(item, e)
-                    else:
-                        raise
+                    raise
         self.stats.batches += 1
 
     def _execute_with_retry(self, batch: list) -> None:

@@ -1,40 +1,19 @@
-"""CQL target sink: statement builders + distributed writer.
+"""CQL statement builders for the ``cql`` data source (sinks/datasource.py).
 
 Statement construction mirrors the reference's row-by-row path:
   * INSERT INTO trg JSON '<doc>' [IF NOT EXISTS] [USING TIMESTAMP ts]
     [USING TTL n]  (processRowWithTimestamp K:1004-1026,
     processRowWithTTL K:1028-1060, read-before-write IF NOT EXISTS
     K:590-593)
-  * UPDATE trg SET c = c + delta WHERE pk...  for counters (K:930-935)
-  * DELETE with PK-transform awareness: hashed/aliased PK values are
-    recomputed for the WHERE clause (K:939-984)
-
-The writer distributes over df.foreachPartition with a per-partition
-lazily-created client (the reference's canonical pattern, K:861-873) —
-a real deployment injects a cassandra-driver session factory; tests
-inject a file-backed fake. Batching/retry/DLQ come from FlushingBatch.
-
-Scale note: rows are salted-shuffled before the write when requested
-(shuffleDf K:1152-1159) so a hot partition key doesn't serialize into
-one task's batch stream.
+  * DELETE FROM trg WHERE pk... (K:939-984)
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Callable
-from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from ..config import Transformation, WriteConfig
-from ..planaudit import guard_sink_input
 from ..types import escape_sql_string, render_cql_value
-from .batching import FlushingBatch
 
-
-# -- statement builders (pure) -------------------------------------------
 
 def insert_json_statement(
     target: str,
@@ -57,120 +36,10 @@ def insert_json_statement(
     return stmt
 
 
-def counter_update_statement(
-    target: str, counters: dict[str, int], where: dict[str, tuple],
-) -> str | None:
-    """UPDATE trg SET c=c+v WHERE pk=... (K:930-935). ``where`` maps
-    column -> (value, cql_type). Null deltas are dropped from the SET
-    clause (a null increment is a no-op, and ``c = c + None`` is not
-    CQL); if every delta is null, returns None — nothing to apply."""
-    live = {c: v for c, v in counters.items() if v is not None}
-    if not live:
-        return None
-    sets = ", ".join(
-        f"{c} = {c} + {render_cql_value(v, 'counter')}" for c, v in live.items())
+def delete_statement(target: str, pk_values: dict[str, tuple]) -> str:
+    """DELETE FROM trg WHERE pk=... (K:939-984). ``pk_values`` maps
+    column -> (value, cql_type)."""
     conds = " AND ".join(
-        f"{c} = {render_cql_value(v, t)}" for c, (v, t) in where.items())
-    return f"UPDATE {target} SET {sets} WHERE {conds}"
-
-
-def delete_statement(
-    target: str,
-    pk_values: dict[str, tuple],
-    transforms: list[Transformation] | None = None,
-) -> str:
-    """DELETE FROM trg WHERE pk=... with PK-transform awareness
-    (K:939-984): when a PK column was hashed/aliased on the way in, the
-    delete's WHERE clause must target the transformed column with the
-    recomputed value. ``pk_values`` maps source column -> (value, cql_type).
-    """
-    import hashlib
-
-    conds = []
-    tmap = {t.column: t for t in (transforms or [])}
-    for col, (val, typ) in pk_values.items():
-        t = tmap.get(col)
-        if t is None:
-            conds.append(f"{col} = {render_cql_value(val, typ)}")
-            continue
-        sval = str(val)
-        if t.rule == "md5":
-            hv = hashlib.md5(sval.encode()).hexdigest()
-        elif t.rule == "sha1":
-            hv = hashlib.sha1(sval.encode()).hexdigest()
-        elif t.rule == "sha256":
-            hv = hashlib.sha256(sval.encode()).hexdigest()
-        else:
-            raise ValueError(
-                f"delete under transform {t.rule!r} needs engine-side recompute; "
-                "use the DataFrame path (Spark hash/xxhash64 are JVM-side)")
-        conds.append(f"{t.alias or col} = '{hv}'")
-    return f"DELETE FROM {target} WHERE " + " AND ".join(conds)
-
-
-# -- distributed writer -----------------------------------------------------
-
-@dataclass
-class CqlWriterConfig:
-    target: str
-    write: WriteConfig
-    if_not_exists: bool = False
-    salt_shuffle: bool = False
-    salt_partitions: int = 0
-
-
-def salted_shuffle(df: DataFrame, num_partitions: int) -> DataFrame:
-    """Random-salt repartition (K:1152-1159): breaks hot-key clustering
-    before the write path so batches spread across tasks."""
-    return (
-        df.withColumn("__salt", F.rand(seed=42))
-        .repartition(num_partitions, F.col("__salt"))
-        .drop("__salt")
-    )
-
-
-def write_inserts(
-    df: DataFrame,
-    cfg: CqlWriterConfig,
-    executor_factory: Callable[[], Callable[[list[str]], None]],
-    dlq_factory: Callable[[], Callable[[object, Exception], None]] | None = None,
-    ts_col: str | None = None,
-    ttl_col: str | None = None,
-    acc_ok=None,
-    acc_failed=None,
-) -> None:
-    """Each row -> INSERT JSON statement -> batched resilient execution.
-
-    executor_factory/dlq_factory are invoked once per partition ON THE
-    EXECUTOR (lazy client init, K:869-873); they must be picklable.
-
-    acc_ok/acc_failed: optional Spark accumulators — each partition adds
-    its written/failed item counts on close, so the driver sees exact
-    executor-side totals (the accumulator half of the reference's
-    accumulator+TaskEnd-listener stats flush, K:1161-1215).
-    """
-    target, write_cfg, ine = cfg.target, cfg.write, cfg.if_not_exists
-    data_cols = [c for c in df.columns if c not in (ts_col, ttl_col)]
-    if cfg.salt_shuffle and cfg.salt_partitions > 1:
-        df = salted_shuffle(df, cfg.salt_partitions)
-
-    def process_partition(rows):
-        execute = executor_factory()
-        dead = dlq_factory() if dlq_factory else None
-        with FlushingBatch(execute, write_cfg, on_dead_letter=dead) as batch:
-            for row in rows:
-                d = row.asDict(recursive=True)
-                ts = d.pop(ts_col) if ts_col else None
-                ttl = d.pop(ttl_col) if ttl_col else None
-                doc = {k: d[k] for k in data_cols}
-                batch.add(insert_json_statement(target, doc, ts, ttl, ine))
-        if acc_ok is not None:
-            acc_ok.add(batch.stats.items_ok)
-        if acc_failed is not None:
-            acc_failed.add(batch.stats.items_failed)
-
-    # foreachPartition runs as an RDD job — no SQL execution, so the
-    # PLANS.md action audit cannot see a funneled input; gate it here
-    # (planaudit module docstring has the full story).
-    guard_sink_input(df, "write_inserts")
-    df.foreachPartition(process_partition)
+        f"{col} = {render_cql_value(val, typ)}"
+        for col, (val, typ) in pk_values.items())
+    return f"DELETE FROM {target} WHERE {conds}"

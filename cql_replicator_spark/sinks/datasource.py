@@ -3,12 +3,11 @@
 Spark 4's Python Data Source API lets the engine's batched statement
 path mount as a first-class V2 sink: register once
 (``spark.dataSource.register(CqlDataSource)``) and any DataFrame —
-batch or streaming — writes through the same
-statement-builder + FlushingBatch machinery as the foreachPartition
-path (`sinks/cql_sink.py`), but with Spark-managed task retry,
-per-task commit messages, and driver-side commit aggregation instead
-of hand-rolled accumulators. This supersedes the reference's row-path
-writer loop (persistToTarget K:861-1067) with the engine-idiomatic
+batch or streaming — writes through the statement builders
+(`sinks/cql_sink.py`) and FlushingBatch (`sinks/batching.py`), with
+Spark-managed task retry, per-task commit messages, and driver-side
+commit aggregation. This supersedes the reference's row-path writer
+loop (persistToTarget K:861-1067) with the engine-idiomatic
 formulation; statement text is identical.
 
 Transport: production injects a cassandra-driver session by
@@ -248,7 +247,7 @@ class CqlStatementLogReader(DataSourceReader):
     as scan parallelism (at 100 TB the log dir is an object-store
     prefix and this is the natural split unit). INSERT ... JSON
     payloads become rows; delete statements are skipped (replay of
-    the insert image — the DLQ/repair semantics). ``ts_col`` /
+    the insert image — the repair semantics). ``ts_col`` /
     ``ttl_col`` options surface USING TIMESTAMP/TTL as columns, the
     inverse of the writer's projection."""
 

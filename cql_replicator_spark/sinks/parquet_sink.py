@@ -17,8 +17,9 @@ own directory and renames into different ``{op}`` dirs.
 Write sizing carries the reference's maxRecordsPerFile 10,500,000 +
 snappy (writeWithSizeControl K:2224-2231). The write's width comes from
 the cycle's per-(tile, op) row counts (``ROWS_PER_FILE`` rows a file,
-up to the session's shuffle parallelism), where the reference coalesces to 32 MB files by a sampled row-size
-model (estimateAndCoalesce P:698-732; ``stats.estimate_partitions_for_write``).
+up to the session's shuffle parallelism), where the reference coalesces
+to 32 MB files by a sampled row-size model (estimateAndCoalesce
+P:698-732).
 
 Scale note: the changed-PK set is small relative to the table (that's
 the point of CDC), so the broadcast is the right strategy; past

@@ -1,9 +1,9 @@
 """Skew mitigation utilities.
 
 The reference's only skew tool is a random salt repartition before
-row-path writes (K:1152-1159, D:2114-2121) — kept in
-``sinks.batching.salted_shuffle``. For skewed JOIN keys at 100 TB this
-module adds the standard salt-replicate join: the skewed (big) side gets
+row-path writes (K:1152-1159, D:2114-2121); this engine has no row-path
+write to salt. For skewed JOIN keys at 100 TB this module adds the
+standard salt-replicate join: the skewed (big) side gets
 a random salt in [0, n); the small side is replicated n times with every
 salt value; the join key becomes (key, salt). A hot key's rows then
 spread over n shuffle partitions instead of hammering one reducer.

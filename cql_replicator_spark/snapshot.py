@@ -4,7 +4,8 @@ The reference persists each tile's PK set as an Apache Iceberg table
 (one Glue-Catalog table per tile, name scheme
 ``{catalog}.{ks}_db.{tbl}_tile_{n}_pk_snapshots`` — CQLReplicator.scala
 K:1220-1272) and time-travels between snapshot ids (K:1340-1349), with
-``expire_snapshots(retain_last=2)`` housekeeping (K:1278-1289).
+``expire_snapshots(retain_last=2)`` housekeeping (K:1278-1289); this
+store expires by the ledger's bound instead, inside each commit.
 
 This store keeps the same shape on plain Parquet, and it is the one
 snapshot format: each snapshot is an immutable directory
@@ -22,8 +23,8 @@ with a schema and an absolute path in each entry, or entries without a
 ``files`` list) are not read. The API mirrors Iceberg's:
 write-overwrite (one new snapshot per tile, any number of tiles in one
 partitioned write, with the expiry of each tile's snapshots before a
-given id in the same manifest write), read at snapshot (time travel),
-expire by count (any number of tiles in one manifest rewrite).
+given id in the same manifest write) and read at snapshot (time
+travel).
 
 Layout contract. A snapshot is the directory
 ``{root}/{ks}/{table}/tile={n}/snap-{id:08d}/`` holding the snapshot's
@@ -49,9 +50,9 @@ under one cross-process mutex per table, renames each tile's files to
 dir a crash can orphan in a tile is ``snap-{max id + 1}`` (renamed, not
 yet listed), and the next commit of that tile takes that id and removes
 the dir first: each tile heals itself, with no separate orphan sweep.
-Expiry, inside a commit (``keep_from``) or alone (``expire_snapshots``),
-runs under the same mutex: it removes the expired dirs, then writes the
-manifest once for every tile. A crash between the two leaves listed
+Expiry runs inside a commit (``keep_from``), under the same mutex: it
+removes the expired dirs, then the commit writes the manifest once for
+every tile. A crash between the two leaves listed
 entries whose dirs are gone; a commit's expiry only removes snapshots
 older than one the ledger marked consumed, which no replication plan
 reads again.
@@ -74,7 +75,6 @@ import json
 import os
 import shutil
 import time
-from collections.abc import Iterable
 from dataclasses import dataclass
 from functools import reduce
 
@@ -168,24 +168,17 @@ class SnapshotStore:
     def _abs_path(self, entry: dict) -> str:
         return os.path.join(self._table_dir(), entry["path"])
 
-    def _expire_oldest(self, entries: list[dict], n: int) -> list[dict]:
-        """Remove the dirs of the oldest ``n`` of one tile's ``entries``
-        and return the entries left, for the caller's manifest write."""
-        for e in entries[:n]:
-            shutil.rmtree(self._abs_path(e), ignore_errors=True)
-        return entries[n:]
-
     def _table_mutex(self):
         """Cross-process mutex serializing the manifest's
-        read-modify-write sections (the commit in write_snapshots, with
-        its expiry, and expire_snapshots). Without it two racing
+        read-modify-write section (the commit in write_snapshots, with
+        its expiry). Without it two racing
         discoverers — legal under the ledger's
         any-number-of-discovery-processes contract — read the same
         manifest, pick the SAME next snapshot id, rename
         onto one another's snap-{id} directory, and the last-write-wins
-        manifest swap silently drops the other's entry (and an expire
-        racing a writer drops the fresh entry). Same battle-tested lock
-        as the ledger (ledger.file_mutex). Writers stage their files
+        manifest swap silently drops the other's entry (and an expiring
+        commit racing a writer drops the fresh entry). Same
+        battle-tested lock as the ledger (ledger.file_mutex). Writers stage their files
         outside it and hold it only for the renames and manifest swap."""
         return file_mutex(self._manifest_path() + ".lock")
 
@@ -304,8 +297,11 @@ class SnapshotStore:
                     else:
                         os.makedirs(path)
                     if t in keep_from:
-                        entries = self._expire_oldest(entries, sum(
-                            e["id"] < keep_from[t] for e in entries))
+                        n = sum(e["id"] < keep_from[t] for e in entries)
+                        for e in entries[:n]:
+                            shutil.rmtree(self._abs_path(e),
+                                          ignore_errors=True)
+                        entries = entries[n:]
                     manifest["tiles"][str(t)] = entries + [entry]
                     out[t] = SnapshotInfo(new_id, entry["committed_at"],
                                           entry["count"], path)
@@ -451,32 +447,6 @@ class SnapshotStore:
             lambda a, b: a.unionByName(b, allowMissingColumns=True),
             [self.read_snapshot(spark, t, sid).withColumn("tile", F.lit(t))
              for t, sid in sorted(snapshot_ids.items())])
-
-    def expire_snapshots(self, tiles: int | Iterable[int],
-                         retain_last: int = 2) -> int:
-        """Drop all but the newest ``retain_last`` (at least 1)
-        snapshots of each of ``tiles`` (one tile or several; K:1278-1289):
-        their dirs go, then their manifest entries, in one manifest
-        rewrite. Returns #expired. The runner does not call this: its
-        discovery commit expires by the ledger's bound (``keep_from``),
-        which a count cannot express — a count keeps snapshots that lost
-        a discovery race and drops the consumed one they follow."""
-        if retain_last < 1:
-            raise ValueError(
-                f"expire_snapshots: retain_last must be >= 1, got {retain_last}")
-        tiles = [tiles] if isinstance(tiles, int) else list(tiles)
-        expired = 0
-        with self._table_mutex():
-            manifest = self._load_manifest()
-            for t in tiles:
-                entries = manifest["tiles"].get(str(t), [])
-                n = len(entries) - retain_last
-                if n > 0:
-                    manifest["tiles"][str(t)] = self._expire_oldest(entries, n)
-                    expired += n
-            if expired:
-                self._write_manifest(manifest)
-        return expired
 
     def all_snapshots(self) -> dict[int, list[SnapshotInfo]]:
         """Every tile's live snapshots, oldest first, from one manifest

@@ -113,19 +113,6 @@ def test_cli_reconcile_divergent_exits_3(spark, tmp_path, capsys):
     assert code == 3 and out["in_sync"] is False
 
 
-def test_cli_replay_dlq(tmp_path, capsys):
-    from cql_replicator_spark.sinks.dlq import DeadLetterQueue
-    work = str(tmp_path / "work")
-    dlq = DeadLetterQueue(os.path.join(work, "dlq"), "default", "orders")
-    dlq.persist(0, "insert", [{"stmt": "INSERT ...", "key": "1"}])
-    dlq.persist(1, "delete", [{"stmt": "DELETE ...", "key": "2"}])
-    code, out = _run(capsys, [
-        "replay-dlq", "--workdir", work, "--tiles", "2", "--table", "orders"])
-    assert code == 0 and out["replayed"] == 2
-    lines = open(out["out"]).read().strip().splitlines()
-    assert len(lines) == 2
-
-
 def test_cli_mapping_drives_pipeline(spark, tmp_path, capsys):
     """A JSON_MAPPING config file controls filter/projection/transforms of
     the replicated rows — the reference's declarative query surface."""

@@ -200,14 +200,14 @@ def test_snapshot_store_roundtrip(spark, tmp_path, stats_cols):
     # time travel
     back = store.read_snapshot(spark, 0, s1)
     assert {(r.pk, r.ts) for r in back.collect()} == {(1, 10), (2, 20)}
-    # expire keeps newest 1
-    assert store.expire_snapshots(0, retain_last=1) == 1
-    assert [s.id for s in store.all_snapshots()[0]] == [s2]
+    # a commit bounded at s2 expires every older snapshot of the tile
+    s3 = store.write_snapshots(df1.withColumn("tile", F.lit(0)), [0],
+                               stats_cols=stats_cols, keep_from={0: s2})[0].id
+    assert [s.id for s in store.all_snapshots()[0]] == [s2, s3]
     with pytest.raises(ValueError):
         store.read_snapshot(spark, 0, s1)
-    current = store.read_snapshot(spark, 0,
-                                  store.all_snapshots()[0][-1].id)
-    assert {(r.pk, r.ts) for r in current.collect()} == {(2, 21), (3, 30)}
+    kept = store.read_snapshot(spark, 0, s2)
+    assert {(r.pk, r.ts) for r in kept.collect()} == {(2, 21), (3, 30)}
 
 
 @pytest.mark.parametrize("stats_cols", _COMMIT_PATHS)
@@ -365,24 +365,11 @@ def test_manifest_stores_each_schema_once(spark, tmp_path):
     mixed = store.read_snapshots(spark, {0: second[0].id, 64: other})
     assert sorted((r.tile, r.pk, r.ts, r.note) for r in mixed.collect()) == [
         (0, k, 10 * k, None) for k in (0, 64, 128, 192)] + [(64, 7, None, "x")]
-    store.write_snapshot(df.filter("tile = 0").drop("tile"), tile=64)
-    assert store.expire_snapshots(64, retain_last=1) == 1
+    last = store.write_snapshot(df.filter("tile = 0").drop("tile"), tile=64)
+    store.write_snapshots(df.filter("tile = 0").withColumn("tile", F.lit(64)),
+                          [64], keep_from={64: last})
+    assert [s.id for s in store.all_snapshots()[64]] == [last, last + 1]
     assert len(store._load_manifest()["schemas"]) == 1
-
-
-def test_expire_snapshots_rejects_retain_last_below_one(spark, tmp_path):
-    """retain_last < 1 is an error that leaves the tile's snapshots as
-    they were: 0 would slice entries[-0:] (every entry) and expire
-    nothing, and a negative value would expire the oldest entries."""
-    store = SnapshotStore(str(tmp_path), "ks", "tbl")
-    df = spark.createDataFrame([(1, 10)], "pk int, ts long")
-    sids = [store.write_snapshot(df, tile=0) for _ in range(3)]
-    for bad in (0, -1):
-        with pytest.raises(ValueError, match="retain_last"):
-            store.expire_snapshots(0, retain_last=bad)
-    assert [s.id for s in store.all_snapshots()[0]] == sids
-    assert store.expire_snapshots(0, retain_last=1) == 2
-    assert [s.id for s in store.all_snapshots()[0]] == sids[-1:]
 
 
 def test_write_snapshots_stats_per_tile(spark, tmp_path):
@@ -419,8 +406,9 @@ def test_snapshot_writes_race_safely_on_one_tile(spark, tmp_path):
     mid-write, and drop one manifest entry at the last-write-wins
     swap. Eight concurrent writers must yield eight entries with
     unique sequential ids, each reading back its own exact rows — and
-    an expire racing the writers must never drop a fresh entry (every
-    surviving id stays readable)."""
+    a commit that expires older snapshots (``keep_from``) racing the
+    writers must never drop a fresh entry (every listed id stays
+    readable)."""
     from concurrent.futures import ThreadPoolExecutor
 
     store = SnapshotStore(str(tmp_path), "ks", "race")
@@ -440,31 +428,35 @@ def test_snapshot_writes_race_safely_on_one_tile(spark, tmp_path):
         got = {r.pk for r in store.read_snapshot(spark, 0, sid).collect()}
         assert got == {i * 100 + j for j in range(3)}, (i, sid)
 
-    # write-vs-expire race: expire concurrently with fresh writers;
-    # whatever interleaving happens, every id the manifest lists must
-    # read back (no entry dropped by a lost manifest swap)
+    # write-vs-expire race: commits that expire every snapshot before
+    # id 6 run concurrently with plain writers; whatever interleaving
+    # happens, ids stay sequential, every id committed here is listed
+    # (no entry dropped by a lost manifest swap), and each reads back
     def write_more(i):
         return store.write_snapshot(frames[i % 8], tile=0)
 
-    def expire():
-        return store.expire_snapshots(0, retain_last=3)
+    def write_expiring(i):
+        return store.write_snapshots(
+            frames[i % 8].withColumn("tile", F.lit(0)), [0],
+            keep_from={0: 6})[0].id
 
     with ThreadPoolExecutor(max_workers=6) as ex:
         futs = [ex.submit(write_more, i) for i in range(4)] \
-            + [ex.submit(expire), ex.submit(expire)]
-        for f in futs:
-            f.result()
-    final = store.all_snapshots()[0]
-    assert len({e.id for e in final}) == len(final)
-    for e in final:
-        store.read_snapshot(spark, 0, e.id).count()  # all readable
+            + [ex.submit(write_expiring, i) for i in range(2)]
+        fresh = sorted(f.result() for f in futs)
+    assert fresh == list(range(9, 15))
+    final = [e.id for e in store.all_snapshots()[0]]
+    assert final == list(range(6, 15))
+    for sid in final:
+        store.read_snapshot(spark, 0, sid).count()  # all readable
 
 
 def test_multi_tile_snapshot_writes_race_safely(spark, tmp_path):
     """Writers that each commit several tiles, overlapping on some, and
-    multi-tile expiries race on one table manifest: every tile ends up
-    with unique sequential ids, no committed entry is lost, and each
-    retained snapshot reads back the rows of the writer that made it.
+    multi-tile commits that expire older snapshots race on one table
+    manifest: every tile ends up with unique sequential ids, no entry
+    is lost but the expired ones, and each retained snapshot reads back
+    the rows of the writer that made it.
     A slow manifest read widens each read-modify-write window, so only
     the table mutex keeps them apart."""
     import sys
@@ -480,32 +472,34 @@ def test_multi_tile_snapshot_writes_race_safely(spark, tmp_path):
         return manifest
 
     store._load_manifest = slow_load
+    # writers 6 and 7 commit every tile and expire each tile's
+    # snapshots before id 2; each gets an id of at least 2, so id 1
+    # goes whatever the interleaving
     plans = {i: [i % 3, (i + 1) % 3] for i in range(6)}
+    plans.update({6: [0, 1, 2], 7: [0, 1, 2]})
 
     def write(i):
         df = spark.createDataFrame(
             [(i * 100 + j, i, t) for t in plans[i] for j in range(2)],
             "pk int, ts long, tile int")
-        return i, store.write_snapshots(df, plans[i])
+        keep_from = {t: 2 for t in plans[i]} if i >= 6 else None
+        return i, store.write_snapshots(df, plans[i], keep_from=keep_from)
 
     old = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)
     try:
         with ThreadPoolExecutor(max_workers=8) as ex:
-            futs = [ex.submit(write, i) for i in range(6)] + [
-                ex.submit(store.expire_snapshots, [0, 1, 2], 3)
-                for _ in range(2)]
-            done = [f.result(timeout=300) for f in futs]
+            futs = [ex.submit(write, i) for i in range(8)]
+            written = dict(f.result(timeout=300) for f in futs)
     finally:
         sys.setswitchinterval(old)
         store._load_manifest = load
-    written = dict(done[:6])
     for t in range(3):
         ids = sorted(snaps[t].id for i, snaps in written.items()
                      if t in plans[i])
-        assert ids == list(range(1, 5)), (t, ids)
+        assert ids == list(range(1, 7)), (t, ids)
         live = [s.id for s in store.all_snapshots()[t]]
-        assert live == ids[-len(live):] and len(live) >= 3, (t, live)
+        assert live == ids[1:], (t, live)
         for i, snaps in written.items():
             if t in plans[i] and snaps[t].id in live:
                 got = {r.pk for r in
@@ -694,6 +688,10 @@ def test_config_resolve_valid():
         {"column": "c", "rule": "md5", "salt": "s"}]}},
     {"replication": {"transformations": [{"column": "c"}]}},
     {"read": {"splitSizeMB": 128}},
+    # Cassandra-source settings: no part of this engine reads them
+    {"read": {"splitSizeInMB": 64}},
+    {"replication": {"useMaterializedView": "mv"}},
+    {"replication": {"writetimeColumns": ["c"]}},
 ])
 def test_config_resolve_invalid(bad):
     with pytest.raises(cfg.ConfigError) as err:
@@ -703,11 +701,6 @@ def test_config_resolve_invalid(bad):
         node = bad  # the dotted path names where the key sits in ``bad``
         for part in msg.split()[3].rstrip(";").split("."):
             node = node[int(part)] if isinstance(node, list) else node[part]
-
-
-def test_effective_pk():
-    ts = [cfg.Transformation(column="key", rule="xxhash64", alias="key_h")]
-    assert cfg.effective_pk(["key", "col0"], ts) == ["key_h", "col0"]
 
 
 def test_normalize_timestamp_millis_floors_like_spark(spark):
@@ -734,17 +727,6 @@ def test_normalize_timestamp_millis_floors_like_spark(spark):
     df = spark.createDataFrame([(s,) for s in strings], "s string")
     got = df.select("s", F.unix_millis(F.to_timestamp("s"))).collect()
     assert dict(got) == strings
-
-
-def test_reads_per_sec_round_trip_and_option():
-    from cql_replicator_spark.sources.cassandra import read_options
-
-    m = cfg.resolve({"read": {"readsPerSec": 500, "splitSizeInMB": 128}})
-    assert m.read.readsPerSec == 500
-    opts = read_options(m.read)
-    assert opts["spark.cassandra.input.readsPerSec"] == "500"
-    # unthrottled by default: the knob is absent, not "0"
-    assert "spark.cassandra.input.readsPerSec" not in read_options(cfg.ReadConfig())
 
 
 def test_calculate_workers_matches_reference_arithmetic():
@@ -837,11 +819,6 @@ def test_column_stats_and_totals(tables):
             row[f"{c}_{s}"] for c in ("o_orderkey", "o_orderstatus", "o_orderdate")))
 
 
-def test_estimate_partitions():
-    assert stats.estimate_partitions_for_write(100.0, 0) == 1
-    assert stats.estimate_partitions_for_write(1024.0, 1024 * 1024, target_mb=32) == 32
-
-
 def test_salted_join_equals_plain_join(spark):
     """salted_join == plain join for inner and left, incl. a hot key."""
     from pyspark.sql import functions as F
@@ -879,12 +856,13 @@ def test_diff_property_random_mutations(spark, prev_keys, curr_keys, changed,
     """SURVEY §5 property test: for ANY pair of key sets, any changed
     subset and null ts on either side, the single-join diff equals the
     set-arithmetic ground truth and the three-join reference
-    (compute_changes), and the envelope and counter increments tag the
-    same keys with the same ops."""
-    from cql_replicator_spark.counters import counter_deltas
+    (compute_changes), the envelope tags the same keys with the same
+    ops, and the IVM deltas of a per-key group touch the same keys with
+    the count change of each op (+1 insert, -1 delete, 0 update)."""
     from cql_replicator_spark.diff import (
         compute_changes_envelope, compute_changes_tagged,
     )
+    from cql_replicator_spark.ivm import change_deltas
 
     prev_ts = {k: None if k in null_prev else 100 for k in prev_keys}
     curr_ts = {k: None if k in null_curr else 101 if k in changed else 100
@@ -903,8 +881,11 @@ def test_diff_property_random_mutations(spark, prev_keys, curr_keys, changed,
         "reference": compute_changes(curr, prev, ["pk"]).tagged_union(),
         "envelope": compute_changes_envelope(curr, prev, ["pk"]).select(
             "op", "pk", null_ts),
-        "counter": counter_deltas(curr, prev, ["pk"], ["ts"]).select(
-            "op", "pk", null_ts),
+        "ivm": change_deltas(curr, prev, ["pk"], ["pk"], "ts").select(
+            F.when(F.col("d_count") == 1, "insert")
+            .when(F.col("d_count") == -1, "delete")
+            .when(F.col("d_count") == 0, "update").alias("op"),
+            "pk", null_ts),
     }
     got = {name: set() for name in diffs}
     union = None
@@ -923,7 +904,7 @@ def test_diff_property_random_mutations(spark, prev_keys, curr_keys, changed,
     assert got["reference"] == want
     ops = {(op, pk, None) for op, pk, _ in want}
     assert got["envelope"] == ops
-    assert got["counter"] == ops
+    assert got["ivm"] == ops
 
 
 # -- temporal ------------------------------------------------------------------

@@ -73,11 +73,6 @@ PKG = "cql_replicator_spark"
 # tools, the loop benchmark and the end-to-end verify script
 ENTRY_POINTS = ("bench.py", "__spark_entry__.py", os.path.join(PKG, "cli.py"),
                 "tools", "cdcbench", os.path.join(".claude", "skills", "verify"))
-# package modules that only tests import: the reference's Cassandra
-# source, its OpenSearch target, the accumulator stats flush and the
-# counter path, none of which the CLI runs
-TEST_ONLY = ("counters", "sinks.opensearch_sink", "sinks.statsflush",
-             "sources.cassandra")
 
 
 def _module_file(base: str, parts: list[str]) -> str | None:
@@ -163,32 +158,21 @@ def _dotted(path: str) -> str:
 def test_every_package_module_has_a_production_importer():
     """Every package module is imported, directly or not, by code that
     runs in production; a module only tests import is deleted or wired
-    in, or listed in TEST_ONLY. A listed module that gains a production
-    importer leaves the list."""
+    in."""
     modules = set()
     for d, _, files in os.walk(os.path.join(ROOT, PKG)):
         modules |= {_dotted(os.path.join(d, f)) for f in files
                     if f.endswith(".py")}
-    reached = _reached_package_modules()
-    assert sorted(modules - reached - set(TEST_ONLY)) == []
-    assert sorted(set(TEST_ONLY) - (modules - reached)) == []
+    assert sorted(modules - _reached_package_modules()) == []
 
 
 # -- options ------------------------------------------------------------------
 
-# the replication engine: its seams carry only what production passes
+# the replication engine and what the CLI reaches around it: their
+# seams carry only what production passes
 ENGINE = ("runner", "ledger", "snapshot", "diff", "staging",
-          "sinks.parquet_sink", "sinks.dlq", "reconcile")
-# defaulted parameters no production call passes, each with its reason
-OPTION_ALLOWLIST = {
-    "snapshot.SnapshotStore.expire_snapshots.retain_last":
-        "the reference's expiry by count (K:1278-1289); the runner expires "
-        "in its discovery commit instead, so only the store's tests call "
-        "expire_snapshots",
-    "reconcile.ReconcileJob.transforms":
-        "the reference's PK transforms (R:265-277); reconcile-keys takes no "
-        "--mapping, so the CLI cannot reach them yet",
-}
+          "sinks.parquet_sink", "reconcile", "config", "stats", "transform",
+          "sinks.cql_sink", "sinks.datasource")
 
 
 def _defaulted_params(fn: ast.FunctionDef, bound: bool):
@@ -235,11 +219,10 @@ def _engine_options():
 
 def _production_calls() -> dict[str, list[ast.Call]]:
     """Every call in the production files, by the name called: the
-    ENTRY_POINTS files and the package, less its TEST_ONLY modules."""
+    ENTRY_POINTS files and the package."""
     files = _entry_files()
     for d, _, names in os.walk(os.path.join(ROOT, PKG)):
-        files += [os.path.join(d, f) for f in names if f.endswith(".py")
-                  and _dotted(os.path.join(d, f)) not in TEST_ONLY]
+        files += [os.path.join(d, f) for f in names if f.endswith(".py")]
     calls: dict[str, list[ast.Call]] = {}
     for path in files:
         with open(path) as f:
@@ -266,11 +249,9 @@ def test_engine_options_have_a_production_caller():
     """Each defaulted parameter of a public function or method of the
     replication engine is passed, by keyword or by position, at some
     production call site (the calls are matched by name); a value no
-    production caller sets is a constant, not an option. The exceptions
-    are OPTION_ALLOWLIST, and an entry that gains a production caller
-    leaves it."""
+    production caller sets is a constant, not an option."""
     calls = _production_calls()
     unpassed = sorted(
         qual for qual, called, param, position in _engine_options()
         if not any(_passes(c, param, position) for c in calls.get(called, ())))
-    assert unpassed == sorted(OPTION_ALLOWLIST)
+    assert unpassed == []

@@ -1,21 +1,18 @@
-"""Sink layer: batching/retry/DLQ, CQL statements, parquet bulk path,
+"""Sink layer: batching/retry, CQL statements, parquet bulk path,
 codec."""
 
 import json
 import os
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from cql_replicator_spark import codec
-from cql_replicator_spark.config import Transformation, WriteConfig
+from cql_replicator_spark.config import WriteConfig
 from cql_replicator_spark.sinks.batching import FlushingBatch
 from cql_replicator_spark.sinks.cql_sink import (
-    CqlWriterConfig, counter_update_statement, delete_statement,
-    insert_json_statement, salted_shuffle, write_inserts,
+    delete_statement, insert_json_statement,
 )
-from cql_replicator_spark.sinks.dlq import DeadLetterQueue
 from cql_replicator_spark.sinks.parquet_sink import (
     hydrate_changes, write_tile_batches,
 )
@@ -58,33 +55,25 @@ def test_batch_retry_then_success():
     assert b.stats.items_ok == 1 and b.stats.retries == 2
 
 
-def test_batch_per_item_fallback_and_dlq():
-    dead = []
+def test_batch_per_item_fallback_raises_without_dlq():
+    """A failed batch falls back to one item at a time; with no
+    dead-letter queue the first item that fails on its own raises, after
+    the items before it have run."""
+    executed = []
 
     def poison(batch):
         if any("bad" in s for s in batch):
             raise ValueError("poison statement")
+        executed.extend(batch)
 
     b = FlushingBatch(poison, WriteConfig(maxRetries=2, backoffMS=0),
-                      on_dead_letter=lambda item, e: dead.append(item),
                       sleep=lambda s: None)
     for s in ["ok-1", "bad-2", "ok-3"]:
         b.add(s)
-    b.close()
-    assert dead == ["bad-2"]
-    assert b.stats.items_ok == 2 and b.stats.items_failed == 1
-
-
-# -- DLQ ----------------------------------------------------------------------
-
-def test_dlq_persist_replay_idempotent(tmp_path):
-    dlq = DeadLetterQueue(str(tmp_path), "ks", "t")
-    dlq.persist(0, "insert", [{"stmt": "INSERT ...", "k": 1}, {"stmt": "INSERT ...", "k": 2}])
-    seen = []
-    n = dlq.replay(0, "insert", lambda p: seen.append(p["k"]))
-    assert n == 2 and sorted(seen) == [1, 2]
-    # replay after delete -> nothing left (idempotence belongs to executor)
-    assert dlq.replay(0, "insert", lambda p: seen.append(p["k"])) == 0
+    with pytest.raises(ValueError, match="poison statement"):
+        b.close()
+    assert executed == ["ok-1"]
+    assert b.stats.items_ok == 1 and b.stats.items_failed == 1
 
 
 # -- CQL statements --------------------------------------------------------------
@@ -98,67 +87,9 @@ def test_insert_json_statement_full():
     assert "USING TIMESTAMP 123 AND TTL 60" in stmt
 
 
-def test_counter_update_statement():
-    stmt = counter_update_statement("ks.t", {"c": 5}, {"key": ("k1", "text")})
-    assert stmt == "UPDATE ks.t SET c = c + 5 WHERE key = 'k1'"
-
-
-def test_counter_update_statement_drops_null_deltas():
-    """A null increment must never render as 'c = c + None' (invalid
-    CQL, silently lost); all-null deltas mean no statement at all."""
-    stmt = counter_update_statement(
-        "ks.t", {"c": None, "d": 2}, {"key": ("k1", "text")})
-    assert stmt == "UPDATE ks.t SET d = d + 2 WHERE key = 'k1'"
-    assert counter_update_statement(
-        "ks.t", {"c": None}, {"key": ("k1", "text")}) is None
-
-
 def test_delete_statement_plain_and_transformed():
-    import hashlib
     plain = delete_statement("ks.t", {"key": ("k1", "text"), "n": (3, "int")})
     assert plain == "DELETE FROM ks.t WHERE key = 'k1' AND n = 3"
-    h = delete_statement(
-        "ks.t", {"key": ("k1", "text")},
-        transforms=[Transformation(column="key", rule="md5", alias="key_h")])
-    assert hashlib.md5(b"k1").hexdigest() in h and "key_h =" in h
-
-
-def test_write_inserts_through_fake_target(spark, tmp_path):
-    """End-to-end foreachPartition write into a file-backed fake CQL target."""
-    out_dir = str(tmp_path / "target")
-    os.makedirs(out_dir)
-    df = spark.createDataFrame([(i, f"name-{i}", 1000 + i) for i in range(50)],
-                               "pk int, name string, ts long")
-
-    def executor_factory():
-        import os as _os
-        import uuid as _uuid
-
-        def execute(batch):
-            path = os.path.join(out_dir, f"batch-{_os.getpid()}-{_uuid.uuid4().hex[:8]}")
-            with open(path, "w") as f:
-                for stmt in batch:
-                    f.write(stmt + "\n")
-        return execute
-
-    cfg = CqlWriterConfig(target="ks.t", write=WriteConfig(maxStatementsPerBatch=10))
-    write_inserts(df, cfg, executor_factory, ts_col="ts")
-    stmts = []
-    for fn in os.listdir(out_dir):
-        with open(os.path.join(out_dir, fn)) as f:
-            stmts += [line.strip() for line in f if line.strip()]
-    assert len(stmts) == 50
-    assert all(s.startswith("INSERT INTO ks.t JSON '") for s in stmts)
-    assert all("USING TIMESTAMP 10" in s for s in stmts)
-    # ts column went to USING TIMESTAMP, not the JSON payload
-    doc = json.loads(stmts[0].split("JSON '", 1)[1].rsplit("' USING", 1)[0].replace("''", "'"))
-    assert set(doc) == {"pk", "name"}
-
-
-def test_salted_shuffle_preserves_rows(spark):
-    df = spark.range(100).withColumn("k", F.lit("hot"))
-    out = salted_shuffle(df, 8)
-    assert out.count() == 100 and set(out.columns) == {"id", "k"}
 
 
 # -- parquet bulk path ------------------------------------------------------------
@@ -379,110 +310,7 @@ def test_lz4_wire_format_against_package():
     assert _lz4_block_decompress_ref(wire[4:]) == _LZ4_DATA
 
 
-# -- opensearch -------------------------------------------------------------
-
-def test_opensearch_bulk_actions_and_ids():
-    from cql_replicator_spark.sinks.opensearch_sink import (
-        bulk_delete_action, bulk_index_action, doc_id,
-    )
-    row = {"pk1": 1, "pk2": "a", "val": "x"}
-    assert doc_id(row, ["pk1", "pk2"]) == "1:a"
-    idx = bulk_index_action("idx", row, ["pk1", "pk2"]).splitlines()
-    assert json.loads(idx[0]) == {"index": {"_index": "idx", "_id": "1:a"}}
-    assert json.loads(idx[1]) == row
-    dele = bulk_delete_action("idx", row, ["pk1", "pk2"])
-    assert json.loads(dele) == {"delete": {"_index": "idx", "_id": "1:a"}}
-
-
-def test_opensearch_writer_retries_errored_items():
-    from cql_replicator_spark.sinks.opensearch_sink import OpenSearchBulkWriter
-
-    calls = []
-
-    def transport(payload):
-        calls.append(payload)
-        # first call: flag every action errored; then succeed
-        n = sum(1 for ln in payload.splitlines()
-                if '"index"' in ln or '"delete"' in ln)
-        if len(calls) == 1:
-            return {"errors": True,
-                    "items": [{"index": {"status": 500}}] * n}
-        return {"errors": False}
-
-    cfg = WriteConfig(maxStatementsPerBatch=10, backoffMS=0)
-    w = OpenSearchBulkWriter(transport, "idx", ["pk"], cfg)
-    for i in range(3):
-        w.index_row({"pk": i, "v": f"v{i}"})
-    w.delete_row({"pk": 99})
-    w.close()
-    assert len(calls) >= 2  # failed bulk retried
-    assert w.batch.stats.items_ok == 4
-    assert w.batch.stats.items_failed == 0
-
-
-def test_opensearch_change_set_write(spark):
-    from cql_replicator_spark.diff import ChangeSet
-    from cql_replicator_spark.sinks.opensearch_sink import (
-        write_changes_to_opensearch,
-    )
-    import tempfile
-
-    ins = spark.createDataFrame([(1, "a"), (2, "b")], ["pk", "v"])
-    upd = spark.createDataFrame([(3, "c")], ["pk", "v"])
-    dele = spark.createDataFrame([(4, "d")], ["pk", "v"])
-    out_dir = tempfile.mkdtemp()
-
-    def transport_factory():
-        def transport(payload):
-            # executor-side capture via files (foreachPartition runs in
-            # worker processes; a list closure would not come back)
-            with open(os.path.join(out_dir, f"{os.getpid()}_{id(payload)}.ndjson"),
-                      "w") as f:
-                f.write(payload)
-            return {"errors": False}
-        return transport
-
-    write_changes_to_opensearch(
-        ChangeSet(inserts=ins, deletes=dele, updates=upd),
-        ["pk"], "docs", transport_factory)
-
-    actions = []
-    for fn in os.listdir(out_dir):
-        with open(os.path.join(out_dir, fn)) as f:
-            actions += [json.loads(ln) for ln in f.read().splitlines() if ln]
-    index_ids = {a["index"]["_id"] for a in actions if "index" in a}
-    delete_ids = {a["delete"]["_id"] for a in actions if "delete" in a}
-    assert index_ids == {"1", "2", "3"}
-    assert delete_ids == {"4"}
-
-
-def test_write_inserts_accumulator_counts(spark, tmp_path):
-    """Executor-side write counts flow back via Spark accumulators
-    (the accumulator half of K:1161-1215's incremental stats)."""
-    import glob
-
-    from cql_replicator_spark.sinks.cql_sink import CqlWriterConfig, write_inserts
-
-    df = spark.range(137).select(F.col("id").alias("pk"))
-    out_dir = str(tmp_path)
-
-    def executor_factory():
-        def execute(statements):
-            path = os.path.join(out_dir, f"{os.getpid()}_{uuid.uuid4().hex}.log")
-            with open(path, "w") as f:
-                f.write("\n".join(statements))
-        return execute
-
-    acc_ok = spark.sparkContext.accumulator(0)
-    acc_failed = spark.sparkContext.accumulator(0)
-    cfg = CqlWriterConfig(target="ks.t", write=WriteConfig())
-    write_inserts(df, cfg, executor_factory, acc_ok=acc_ok, acc_failed=acc_failed)
-    assert acc_ok.value == 137
-    assert acc_failed.value == 0
-    written = sum(len(open(p).read().splitlines())
-                  for p in glob.glob(os.path.join(out_dir, "*.log")))
-    assert written == 137
-
+# -- cql data source ------------------------------------------------------
 
 def test_cql_datasource_batch_write(spark, tmp_path):
     """df.write.format('cql'): the V2 sink emits the same statement text
@@ -773,77 +601,6 @@ def test_cql_datasource_stream_write(spark, tmp_path):
         json.load(open(p))["items_ok"] for p in epochs) == 20
 
 
-def test_incremental_flusher_exactly_once_under_races():
-    """The already-counted guard: concurrent flush() triggers (poller
-    tick / task-end callback / final flush) each write a disjoint delta;
-    the sum of deltas equals the final counter exactly (K:1172-1192)."""
-    import random
-    import threading
-
-    from cql_replicator_spark.sinks.statsflush import IncrementalStatsFlusher
-
-    counter = {"v": 0}
-    writes = []
-    flusher = IncrementalStatsFlusher(
-        lambda: counter["v"],
-        lambda delta, total: writes.append((delta, total)))
-
-    def bump_and_flush():
-        for _ in range(200):
-            counter["v"] += random.randint(1, 3)
-            flusher.flush()
-
-    threads = [threading.Thread(target=bump_and_flush) for _ in range(8)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    final = flusher.stop()
-    assert final == counter["v"]
-    assert sum(d for d, _ in writes) == counter["v"]   # no loss, no double count
-    assert all(d > 0 for d, _ in writes)
-    totals = [t for _, t in writes]
-    assert totals == sorted(totals)                    # watermark is monotone
-
-
-def test_incremental_flush_over_multi_stage_write(spark, tmp_path):
-    """Accumulator + flusher across TWO successive distributed writes
-    (two Spark jobs) under one flusher: incremental deltas appear while
-    work runs, and the authoritative final flush matches the exact
-    total — the full K:1161-1215 behavior."""
-    import time as _t
-
-    from cql_replicator_spark.runner import ReplicationStats, StatsStore
-    from cql_replicator_spark.sinks.cql_sink import CqlWriterConfig, write_inserts
-    from cql_replicator_spark.sinks.statsflush import IncrementalStatsFlusher
-
-    store = StatsStore(str(tmp_path / "stats"))
-    acc = spark.sparkContext.accumulator(0)
-
-    def write_delta(delta, total):
-        # delta-only stats object; StatsStore.put read-add-write aggregates
-        store.put("ks", "t", ReplicationStats(0, delta, 0, delta, 0, _t.time()))
-
-    def executor_factory():
-        def execute(statements):
-            _t.sleep(0.05)     # slow sink: poller observes mid-job growth
-        return execute
-
-    cfg = CqlWriterConfig(target="ks.t", write=WriteConfig(maxStatementsPerBatch=5))
-    flusher = IncrementalStatsFlusher(lambda: acc.value, write_delta)
-    flusher.start_polling(interval_s=0.05)
-    try:
-        for n in (60, 40):     # two jobs, one flusher
-            df = spark.range(n).select(F.col("id").alias("pk")).repartition(4)
-            write_inserts(df, cfg, executor_factory, acc_ok=acc)
-    finally:
-        final = flusher.stop()
-    assert final == 100
-    st = store.get("ks", "t", 0)
-    assert st["insertedPrimaryKeys"] == 100   # aggregated deltas == exact total
-    assert st["primaryKeys"] == 100
-
-
 # -- small-file compaction ----------------------------------------------------
 
 def test_compact_parquet_bin_packs_by_bytes(spark, tables, tmp_path):
@@ -903,180 +660,10 @@ def test_retry_does_not_sleep_after_final_attempt():
 
     b = FlushingBatch(always_fails,
                       WriteConfig(maxRetries=4, backoffMS=10),
-                      on_dead_letter=lambda item, e: None,
                       sleep=sleeps.append)
     b.add("x")
-    b.flush()  # batch fails 4x, then per-item fallback fails 4x -> DLQ
+    with pytest.raises(RuntimeError, match="down"):
+        b.flush()  # batch fails 4x, then per-item fallback fails 4x
     # 4 attempts = 3 sleeps per retry loop; two loops (batch + item)
     assert len(sleeps) == 6, sleeps
     assert b.stats.retries == 8  # retries stat still counts attempts
-
-
-def test_stats_flusher_failed_write_is_retried_not_lost():
-    """Write-THEN-advance: a write_delta that raises must leave the
-    watermark unmoved so the next trigger re-reports the delta —
-    advance-then-write silently lost it forever. With an atomic writer
-    the retry cannot double-count (success == raise-free)."""
-    from cql_replicator_spark.sinks.statsflush import IncrementalStatsFlusher
-
-    counter = {"v": 10}
-    written = []
-    fail_next = {"on": True}
-
-    def write_delta(delta, total):
-        if fail_next["on"]:
-            fail_next["on"] = False
-            raise OSError("disk hiccup")
-        written.append((delta, total))
-
-    f = IncrementalStatsFlusher(lambda: counter["v"], write_delta)
-    with pytest.raises(OSError):
-        f.flush()
-    assert f.last_reported == 0, "watermark advanced past a lost write"
-    assert f.flush() == 10  # retry reports the SAME delta
-    assert written == [(10, 10)]
-    counter["v"] = 17
-    assert f.flush() == 7 and written[-1] == (7, 17)
-
-
-def test_opensearch_doc_id_is_injective():
-    """Distinct pk tuples -> distinct _ids (a raw join collides
-    ('a:b','c') with ('a','b:c'): one document, cross-row deletes);
-    plain ids keep the reference shape, index/delete agree."""
-    from cql_replicator_spark.sinks.opensearch_sink import doc_id
-
-    assert doc_id({"a": "a:b", "b": "c"}, ["a", "b"]) != \
-        doc_id({"a": "a", "b": "b:c"}, ["a", "b"])
-    assert doc_id({"a": "k1", "b": 7}, ["a", "b"]) == "k1:7"
-
-
-# -- RDD-action sink gate (r14 verdict item 1) ------------------------------
-# foreachPartition sinks run as RDD jobs with NO SQL execution, so the
-# PLANS.md action audit (tools/explain_audit.py) is blind to a frame
-# funneled to one partition before a sink write — exactly the shape the
-# r13 (staging writes) and r14 (snapshot writes) audits found one
-# layer below the gates' sight line. guard_sink_input closes the layer:
-# every RDD-action sink statically audits its input frame's plan.
-
-def _noop_executor_factory():
-    def execute(statements):
-        pass
-    return execute
-
-
-def test_funneled_frame_to_write_inserts_raises(spark):
-    """A deliberately coalesce(1)-funneled data-proportional frame fed
-    to write_inserts must fail the gate BEFORE the RDD job runs."""
-    from cql_replicator_spark.planaudit import SerialSinkInputError
-
-    df = spark.range(500).select(F.col("id").alias("pk")).coalesce(1)
-    cfg = CqlWriterConfig(target="ks.t", write=WriteConfig())
-    with pytest.raises(SerialSinkInputError, match="write_inserts"):
-        write_inserts(df, cfg, _noop_executor_factory)
-
-
-def test_repartition1_frame_to_counter_sink_raises(spark):
-    """repartition(1) is the Exchange flavor of the same funnel — the
-    counter sink's gate must catch it too."""
-    from cql_replicator_spark.counters import write_counter_deltas
-    from cql_replicator_spark.planaudit import SerialSinkInputError
-
-    deltas = (spark.range(200)
-              .select(F.col("id").alias("pk"),
-                      F.lit(1).cast("long").alias("c_delta"))
-              .repartition(1))
-    with pytest.raises(SerialSinkInputError, match="write_counter_deltas"):
-        write_counter_deltas(deltas, "ks.t", ["pk"], {"pk": "bigint"},
-                             ["c"], _noop_executor_factory)
-
-
-def test_funneled_frame_to_opensearch_raises(spark):
-    from cql_replicator_spark.diff import ChangeSet
-    from cql_replicator_spark.planaudit import SerialSinkInputError
-    from cql_replicator_spark.sinks.opensearch_sink import (
-        write_changes_to_opensearch,
-    )
-
-    empty = spark.createDataFrame([], "pk int, v string")
-    bad = (spark.range(300)
-           .select(F.col("id").alias("pk"),
-                   F.col("id").cast("string").alias("v"))
-           .coalesce(1))
-    with pytest.raises(SerialSinkInputError,
-                       match=r"write_changes_to_opensearch\[index\]"):
-        write_changes_to_opensearch(
-            ChangeSet(inserts=bad, deletes=empty, updates=empty),
-            ["pk"], "docs", lambda: (lambda payload: {"errors": False}))
-
-
-def test_naturally_narrow_frame_passes_sink_gate(spark, tmp_path):
-    """The gate is STATIC on plan nodes, not partition counts: a small
-    frame that is single-partition by nature (one-file scan, local
-    rows) carries no funnel node and must pass — partition count alone
-    cannot tell a small input from a funneled one."""
-    out_dir = str(tmp_path / "t")
-    os.makedirs(out_dir)
-    src = str(tmp_path / "one_file")
-    (spark.range(10).select(F.col("id").alias("pk"))
-     .coalesce(1).write.parquet(src))
-    one_file = spark.read.parquet(src)  # 1 partition, no funnel node
-    assert one_file.rdd.getNumPartitions() == 1
-
-    def executor_factory():
-        def execute(statements):
-            path = os.path.join(out_dir, f"{os.getpid()}_{uuid.uuid4().hex}")
-            with open(path, "w") as f:
-                f.write("\n".join(statements))
-        return execute
-
-    cfg = CqlWriterConfig(target="ks.t", write=WriteConfig())
-    write_inserts(one_file, cfg, executor_factory)  # must not raise
-    n = sum(len(open(os.path.join(out_dir, fn)).read().splitlines())
-            for fn in os.listdir(out_dir))
-    assert n == 10
-
-
-def test_size_estimate_complement_catches_giant_single_partition(
-        spark, tmp_path):
-    """r15 verdict item 5: a frame NATURALLY planned as one partition
-    (single-file scan — no funnel node for the static gate to see)
-    still serializes the sink write. The residual gate fires on
-    1 planned partition + optimizer size estimate >= threshold; a
-    repartitioned frame of the same size, and the same frame under the
-    default 256 MiB threshold, both pass."""
-    from cql_replicator_spark.planaudit import (
-        SerialSinkInputError, guard_sink_input,
-    )
-
-    src = str(tmp_path / "one_big_file")
-    (spark.range(5000).select(F.col("id").alias("pk"))
-     .coalesce(1).write.parquet(src))
-    one_file = spark.read.parquet(src)
-    assert one_file.rdd.getNumPartitions() == 1
-
-    with pytest.raises(SerialSinkInputError, match="ONE partition"):
-        guard_sink_input(one_file, "test_site", max_serial_bytes=1024)
-    # same bytes, fanned out: the write parallelizes — passes
-    guard_sink_input(one_file.repartition(4), "test_site",
-                     max_serial_bytes=1024)
-    # small frame under the real default threshold: passes (the
-    # naturally-narrow small-frame contract is unchanged)
-    guard_sink_input(one_file, "test_site")
-
-
-def test_salting_does_not_launder_an_upstream_funnel(spark):
-    """Salting AFTER a coalesce(1) re-fans the write but the scan stage
-    still runs as one task — the Coalesce node stays in the plan and
-    the gate must keep flagging it (the fix is removing the funnel,
-    not appending a shuffle). A wide frame salted normally passes."""
-    from cql_replicator_spark.planaudit import (
-        formatted_plan, serial_funnel_marks,
-    )
-
-    funneled = spark.range(500).select(F.col("id").alias("pk")).coalesce(1)
-    still_bad = salted_shuffle(funneled, 8)
-    assert any("SINGLE-TASK-COALESCE" in m
-               for m in serial_funnel_marks(formatted_plan(still_bad)))
-
-    wide = spark.range(500).select(F.col("id").alias("pk"))
-    assert serial_funnel_marks(formatted_plan(salted_shuffle(wide, 8))) == []

@@ -12,9 +12,7 @@ three detectors (partition-less Window, single-partition Exchange,
 Coalesce(1)), closing the r13 blind spot where data-proportional
 coalesce(1) staging writes hid inside lane bodies. The detectors
 themselves live in cql_replicator_spark.planaudit (imported below, and
-re-exported here so existing by-path loaders keep working) because
-r15 wired them into the RDD-action sinks too — the one execution
-surface the status store cannot see (planaudit.guard_sink_input).
+re-exported here so existing by-path loaders keep working).
 Regenerate after plan-affecting changes:
 
     python3 tools/explain_audit.py
