@@ -187,50 +187,3 @@ def triangle_count(
     out = out.localCheckpoint(eager=True)
     oriented.unpersist()
     return out
-
-
-def k_core(
-    edges: DataFrame,
-    k: int,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 64,
-) -> DataFrame:
-    """k-core decomposition by iterative peeling: repeatedly drop every
-    vertex with degree < k (undirected; duplicates/reversals tolerated)
-    until none remain — the standard density filter for entity/link
-    graphs (spam-farm cores, dense community seeds, graph-curation
-    gates before expensive per-edge work).
-
-    Each round is one degree aggregation + one semi-join edge filter;
-    rounds shrink monotonically and a localCheckpoint every round cuts
-    the growing lineage (same discipline as connected_components).
-    Rounds needed = peeling depth, typically small; raises on
-    non-convergence like the CC operators rather than returning a
-    silently-unpeeled graph. Returns the surviving (node, degree) rows.
-    """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    e = (edges.select(F.col(src).cast("long").alias("a"),
-                      F.col(dst).cast("long").alias("b"))
-         .filter(F.col("a") != F.col("b"))
-         .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-         .distinct()
-         .localCheckpoint(eager=True))
-    for _ in range(max_rounds):
-        deg = (e.select(F.col("u").alias("n"))
-               .unionByName(e.select(F.col("v").alias("n")))
-               .groupBy("n").agg(F.count("*").alias("deg")))
-        low = deg.filter(F.col("deg") < k)
-        if low.isEmpty():
-            return deg.select(F.col("n").alias("node"), "deg")
-        e = (e.join(low.select(F.col("n").alias("u")), "u", "anti")
-             .join(low.select(F.col("n").alias("v")), "v", "anti")
-             .select("u", "v")
-             .localCheckpoint(eager=True))
-        # localCheckpoint blocks are RDD-level persists, which
-        # Dataset.unpersist does NOT release (it only drops
-        # CacheManager entries); prior rounds' blocks are reclaimed by
-        # the ContextCleaner once the superseded frame is out of scope
-        # — which the rebinding of `e` above guarantees each round.
-    raise RuntimeError(f"k_core did not converge in {max_rounds} rounds")

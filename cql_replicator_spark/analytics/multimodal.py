@@ -193,22 +193,6 @@ def parse_image_header(data: bytes) -> tuple[str, int, int] | None:
     return None
 
 
-def decode_image(data: bytes) -> dict:
-    """Image metadata decode: (format, width, height) via
-    parse_image_header. Pixel-level decode is ALSO in-repo now —
-    exact channel aggregates via parse_bmp_pixels / parse_png_pixels /
-    parse_gif_pixels / parse_jpeg_pixels (baseline AND progressive),
-    full rasters via decode_image_rgb; only formats outside those
-    codecs (WebP, AVIF, ...) need an external library."""
-    hdr = parse_image_header(data)
-    if hdr is None:
-        raise NotImplementedError(
-            "unrecognized container or pixel decode requested: full image "
-            "decoding requires PIL/opencv; install one and replace this stub")
-    fmt, w, h = hdr
-    return {"format": fmt, "width": w, "height": h}
-
-
 # JVM-codegen integer->bytes encoders for container synthesis: hex/
 # unhex/shift column expressions, so byte assembly runs distributed in
 # whole-stage codegen — no Python on the encode side.
@@ -387,23 +371,6 @@ def parse_audio_header(data: bytes) -> tuple[str, int, int, int] | None:
     return ("wav", channels, rate, dur_ms)
 
 
-def decode_audio(data: bytes) -> dict:
-    """Audio metadata decode via parse_audio_header. Sample-level
-    decode is ALSO in-repo for PCM, G.711, mono IMA ADPCM
-    (parse_wav_samples) and FLAC (parse_flac_samples — Rice-coded
-    fixed/LPC prediction from the public spec); lossy codecs
-    (MP3/AAC/Opus) need soundfile/librosa."""
-    hdr = parse_audio_header(data)
-    if hdr is None:
-        raise NotImplementedError(
-            "unrecognized container or sample decode requested: full audio "
-            "decoding requires soundfile/librosa; install one and replace "
-            "this stub")
-    fmt, ch, rate, dur = hdr
-    return {"format": fmt, "channels": ch, "sample_rate": rate,
-            "duration_ms": dur}
-
-
 VIDEO_HEADER_SCHEMA = T.StructType([
     T.StructField("id", T.LongType()),
     T.StructField("format", T.StringType()),
@@ -524,20 +491,6 @@ def synthesize_video_table(documents: DataFrame) -> DataFrame:
         ).alias("media"))
 
 
-def decode_video(data: bytes) -> dict:
-    """Video metadata decode via parse_video_header (ISO-BMFF box
-    tree). Frame-level decode is ALSO in-repo for MJPEG AVIs
-    (sample_frames / video_frame_stats); inter-coded codecs (H.264 &
-    co) need ffmpeg bindings."""
-    hdr = parse_video_header(data)
-    if hdr is None:
-        raise NotImplementedError(
-            "unrecognized container or frame decode requested: full video "
-            "decoding requires ffmpeg bindings; install and replace this stub")
-    fmt, w, h, dur = hdr
-    return {"format": fmt, "width": w, "height": h, "duration_ms": dur}
-
-
 def sample_frames(data: bytes, every_ms: int = 1000,
                   _lenient: bool = False) -> list[tuple[int, bytes]]:
     """Sample frames at a timestamp stride. REAL for MJPEG-in-AVI
@@ -651,8 +604,8 @@ def synthesize_media_table(spark, documents: DataFrame, media_type: str = "image
 
 def fake_resize(data: bytes, width: int, height: int) -> bytes:
     """Deterministic stand-in for a real resize: payload truncated/cycled
-    to a size proportional to the target raster. Replace with
-    decode_image + PIL resize + re-encode in production."""
+    to a size proportional to the target raster. Replace with a
+    PIL decode + resize + re-encode in production."""
     target = max(1, (width * height) // 100)
     if not data:
         data = b"\x00"
@@ -724,7 +677,7 @@ def sample_media_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     downstream per-frame feature extraction parallelizes past the
     per-video row boundary. This duration-sliced fake keeps synthetic
     fixtures cheap; real MJPEG AVIs go through sample_frames /
-    video_frame_stats, and inter-coded codecs would swap in ffmpeg
+    mjpeg_frame_stats_fused, and inter-coded codecs would swap in ffmpeg
     seeking with the same output shape."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1092,8 +1045,8 @@ def parse_wav_samples(data: bytes) -> dict | None:
     32-bit signed little-endian — the G.711 companded encodings:
     tag 6 (A-law) and tag 7 (mu-law), expanded by the spec's
     pure-arithmetic tables, and tag 0x11 (mono IMA ADPCM, delegated
-    to parse_ima_adpcm_samples). Other encodings keep the
-    decode_audio stub. 32-bit energy accumulates in Python ints
+    to parse_ima_adpcm_samples). Other encodings return
+    None. 32-bit energy accumulates in Python ints
     (s^2 reaches 2^62; a numpy int64 sum could wrap); 24-bit sums
     int64 chunk partials into a Python int (s^2 reaches 2^46, so a
     flat int64 sum wraps after ~2^17 full-scale samples — each
@@ -1710,7 +1663,7 @@ def _dct_matrix():
 
 _DCT = _dct_matrix()
 
-# module-level numpy constants (r17): np.asarray(_DCT) per _fdct_quant /
+# module-level numpy constants (r17): np.asarray(_DCT) per
 # _idct_dequant call and the per-call zigzag index tuples measured as a
 # third of the per-block transform cost on the tiny fixture images
 def _np_consts():
@@ -1724,20 +1677,6 @@ def _np_consts():
 _DCT_NP, _ZZ_R, _ZZ_C = _np_consts()
 
 
-def _fdct_quant(block) -> list[int]:
-    """Level-shift, forward DCT, quantize by 1 (identity table), emit
-    in zigzag order. S = C · s · Cᵀ with the orthonormal C above —
-    the spec's FDCT up to its 1/4·C(u)C(v) scaling folded into C.
-    numpy matmul: the per-block transform is the codec's hot loop."""
-    import numpy as np
-
-    C = _DCT_NP
-    s = np.asarray(block, dtype=np.float64) - 128.0
-    coef = C @ s @ C.T
-    zz = np.rint(coef).astype(np.int64)
-    return zz[_ZZ_R, _ZZ_C].tolist()
-
-
 def _fdct_quant_blocks(width: int, height: int, pixels: bytes):
     """All 8x8 blocks of a greyscale raster through the forward DCT at
     once, raster block order, zigzag rows: (n_blocks, 64) int64. Edge
@@ -1746,7 +1685,7 @@ def _fdct_quant_blocks(width: int, height: int, pixels: bytes):
 
     One np.pad + two stacked matmuls + one fancy-index gather replaces
     the per-block Python list build (64 min() calls each) and per-block
-    _fdct_quant dispatch, which together were ~70% of encode time on
+    DCT dispatch, which together were ~70% of encode time on
     the fixture-sized images (guide §4.2 — batch the native math).
     Bitwise-identical to the per-block path: each (8,8) slice goes
     through the same dgemm with the same association order, verified
@@ -2870,7 +2809,7 @@ def encode_progressive_grey_jpeg(width: int, height: int, pixels: bytes,
     the EOB symbol, ZRL only within the block's newly-significant
     span), the libjpeg default greyscale script by default. Exists to
     exercise _parse_progressive_jpeg; the coefficient pipeline
-    (identity quant + _fdct_quant) matches encode_grey_jpeg, so
+    (identity quant + _fdct_quant_blocks) matches encode_grey_jpeg, so
     progressive and baseline encodings of the same image must decode
     identically — the cross-codec equality the tests pin.
     restart_interval > 0 emits DRI + RSTn every that many blocks in
@@ -3212,52 +3151,22 @@ FRAME_STATS_SCHEMA = T.StructType([
 ])
 
 
-def decode_frame_pixels(frame: bytes) -> dict | None:
-    """Default per-frame decoder for video_frame_stats: the in-repo
-    baseline-JPEG parser. Injection contract: ``bytes -> {width,
-    height, sum_r, ...} | None``, TOTAL — a library decoder (e.g.
-    PyAV/OpenCV frame decode) swaps in behind the same dict shape."""
-    return parse_jpeg_pixels(frame)
-
-
-def video_frame_stats(df: DataFrame, every_ms: int = 1000,
-                      frame_sampler=None,
-                      frame_decoder=decode_frame_pixels) -> DataFrame:
-    """media binary (MJPEG AVI) -> one row per SAMPLED frame with its
-    decoded pixel sum, via Arrow-batched mapInPandas: the real
-    frame-sampling pipeline (container walk -> frame select by
-    timestamp stride -> per-frame image decode). Non-AVI payloads
-    yield no rows.
-
-    `frame_sampler` (``bytes, every_ms -> iter[(idx, frame_bytes)]``,
-    default the in-repo RIFF walk) and `frame_decoder` (see
-    decode_frame_pixels) are injection points: both are closed over
-    into the mapInPandas function and shipped to executors, so a
-    library container/codec pair slots in behind the identical frame
-    contract without changing the plan (one scan, zero shuffle)."""
-    sampler = frame_sampler or (
-        lambda raw, ms: sample_frames(raw, ms, _lenient=True))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _frame_stats_batches(batches, sampler, frame_decoder,
-                                    every_ms)
-
-    return df.select("id", "media").mapInPandas(run, schema=FRAME_STATS_SCHEMA)
-
-
-def _frame_stats_batches(batches: Iterator[pd.DataFrame], sampler,
-                         frame_decoder,
+def _frame_stats_batches(batches: Iterator[pd.DataFrame],
                          every_ms: int) -> Iterator[pd.DataFrame]:
-    """The sample+decode half of video_frame_stats as a plain batch
-    transformer, composable with a synthesizer's batch generator into
-    ONE mapInPandas (see the *_fused lane builders)."""
+    """media binary (MJPEG AVI) -> one row per SAMPLED frame with its
+    decoded pixel sum: container walk -> frame select by timestamp
+    stride (sample_frames) -> per-frame baseline JPEG decode. Non-AVI
+    payloads yield no rows. A plain batch transformer, composed with
+    the synthesizer's batch generator into ONE mapInPandas
+    (mjpeg_frame_stats_fused)."""
     for pdf in batches:
         ids, idxs, ws, hs, sums = [], [], [], [], []
         for rid, b in zip(pdf["id"], pdf["media"]):
             if b is None:
                 continue
-            for idx, frame in sampler(bytes(b), every_ms):
-                d = frame_decoder(frame)
+            for idx, frame in sample_frames(bytes(b), every_ms,
+                                            _lenient=True):
+                d = parse_jpeg_pixels(frame)
                 if d is None:
                     continue
                 ids.append(rid)
@@ -3272,249 +3181,6 @@ def _frame_stats_batches(batches: Iterator[pd.DataFrame], sampler,
             "height": pd.array(hs, dtype="Int32"),
             "sum_grey": pd.array(sums, dtype="Int64"),
         })
-
-
-def _jpeg_ycbcr_planes(width: int, height: int, rgb: bytes,
-                       subsampling: str):
-    """Shared color-encode front half: RGB row-major bytes ->
-    BT.601/JFIF YCbCr planes (rounded half-even), chroma downsampled
-    by 2x2 mean for 4:2:0. Returns (planes, sampling factors)."""
-    import numpy as np
-
-    if subsampling not in ("444", "420"):
-        raise ValueError("subsampling must be '444' or '420'")
-    if len(rgb) != 3 * width * height:
-        raise ValueError("rgb length != 3*width*height")
-    px = np.frombuffer(rgb, dtype=np.uint8).astype(np.float64)
-    px = px.reshape(height, width, 3)
-    r, g, b = px[:, :, 0], px[:, :, 1], px[:, :, 2]
-    y = np.rint(0.299 * r + 0.587 * g + 0.114 * b)
-    cb = np.rint(128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b)
-    cr = np.rint(128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b)
-    planes = [np.clip(p, 0, 255).astype(np.int64) for p in (y, cb, cr)]
-    if subsampling == "420":
-        samp = [(2, 2), (1, 1), (1, 1)]
-        down = []
-        for ci, p in enumerate(planes):
-            if ci == 0:
-                down.append(p)
-                continue
-            # pad to even dims by edge replication, then 2x2 mean
-            pe = np.pad(p, ((0, p.shape[0] & 1), (0, p.shape[1] & 1)),
-                        mode="edge").astype(np.float64)
-            q = (pe[0::2, 0::2] + pe[0::2, 1::2]
-                 + pe[1::2, 0::2] + pe[1::2, 1::2]) / 4.0
-            down.append(np.rint(q).astype(np.int64))
-        planes = down
-    else:
-        samp = [(1, 1), (1, 1), (1, 1)]
-    return planes, samp
-
-
-def encode_rgb_jpeg(width: int, height: int, rgb: bytes,
-                    subsampling: str = "444") -> bytes:
-    """Baseline color JPEG encoder, 4:4:4 or 4:2:0: RGB row-major
-    bytes (3 per pixel) -> BT.601/JFIF YCbCr (rounded half-even),
-    chroma downsampled by 2x2 mean for 4:2:0, interleaved MCU blocks
-    through the same identity-quant DCT + canonical Huffman machinery
-    as the greyscale encoder (all three components share table pair 0,
-    which the SOS header declares). Exists to exercise the color half
-    of parse_jpeg_pixels."""
-    import struct
-
-    import numpy as np
-
-    planes, samp = _jpeg_ycbcr_planes(width, height, rgb, subsampling)
-
-    dc_codes = _canonical_codes(_DC_BITS, _DC_VALS)
-    ac_codes = _canonical_codes(_AC_BITS, _AC_VALS)
-    bw = _BitWriter()
-    preds = [0, 0, 0]
-
-    def emit_block(zz, ci):
-        diff = zz[0] - preds[ci]
-        preds[ci] = zz[0]
-        cat, extra = _category(diff)
-        code, ln = dc_codes[cat]
-        bw.write(code, ln)
-        if cat:
-            bw.write(extra, cat)
-        run = 0
-        for k in range(1, 64):
-            if zz[k] == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, ln = ac_codes[0xF0]
-                bw.write(code, ln)
-                run -= 16
-            cat, extra = _category(zz[k])
-            code, ln = ac_codes[(run << 4) | cat]
-            bw.write(code, ln)
-            bw.write(extra, cat)
-            run = 0
-        if run:
-            code, ln = ac_codes[0x00]
-            bw.write(code, ln)
-
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcux = (width + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (height + 8 * vmax - 1) // (8 * vmax)
-    for my in range(mcuy):
-        for mx in range(mcux):
-            for ci, plane in enumerate(planes):
-                hs, vs = samp[ci]
-                ph, pw = plane.shape
-                for byy in range(vs):
-                    for bxx in range(hs):
-                        oy = (my * vs + byy) * 8
-                        ox = (mx * hs + bxx) * 8
-                        block = [[int(plane[min(ph - 1, oy + yy),
-                                            min(pw - 1, ox + xx)])
-                                  for xx in range(8)] for yy in range(8)]
-                        emit_block(_fdct_quant(block), ci)
-    ecs = bw.flush()
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    dqt = seg(0xDB, bytes([0]) + bytes([1] * 64))
-    sof_comps = b"".join(
-        bytes([cid, (samp[ci][0] << 4) | samp[ci][1], 0])
-        for ci, cid in enumerate((1, 2, 3)))
-    sof = seg(0xC0, bytes([8]) + struct.pack(">HH", height, width)
-              + bytes([3]) + sof_comps)
-    dht = (seg(0xC4, bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_VALS))
-           + seg(0xC4, bytes([0x10]) + bytes(_AC_BITS) + bytes(_AC_VALS)))
-    sos = seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    return (b"\xff\xd8" + dqt + sof + dht + sos + ecs + b"\xff\xd9")
-
-
-# libjpeg's default color progressive script, adapted: interleaved DC
-# first/refine, per-component AC bands with successive approximation.
-# Entries: (component index or None for all-interleaved-DC, Ss, Se,
-# Ah, Al).
-_PROG_SCRIPT_COLOR = [
-    (None, 0, 0, 0, 1),
-    (0, 1, 5, 0, 2),
-    (2, 1, 63, 0, 1),
-    (1, 1, 63, 0, 1),
-    (0, 6, 63, 0, 2),
-    (0, 1, 63, 2, 1),
-    (None, 0, 0, 1, 0),
-    (0, 1, 63, 1, 0),
-    (2, 1, 63, 1, 0),
-    (1, 1, 63, 1, 0),
-]
-
-
-def encode_progressive_rgb_jpeg(width: int, height: int, rgb: bytes,
-                                subsampling: str = "444",
-                                script=None,
-                                restart_interval: int = 0) -> bytes:
-    """Progressive color JPEG encoder (SOF2, 4:4:4 or 4:2:0): the same
-    YCbCr/downsample front half as encode_rgb_jpeg, coefficients
-    emitted over the libjpeg-style color scan script — one interleaved
-    DC scan (MCU order, per-component prediction), per-component AC
-    band scans traversing each component's TRUE block grid (ceil(cw/8),
-    not the MCU-padded grid — the T.81 A.2.2 rule a decoder must also
-    follow), refinements via the shared G.1.2.3 emitters."""
-    import struct
-
-    planes, samp = _jpeg_ycbcr_planes(width, height, rgb, subsampling)
-    script = list(_PROG_SCRIPT_COLOR if script is None else script)
-    dc_codes = _canonical_codes(_DC_BITS, _DC_VALS)
-    ac_codes = _canonical_codes(_AC_BITS, _AC_VALS)
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcux = (width + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (height + 8 * vmax - 1) // (8 * vmax)
-    # coefficient grids over the MCU-padded block space (the DC scan
-    # visits dummy edge blocks; AC scans only the true grid)
-    coefs = []
-    bdims = []
-    for ci, plane in enumerate(planes):
-        hs, vs = samp[ci]
-        ph, pw = plane.shape
-        grid = [[None] * (mcux * hs) for _ in range(mcuy * vs)]
-        for by in range(mcuy * vs):
-            for bx in range(mcux * hs):
-                block = [[int(plane[min(ph - 1, by * 8 + yy),
-                                    min(pw - 1, bx * 8 + xx)])
-                          for xx in range(8)] for yy in range(8)]
-                grid[by][bx] = _fdct_quant(block)
-        coefs.append(grid)
-        bdims.append(((ph + 7) // 8, (pw + 7) // 8))
-
-    def encode_scan(ci, ss, se, ah, al):
-        bw = _BitWriter()
-        if ss == 0:
-            preds = [0, 0, 0]
-            n_mcu = 0
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    if restart_interval and n_mcu \
-                            and n_mcu % restart_interval == 0:
-                        bw.write_marker(
-                            0xD0 + (n_mcu // restart_interval - 1) % 8)
-                        preds = [0, 0, 0]
-                    n_mcu += 1
-                    for c in range(3):
-                        hs, vs = samp[c]
-                        for byy in range(vs):
-                            for bxx in range(hs):
-                                zz = coefs[c][my * vs + byy][mx * hs + bxx]
-                                if ah == 0:
-                                    v = zz[0] >> al
-                                    cat, extra = _category(v - preds[c])
-                                    preds[c] = v
-                                    code, ln = dc_codes[cat]
-                                    bw.write(code, ln)
-                                    if cat:
-                                        bw.write(extra, cat)
-                                else:
-                                    bw.write((zz[0] >> al) & 1, 1)
-        else:
-            bh_c, bw_c = bdims[ci]
-            blocks = [coefs[ci][by][bx]
-                      for by in range(bh_c) for bx in range(bw_c)]
-            ri = restart_interval or len(blocks)
-            for ivl, start in enumerate(range(0, len(blocks), ri)):
-                if start:
-                    bw.write_marker(0xD0 + (ivl - 1) % 8)
-                chunk = blocks[start:start + ri]
-                if ah == 0:
-                    _emit_prog_ac_first(bw, chunk, ss, se, al, ac_codes)
-                else:
-                    _emit_prog_ac_refine(bw, chunk, ss, se, al, ac_codes)
-        return bw.flush()
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) \
-            + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0]) + bytes([1] * 64))
-    sof_comps = b"".join(
-        bytes([cid, (samp[ci][0] << 4) | samp[ci][1], 0])
-        for ci, cid in enumerate((1, 2, 3)))
-    out += seg(0xC2, bytes([8]) + struct.pack(">HH", height, width)
-               + bytes([3]) + sof_comps)
-    out += seg(0xC4, bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_VALS))
-    out += seg(0xC4, bytes([0x10]) + bytes(_AC_BITS) + bytes(_AC_VALS))
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-    for ci, ss, se, ah, al in script:
-        if ci is None:
-            hdr = bytes([3, 1, 0x00, 2, 0x00, 3, 0x00,
-                         ss, se, (ah << 4) | al])
-        else:
-            hdr = bytes([1, ci + 1, 0x00, ss, se, (ah << 4) | al])
-        out += seg(0xDA, hdr)
-        out += encode_scan(ci, ss, se, ah, al)
-    out += b"\xff\xd9"
-    return bytes(out)
 
 
 # -- full-raster decode (resize / feature extraction) -------------------------
@@ -3722,8 +3388,8 @@ def resize_image_real(data: bytes, width: int, height: int) -> bytes | None:
 # ~1.1x per index — a test asserts that growth property so a
 # transcription slip in the constants cannot hide), per-block headers
 # carrying the decoder state (predictor + table index), low nibble
-# first. Encoder and decoder are exact inverses of each other's state
-# machines; compression error is bounded by the step size.
+# first. The tests' encoder runs the inverse state machine;
+# compression error is bounded by the step size.
 
 _IMA_STEPS = [
     7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34,
@@ -3735,75 +3401,6 @@ _IMA_STEPS = [
     12635, 13899, 15289, 16818, 18500, 20350, 22385, 24623, 27086,
     29794, 32767]
 _IMA_INDEX = [-1, -1, -1, -1, 2, 4, 6, 8]
-
-
-def _ima_decode_nibble(n: int, pred: int, index: int) -> tuple[int, int]:
-    step = _IMA_STEPS[index]
-    diff = step >> 3
-    if n & 1:
-        diff += step >> 2
-    if n & 2:
-        diff += step >> 1
-    if n & 4:
-        diff += step
-    pred = pred - diff if n & 8 else pred + diff
-    pred = max(-32768, min(32767, pred))
-    index = max(0, min(88, index + _IMA_INDEX[n & 7]))
-    return pred, index
-
-
-def _ima_encode_sample(s: int, pred: int, index: int) -> tuple[int, int, int]:
-    step = _IMA_STEPS[index]
-    delta = s - pred
-    n = 8 if delta < 0 else 0
-    if delta < 0:
-        delta = -delta
-    if delta >= step:
-        n |= 4
-        delta -= step
-    if delta >= step >> 1:
-        n |= 2
-        delta -= step >> 1
-    if delta >= step >> 2:
-        n |= 1
-    pred, index = _ima_decode_nibble(n, pred, index)
-    return n, pred, index
-
-
-def encode_ima_adpcm_wav(samples: list[int], sample_rate: int = 8000,
-                         block_samples: int = 505) -> bytes:
-    """Mono IMA ADPCM WAV writer: block = 4-byte state header
-    (predictor int16 LE = the block's first sample, step index, 0)
-    followed by 4-bit codes, low nibble first. block_samples counts
-    the header sample plus the coded ones (505 -> 256-byte blocks,
-    the conventional 8 kHz layout)."""
-    import struct
-
-    if block_samples < 2 or (block_samples - 1) % 2:
-        raise ValueError("block_samples must be odd and >= 3")
-    index = 0
-    body = bytearray()
-    i = 0
-    while i < len(samples):
-        chunk = samples[i:i + block_samples]
-        i += block_samples
-        pred = max(-32768, min(32767, int(chunk[0])))
-        body += struct.pack("<hBB", pred, index, 0)
-        nibbles = []
-        for s in chunk[1:]:
-            n, pred, index = _ima_encode_sample(int(s), pred, index)
-            nibbles.append(n)
-        if len(nibbles) % 2:
-            nibbles.append(0)
-        for a, b in zip(nibbles[0::2], nibbles[1::2]):
-            body += bytes([(b << 4) | a])
-    block_align = 4 + (block_samples - 1) // 2
-    byte_rate = sample_rate * block_align // block_samples
-    return (b"RIFF" + struct.pack("<I", 40 + len(body)) + b"WAVE"
-            + b"fmt \x14\x00\x00\x00"
-            + struct.pack("<HHIIHHHH", 0x11, 1, sample_rate, byte_rate,
-                          block_align, 4, 2, block_samples)
-            + b"data" + struct.pack("<I", len(body)) + bytes(body))
 
 
 def parse_ima_adpcm_samples(data: bytes) -> dict | None:
@@ -3862,8 +3459,8 @@ def parse_ima_adpcm_samples(data: bytes) -> dict | None:
             idxs.append(index)
             produced.append(1)
         data_part = block[4 * ch:]
-        # the nibble state machine, inlined with local variables —
-        # _ima_decode_nibble per nibble plus builtin max/min were the
+        # the nibble state machine, inlined with local variables — a
+        # function call per nibble plus builtin max/min were the
         # bulk of decode time (A/B'd, aggregates identical)
         steps, itab = _IMA_STEPS, _IMA_INDEX
         for g in range(0, len(data_part), 4):
@@ -4632,7 +4229,7 @@ Y4M_FRAME_STATS_SCHEMA = T.StructType([
 def y4m_frame_stats(df: DataFrame) -> DataFrame:
     """media binary (Y4M) -> one row per frame with per-plane sums,
     Arrow-batched mapInPandas. The uncompressed sibling of
-    video_frame_stats: container walk -> plane slice -> numpy sum,
+    mjpeg_frame_stats_fused: container walk -> plane slice -> numpy sum,
     no per-pixel Python. Non-Y4M payloads yield no rows."""
     return df.select("id", "media").mapInPandas(
         _y4m_stats_batches, schema=Y4M_FRAME_STATS_SCHEMA)
@@ -4751,13 +4348,11 @@ def flac_sample_stats_fused(documents: DataFrame) -> DataFrame:
 
 def mjpeg_frame_stats_fused(documents: DataFrame,
                             every_ms: int = 1000) -> DataFrame:
-    """Synthesized MJPEG AVIs (_mjpeg_synth_batches) → video_frame_stats
-    in ONE mapInPandas (default sampler/decoder, like the lane)."""
+    """Synthesized MJPEG AVIs (_mjpeg_synth_batches) → one row per
+    sampled frame with its decoded pixel sum, in ONE mapInPandas."""
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _frame_stats_batches(
-            _mjpeg_synth_batches(batches),
-            lambda raw, ms: sample_frames(raw, ms, _lenient=True),
-            decode_frame_pixels, every_ms)
+        return _frame_stats_batches(_mjpeg_synth_batches(batches),
+                                    every_ms)
     return (_spread_small_scan(documents).select("doc_id")
             .mapInPandas(run, schema=FRAME_STATS_SCHEMA))
 

@@ -7,10 +7,10 @@ partial max, ~m rows shuffled per partition regardless of input size),
 mergeable across shards/engines by pairwise max — which is what makes
 the operator 100 TB-shaped: a union of per-shard register tables
 followed by the same groupBy-max IS the merged sketch. The float
-estimate is a driver-side fold over m rows (``hll_estimate``), kept
-out of the distributed plan so every distributed row stays
-engine-exact (a harmonic-mean sum of 2^-rho in SQL would be
-float-summation-order dependent).
+estimate (a harmonic mean of 2^-rho over the m rows) is left to the
+consumer, out of the distributed plan, so every distributed row stays
+engine-exact (that sum in SQL would be float-summation-order
+dependent).
 
 Hash portability: the md5-derived 32-bit hash (analytics.dedup.md5h32)
 splits into register bits (low log2(m)) and rho bits (the rest), both
@@ -120,37 +120,6 @@ def hll_registers_grouped(
     )
 
 
-def hll_merge(*register_frames: DataFrame) -> DataFrame:
-    """Merge sketches: union the register tables, keep per-register max.
-    Associative/commutative/idempotent — shard-parallel by construction."""
-    if not register_frames:
-        raise ValueError("hll_merge requires at least one register frame")
-    out = register_frames[0]
-    for frame in register_frames[1:]:
-        out = out.unionByName(frame)
-    return out.groupBy("register_id").agg(F.max("max_rho").alias("max_rho"))
-
-
-def hll_estimate(registers: DataFrame, m: int = 256) -> float:
-    """Cardinality estimate from a register table (driver-side fold over
-    m rows; deterministic because the fold order is sorted register_id).
-    Standard HLL with the small-range linear-counting correction."""
-    rows = sorted((r.register_id, r.max_rho) for r in registers.collect())
-    if len(rows) != m:
-        raise ValueError(f"expected {m} registers, got {len(rows)}")
-    alpha = 0.7213 / (1 + 1.079 / m)
-    total = 0.0
-    zeros = 0
-    for _, rho in rows:
-        total += 2.0 ** (-rho)
-        if rho == 0:
-            zeros += 1
-    est = alpha * m * m / total
-    if est <= 2.5 * m and zeros:
-        est = m * math.log(m / zeros)
-    return est
-
-
 def _md5h32_hi(c: Column) -> Column:
     """Second independent 32-bit hash: md5 hex chars 9-16 as a bigint
     (the first 8 feed md5h32) — one md5 evaluation yields both."""
@@ -179,16 +148,6 @@ def bloom_bits(
     positions = F.array(*[(h1 + F.lit(j) * h2) % m for j in range(k)])
     return (df.select(F.explode(positions).alias("bit_position"))
             .distinct())
-
-
-def bloom_merge(*bit_frames: DataFrame) -> DataFrame:
-    """Merge filters built with identical (m, k): union + distinct."""
-    if not bit_frames:
-        raise ValueError("bloom_merge requires at least one bit frame")
-    out = bit_frames[0]
-    for frame in bit_frames[1:]:
-        out = out.unionByName(frame)
-    return out.distinct()
 
 
 def bloom_might_contain(
@@ -254,23 +213,6 @@ def cms_counts(
     )
 
 
-def cms_merge(*count_frames: DataFrame) -> DataFrame:
-    """Merge sketches: union + sum of per-cell counts.
-
-    Precondition: every input was built by :func:`cms_build` with the
-    SAME (w, d) geometry — cell coordinates are only comparable within
-    one geometry, and merging mismatched sketches would silently
-    produce garbage counts. Callers own that invariant (the frames
-    carry no metadata), same contract as the bloom/hll merge helpers.
-    """
-    if not count_frames:
-        raise ValueError("cms_merge requires at least one sketch frame")
-    out = count_frames[0]
-    for frame in count_frames[1:]:
-        out = out.unionByName(frame)
-    return out.groupBy("depth", "pos").agg(F.sum("cnt").alias("cnt"))
-
-
 def cms_estimate(
     counts: DataFrame,
     probes: DataFrame,
@@ -314,8 +256,8 @@ def quantile_histogram(
     bin = clamp(floor((v - lo) * bins / (hi - lo)), 0, bins-1).
 
     The histogram IS the mergeable sketch (merge = union + sum per
-    bin, same contract as cms_merge): one map-side-combined groupBy
-    whose shuffle moves <= bins rows per input partition at any data
+    bin, same contract as the count-min sketch): one map-side-combined
+    groupBy whose shuffle moves <= bins rows per input partition at any data
     size — the fixed-memory alternative to an exact sort-based
     quantile when 100 TB won't fit a global sort. Bin arithmetic is
     one IEEE multiply/divide + floor, identical across engines.
@@ -359,18 +301,6 @@ def quantile_histogram_grouped(
     return (df.filter(v.isNotNull())
             .select(*keys, _bin_expr(v, lo, hi, bins).alias("bin"))
             .groupBy(*keys, "bin").agg(F.count("*").alias("cnt")))
-
-
-def quantile_merge(*hist_frames: DataFrame) -> DataFrame:
-    """Merge histogram sketches built with identical (lo, hi, bins):
-    union + per-bin sum. Callers own the geometry invariant, as with
-    cms_merge/bloom_merge."""
-    if not hist_frames:
-        raise ValueError("quantile_merge requires at least one sketch frame")
-    out = hist_frames[0]
-    for frame in hist_frames[1:]:
-        out = out.unionByName(frame)
-    return out.groupBy("bin").agg(F.sum("cnt").alias("cnt"))
 
 
 def quantile_estimate(

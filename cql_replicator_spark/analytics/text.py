@@ -731,8 +731,7 @@ def bigram_logprob(df: DataFrame, id_col: str = "doc_id",
 
 # -- BPE vocabulary learning --------------------------------------------------------
 
-def bpe_pair_counts(df: DataFrame, text_col: str = "text",
-                    symbols_col: str | None = None) -> DataFrame:
+def bpe_pair_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Adjacent-symbol-pair frequencies — the inner statistic of BPE
     vocabulary learning (Sennrich et al. 2016): every merge round picks
     the corpus-wide most frequent adjacent pair.
@@ -744,19 +743,12 @@ def bpe_pair_counts(df: DataFrame, text_col: str = "text",
     corpus frequency. That is the standard fast-BPE formulation —
     pair-count cost is vocabulary-shaped, independent of corpus scale
     after the one word-count shuffle.
-
-    With symbols_col set, counts pairs over pre-split symbol arrays
-    (a (word, freq, symbols) frame from learn_bpe_merges' loop)
-    instead of re-splitting raw text.
     """
-    if symbols_col is None:
-        words = (df.select(F.explode(tokens(text_col)).alias("word"))
-                 .filter(F.col("word") != "")
-                 .groupBy("word").agg(F.count("*").alias("freq")))
-        syms = words.select(
-            "freq", F.array_remove(F.split(F.col("word"), "(?!^)"), "").alias("syms"))
-    else:
-        syms = df.select(F.col("freq"), F.col(symbols_col).alias("syms"))
+    words = (df.select(F.explode(tokens(text_col)).alias("word"))
+             .filter(F.col("word") != "")
+             .groupBy("word").agg(F.count("*").alias("freq")))
+    syms = words.select(
+        "freq", F.array_remove(F.split(F.col("word"), "(?!^)"), "").alias("syms"))
     idx = F.explode(F.sequence(F.lit(0), F.size("syms") - 2)).alias("i")
     pairs = (syms.filter(F.size("syms") >= 2)
              .select("freq", "syms", idx)
@@ -765,44 +757,6 @@ def bpe_pair_counts(df: DataFrame, text_col: str = "text",
                      "freq"))
     return (pairs.groupBy("left", "right")
             .agg(F.sum("freq").cast("long").alias("pair_freq")))
-
-
-def merge_symbol_pair(syms: Column, left: str, right: str) -> Column:
-    """Apply one BPE merge to a symbol array: every non-overlapping
-    adjacent (left, right) occurrence becomes one fused symbol,
-    scanning left-to-right (the reference BPE semantics — 'aaa' with
-    merge (a,a) gives ['aa','a']). Pure expression fold (aggregate over
-    the array with an (out, pending) accumulator), so the merge runs in
-    the JVM on every executor — no Python in the loop."""
-    fused = left + right
-
-    # accumulator: struct(out array, pend string). pend holds a possible
-    # left-half waiting for its right-half; '' = nothing pending (safe
-    # sentinel: symbols are never empty strings).
-    def step(acc, s):
-        flushed = (F.when(acc["pend"] != "",
-                          F.concat(acc["out"], F.array(acc["pend"])))
-                   .otherwise(acc["out"]))
-        return F.when(
-            (acc["pend"] == F.lit(left)) & (s == F.lit(right)),
-            F.struct(F.concat(acc["out"], F.array(F.lit(fused))).alias("out"),
-                     F.lit("").alias("pend")),
-        ).otherwise(F.when(
-            s == F.lit(left),
-            F.struct(flushed.alias("out"), s.alias("pend")),
-        ).otherwise(
-            F.struct(F.concat(flushed, F.array(s)).alias("out"),
-                     F.lit("").alias("pend"))))
-
-    return F.aggregate(
-        syms,
-        F.struct(F.expr("cast(array() as array<string>)").alias("out"),
-                 F.lit("").alias("pend")),
-        step,
-        lambda acc: F.when(acc["pend"] != "",
-                           F.concat(acc["out"], F.array(acc["pend"])))
-        .otherwise(acc["out"]),
-    )
 
 
 def select_nonconflicting_merges(counts: DataFrame, k: int,
@@ -843,77 +797,6 @@ def select_nonconflicting_merges(counts: DataFrame, k: int,
     return (a.join(b, blocks, "left_anti")
             .orderBy("rk").limit(int(k))
             .select("left", "right", "pair_freq", "rk"))
-
-
-def learn_bpe_merges(df: DataFrame, num_merges: int,
-                     text_col: str = "text",
-                     batch_size: int = 1,
-                     pool: int = 256) -> list[tuple[str, str, int]]:
-    """Learn ``num_merges`` BPE merge rules over the corpus: each round
-    counts adjacent pairs (bpe_pair_counts over the persisted word-
-    frequency symbol table), takes the most frequent pair — ties broken
-    (pair_freq desc, left, right) so the vocabulary is deterministic
-    across runs, partitionings, and engines — and rewrites the symbol
-    arrays with merge_symbol_pair.
-
-    Driver traffic per round is ONE collect of at most ``batch_size``
-    rows; the rewrite is a JVM expression map over the |vocab|-row
-    frame, localCheckpoint-ed each round to cut the growing lambda
-    lineage. Returns [(left, right, pair_freq)] in merge order.
-
-    batch_size=1 (default) is exact sequential BPE: rounds are data-
-    dependent and inherently ordered, and each merge costs one Spark
-    job of pure scheduling latency over the vocabulary-sized frame —
-    bounded, but at real tokenizer scale (thousands of merges) the
-    driver round-trips dominate. batch_size>1 applies up to that many
-    SYMBOL-DISJOINT pairs per round (select_nonconflicting_merges):
-    disjoint merges can't change each other's counts or occurrences,
-    so each batched merge equals its solo application — the standard
-    batched-BPE trick. The learned sequence can differ from exact
-    sequential BPE only where a round's merge would have promoted a
-    new pair above a later batch member (tokenizer quality is
-    empirically insensitive to this; Sennrich-style trainers batch the
-    same way). Keep batch_size modest (<=16): merges apply as nested
-    expression folds within the round.
-
-    ``pool`` bounds the ranked head the batch is selected from (the
-    distributed top-N select_nonconflicting_merges scans) and is PART
-    OF THE ALGORITHM'S DEFINITION, not an invisible cap: a round whose
-    top ``pool`` pairs contain fewer than batch_size unblocked pairs
-    selects a smaller batch and the remainder lands in later rounds —
-    still deterministic, and mirrored by the pure-Python reference
-    (same pool) in tests. Raise it if batch_size approaches pool/2.
-    """
-    words = (df.select(F.explode(tokens(text_col)).alias("word"))
-             .filter(F.col("word") != "")
-             .groupBy("word").agg(F.count("*").alias("freq")))
-    cur = (words.select("freq", F.array_remove(F.split(F.col("word"), "(?!^)"), "").alias("syms"))
-           .localCheckpoint(eager=True))
-    merges: list[tuple[str, str, int]] = []
-    while len(merges) < int(num_merges):
-        counts = bpe_pair_counts(cur, symbols_col="syms")
-        k = min(int(batch_size), int(num_merges) - len(merges))
-        if k <= 1:
-            batch = (counts.orderBy(F.desc("pair_freq"), "left", "right")
-                     .limit(1).collect())
-        else:
-            batch = select_nonconflicting_merges(counts, k,
-                                                 pool=pool).collect()
-        batch = [(r["left"], r["right"], int(r["pair_freq"]))
-                 for r in batch if r["pair_freq"] >= 2]
-        if not batch:
-            break
-        merges.extend(batch)
-        col = F.col("syms")
-        for l_, r_, _ in batch:
-            col = merge_symbol_pair(col, l_, r_)
-        cur = (cur.select("freq", col.alias("syms"))
-               .localCheckpoint(eager=True))
-        # localCheckpoint blocks are RDD-level persists that
-        # Dataset.unpersist cannot release; rebinding `cur` drops the
-        # last reference to the previous round's frame so the
-        # ContextCleaner reclaims its blocks.
-    return merges
 
 
 # -- DSIR importance weights --------------------------------------------------------
@@ -1173,13 +1056,8 @@ def sparse_cosine_pairs(
 
 # -- winnowing document fingerprints (MOSS) -----------------------------------
 
-def winnowing_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    w: int = 4,
-) -> DataFrame:
+def _winnowing_selected(df: DataFrame, id_col: str, text_col: str,
+                        k: int, w: int) -> DataFrame:
     """Winnowing-style document fingerprints (Schleimer, Wilkerson &
     Aiken, MOSS): hash every word k-gram, then keep only the local
     minima — a gram hash is selected where it is the minimum of the
@@ -1195,21 +1073,14 @@ def winnowing_fingerprints(
     selected, same as canonical), and the formulation is a single SQL
     window function both engines evaluate identically.
 
-    Returns DISTINCT (id, fp) — fp the md5-based 32-bit gram hash the
-    registry's other portable hashing uses.
-
-    Plan: explode grams with position, one per-doc window (the shuffle
-    key is the doc id — no skew beyond document length), filter,
-    distinct. Fingerprint volume is ~2/(w+1) of gram volume.
+    Returns the selected (id, fp) stream BEFORE any distinct — fp the
+    md5-based 32-bit gram hash the registry's other portable hashing
+    uses; winnowing_pairs folds the dedup into its groupBy(fp)
+    (collect_set) instead of paying a separate (id, fp) exchange for
+    it. Plan: explode grams with position, one per-doc window (the
+    shuffle key is the doc id — no skew beyond document length),
+    filter. Fingerprint volume is ~2/(w+1) of gram volume.
     """
-    return _winnowing_selected(df, id_col, text_col, k, w).distinct()
-
-
-def _winnowing_selected(df: DataFrame, id_col: str, text_col: str,
-                        k: int, w: int) -> DataFrame:
-    """The selected (id, fp) stream BEFORE the distinct — winnowing_pairs
-    folds the dedup into its groupBy(fp) (collect_set) instead of paying
-    a separate (id, fp) exchange for it."""
     if k < 1 or w < 2:
         raise ValueError(f"need k >= 1 and w >= 2, got k={k} w={w}")
     from pyspark.sql.window import Window
@@ -1263,7 +1134,7 @@ def winnowing_pairs(
     # (max_df-capped), pairs explode in-bucket — the self-join
     # formulation would re-derive the explode->window->distinct
     # fingerprint subtree once per join side (two corpus scans).
-    # collect_set FUSES winnowing_fingerprints' (id, fp) distinct into
+    # collect_set FUSES the fingerprints' (id, fp) distinct into
     # this groupBy's map-side partial aggregation — one exchange of the
     # fingerprint volume instead of two (r11; interleaved A/B in
     # bench_ab_winnow.json), same posting lists.

@@ -612,7 +612,7 @@ def tile_histogram_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
 # zero, +/-1, the registered tile inputs' magnitude, +/-2^62) and the
 # oracle states the expected (hash, tile) as literal VALUES. The
 # literals were computed once and are cross-checked in
-# tests/test_core.py against tiling.xxhash64_long_ref, a from-spec
+# tests/test_core.py against _xxhash64_long_ref, a from-spec
 # XXH64 implementation pinned to the published xxHash sanity vectors —
 # so the pin is independent of the engine, not a circular snapshot.
 _XXH64_PROBES = [0, 1, 7, 42, -1, 123456789, -123456789,
@@ -726,7 +726,7 @@ SELECT 'invariant:max_tile', CAST(max(tile) AS BIGINT),
         "fixture-scoped literal invariants). The SQL hash itself is "
         "cross-checked against the ten probe literals pinned to the "
         "published xxHash sanity vectors (tests/test_core.py "
-        "_XXH64_PROBES / tiling.xxhash64_long_ref)",
+        "_XXH64_PROBES / _xxhash64_long_ref)",
 )
 def tile_histogram_xxhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")["orders"]

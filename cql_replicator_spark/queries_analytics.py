@@ -956,7 +956,7 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # IVF-routed (nprobe=1): nearest neighbor within each vector's own
     # centroid bucket. Deterministic -> SQL-expressible; the exact
     # all-pairs form lives on only as a pytest recall baseline
-    # (test_analytics: embedding_near_dup_pairs), never as a registered
+    # (test_analytics: _embedding_near_dup_pairs), never as a registered
     # plan — its BroadcastNestedLoopJoin is an O(n²) scale-killer.
     oracle="""
 WITH cents AS (
@@ -1279,7 +1279,7 @@ vecs AS (
   SELECT vec_id + 1000000 AS vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ),
 quant AS (
-  -- quantized_cosine's _Q_DOMAIN contract: an off-domain (NaN or
+  -- quantized_cosine_np's _Q_DOMAIN contract: an off-domain (NaN or
   -- |x| > 20) vector's cosine is NULL, which the >= threshold verify
   -- drops — expressed here as an inner-join absence; the filter also
   -- keeps DuckDB's BIGINT cast in range (it crashes on poison)
@@ -1418,8 +1418,8 @@ FROM documents
         "PNG IHDR / GIF89a container bytes are synthesized JVM-side "
         "(concat/unhex codegen, dims derived from text length), then "
         "parsed back by the pure-Python header parser in an Arrow "
-        "mapInPandas batch (multimodal.parse_image_header — the "
-        "upgraded decode_image path). The oracle recomputes the dims "
+        "mapInPandas batch (multimodal.parse_image_header). The oracle "
+        "recomputes the dims "
         "arithmetically, so any encoder/parser disagreement on byte "
         "order, offsets, or signatures mismatches. Media bytes stay "
         "executor-side; the output is a 16-byte-row metadata frame",
@@ -1448,7 +1448,7 @@ FROM documents
         "synthesized JVM-side (RIFF/fmt/data chunk layout, little-endian "
         "codegen byte assembly), then chunk-walked back by the pure-"
         "Python parser in an Arrow mapInPandas batch (multimodal."
-        "parse_audio_header — the upgraded decode_audio path). Duration "
+        "parse_audio_header). Duration "
         "oracle uses the algebraic identity (len*block*1000) div "
         "(rate*block) = (len*1000) div rate, so parser and synthesizer "
         "must agree on every chunk field to match",
@@ -1797,8 +1797,8 @@ FROM d, unnest(generate_series(0, nf - 1)) AS t(i)
         "container at 10 fps) are built in mapInPandas and run through "
         "the real pipeline — RIFF walk -> avih-timed frame selection "
         "(every_ms=100 samples every frame) -> per-frame baseline JPEG "
-        "decode (multimodal.video_frame_stats). DC-only frames decode "
-        "exactly, so each sampled frame's sum has the closed form "
+        "decode (multimodal.mjpeg_frame_stats_fused). DC-only frames "
+        "decode exactly, so each sampled frame's sum has the closed form "
         "grey_i * w * h the oracle recomputes via generate_series",
 )
 def multimodal_mjpeg_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1861,8 +1861,8 @@ FROM documents
         "containers synthesized JVM-side (big-endian codegen byte "
         "assembly, every box size matching its bytes), then box-tree-"
         "walked back by the pure-Python parser in an Arrow mapInPandas "
-        "batch (multimodal.parse_video_header — the upgraded "
-        "decode_video path). Movie timescale varies per doc and tick "
+        "batch (multimodal.parse_video_header). Movie timescale varies "
+        "per doc and tick "
         "duration with text length, so duration_ms = ticks*1000 div "
         "timescale only matches if parser and synthesizer agree on "
         "every mvhd field; dims round-trip through 16.16 fixed point",
@@ -2020,8 +2020,8 @@ LEFT JOIN built b ON b.register_id = t.register_id
         "max leading-zero rank), mergeable across shards by pairwise "
         "max, built in one groupBy whose map-side partial max ships "
         "~256 rows per partition regardless of input size. The float "
-        "estimate stays a driver-side fold (sketch.hll_estimate) so "
-        "no summation-order float ever enters the distributed plan",
+        "estimate is left to the consumer, so no summation-order float "
+        "ever enters the distributed plan",
 )
 def sketch_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .analytics import sketch as SK
@@ -2967,7 +2967,7 @@ WITH cl AS (
 {kmeans}
 ),
 vq AS (
-  -- quantized_cosine's _Q_DOMAIN contract (NaN/|x|>20 -> NULL cosine,
+  -- quantized_cosine_np's _Q_DOMAIN contract (NaN/|x|>20 -> NULL cosine,
   -- dropped by the >= threshold filter) as an inner-join absence;
   -- also keeps the BIGINT cast in range (crashes on poison otherwise)
   SELECT vec_id,
@@ -3994,9 +3994,9 @@ LEFT JOIN tagged g ON g.seg = s.seg AND g.register_id = t.register_id
 """,
     doc="HLL sketch set algebra: clickers, purchasers, and their UNION as "
         "register tables (m=64) in one pass — union-of-sets IS "
-        "per-register max (sketch.hll_merge's contract), computed here "
-        "from the grouped build without rescanning events. Driver-side "
-        "hll_estimate over the three 64-row tables then yields "
+        "per-register max, computed here "
+        "from the grouped build without rescanning events. A driver-side "
+        "HLL estimate over the three 64-row tables then yields "
         "|A|, |B|, |A∪B| and, by inclusion-exclusion, the intersection "
         "estimate — overlap analysis whose distributed cost is "
         "independent of user count. Densified to 3 x 64 rows",
@@ -4568,9 +4568,8 @@ LIMIT 30
         "adjacent-character-pair frequencies computed over the WORD "
         "FREQUENCY table (fast-BPE formulation — cost is vocabulary-"
         "shaped, not corpus-shaped, after one word-count shuffle); top "
-        "30 with deterministic ties. The iterative learner "
-        "(text.learn_bpe_merges) loops this statistic and is pytest-"
-        "verified against a pure-Python reference BPE",
+        "30 with deterministic ties: the statistic every BPE merge "
+        "round ranks",
 )
 def bpe_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")["documents"]
@@ -4613,10 +4612,8 @@ SELECT lhs, rhs, pair_freq, rk FROM sel ORDER BY rk LIMIT 8
         "blocked by no higher-ranked pair (shared symbol, or symbol == "
         "its fused string). Symbol-disjoint merges can't change each "
         "other's counts or occurrences, so one round applies the whole "
-        "batch with ONE driver collect + ONE rewrite job — the fix for "
-        "the r10-flagged one-Spark-job-per-merge driver chatter in "
-        "learn_bpe_merges (batch_size>1 path, pytest-pinned against a "
-        "pure-Python batched reference). The blocking rule is "
+        "batch with ONE driver collect + ONE rewrite job instead of one "
+        "Spark job per merge. The blocking rule is "
         "deliberately non-transitive so both engines express it as one "
         "self-join, exactly mirrored here and in the oracle",
 )

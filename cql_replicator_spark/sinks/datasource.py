@@ -47,12 +47,12 @@ from pyspark.sql.datasource import (
 )
 
 from ..config import WriteConfig
+from ..ledger import commit_json
 
 
 @dataclass
 class CqlCommitMessage(WriterCommitMessage):
     items_ok: int = 0
-    items_failed: int = 0
 
 
 def statement_executor(options: dict):
@@ -143,8 +143,7 @@ def _write_partition(iterator, options: dict, schema_names: list[str]):
                 ttl = d.pop(ttl_col) if ttl_col else None
                 doc = {k: d[k] for k in data_cols}
                 batch.add(insert_json_statement(target, doc, ts, ttl, ine))
-    return CqlCommitMessage(items_ok=batch.stats.items_ok,
-                            items_failed=batch.stats.items_failed)
+    return CqlCommitMessage(items_ok=batch.stats.items_ok)
 
 
 class CqlWriter(DataSourceWriter):
@@ -156,17 +155,10 @@ class CqlWriter(DataSourceWriter):
         return _write_partition(iterator, self.options, self.schema_names)
 
     def commit(self, messages):
-        total = sum(m.items_ok for m in messages if m is not None)
         stats_path = self.options.get("stats_path")
         if stats_path:
-            import json
-            os.makedirs(os.path.dirname(stats_path) or ".", exist_ok=True)
-            tmp = f"{stats_path}.{os.getpid()}.tmp"  # atomic publish
-            with open(tmp, "w") as f:
-                json.dump({"items_ok": total,
-                           "items_failed": sum(m.items_failed for m in messages
-                                               if m is not None)}, f)
-            os.replace(tmp, stats_path)
+            commit_json(stats_path, {"items_ok": sum(
+                m.items_ok for m in messages if m is not None)})
 
     def abort(self, messages):
         pass  # statement log files from failed attempts are inert
@@ -187,15 +179,10 @@ class CqlStreamWriter(DataSourceStreamWriter):
     def commit(self, messages, batchId):
         commits_dir = self.options.get("commits_path")
         if commits_dir:
-            import json
-            os.makedirs(commits_dir, exist_ok=True)
-            total = sum(m.items_ok for m in messages if m is not None)
-            path = os.path.join(commits_dir, f"epoch-{batchId}.json")
-            tmp = f"{path}.{os.getpid()}.tmp"  # atomic publish: epoch
-            with open(tmp, "w") as f:          # files are the external
-                json.dump({"batch_id": batchId,  # bookkeeping hook
-                           "items_ok": total}, f)
-            os.replace(tmp, path)
+            # epoch files are the external bookkeeping hook
+            commit_json(os.path.join(commits_dir, f"epoch-{batchId}.json"),
+                        {"batch_id": batchId, "items_ok": sum(
+                            m.items_ok for m in messages if m is not None)})
 
     def abort(self, messages, batchId):
         pass

@@ -173,87 +173,6 @@ def hilbert_2d(df, x: str | Column, y: str | Column, bits: int = 8,
             .drop("__hx", "__hy", "__hd"))
 
 
-def xxh64_ref(data: bytes, seed: int = 0) -> int:
-    """From-spec XXH64 (https://github.com/Cyan4973/xxHash/blob/dev/
-    doc/xxhash_spec.md) — the independent reference behind the pinned
-    hash literals in the tile_histogram_xxhash64 oracle, pinned itself
-    to the published sanity vectors in tests/test_core.py. Pure Python,
-    test-oracle use only (like hilbert_xy2d_ref above); the engine path
-    is always Spark's builtin ``F.xxhash64``."""
-    M = (1 << 64) - 1
-    P1, P2, P3, P4, P5 = (0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F,
-                          0x165667B19E3779F9, 0x85EBCA77C2B2AE63,
-                          0x27D4EB2F165667C5)
-
-    def rotl(x: int, r: int) -> int:
-        return ((x << r) | (x >> (64 - r))) & M
-
-    n = len(data)
-    i = 0
-    if n >= 32:
-        acc = [(seed + P1 + P2) & M, (seed + P2) & M,
-               seed & M, (seed - P1) & M]
-        while i + 32 <= n:
-            for j in range(4):
-                lane = int.from_bytes(data[i + 8 * j:i + 8 * j + 8],
-                                      "little")
-                acc[j] = (rotl((acc[j] + lane * P2) & M, 31) * P1) & M
-            i += 32
-        h = (rotl(acc[0], 1) + rotl(acc[1], 7)
-             + rotl(acc[2], 12) + rotl(acc[3], 18)) & M
-        for v in acc:
-            k = (rotl((v * P2) & M, 31) * P1) & M
-            h = (((h ^ k) * P1) + P4) & M
-    else:
-        h = (seed + P5) & M
-    h = (h + n) & M
-    while i + 8 <= n:
-        k = int.from_bytes(data[i:i + 8], "little")
-        k = (rotl((k * P2) & M, 31) * P1) & M
-        h = ((rotl(h ^ k, 27) * P1) + P4) & M
-        i += 8
-    if i + 4 <= n:
-        k = int.from_bytes(data[i:i + 4], "little")
-        h = ((rotl(h ^ ((k * P1) & M), 23) * P2) + P3) & M
-        i += 4
-    while i < n:
-        h = (rotl(h ^ ((data[i] * P5) & M), 11) * P1) & M
-        i += 1
-    h ^= h >> 33
-    h = (h * P2) & M
-    h ^= h >> 29
-    h = (h * P3) & M
-    h ^= h >> 32
-    return h
-
-
-def xxhash64_long_ref(value: int, seed: int = 42) -> int:
-    """Spark's ``F.xxhash64`` on a LONG column, independently: XXH64 of
-    the value's 8 little-endian bytes with Spark's fixed seed 42,
-    reinterpreted as a signed 64-bit int (test oracle)."""
-    M = (1 << 64) - 1
-    u = xxh64_ref((value & M).to_bytes(8, "little"), seed)
-    return u - (1 << 64) if u >= (1 << 63) else u
-
-
-def hilbert_xy2d_ref(x: int, y: int, bits: int = 8) -> int:
-    """Pure-Python reference of the same xy2d descent (test oracle)."""
-    n = 1 << int(bits)
-    d = 0
-    s = n // 2
-    while s > 0:
-        rx = 1 if (x & s) > 0 else 0
-        ry = 1 if (y & s) > 0 else 0
-        d += s * s * ((3 * rx) ^ ry)
-        if ry == 0:
-            if rx == 1:
-                x = n - 1 - x
-                y = n - 1 - y
-            x, y = y, x
-        s //= 2
-    return d
-
-
 def hilbert_sql(select_cols: str, x_expr: str, y_expr: str,
                 from_clause: str, bits: int = 8,
                 out_col: str = "hval", idiv: str = "//") -> str:

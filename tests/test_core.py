@@ -32,6 +32,68 @@ def test_tile_distribution_roughly_uniform(tables):
         assert abs(c - total / 4) < total * 0.2  # xxhash64 should spread well
 
 
+def _xxh64_ref(data: bytes, seed: int = 0) -> int:
+    """From-spec XXH64 (https://github.com/Cyan4973/xxHash/blob/dev/
+    doc/xxhash_spec.md) — the independent reference behind the pinned
+    hash literals in the tile_histogram_xxhash64 oracle, pinned itself
+    to the published sanity vectors below. Pure Python; the engine path
+    is always Spark's builtin ``F.xxhash64``."""
+    M = (1 << 64) - 1
+    P1, P2, P3, P4, P5 = (0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F,
+                          0x165667B19E3779F9, 0x85EBCA77C2B2AE63,
+                          0x27D4EB2F165667C5)
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (64 - r))) & M
+
+    n = len(data)
+    i = 0
+    if n >= 32:
+        acc = [(seed + P1 + P2) & M, (seed + P2) & M,
+               seed & M, (seed - P1) & M]
+        while i + 32 <= n:
+            for j in range(4):
+                lane = int.from_bytes(data[i + 8 * j:i + 8 * j + 8],
+                                      "little")
+                acc[j] = (rotl((acc[j] + lane * P2) & M, 31) * P1) & M
+            i += 32
+        h = (rotl(acc[0], 1) + rotl(acc[1], 7)
+             + rotl(acc[2], 12) + rotl(acc[3], 18)) & M
+        for v in acc:
+            k = (rotl((v * P2) & M, 31) * P1) & M
+            h = (((h ^ k) * P1) + P4) & M
+    else:
+        h = (seed + P5) & M
+    h = (h + n) & M
+    while i + 8 <= n:
+        k = int.from_bytes(data[i:i + 8], "little")
+        k = (rotl((k * P2) & M, 31) * P1) & M
+        h = ((rotl(h ^ k, 27) * P1) + P4) & M
+        i += 8
+    if i + 4 <= n:
+        k = int.from_bytes(data[i:i + 4], "little")
+        h = ((rotl(h ^ ((k * P1) & M), 23) * P2) + P3) & M
+        i += 4
+    while i < n:
+        h = (rotl(h ^ ((data[i] * P5) & M), 11) * P1) & M
+        i += 1
+    h ^= h >> 33
+    h = (h * P2) & M
+    h ^= h >> 29
+    h = (h * P3) & M
+    h ^= h >> 32
+    return h
+
+
+def _xxhash64_long_ref(value: int, seed: int = 42) -> int:
+    """Spark's ``F.xxhash64`` on a LONG column, independently: XXH64 of
+    the value's 8 little-endian bytes with Spark's fixed seed 42,
+    reinterpreted as a signed 64-bit int (test oracle)."""
+    M = (1 << 64) - 1
+    u = _xxh64_ref((value & M).to_bytes(8, "little"), seed)
+    return u - (1 << 64) if u >= (1 << 63) else u
+
+
 def _xxhash64_cols_ref(values: list, seed: int = 42) -> int:
     """Spark's MULTI-ARG ``F.xxhash64(c1, c2, ...)`` — the composite-PK
     tiling path of ``tile_expr`` — independently: each argument's hash
@@ -46,13 +108,13 @@ def _xxhash64_cols_ref(values: list, seed: int = 42) -> int:
             data = v.encode("utf-8")
         else:
             data = bytes(v)
-        h = tiling.xxh64_ref(data, h)
+        h = _xxh64_ref(data, h)
     return h - (1 << 64) if h >= (1 << 63) else h
 
 
 def test_xxh64_reference_matches_spec_vectors_and_engine(spark):
     """The pinned hash literals in the tile_histogram_xxhash64 oracle
-    rest on tiling.xxh64_ref being real XXH64, not an engine snapshot:
+    rest on _xxh64_ref being real XXH64, not an engine snapshot:
     (1) the reference reproduces the published XXH64 sanity vectors
     for the empty input at both canonical seeds; (2) the engine's
     F.xxhash64 equals the reference's 8-LE-bytes/seed-42 form across
@@ -64,8 +126,8 @@ def test_xxh64_reference_matches_spec_vectors_and_engine(spark):
 
     # (1) published sanity vectors (xxHash README / xsum_sanity_check)
     PRIME32 = 2654435761
-    assert tiling.xxh64_ref(b"", 0) == 0xEF46DB3751D8E999
-    assert tiling.xxh64_ref(b"", PRIME32) == 0xAC75FDA2929B17EF
+    assert _xxh64_ref(b"", 0) == 0xEF46DB3751D8E999
+    assert _xxh64_ref(b"", PRIME32) == 0xAC75FDA2929B17EF
 
     # (2) engine cross-check: F.xxhash64(long) == XXH64(8 LE bytes, 42),
     # and the >=32-byte branch via xxhash64 of a binary column
@@ -77,14 +139,14 @@ def test_xxh64_reference_matches_spec_vectors_and_engine(spark):
         F.xxhash64(F.lit(v).cast("long")).alias(f"h{i}")
         for i, v in enumerate(vals)]).collect()[0])
     for i, v in enumerate(vals):
-        assert got[i] == tiling.xxhash64_long_ref(v), v
+        assert got[i] == _xxhash64_long_ref(v), v
     blobs = [bytes(rng.randrange(256) for _ in range(n))
              for n in (0, 1, 3, 4, 7, 8, 14, 31, 32, 33, 64, 100)]
     got_b = (spark.range(1).select(*[
         F.xxhash64(F.lit(b)).alias(f"b{i}")
         for i, b in enumerate(blobs)]).collect()[0])
     for i, b in enumerate(blobs):
-        u = tiling.xxh64_ref(b, 42)
+        u = _xxh64_ref(b, 42)
         want = u - (1 << 64) if u >= (1 << 63) else u
         assert got_b[i] == want, (i, len(b))
 
@@ -123,9 +185,9 @@ def test_xxh64_reference_matches_spec_vectors_and_engine(spark):
     res = {r[0]: (r[1], r[2]) for r in con.execute(
         REGISTRY["tile_histogram_xxhash64"].oracle).fetchall()}
     for p in _XXH64_PROBES:
-        h = tiling.xxhash64_long_ref(p)
+        h = _xxhash64_long_ref(p)
         assert res[f"probe:{p}"] == (h, h % 8), p
-    tiles = {tiling.xxhash64_long_ref(k) % 8 for k in keys}
+    tiles = {_xxhash64_long_ref(k) % 8 for k in keys}
     assert res["invariant:total_rows"] == (len(keys), None)
     assert res["invariant:n_tiles_used"] == (len(tiles), None)
     assert res["invariant:min_tile"] == (min(tiles), None)
@@ -170,14 +232,6 @@ def test_compute_changes_no_ts(spark):
     assert {r.pk for r in cs.inserts.collect()} == {3}
     assert {r.pk for r in cs.deletes.collect()} == {1}
     assert cs.updates.count() == 0
-
-
-def test_tagged_union(spark):
-    prev = spark.createDataFrame([(1, 10), (2, 20)], "pk int, ts long")
-    curr = spark.createDataFrame([(2, 21), (3, 30)], "pk int, ts long")
-    tagged = compute_changes(curr, prev, ["pk"]).tagged_union()
-    rows = {(r.pk, r.op) for r in tagged.collect()}
-    assert rows == {(3, "insert"), (1, "delete"), (2, "update")}
 
 
 # -- snapshot store ---------------------------------------------------------
@@ -876,9 +930,12 @@ def test_diff_property_random_mutations(spark, prev_keys, curr_keys, changed,
 
     # the four diffs as one union so an example costs one Spark job
     null_ts = F.lit(None).cast("int").alias("ts")
+    ref = compute_changes(curr, prev, ["pk"])
     diffs = {
         "tagged": compute_changes_tagged(curr, prev, ["pk"]),
-        "reference": compute_changes(curr, prev, ["pk"]).tagged_union(),
+        "reference": ref.inserts.withColumn("op", F.lit("insert"))
+        .unionByName(ref.deletes.withColumn("op", F.lit("delete")))
+        .unionByName(ref.updates.withColumn("op", F.lit("update"))),
         "envelope": compute_changes_envelope(curr, prev, ["pk"]).select(
             "op", "pk", null_ts),
         "ivm": change_deltas(curr, prev, ["pk"], ["pk"], "ts").select(

@@ -1,11 +1,13 @@
-"""Documentation claims that must match the code: every test COVERAGE.md
-names in its "tested by" column exists, and every tool the docs name
-exists."""
+"""Documentation claims that must match the code: every test and
+package function COVERAGE.md names exists, and every tool the docs name
+exists. Below them, the reachability guards: every package module,
+engine option and package function has a production user."""
 
 import ast
 import fnmatch
 import os
 import re
+from collections import Counter
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TEST_DIRS = ("tests", "cdcbench")
@@ -48,6 +50,54 @@ def test_coverage_names_only_existing_tests():
             if not fnmatch.filter(defined, span):
                 missing.append(span)
     assert not missing, f"COVERAGE.md names tests that do not exist: {missing}"
+
+
+def _module_definitions(path: str) -> set[str]:
+    """The names a module defines: every function and class (methods
+    and nested functions included, also as ``Class.method``) and each
+    top-level assignment."""
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        if isinstance(node, ast.ClassDef):
+            names |= {f"{node.name}.{m.name}" for m in node.body
+                      if isinstance(m, ast.FunctionDef)}
+    for node in tree.body:
+        if isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) \
+                else [node.target]
+            names |= {t.id for t in targets if isinstance(t, ast.Name)}
+    return names
+
+
+def test_coverage_names_only_existing_functions():
+    """Every backticked ``module.fn / fn / ...`` span in COVERAGE.md whose
+    module is a package module (``diff``, ``analytics/text``,
+    ``sinks.parquet_sink``) names only what that module defines."""
+    with open(os.path.join(ROOT, "COVERAGE.md")) as f:
+        spans = re.findall(r"`([^`\n]+)`", f.read())
+    pkg = os.path.join(ROOT, PKG)
+    missing = []
+    for span in spans:
+        first, *rest = [p.strip() for p in span.split(" / ")]
+        if first.endswith(".py"):
+            continue
+        m = re.fullmatch(r"([\w/]+(?:\.\w+)*?)\.(\w+(?:\.\w+)?)", first)
+        if not m:
+            continue
+        path = _module_file(pkg, re.split(r"[/.]", m.group(1)))
+        if path is None:
+            continue
+        defined = _module_definitions(path)
+        missing += [f"{m.group(1)}.{name}"
+                    for name in [m.group(2)] + rest
+                    if re.fullmatch(r"\w+(?:\.\w+)?", name)
+                    and name not in defined]
+    assert not missing, f"COVERAGE.md names functions that do not exist: " \
+        f"{missing}"
 
 
 def test_docs_name_only_existing_tools():
@@ -166,6 +216,36 @@ def test_every_package_module_has_a_production_importer():
     assert sorted(modules - _reached_package_modules()) == []
 
 
+def _is_sys_path(node: ast.AST) -> bool:
+    return (isinstance(node, ast.Attribute) and node.attr == "path"
+            and getattr(node.value, "id", None) == "sys")
+
+
+def test_no_production_root_imports_a_test_module():
+    """No ENTRY_POINTS file imports a ``test_*`` module or puts
+    ``tests/`` on ``sys.path``: a test helper that production code
+    calls is production code, and belongs in the package."""
+    found = []
+    for path in _entry_files():
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        rel = os.path.relpath(path, ROOT)
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                mods = [a.name for a in node.names]
+                if isinstance(node, ast.ImportFrom):
+                    mods = [node.module or ""]
+                found += [(rel, m) for m in mods
+                          if any(p.startswith("test_") for p in m.split("."))]
+            elif isinstance(node, ast.Call) and _is_sys_path(
+                    getattr(node.func, "value", None)):
+                found += [(rel, "sys.path += tests") for c in ast.walk(node)
+                          if isinstance(c, ast.Constant)
+                          and isinstance(c.value, str)
+                          and "tests" in re.split(r"[/\\]", c.value)]
+    assert not found, f"production files reach into the tests: {found}"
+
+
 # -- options ------------------------------------------------------------------
 
 # the replication engine and what the CLI reaches around it: their
@@ -217,14 +297,18 @@ def _engine_options():
                     yield f"{mod}.{qual}.{param}", called, param, position
 
 
-def _production_calls() -> dict[str, list[ast.Call]]:
-    """Every call in the production files, by the name called: the
-    ENTRY_POINTS files and the package."""
+def _production_files() -> list[str]:
+    """The ENTRY_POINTS files and every package module."""
     files = _entry_files()
     for d, _, names in os.walk(os.path.join(ROOT, PKG)):
         files += [os.path.join(d, f) for f in names if f.endswith(".py")]
+    return files
+
+
+def _production_calls() -> dict[str, list[ast.Call]]:
+    """Every call in the production files, by the name called."""
     calls: dict[str, list[ast.Call]] = {}
-    for path in files:
+    for path in _production_files():
         with open(path) as f:
             tree = ast.parse(f.read())
         for node in ast.walk(tree):
@@ -255,3 +339,71 @@ def test_engine_options_have_a_production_caller():
         qual for qual, called, param, position in _engine_options()
         if not any(_passes(c, param, position) for c in calls.get(called, ())))
     assert unpassed == []
+
+
+# -- functions ----------------------------------------------------------------
+
+
+def _framework_classes(tree: ast.Module) -> set[str]:
+    """Names of the classes in ``tree`` that subclass a class imported
+    from ``pyspark.sql.datasource``: Spark calls their methods."""
+    bases = {a.asname or a.name for node in ast.walk(tree)
+             if isinstance(node, ast.ImportFrom)
+             and node.module == "pyspark.sql.datasource"
+             for a in node.names}
+    return {node.name for node in ast.walk(tree)
+            if isinstance(node, ast.ClassDef)
+            and any(getattr(b, "id", None) in bases for b in node.bases)}
+
+
+def _code_names(node: ast.AST) -> list[str]:
+    """The names ``node`` uses in code: each ``Name``, ``Attribute`` and
+    imported name (comments, strings and docstrings do not count)."""
+    names = []
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            names.append(n.id)
+        elif isinstance(n, ast.Attribute):
+            names.append(n.attr)
+        elif isinstance(n, ast.alias):
+            names.append(n.name.split(".")[-1])
+    return names
+
+
+def _is_lane(fn: ast.FunctionDef) -> bool:
+    """A ``@register(...)`` lane: the bench runs it from the registry."""
+    return any(isinstance(d, ast.Call) and getattr(d.func, "id", None)
+               == "register" for d in fn.decorator_list)
+
+
+def test_every_package_function_has_a_production_reference():
+    """Every function and method of the package is named in code, outside
+    its own body, by a production file (the ENTRY_POINTS files and the
+    package); dunders, ``@register`` lanes and the methods Spark calls on
+    a data source count as called. A function that only tests name is
+    moved into the tests that use it, or deleted."""
+    used = Counter()
+    defined = []  # (qualified name, def node)
+    for path in _production_files():
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        used.update(_code_names(tree))
+        if not os.path.relpath(path, ROOT).startswith(PKG + os.sep):
+            continue
+        called = _framework_classes(tree)
+        for node in tree.body:
+            if isinstance(node, ast.ClassDef):
+                defined += [(f"{_dotted(path)}.{node.name}.{m.name}", m)
+                            for m in node.body
+                            if isinstance(m, ast.FunctionDef)
+                            and node.name not in called]
+            elif isinstance(node, ast.FunctionDef) and not _is_lane(node):
+                defined.append((f"{_dotted(path)}.{node.name}", node))
+    unreferenced = []
+    for qual, fn in defined:
+        if fn.name.startswith("__") and fn.name.endswith("__"):
+            continue
+        if used[fn.name] <= _code_names(fn).count(fn.name):
+            unreferenced.append(qual)
+    assert not unreferenced, \
+        f"package functions no production code names: {sorted(unreferenced)}"

@@ -79,7 +79,7 @@ def test_quantized_cosine_null_fails_threshold_filter(spark, emb):
              .filter(F.col("a.vec_id") < F.col("b.vec_id"))
              .select(F.col("a.vec_id").alias("ia"),
                      F.col("b.vec_id").alias("ib"),
-                     similarity.quantized_cosine(
+                     similarity.quantized_cosine_np()(
                          F.col("a.embedding"), F.col("b.embedding"))
                      .alias("c")))
     passed = {(r.ia, r.ib) for r in
@@ -276,6 +276,49 @@ def test_nan_inf_embeddings_never_outrank_real_neighbors(spark):
     assert not any(3 in p or 4 in p or 6 in p for p in passed)
 
 
+def _quantized_cosine(va, vb):
+    """Cosine over floor(x*1e6) integer-quantized vectors as one
+    column expression: the bit-identical reference the numpy lane
+    (similarity.quantized_cosine_np) is checked against.
+
+    dot and norms are exact BIGINTs; sqrt/division are single correctly-
+    rounded IEEE ops — so the resulting double is bit-identical in any
+    engine, making cosine thresholds oracle-safe (a float dot product's
+    summation order is not). NULL for vectors outside the quantization
+    domain (see similarity._Q_DOMAIN), zero-norm, or NaN — never a
+    crash or a NaN."""
+    def q(v):
+        return F.transform(
+            v, lambda x: F.floor(x.cast("double") * 1e6).cast("long"))
+
+    def in_domain(v):
+        return F.forall(v, lambda x: ~F.isnan(x.cast("double"))
+                        & (F.abs(x.cast("double"))
+                           <= F.lit(similarity._Q_DOMAIN)))
+
+    qa, qb = q(va), q(vb)
+    zero = F.lit(0).cast("long")
+    def total(arr):
+        return F.aggregate(arr, zero, lambda a, x: a + x)
+
+    dot = total(F.zip_with(qa, qb, lambda x, y: x * y))
+    na = total(F.transform(qa, lambda x: x * x))
+    nb = total(F.transform(qb, lambda x: x * x))
+    # try_divide + nanvl: NULL (not an ANSI crash, not a NaN) for
+    # zero-norm or non-finite inputs, same contract as cosine() — and
+    # NULL never passes a `>= threshold` verify filter or outranks a
+    # real score, unlike NaN (Spark orders NaN above every double).
+    # CASE WHEN keeps the aggregate lazily unevaluated off-domain, so
+    # saturated int64 products are never formed.
+    return F.when(
+        in_domain(va) & in_domain(vb),
+        F.nanvl(
+            F.try_divide(
+                dot.cast("double"),
+                F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double"))),
+            F.lit(None).cast("double")))
+
+
 def test_quantized_cosine_magnitude_bombs_null_both_lanes(spark):
     """Runtime floor(double->long) SATURATES at ±2^63-1 (it does not
     raise), so a 1e30-component vector quantized to saturated int64s
@@ -294,8 +337,8 @@ def test_quantized_cosine_magnitude_bombs_null_both_lanes(spark):
     qcnp = similarity.quantized_cosine_np()
     col = {(r.ia, r.ib): r.c for r in pairs.select(
         F.col("a.vec_id").alias("ia"), F.col("b.vec_id").alias("ib"),
-        similarity.quantized_cosine(F.col("a.embedding"),
-                                    F.col("b.embedding")).alias("c")).collect()}
+        _quantized_cosine(F.col("a.embedding"),
+                          F.col("b.embedding")).alias("c")).collect()}
     npr = {(r.ia, r.ib): r.c for r in pairs.select(
         F.col("a.vec_id").alias("ia"), F.col("b.vec_id").alias("ib"),
         qcnp(F.col("a.embedding"), F.col("b.embedding")).alias("c")).collect()}

@@ -83,20 +83,11 @@ _LSH_MEMO_CONTRACT = (
 
 NOTES = {
     "bpe_top_pairs": (
-        "NOTE: this row is ONE pair-count round. The iterative learner "
-        "(text.learn_bpe_merges, batch_size=1) runs one 1-row collect + "
-        "one checkpoint job PER MERGE — measured ~230-320 ms/merge at "
-        "sf0.01 local[32] (pure driver/scheduler latency; the frame is "
-        "vocabulary-sized). Bounded and exact, but at real tokenizer "
-        "scale (thousands of merges) job round-trips dominate: use "
-        "batch_size>1 (below)."),
+        "NOTE: this row is ONE pair-count round."),
     "bpe_top_pairs_batched": (
-        "NOTE: the batched learner path (learn_bpe_merges batch_size=k) "
-        "applies up to k symbol-disjoint merges per round — one k-row "
-        "collect + one rewrite job per ROUND instead of per merge. "
-        "Measured 1.76x over sequential at 32 merges/sf0.01 (interleaved "
-        "1,8,1,8 run; warm legs 7.48s vs 4.26s); the gap grows linearly "
-        "with merge count since it is pure per-job latency."),
+        "NOTE: one batched round selects up to k symbol-disjoint merges "
+        "(here k=8) — one k-row collect per ROUND instead of one per "
+        "merge."),
     "dedup_minhash_lsh": (
         "NOTE: plan reads the session-shared persisted candidate stage "
         "(_shared_capped_lsh): shingle->minhash->banded pairs built ONCE "
